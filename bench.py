@@ -23,7 +23,7 @@ registry order.  The registry rotates every round for the correctness
 window, so registry-ordered benching silently changed each query's
 position — and its warm-up/neighbor context — every round; the round-9
 kmeans-family "regression" (5.4 -> 9.1 s driver-to-driver, flat in every
-isolated replay, tools/triage_kmeans_bench.py) tracked exactly such a
+isolated replay; the triage script is in git history) tracked exactly such a
 rotation that moved the family from mid-pack to positions 5-12.  With
 alphabetical order the per-query context is identical across rounds
 regardless of rotation.  (r9 -> r10 deltas carry this one-time

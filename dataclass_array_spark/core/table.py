@@ -19,6 +19,15 @@ Reference semantics re-expressed on a DataFrame (design per SURVEY.md §1.4):
 Scale notes: all shape ops are narrow (select/filter) except boolean-mask
 re-densification and gather, which are a range-repartition and an equi-join
 respectively — both AQE-managed, both the minimum the semantics admit.
+Every driver↔Spark data move goes through one Arrow encoder and one
+decoder (bottom of this module).  Ingest — construction, ``replace`` with
+numpy values, and the mask/gather/rowid-offset index tables — builds a
+``pyarrow.Table`` column by column (one flat numpy buffer per leaf, no
+per-row Python objects) and plans as a ``LocalRelation``.
+Egress collects unsorted with ``toArrow()`` and sorts on the driver by
+``__rowid``: the result is on the driver already, so ordering it there
+costs 8 B per row and no shuffle, where ``orderBy`` ran a cluster range
+sort plus its sampling job.
 """
 
 from __future__ import annotations
@@ -28,6 +37,8 @@ import math
 from typing import Any, Callable, Dict, Iterator, List, Optional, Sequence, Tuple, Union
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -347,15 +358,13 @@ class DcaTable(metaclass=_DcaMeta):
                 target = np.broadcast_shapes(*shapes)
             except ValueError as e:
                 raise ShapeError(f"incompatible batch shapes {shapes}: {e}") from None
+            # the Arrow encoder broadcasts each leaf to the target
             for name, bshape in batch_shapes.items():
-                if tuple(bshape) == tuple(target):
-                    continue
-                if not params.broadcast and bshape != ():
+                if tuple(bshape) != tuple(target) and not params.broadcast and bshape != ():
                     raise ShapeError(
                         f"field {name!r} batch shape {bshape} != {tuple(target)} and "
                         f"broadcast=False (only scalar fields auto-broadcast)"
                     )
-                arrays[name] = _tree_broadcast(arrays[name], bshape, tuple(target))
             batch_shape = tuple(int(d) for d in target)
         else:
             batch_shape = tuple(shape) if shape is not None else ()
@@ -364,19 +373,9 @@ class DcaTable(metaclass=_DcaMeta):
 
     def _init_from_tree(self, spark, arrays, batch_shape, statics):
         cls = type(self)
-        struct = cls._struct_type()
-        n = _size(batch_shape)
-        rows = []
-        for i in range(n):
-            row: List[Any] = [i]
-            for f_ in struct.fields:
-                if f_.name == "__dummy":
-                    row.append(0.0)
-                else:
-                    row.append(_tree_row_value(arrays[f_.name], cls._array_fields()[f_.name], i, batch_shape))
-            rows.append(tuple(row))
-        df = spark.createDataFrame(rows, schema=cls.spark_schema())
-        self._bind(df, batch_shape, statics, spark)
+        cols = {ROWID: np.arange(_size(batch_shape), dtype=np.int64)}
+        cols.update(_arrow_columns(cls, arrays, batch_shape))
+        self._bind(_local_frame(spark, cols, cls.spark_schema()), batch_shape, statics, spark)
 
     def _bind(self, df: DataFrame, shape: Tuple[int, ...], statics: Dict[str, Any], spark: SparkSession):
         self._df = df
@@ -696,24 +695,8 @@ class DcaTable(metaclass=_DcaMeta):
             raise IndexError(
                 f"mask shape {mask.shape} != leading batch dims {self._shape[:k]}"
             )
-        trailing = self._shape[k:]
-        t_sz = _size(trailing)
         sel = np.flatnonzero(mask.reshape(-1))
-        pairs = [(int(old), int(new)) for new, old in enumerate(sel)]
-        idx_df = self._spark.createDataFrame(
-            pairs, schema=T.StructType([
-                T.StructField("__old_outer", T.LongType(), False),
-                T.StructField("__new_outer", T.LongType(), False),
-            ]),
-        )
-        rid = F.col(ROWID)
-        df = self._df.withColumn("__old_outer", _idiv(rid, t_sz))
-        out = (
-            df.join(F.broadcast(idx_df), on="__old_outer", how="inner")
-            .withColumn(ROWID, (F.col("__new_outer") * t_sz + rid % t_sz).cast("long"))
-            .drop("__old_outer", "__new_outer")
-        )
-        return type(self)._wrap(out, (len(sel),) + trailing, self._statics, self._spark)
+        return self._take_outer(sel, (len(sel),), self._shape[k:])
 
     def _mask_column(self, pred: Column) -> "DcaTable":
         """Filter by a Column predicate — the distributed mask path.
@@ -730,28 +713,30 @@ class DcaTable(metaclass=_DcaMeta):
             raise IndexError("cannot gather from scalar batch")
         d0 = self._shape[0]
         flat = idx.reshape(-1)
-        norm = [int(i) + d0 if i < 0 else int(i) for i in flat]
-        for i in norm:
-            if not (0 <= i < d0):
-                raise IndexError(f"gather index {i} out of bounds for axis 0 size {d0}")
-        rest = self._shape[1:]
+        norm = np.where(flat < 0, flat + d0, flat)
+        bad = (norm < 0) | (norm >= d0)
+        if bad.any():
+            raise IndexError(
+                f"gather index {int(flat[bad][0])} out of bounds for axis 0 size {d0}"
+            )
+        return self._take_outer(norm, tuple(idx.shape), self._shape[1:])
+
+    def _take_outer(self, old: np.ndarray, outer: Tuple[int, ...], rest: Tuple[int, ...]) -> "DcaTable":
+        """Rows whose outer index (``rowid // size(rest)``) is ``old[j]``
+        become outer index ``j``: a broadcast join against an index table
+        built by :func:`_local_frame`."""
         rest_sz = _size(rest)
-        pairs = [(int(old), int(new)) for new, old in enumerate(norm)]
-        idx_df = self._spark.createDataFrame(
-            pairs, schema=T.StructType([
-                T.StructField("__old0", T.LongType(), False),
-                T.StructField("__new0", T.LongType(), False),
-            ]),
+        idx_df = _local_frame(
+            self._spark, {"__old": old.astype(np.int64), "__new": np.arange(len(old), dtype=np.int64)}
         )
         rid = F.col(ROWID)
-        df = self._df.withColumn("__old0", _idiv(rid, rest_sz))
         out = (
-            df.join(F.broadcast(idx_df), on="__old0", how="inner")
-            .withColumn(ROWID, (F.col("__new0") * rest_sz + rid % rest_sz).cast("long"))
-            .drop("__old0", "__new0")
+            self._df.withColumn("__old", _idiv(rid, rest_sz))
+            .join(F.broadcast(idx_df), on="__old", how="inner")
+            .withColumn(ROWID, (F.col("__new") * rest_sz + rid % rest_sz).cast("long"))
+            .drop("__old", "__new")
         )
-        new_shape = tuple(idx.shape) + rest
-        return type(self)._wrap(out, new_shape, self._statics, self._spark)
+        return type(self)._wrap(out, outer + tuple(rest), self._statics, self._spark)
 
     # ---- relational passthroughs (§2.B surfaced on the wrapper):
     # thin delegations so users never need to drop to .df for the
@@ -851,29 +836,14 @@ class DcaTable(metaclass=_DcaMeta):
                  for k, v in col_changes.items()}
             )
         if np_changes:
-            n = self.size
-            rows = []
-            for i in range(n):
-                row: List[Any] = [i]
-                for name, arr in np_changes.items():
-                    spec = specs[name]
-                    a = arr
-                    if a.shape[: a.ndim - len(spec.inner_shape)] != self._shape:
-                        a = np.broadcast_to(a, self._shape + tuple(
-                            d if d is not None else s
-                            for d, s in zip(spec.inner_shape, a.shape[a.ndim - len(spec.inner_shape):])
-                        ))
-                    flat = a.reshape((n,) + a.shape[a.ndim - len(spec.inner_shape):])
-                    v = flat[i]
-                    row.append(v.tolist() if isinstance(v, np.ndarray) else v.item())
-                rows.append(tuple(row))
+            cols = {ROWID: np.arange(self.size, dtype=np.int64)}
+            for k, arr in np_changes.items():
+                cols[f"__new_{k}"] = _arrow_field(arr, specs[k], self._shape)
             sch = T.StructType(
                 [T.StructField(ROWID, T.LongType(), False)]
                 + [T.StructField(f"__new_{k}", specs[k].spark_type, False) for k in np_changes]
             )
-            upd = self._spark.createDataFrame(
-                [tuple([r[0]] + list(r[1:])) for r in rows], schema=sch
-            )
+            upd = _local_frame(self._spark, cols, sch)
             df = df.join(F.broadcast(upd), on=ROWID, how="inner")
             for k in np_changes:
                 df = df.withColumn(k, F.col(f"__new_{k}")).drop(f"__new_{k}")
@@ -883,40 +853,23 @@ class DcaTable(metaclass=_DcaMeta):
     # ---------------- sinks / interchange ----------------
 
     def to_pandas(self):
-        """Ordered local export (Arrow path)."""
-        return (
-            self._df.orderBy(ROWID).toPandas().set_index(ROWID, drop=True)
-        )
+        """Rowid-ordered local export: one unsorted Arrow collect, put in
+        rowid order on the driver (see :func:`_rowid_order`)."""
+        pdf = self._df.toPandas()
+        order = _rowid_order(pdf[ROWID].to_numpy(), self.size)
+        return pdf.iloc[order].set_index(ROWID, drop=True)
 
     def to_numpy_fields(self) -> Dict[str, np.ndarray]:
         """Collect every array field back to a numpy array with the full
         ``batch_shape + inner_shape`` (the reference's ``as_np`` exit,
-        `array_dataclass.py:496-538`)."""
-        pdf = self.to_pandas()
-        out: Dict[str, np.ndarray] = {}
-        for name, spec in type(self)._array_fields().items():
-            if isinstance(spec, ArraySpec):
-                vals = [_deep_tolist(v) for v in pdf[name].tolist()]
-                if np.dtype(spec.np_dtype).kind == "c":
-                    def from_struct(x):
-                        if isinstance(x, dict):
-                            return complex(x["re"], x["im"])
-                        if isinstance(x, (list, tuple)) and x and isinstance(
-                            x[0], (dict, list, tuple)
-                        ):
-                            return [from_struct(y) for y in x]
-                        if isinstance(x, (list, tuple)) and len(x) == 2 and not isinstance(
-                            x[0], (dict, list, tuple)
-                        ):
-                            return complex(x[0], x[1])
-                        return x
-
-                    vals = [from_struct(v) for v in vals]
-                arr = np.array(vals, dtype=spec.np_dtype)
-                out[name] = arr.reshape(self._shape + arr.shape[1:])
-            else:
-                out[name] = np.array(pdf[name].tolist(), dtype=object).reshape(self._shape)
-        return out
+        `array_dataclass.py:496-538`).  Nested fields come back as object
+        arrays of row structs over ``batch_shape + extra_inner_shape``."""
+        tbl = self._df.toArrow()
+        order = _rowid_order(tbl.column(ROWID).to_numpy(), self.size)
+        return {
+            name: _np_field(tbl.column(name), spec, order, self._shape)
+            for name, spec in type(self)._array_fields().items()
+        }
 
     def write_parquet(self, path: str, mode: str = "overwrite") -> None:
         self._df.write.mode(mode).parquet(path)
@@ -1028,16 +981,6 @@ def _nullable_variant(t: T.DataType) -> T.DataType:
             [T.StructField(f.name, _nullable_variant(f.dataType), True) for f in t.fields]
         )
     return t
-
-
-def _deep_tolist(v):
-    """Arrow hands nested arrays back as object-dtype ndarrays of
-    ndarrays; normalize to plain nested python lists."""
-    if isinstance(v, np.ndarray):
-        return [_deep_tolist(x) for x in v] if v.dtype == object else v.tolist()
-    if isinstance(v, (list, tuple)):
-        return [_deep_tolist(x) for x in v]
-    return v
 
 
 def _parse_einops_side(side: str) -> List[List[str]]:
@@ -1191,16 +1134,14 @@ def attach_dense_rowid(
     with_pid = df.withColumn("__pid", F.spark_partition_id()).withColumn(
         "__mid", F.monotonically_increasing_id()
     )
-    counts = {r["__pid"]: r["cnt"] for r in with_pid.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets: Dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    spark = df.sparkSession
-    offs = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()] or [(0, 0)],
-        "__pid int, __off long",
+    counts = sorted(
+        (r["__pid"], r["cnt"])
+        for r in with_pid.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()
+    )
+    pids = np.array([p for p, _ in counts], dtype=np.int32)
+    sizes = np.array([c for _, c in counts], dtype=np.int64)
+    offs = _local_frame(
+        df.sparkSession, {"__pid": pids, "__off": np.cumsum(sizes) - sizes}
     )
     local_idx = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1))
     return (
@@ -1245,66 +1186,106 @@ def _tree_batch_shape(node: Dict[str, Any], table_cls: type) -> Tuple[int, ...]:
     return tuple(np.broadcast_shapes(*shapes))
 
 
-def _tree_broadcast(node: Any, old: Tuple[int, ...], new: Tuple[int, ...]):
-    if isinstance(node, np.ndarray):
-        inner = node.shape[len(old):]
-        return np.broadcast_to(node, tuple(new) + inner)
-    tree = {k: (_tree_broadcast(v, old, new) if k != "__cls" else v) for k, v in node["__tree"].items()}
-    return {"__tree": tree, "__cls": node["__cls"]}
+# ---------------- Arrow boundary: the one driver<->Spark data path ----------------
 
 
-def _tree_row_value(node: Any, spec, i: int, batch_shape: Tuple[int, ...]):
-    """Python value for row ``i`` (C-order) of a field, as nested tuples/
-    lists matching the Spark schema."""
-    n = _size(batch_shape)
+def _local_frame(
+    spark: SparkSession, columns: Dict[str, Any], schema: Optional[T.StructType] = None
+) -> DataFrame:
+    """numpy / Arrow columns → a DataFrame planned as a ``LocalRelation``
+    (the rows ship inside the plan).  ``createDataFrame`` casts to
+    ``schema``'s Arrow types, which does the rest of the dtype mapping
+    (f16 → float, unsigned → wider signed, ui64 → decimal(20,0)).  Nested
+    containers come out nullable, as ``from_df`` and parquet give them:
+    pyspark rebuilds nested arrays with nullable children first, and Arrow
+    cannot cast those to non-null struct fields."""
+    if schema is not None:
+        schema = T.StructType(
+            [T.StructField(f.name, _nullable_variant(f.dataType), f.nullable) for f in schema]
+        )
+    return spark.createDataFrame(pa.table(columns), schema=schema)
+
+
+def _arrow_columns(cls: type, tree: Dict[str, Any], lead: Tuple[int, ...]) -> Dict[str, pa.Array]:
+    """The ``_struct_type`` columns of ``cls`` for a batch of shape ``lead``."""
+    specs = cls._array_fields()
+    if not specs:
+        return {"__dummy": pa.array(np.zeros(_size(lead), np.float32))}
+    return {name: _arrow_field(tree[name], spec, lead) for name, spec in specs.items()}
+
+
+def _arrow_field(node: Any, spec, lead: Tuple[int, ...]) -> pa.Array:
+    """One field of a ``lead``-shaped batch as one Arrow array: a leaf is
+    one flat buffer (broadcast to ``lead`` first) wrapped in a ListArray
+    per inner dim; a nested tree is a StructArray of its children, wrapped
+    once per extra inner dim."""
     if isinstance(spec, ArraySpec):
-        arr = node
-        inner = arr.shape[arr.ndim - len(spec.inner_shape):] if spec.inner_shape else ()
-        flat = np.ascontiguousarray(arr).reshape((n,) + tuple(inner))
-        v = flat[i]
-        if np.dtype(spec.np_dtype).kind == "c":
-            # complex → struct<re, im> (SURVEY §1.4 dtype mapping)
-            def to_struct(x):
-                return (
-                    [to_struct(y) for y in x]
-                    if isinstance(x, (list, np.ndarray))
-                    else (float(x.real), float(x.imag))
-                )
+        k = len(spec.inner_shape)
+        inner = node.shape[node.ndim - k:] if k else ()
+        flat = np.broadcast_to(node, lead + inner).ravel()
+        if flat.dtype.kind == "c":  # complex → struct<re, im> (SURVEY §1.4)
+            values = pa.StructArray.from_arrays(
+                [pa.array(flat.real), pa.array(flat.imag)], names=["re", "im"]
+            )
+        else:
+            values = pa.array(flat)
+        return _arrow_lists(values, inner, _size(lead))
+    k = len(spec.extra_inner_shape)
+    nested = _tree_batch_shape(node, spec.table_cls)
+    extra = nested[len(nested) - k:] if k else ()
+    cols = _arrow_columns(spec.table_cls, node["__tree"], lead + extra)
+    structs = pa.StructArray.from_arrays(list(cols.values()), names=list(cols))
+    return _arrow_lists(structs, extra, _size(lead))
 
-            return to_struct(v)
-        out = v.tolist() if isinstance(v, np.ndarray) else v.item()
-        if np.dtype(spec.np_dtype) == np.dtype(np.uint64):
-            # ui64 maps to DecimalType(20,0): Spark requires Decimal objs
-            import decimal
 
-            def to_dec(x):
-                return (
-                    [to_dec(y) for y in x]
-                    if isinstance(x, list)
-                    else decimal.Decimal(int(x))
-                )
+def _arrow_lists(values: pa.Array, dims: Sequence[int], n: int) -> pa.Array:
+    """Wrap ``n * prod(dims)`` values in one uniform-offset ListArray per
+    dim, innermost first."""
+    for k in reversed(range(len(dims))):
+        offsets = np.arange(n * _size(dims[:k]) + 1, dtype=np.int64) * dims[k]
+        values = pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), values)
+    return values
 
-            out = to_dec(out)
-        return out
-    # NestedSpec
-    tree = node["__tree"]
-    cls = spec.table_cls
 
-    def struct_at(sub_tree, flat_idx, sub_batch_n):
-        vals = []
-        for name, s in cls._array_fields().items():
-            vals.append(_tree_row_value(sub_tree[name] if not isinstance(sub_tree[name], dict) else sub_tree[name], s, flat_idx, (sub_batch_n,)))
-        return tuple(vals)
+def _rowid_order(rowids: np.ndarray, size: int) -> np.ndarray:
+    """The permutation that puts collected rows in rowid order.  Sorting
+    on the driver costs 8 B per row of a result that is already there,
+    and replaces a cluster range sort plus its sampling job.  Raises
+    unless the rowids are exactly ``0..size-1``: a frame whose rows do not
+    match its shape must not reshape into a silently wrong array."""
+    order = np.argsort(rowids, kind="stable")
+    if len(rowids) != size or not np.array_equal(rowids[order], np.arange(size)):
+        raise ShapeError(
+            f"collected {len(rowids)} rows whose rowids are not 0..{size - 1} "
+            f"(batch size {size})"
+        )
+    return order
 
-    extra = spec.extra_inner_shape
-    if not extra:
-        return struct_at(tree, i, n)
-    # extra inner dims: row i holds a nested list over the extra shape
-    extra_sz = _size([d for d in extra])
-    def build(level: int, base: int):
-        if level == len(extra):
-            return struct_at(tree, base, n * extra_sz)
-        d = extra[level]
-        stride = _size([x for x in extra[level + 1:]])
-        return [build(level + 1, base + j * stride) for j in range(d)]
-    return build(0, i * extra_sz)
+
+def _np_field(col: pa.ChunkedArray, spec, order: np.ndarray, shape: Tuple[int, ...]) -> np.ndarray:
+    """One collected column → numpy in rowid ``order``: the list levels
+    are flattened to one buffer and reshaped to ``shape + inner``.  Every
+    list at a level must have the same length (the declared one if
+    static), else ShapeError — a ragged column has no numpy form."""
+    leaf = isinstance(spec, ArraySpec)
+    dims: List[int] = []
+    values = col
+    for want in spec.inner_shape if leaf else spec.extra_inner_shape:
+        lens = pc.list_value_length(values).to_numpy(zero_copy_only=False)
+        d = want if want is not None else (int(lens[0]) if len(lens) else 0)
+        if (lens != d).any():
+            raise ShapeError(f"column {col.type}: inner dim {len(dims)} is ragged or not {d}")
+        dims.append(d)
+        values = pc.list_flatten(values)
+    if not leaf:  # row structs, the cell type to_pandas gives
+        flat = values.to_pandas().to_numpy()
+    elif np.dtype(spec.np_dtype).kind == "c":
+        flat = np.empty(len(values), spec.np_dtype)
+        flat.real = pc.struct_field(values, "re").to_numpy()
+        flat.imag = pc.struct_field(values, "im").to_numpy()
+    else:
+        if np.dtype(spec.np_dtype) == np.uint64:  # stored as decimal(20,0)
+            values = pc.cast(values, pa.uint64())
+        flat = np.asarray(values.to_numpy(), dtype=spec.np_dtype)
+    dims_t = tuple(dims)
+    return flat.reshape((len(order),) + dims_t)[order].reshape(tuple(shape) + dims_t)

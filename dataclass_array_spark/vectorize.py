@@ -468,10 +468,7 @@ def vectorize_method(
                     if spec.inner_shape:
                         # ragged dynamic dims make this stack raise —
                         # the per-row loop handles those
-                        return np.asarray(
-                            [np.asarray(v, dtype=spec.np_dtype) for v in pdf[c]],
-                            dtype=spec.np_dtype,
-                        )
+                        return np.stack([_to_np(v, spec) for v in pdf[c]])
                     return np.asarray(pdf[c].to_numpy(), dtype=spec.np_dtype)
 
                 self_fields = {
@@ -601,6 +598,11 @@ def vectorize_method(
 
 
 def _to_np(v: Any, spec: ArraySpec) -> np.ndarray:
+    """One cell → ndarray.  Arrow hands a rank≥2 cell back as an object
+    array of row arrays, which ``np.asarray(v, dtype)`` cannot convert:
+    stack its rows instead."""
+    if isinstance(v, np.ndarray) and v.dtype == object and v.size:
+        return np.stack([_to_np(x, spec) for x in v])
     return np.asarray(v, dtype=spec.np_dtype)
 
 

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import types as T
 
 from dataclass_array_spark.core.schema import (
+    _NP_TO_SPARK,
     ArraySpec,
     ShapeError,
     f32,
@@ -44,44 +45,114 @@ def test_resolve_annotation():
     assert resolve_annotation(int) is None
 
 
-def test_unsigned_dtypes_roundtrip(spark):
-    import numpy as np
+# one case per distinct numpy dtype of the Spark mapping ("str" and
+# "str_" are the same numpy dtype)
+_ROUNDTRIP_DTYPES = list(dict.fromkeys(np.dtype(n) for n in _NP_TO_SPARK))
+_ROUNDTRIP_INNER = [(), (3,), (2, 3)]
+_ROUNDTRIP_LAYOUTS = ["contiguous", "broadcast_to", "replace"]
+_BATCH = (2, 3)
+
+
+def _values(dtype, shape, rng):
+    """Values spanning ``dtype``'s range, extremes included."""
+    n = int(np.prod(shape))
+    if dtype.kind == "f":
+        v = rng.standard_normal(n).astype(dtype)
+        v[:2] = [np.finfo(dtype).max, np.finfo(dtype).tiny]
+    elif dtype.kind in "iu":
+        info = np.iinfo(dtype)
+        v = rng.integers(info.min, info.max, size=n, dtype=dtype, endpoint=True)
+        v[:2] = [info.min, info.max]
+        if dtype == np.uint64:
+            v[2] = 2**63 + 5  # past int64: decimal(20,0) in Spark
+    elif dtype.kind == "b":
+        v = rng.random(n) < 0.5
+    elif dtype.kind == "U":
+        v = np.array(["", "é", "spark"] + [f"s{i}" for i in range(n - 3)])
+    else:  # complex → struct<re, im>
+        v = (rng.standard_normal(n) + 1j * rng.standard_normal(n)).astype(dtype)
+    return v.reshape(shape)
+
+
+def _decode_nested(cells, table_cls):
+    """Object array of row structs → {leaf: ndarray over cells.shape}."""
+    from dataclass_array_spark.vectorize import _to_np
+
+    out = {}
+    for name, spec in table_cls._array_fields().items():
+        rows = [_to_np(c[name], spec) for c in cells.ravel()]
+        out[name] = np.stack(rows).reshape(cells.shape + rows[0].shape)
+    return out
+
+
+def _assert_exact(got, want):
+    assert got.shape == want.shape
+    if want.dtype.kind == "U":
+        assert got.dtype.kind == "U"
+    else:
+        assert got.dtype == want.dtype
+    np.testing.assert_array_equal(got, want)
+
+
+def _dtype_case(dtype, inner, layout):
     import dataclass_array_spark as das
-    from dataclass_array_spark.core.schema import ui8, ui32, ui64
 
-    @das.dataclass_array(cast_dtype=True)
-    class U(das.DcaTable):
-        a: ui8
-        b: ui32
-        c: ui64
-
-    u = U(
-        spark,
-        a=np.array([0, 255], np.uint8),
-        b=np.array([0, 2**32 - 1], np.uint32),
-        c=np.array([2**63 + 5, 7], np.uint64),
+    cls = das.dataclass_array(cast_dtype=True)(
+        type("D", (das.DcaTable,), {"__annotations__": {"x": ArraySpec(dtype, inner)}})
     )
-    got = u.to_numpy_fields()
-    assert got["a"].tolist() == [0, 255]
-    assert got["b"].tolist() == [0, 2**32 - 1]
-    assert got["c"][0] == np.uint64(2**63 + 5)
+    want = _values(dtype, _BATCH + inner, np.random.default_rng(len(inner)))
+    if layout == "broadcast_to":
+        # zero-stride, non-contiguous view of the first batch row
+        want = np.broadcast_to(want[:1], want.shape)
+    return cls, want
 
 
-def test_complex_dtypes_roundtrip(spark):
-    import numpy as np
-    import dataclass_array_spark as das
-    from dataclass_array_spark.core.schema import complex64
+def _nested_case(layout):
+    from tests.test_nested import Iso, NestedBatched
 
-    @das.dataclass_array(cast_dtype=True)
-    class C(das.DcaTable):
-        z: complex64
-        w: complex64["*b 2"]
+    rng = np.random.default_rng(0)
+    tree = {
+        "r": _values(np.dtype(np.float32), _BATCH + (2, 2, 3, 3), rng),
+        "t": _values(np.dtype(np.int32), _BATCH + (2, 2, 2), rng),
+    }
+    if layout == "broadcast_to":
+        tree = {k: np.broadcast_to(v[:1], v.shape) for k, v in tree.items()}
+    return NestedBatched, Iso, tree
 
-    z = np.array([1 + 2j, 3 - 4j], np.complex64)
-    w = np.array([[1j, 2 + 0j], [3j, 4 + 5j]], np.complex64)
-    t = C(spark, z=z, w=w)
-    got = t.to_numpy_fields()
-    assert np.allclose(got["z"], z) and np.allclose(got["w"], w)
+
+@pytest.mark.parametrize(
+    "case,layout",
+    [
+        pytest.param((dt, inner), layout, id=f"{dt.name}-rank{len(inner)}-{layout}")
+        for dt in _ROUNDTRIP_DTYPES
+        for inner in _ROUNDTRIP_INNER
+        for layout in _ROUNDTRIP_LAYOUTS
+    ]
+    + [
+        pytest.param("nested", layout, id=f"Iso[*b 2 2]-{layout}")
+        for layout in ("contiguous", "broadcast_to")
+    ],
+)
+def test_dtype_roundtrip(spark, case, layout):
+    """numpy → DcaTable → numpy is exact for every dtype of the Spark
+    mapping at inner ranks 0-2, for non-contiguous inputs, through
+    ``replace(field=ndarray)``, and for a nested field with extra inner
+    dims."""
+    if case == "nested":
+        cls, iso, tree = _nested_case(layout)
+        got = cls(spark, iso_batched=tree).to_numpy_fields()["iso_batched"]
+        assert got.shape == _BATCH + (2, 2)
+        leaves = _decode_nested(got, iso)
+        for k, want in tree.items():
+            _assert_exact(leaves[k], want)
+        return
+    cls, want = _dtype_case(*case, layout)
+    if layout == "replace":
+        t = cls(spark, x=np.zeros_like(want)).replace(x=want)
+    else:
+        t = cls(spark, x=want)
+    assert t.shape == _BATCH
+    _assert_exact(t.to_numpy_fields()["x"], want)
 
 
 def test_unresolvable_annotations_warn(spark):

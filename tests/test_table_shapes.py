@@ -199,3 +199,67 @@ def test_filter_alias(spark):
     f = p.filter(F.col("x") >= 3)
     assert f.shape == (3,)
     assert_np_equal(f, {"x": x[x >= 3], "y": y[x >= 3]})
+
+
+def _iso_fields(shape, seed):
+    rng = np.random.default_rng(seed)
+    return {
+        "r": rng.standard_normal(shape + (3, 3)).astype(np.float32),
+        "t": rng.integers(-50, 50, size=shape + (2,)).astype(np.int32),
+    }
+
+
+def _disordered(kind, spark):
+    """(table, numpy fields) whose physical row order is not rowid order."""
+    a, b = _iso_fields((4, 6), 0), _iso_fields((4, 6), 1)
+    ta, tb = Isometrie(spark, **a), Isometrie(spark, **b)
+    if kind == "repartition":
+        return Isometrie.from_df(ta.df.repartition(7), shape=ta.shape), a
+    if kind == "reversed_concat":
+        want = {k: np.concatenate([b[k], a[k]], axis=1) for k in a}
+        return das.concat([tb, ta], axis=1), want
+    want = {k: np.stack([a[k], b[k]], axis=1) for k in a}
+    return das.stack([ta, tb], axis=1), want
+
+
+@pytest.mark.parametrize("kind", ["repartition", "reversed_concat", "stack_axis1"])
+def test_egress_orders_disordered_rows(spark, kind):
+    """Egress collects unsorted and orders rows on the driver: frames
+    whose physical row order differs from rowid order must still come
+    back equal to numpy through both exits."""
+    from pyspark.sql import functions as F
+
+    from dataclass_array_spark.vectorize import _to_np
+
+    t, want = _disordered(kind, spark)
+    physical = t.df.select(F.col("__rowid")).toPandas()["__rowid"].to_numpy()
+    assert (np.diff(physical) < 0).any(), "fixture did not disorder the rows"
+    got = t.to_numpy_fields()
+    for k, w in want.items():
+        np.testing.assert_array_equal(got[k], w)
+    pdf = t.to_pandas()
+    np.testing.assert_array_equal(pdf.index.to_numpy(), np.arange(t.size))
+    for k, w in want.items():
+        spec = Isometrie._array_fields()[k]
+        cells = np.stack([_to_np(c, spec) for c in pdf[k]])
+        np.testing.assert_array_equal(cells, w.reshape((t.size,) + w.shape[t.ndim:]))
+
+
+@pytest.mark.parametrize("kind", ["gap", "duplicate", "short"])
+def test_egress_rejects_rowids_not_dense(spark, kind):
+    """A frame whose rowids are not exactly 0..size-1 raises ShapeError
+    instead of reshaping into a wrong array."""
+    from pyspark.sql import functions as F
+
+    t = Isometrie(spark, **_iso_fields((6,), 2))
+    rid = F.col("__rowid")
+    bad = {
+        "gap": t.df.withColumn("__rowid", rid * 2),
+        "duplicate": t.df.withColumn("__rowid", F.when(rid == 1, 0).otherwise(rid)),
+        "short": t.df.filter(rid != 5),
+    }[kind]
+    frame = Isometrie.from_df(bad, shape=t.shape)
+    with pytest.raises(ShapeError):
+        frame.to_numpy_fields()
+    with pytest.raises(ShapeError):
+        frame.to_pandas()

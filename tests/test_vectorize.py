@@ -771,3 +771,40 @@ def test_tier2a_guard_rejects_late_row_mixing(spark):
         warnings.simplefilter("ignore", das.VectorizeFallbackWarning)
         got = r.headmix().to_numpy_fields()["s"]
     np.testing.assert_array_equal(got, want)
+
+
+@das.dataclass_array(broadcast=True, cast_dtype=True)
+class SpinBox(das.DcaTable):
+    pos: f32["*b 3"]
+    rot: f32["*b 3 3"]
+
+    @das.vectorize_method
+    def spaced(self):
+        # elementwise over the 3x3 field; np.spacing keeps it off tier 1,
+        # so it runs on the numpy tier's whole-batch (B, 3, 3) arrays
+        r = np.asarray(self.rot)
+        return {"s": (np.spacing(r) + r * 2.0).astype(np.float32)}
+
+    @das.vectorize_method
+    def trace2(self):
+        # np.trace of a (B, 3, 3) batch sums the wrong axes, so the batch
+        # guard rejects it and the per-row loop decodes each 3x3 cell
+        r = np.asarray(self.rot)
+        return {"tr": float(np.trace(r @ r) + 0.0 * np.spacing(r).sum())}
+
+
+def test_numpy_tier_rank2_field_matches_numpy(spark):
+    """The numpy tier decodes a rank-2 field (Arrow hands each cell back
+    as an object array of row arrays) on both the whole-batch and the
+    per-row path, and matches numpy."""
+    rng = np.random.default_rng(3)
+    pos = rng.standard_normal((40, 3)).astype(np.float32)
+    rot = rng.standard_normal((40, 3, 3)).astype(np.float32)
+    t = SpinBox(spark, pos=pos, rot=rot).reshape((5, 8))
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", das.VectorizeFallbackWarning)
+        s = t.spaced().to_numpy_fields()["s"]
+        tr = t.trace2().to_numpy_fields()["tr"]
+    np.testing.assert_array_equal(s, (np.spacing(rot) + rot * 2.0).reshape(5, 8, 3, 3))
+    want = np.array([np.trace(m @ m) for m in rot], dtype=np.float64).reshape(5, 8)
+    np.testing.assert_allclose(tr, want, rtol=1e-6)

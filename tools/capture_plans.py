@@ -1,7 +1,8 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") for named queries into plans/r16/.
+"""Capture .explain("formatted") for named queries into plans/<round>/.
 
-Usage: python tools/capture_plans_r16.py before|after q1 q2 ...
+Usage: python tools/capture_plans.py <round> before|after q1 q2 ...
+  e.g. python tools/capture_plans.py r17 before q1 q18
 """
 
 from __future__ import annotations
@@ -20,10 +21,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        sys.exit(__doc__)
+    out_dir = os.path.join("plans", sys.argv[1])
+    tag = sys.argv[2]
+    names = sys.argv[3:]
     spark = get_spark("plans")
-    os.makedirs("plans/r16", exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     for name in names:
         try:
             df = QUERIES[name].fn(spark, SF_DIR)
@@ -33,7 +37,7 @@ def main() -> None:
             p = buf.getvalue()
         except Exception as e:
             p = f"ERROR: {type(e).__name__}: {e}"
-        with open(f"plans/r16/{name}_{tag}.txt", "w") as f:
+        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(p)
         n_ex = p.count("Exchange")
         print(f"{name}: {len(p)} bytes, Exchange x{n_ex}", flush=True)
