@@ -1105,6 +1105,21 @@ def pin_materialization(df: DataFrame, pin: str = "local") -> DataFrame:
     raise ValueError(f"pin must be 'local' or 'reliable', got {pin!r}")
 
 
+def collect_bounded(df: DataFrame, cap: int = 1 << 16) -> Optional[list]:
+    """The rows of ``df`` if it has at most ``cap`` of them, else ``None``.
+
+    The one driver-fold dispatch probe: a single ``take(cap+1)`` job.
+    Operators whose input is bounded by construction (sketch tables,
+    vocabularies, per-partition partial sums) fold the rows on the
+    driver when this returns them and run their distributed path
+    otherwise.  Pass a pinned frame when the distributed path reuses
+    it, so the probe and the fallback share one materialization.
+    Callers import this lazily, so patching it to return ``None``
+    forces every consumer onto its distributed path."""
+    rows = df.take(int(cap) + 1)
+    return rows if len(rows) <= cap else None
+
+
 def attach_dense_rowid(
     df: DataFrame, order_by: Optional[str] = None, pin: str = "local"
 ) -> DataFrame:

@@ -181,13 +181,13 @@ def _group_nonconflicting(merges) -> List[List[Tuple[str, str]]]:
 # Driver-side training dispatch (round-15): the (wid, cnt) vocab table
 # is Heaps-bounded and the gate corpora's vocabularies are tiny, yet
 # every merge round paid 2+ distributed jobs over it (~0.3 s/round of
-# pure scheduling at sf0.1).  When the vocab fits comfortably on the
-# driver AND the vocab×merges product keeps the pure-Python loop
-# sub-second, collect it once and run the PROVABLY IDENTICAL greedy
-# loop locally (the kmeans _kmeans_fit_driver precedent) — the corpus
-# is still scanned exactly once (the word-count aggregation).  Larger
-# vocabs keep the distributed ladder untouched.
-_DRIVER_VOCAB_MAX = 65536
+# pure scheduling at sf0.1).  When the vocab has at most 2^16 words AND
+# the vocab×merges product stays under this work cap (keeping the
+# pure-Python loop sub-second), ``collect_bounded`` collects it once and
+# the PROVABLY IDENTICAL greedy loop runs locally (the kmeans
+# _kmeans_fit_driver precedent) — the corpus is still scanned exactly
+# once (the word-count aggregation).  Larger vocabs keep the
+# distributed ladder untouched.
 _DRIVER_WORK_MAX = 4_194_304  # n_words * num_merges cap
 
 
@@ -231,20 +231,6 @@ def _bpe_train_driver(
         for i, (syms, c) in enumerate(words):
             words[i] = (_apply_merge_py(syms, l, r), c)
     return merges
-
-
-def _collect_small_vocab(sym: DataFrame, cap: int):
-    """``take(cap+1)`` on the (wid, cnt, syms) frame; returns the rows
-    when the vocab fits, else None (distributed path).  Callers pass
-    the PINNED frame so the probe and the distributed ladder share one
-    corpus-sized word-count materialization — probing the raw aggregate
-    executed the full corpus shuffle, discarded it, and the ladder
-    recomputed it: one wasted corpus pass exactly on the
-    production-scale (large-vocab) path."""
-    rows = sym.take(int(cap) + 1)
-    if len(rows) > cap:
-        return None
-    return rows
 
 
 def _pair_counts(sym: DataFrame, min_count: int) -> DataFrame:
@@ -364,7 +350,10 @@ def bpe_train(
         raise ValueError("bpe_train: num_merges must be >= 1")
     if batch_pairs < 1:
         raise ValueError("bpe_train: batch_pairs must be >= 1")
-    from dataclass_array_spark.core.table import pin_materialization
+    from dataclass_array_spark.core.table import (
+        collect_bounded,
+        pin_materialization,
+    )
 
     # pin BEFORE the small-vocab probe: probe and ladder then share one
     # word-count materialization (the probe on the raw aggregate ran the
@@ -372,8 +361,9 @@ def bpe_train(
     # small-vocab case the pin holds only the tiny vocab table and is
     # dropped at the next release_pins()
     sym = pin_materialization(_init_symbols(_word_counts(df, text_col)), pin)
-    cap = min(_DRIVER_VOCAB_MAX, _DRIVER_WORK_MAX // max(1, int(num_merges)))
-    rows = _collect_small_vocab(sym, cap)
+    rows = collect_bounded(
+        sym, min(1 << 16, _DRIVER_WORK_MAX // max(1, int(num_merges)))
+    )
     if rows is not None:
         # driver path: one corpus scan, zero per-round jobs — merge
         # table provably identical to the distributed ladder
@@ -424,15 +414,17 @@ def bpe_word_symbols(
     (disjoint merges commute; proof on :func:`_apply_merge_batch`;
     same-results test in ``tests/test_bpe.py``), cutting the fold-chain
     depth from num_merges to the number of groups."""
-    from dataclass_array_spark.core.table import pin_materialization
+    from dataclass_array_spark.core.table import (
+        collect_bounded,
+        pin_materialization,
+    )
 
     # pin before the probe — same shared-materialization rationale as
     # bpe_train
     sym = pin_materialization(_init_symbols(words), pin)
-    cap = min(
-        _DRIVER_VOCAB_MAX, _DRIVER_WORK_MAX // max(1, len(list(merges)) or 1)
+    rows = collect_bounded(
+        sym, min(1 << 16, _DRIVER_WORK_MAX // max(1, len(list(merges))))
     )
-    rows = _collect_small_vocab(sym, cap)
     if rows is not None:
         # driver path (round-15): segment the collected vocab locally —
         # the same sequential passes the grouped fold is proven equal
@@ -444,13 +436,18 @@ def bpe_word_symbols(
             for left, right in merges:
                 syms = _apply_merge_py(syms, left, right)
             segged.append((r["wid"], syms))
-        # wid keeps the INPUT dtype so the driver and distributed paths
+        # wid keeps the INPUT field so the driver and distributed paths
         # accept identical inputs (a non-string wid worked distributed
-        # but made this createDataFrame raise)
-        wid_type = words.schema["wid"].dataType.simpleString()
-        return words.sparkSession.createDataFrame(
-            segged, f"wid {wid_type}, toks array<string>"
+        # but made this createDataFrame raise) and return one schema
+        import pyspark.sql.types as T
+
+        schema = T.StructType(
+            [
+                words.schema["wid"],
+                T.StructField("toks", T.ArrayType(T.StringType())),
+            ]
         )
+        return words.sparkSession.createDataFrame(segged, schema)
     for i, run in enumerate(_group_nonconflicting(merges)):
         sym = sym.select(
             "wid", "cnt", _apply_merge_batch(F.col("syms"), run).alias("syms")

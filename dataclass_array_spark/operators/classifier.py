@@ -42,8 +42,6 @@ alongside the LM-quality family (``text.py``).
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -52,7 +50,6 @@ from dataclass_array_spark.operators.text import let, tokens
 __all__ = [
     "ngram_features",
     "feature_bucket",
-    "classifier_featurize",
     "classifier_score",
     "classifier_fit",
     "fit_weights_for_scoring",
@@ -124,49 +121,6 @@ def hash_weights(spark, nbuckets: int) -> DataFrame:
     )
 
 
-def classifier_featurize(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    nbuckets: int,
-    salt: str = "clf",
-    n_max: int = 2,
-    label_col: Optional[str] = None,
-) -> DataFrame:
-    """ONE tokenize+hash featurize pass shared by :func:`classifier_fit`
-    and :func:`classifier_score` (round 16): → ``(id, [__y], __fpos,
-    bucket)`` with one row per (doc, feature position) and one
-    NULL-feature row per featureless doc (``posexplode_outer`` —
-    exactly ``classifier_score``'s input shape; ``classifier_fit``
-    filters to ``__fpos IS NOT NULL``, which reproduces its ``explode``
-    shape row-for-row).  ``label_col`` (0/1, cast to double as
-    ``__y``) is required when the frame will feed ``classifier_fit``.
-
-    Composed train→score pipelines should ``repartition(id_col)`` and
-    pin/persist this frame, then pass it to both consumers via their
-    ``feats=`` parameter: the corpus is tokenized+hashed ONCE instead
-    of once per consumer, and every downstream per-doc groupBy/join is
-    exchange-free against the id-clustered materialization."""
-    cols = [F.col(id_col)]
-    out_cols = [id_col]
-    if label_col is not None:
-        cols.append(F.col(label_col).cast("double").alias("__y"))
-        out_cols.append("__y")
-    return df.select(
-        *cols,
-        F.posexplode_outer(ngram_features(F.col(text_col), n_max)).alias(
-            "__fpos", "__f"
-        ),
-    ).select(
-        *out_cols,
-        "__fpos",
-        F.when(
-            F.col("__f").isNotNull(),
-            feature_bucket(F.col("__f"), nbuckets, salt),
-        ).alias("bucket"),
-    )
-
-
 def classifier_score(
     df: DataFrame,
     weights_df: DataFrame,
@@ -176,37 +130,28 @@ def classifier_score(
     salt: str = "clf",
     n_max: int = 2,
     weight_col: str = "w",
-    feats: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Score every document with a hashed-n-gram linear model:
     → (id, n_features, score, margin).  ``weights_df(bucket, w)`` is
     the model (≤ nbuckets rows — BOUNDED by construction, hence the
     broadcast hint).  Missing buckets weigh 0.  ``score`` is the exact
     decimal dot product cast to double; ``margin`` its per-feature
-    mean (0.0 for featureless docs); apply the logistic caller-side.
-
-    ``feats`` (optional) is a precomputed :func:`classifier_featurize`
-    frame over the same documents/salt/nbuckets — pass it when a
-    composed pipeline already featurized the corpus (e.g. for
-    ``classifier_fit``) so the tokenize+hash pass is not repeated."""
+    mean (0.0 for featureless docs); apply the logistic caller-side."""
     if int(nbuckets) < 1:
         raise ValueError("classifier_score: nbuckets must be >= 1")
-    if feats is not None:
-        feats = feats.select(id_col, "__fpos", "bucket")
-    else:
-        feats = df.select(
-            F.col(id_col),
-            F.posexplode_outer(ngram_features(F.col(text_col), n_max)).alias(
-                "__fpos", "__f"
-            ),
-        ).select(
-            id_col,
-            "__fpos",
-            F.when(
-                F.col("__f").isNotNull(),
-                feature_bucket(F.col("__f"), nbuckets, salt),
-            ).alias("bucket"),
-        )
+    feats = df.select(
+        F.col(id_col),
+        F.posexplode_outer(ngram_features(F.col(text_col), n_max)).alias(
+            "__fpos", "__f"
+        ),
+    ).select(
+        id_col,
+        "__fpos",
+        F.when(
+            F.col("__f").isNotNull(),
+            feature_bucket(F.col("__f"), nbuckets, salt),
+        ).alias("bucket"),
+    )
     w = F.broadcast(
         weights_df.select(
             F.col("bucket").cast("long").alias("bucket"),
@@ -481,7 +426,6 @@ def classifier_fit(
     n_iters: int = 3,
     salt: str = "clf",
     n_max: int = 2,
-    feats: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Train the hashed-n-gram logistic model; → ``(bucket, ws, w)``
     with one row per bucket (``ws`` the scaled-integer weight, ``w``
@@ -492,15 +436,7 @@ def classifier_fit(
     zero features have no instances, hence no gradient contribution —
     consistent with their fixed margin of 0.  The iteration count is a
     hyper-parameter, NOT a convergence test (determinism: the gate
-    unrolls exactly ``n_iters`` steps).
-
-    ``feats`` (optional) is a precomputed :func:`classifier_featurize`
-    frame (built with ``label_col=``) over the same documents — pass
-    it (pinned + ``repartition(id)``-clustered) when a composed
-    train→score pipeline shares one featurize pass; the caller then
-    owns its lifetime (no persist/unpersist here).  Filtering its
-    ``__fpos IS NOT NULL`` rows reproduces the internal ``explode``
-    instance table row-for-row, so the fitted weights are identical."""
+    unrolls exactly ``n_iters`` steps)."""
     import math
 
     nb = int(nbuckets)
@@ -520,26 +456,16 @@ def classifier_fit(
     # gate's 3 steps; same ratio on a cluster).  The partition count
     # comes from spark.sql.shuffle.partitions (cluster-sized via conf;
     # AQE may coalesce — partitioning stays keyed on __id either way).
-    # With a shared ``feats`` frame the caller already did that shuffle
-    # and pinned the result; the alias-projection below preserves its
-    # hashpartitioning(id), so the iterations stay exchange-free.
-    if feats is not None:
-        inst = feats.where(F.col("__fpos").isNotNull()).select(
-            F.col(id_col).alias("__id"), F.col("__y"), F.col("bucket")
-        )
-        owns_cache = False
-    else:
-        inst = df.select(
-            F.col(id_col).alias("__id"),
-            F.col(label_col).cast("double").alias("__y"),
-            F.explode(ngram_features(F.col(text_col), n_max)).alias("__f"),
-        ).select(
-            "__id",
-            "__y",
-            feature_bucket(F.col("__f"), nb, salt).alias("bucket"),
-        )
-        inst = inst.repartition("__id").persist()
-        owns_cache = True
+    inst = df.select(
+        F.col(id_col).alias("__id"),
+        F.col(label_col).cast("double").alias("__y"),
+        F.explode(ngram_features(F.col(text_col), n_max)).alias("__f"),
+    ).select(
+        "__id",
+        "__y",
+        feature_bucket(F.col("__f"), nb, salt).alias("bucket"),
+    )
+    inst = inst.repartition("__id").persist()
     try:
         ws = [0] * nb  # driver state: nbuckets scaled ints (bounded)
         lrd = float(lr)
@@ -614,8 +540,7 @@ def classifier_fit(
                 g = float(int(row["__g"]))
                 ws[int(row["bucket"])] -= math.floor(lrd * g * 1e-06)
     finally:
-        if owns_cache:
-            inst.unpersist()
+        inst.unpersist()
     out = spark.createDataFrame(
         [(b, ws[b]) for b in range(nb)], "bucket long, ws long"
     )

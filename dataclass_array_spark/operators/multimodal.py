@@ -106,30 +106,6 @@ def decode_media(media: DataFrame) -> DataFrame:
     )
 
 
-def decode_media_arrow(media: DataFrame) -> DataFrame:
-    """mapInArrow variant of the decoder: zero pandas conversion — the
-    batch stays a pyarrow RecordBatch end to end.  Preferable when the
-    decode kernel consumes raw buffers (image/audio codecs usually do)."""
-    import pyarrow as pa
-
-    def kernel(batches):
-        for batch in batches:
-            doc_ids = batch.column("doc_id")
-            payloads = batch.column("payload")
-            dims = [_decode_payload(p.as_py()) for p in payloads]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    pa.array([w for w, _ in dims], pa.int32()),
-                    pa.array([h for _, h in dims], pa.int32()),
-                    pa.array([len(p.as_py()) for p in payloads], pa.int64()),
-                ],
-                names=["doc_id", "width", "height", "n_bytes"],
-            )
-
-    return media.select("doc_id", "payload").mapInArrow(kernel, schema=DECODED_SCHEMA)
-
-
 # ---------------------------------------------------------------- frames
 FRAMES_SCHEMA = T.StructType(
     [

@@ -181,13 +181,6 @@ def _arrow_cumsum(with_pid, offsets, value_cols, out_cols):
     return with_pid.mapInArrow(fn, out_schema).drop("__pid")
 
 
-# Driver-side cap on the |partitions × groups| per-(partition, group)
-# partial-sum table collected to compute grouped-cumsum offsets.  Groups
-# are slice dimensions (language, source, …), so this is normally tiny;
-# past the cap the window+broadcast-join fallback runs instead — the
-# bounded-small-side driver-dispatch rule the BPE/kmeans operators use.
-_GROUPED_OFFSETS_CAP = 1 << 18
-
 # Group-key dtypes the Arrow grouped pass accepts: types whose Python
 # values compare exactly like Spark's grouping semantics.  float/double
 # group keys are excluded (NaN == NaN in Spark grouping but not in
@@ -328,7 +321,10 @@ def grouped_cumsum(
     reason as :func:`global_cumsum`: the offsets job and the output
     job must see ONE partitioning, not two independently-sampled
     RangePartitioner runs."""
-    from dataclass_array_spark.core.table import pin_materialization
+    from dataclass_array_spark.core.table import (
+        collect_bounded,
+        pin_materialization,
+    )
 
     if isinstance(group_cols, str):  # 'g' would explode per-char
         group_cols = [group_cols]
@@ -363,16 +359,17 @@ def grouped_cumsum(
     # table — are collected once and the running sums are computed
     # in-place over the pinned, already-sorted frame.  This deletes the
     # ``PARTITION BY (__pid, group…)`` window's full re-shuffle of
-    # every row plus the offsets broadcast join.  Oversized offset
-    # tables (> _GROUPED_OFFSETS_CAP rows) and non-conforming dtypes
-    # keep the window+join path.
+    # every row plus the offsets broadcast join.  Groups are slice
+    # dimensions (language, source, …), so the table is normally tiny;
+    # offset tables past 2^18 rows and non-conforming dtypes keep the
+    # window+join path.
     integral = {"tinyint", "smallint", "int", "bigint"}
     vtypes = dict(df.dtypes)
     if all(vtypes.get(v) in integral for v in value_cols) and all(
         vtypes.get(g) in _GROUP_KEY_TYPES for g in gcols
     ):
-        rows = part_sums.take(_GROUPED_OFFSETS_CAP + 1)
-        if len(rows) <= _GROUPED_OFFSETS_CAP:
+        rows = collect_bounded(part_sums, 1 << 18)
+        if rows is not None:
             per_group: dict = {}
             for r in rows:
                 gkey = tuple(r[c] for c in gcols)

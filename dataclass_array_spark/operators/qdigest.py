@@ -30,8 +30,16 @@ Determinism: integer counts, integer trie arithmetic, and a total
 (the textbook KLL compactor coin-flips; that is exactly what this
 variant trades a log factor of size for), so the oracle replays the
 sketch AND the estimates bit-for-bit (:func:`qdigest_sql_ctes`
-unrolls the fixed ``bits`` rounds — fixed depth, unlike the
-data-dependent k-means/BPE ladders, so no driver round-trips either).
+unrolls the fixed ``bits`` rounds).  NULL-key groups are dropped, as
+the oracle's equi-join on the group key drops them.
+
+One ladder (:func:`_ladder`) serves both compress (leaves enter as
+level-0 nodes) and merge (every level's nodes join the climb at their
+level), and one cumulative-count scan (:func:`_quantile_scan`) serves
+both this module's quantiles and the histogram's.  Each folds on the
+driver when its sketch-sized input fits
+:func:`~dataclass_array_spark.core.table.collect_bounded` and runs the
+distributed joins otherwise; the two paths agree node for node.
 
 Scale shape (100 TB): ONE corpus aggregation produces the ≤
 groups·2^bits leaf table (map-side combined, same as hist_build);
@@ -100,176 +108,103 @@ def qdigest_build(
     return qdigest_compress(leaves, group_cols, bits, k)
 
 
-# Driver-side dispatch cap for the compress ladder: a leaf table is
-# sketch-sized BY CONSTRUCTION (≤ |groups| · 2^bits rows — a histogram,
-# independent of corpus size), so when it fits comfortably on the
-# driver the 2·bits distributed rounds of joins+pins collapse into one
-# collect + a trivial integer fold (the BPE/k-means bounded-small-side
-# rule).  Larger leaf tables (many groups × deep tries) keep the
-# distributed ladder — pinned by the forced-ladder differential test.
-_DRIVER_LEAVES_CAP = 1 << 16
+def _non_null_keys(df: DataFrame, group_cols) -> DataFrame:
+    # a NULL group key never matches the distributed equi-joins (nor the
+    # oracle's ``g.c = t.c``), so those groups are dropped up front and
+    # the driver folds and the distributed paths see the same groups
+    for c in group_cols:
+        df = df.filter(F.col(c).isNotNull())
+    return df
 
 
-def _compress_ladder_py(rows, group_cols, bits, k):
-    """Exact Python replay of the distributed greedy ladder: per-group
-    threshold t = floor(n/k); per level, parent sums s over id//2;
-    every current row whose parent exceeds t is EMITTED at this level,
-    sub-threshold parents are carried up; survivors land at lvl=bits.
-    All-integer arithmetic — node-for-node identical to the join
-    ladder (floor(id/2) == id // 2 for the non-negative bucket ids,
-    and for negatives both engines floor toward -inf)."""
+def _ladder_py(nodes, bits, k):
+    """Exact Python replay of :func:`_ladder` over collected
+    ``(gkey, lvl, id, cnt)`` nodes: per-group threshold t = floor(n/k);
+    per level, parent sums s over id//2; every current node whose
+    parent exceeds t is EMITTED at this level, sub-threshold parents
+    are carried up and absorb the input nodes of the next level;
+    survivors land at lvl=bits.  All-integer arithmetic — node-for-node
+    identical to the join ladder (floor(id/2) == id // 2 for the
+    non-negative bucket ids, and for negatives both engines floor
+    toward -inf)."""
     n_by_g: dict = {}
-    for g, _i, c in rows:
+    cur: list = []
+    carried: dict = {}
+    for g, lvl, i, c in nodes:
         n_by_g[g] = n_by_g.get(g, 0) + c
+        if lvl == 0:
+            cur.append((g, i, c))
+        else:
+            carried.setdefault(lvl, []).append((g, i, c))
     t_by_g = {g: n // int(k) for g, n in n_by_g.items()}
-    cur = rows
     out = []
     for lvl in range(int(bits)):
         s: dict = {}
         for g, i, c in cur:
-            key = (g, i // 2)
-            s[key] = s.get(key, 0) + c
-        for g, i, c in cur:
-            if s[(g, i // 2)] > t_by_g[g]:
-                out.append((g, lvl, i, c))
-        cur = [
-            (g, p, sc) for (g, p), sc in s.items() if sc <= t_by_g[g]
-        ]
+            s[(g, i // 2)] = s.get((g, i // 2), 0) + c
+        out.extend(
+            (g, lvl, i, c) for g, i, c in cur if s[(g, i // 2)] > t_by_g[g]
+        )
+        nxt = {key: sc for key, sc in s.items() if sc <= t_by_g[key[0]]}
+        for g, i, c in carried.get(lvl + 1, ()):
+            nxt[(g, i)] = nxt.get((g, i), 0) + c
+        cur = [(g, i, c) for (g, i), c in nxt.items()]
     out.extend((g, int(bits), i, c) for g, i, c in cur)
     return out
 
 
-def qdigest_compress(
-    leaves: DataFrame,
-    group_cols: "list[str]",
-    bits: int,
-    k: int = 64,
-    pin: str = "local",
+def _ladder(
+    nodes: DataFrame, group_cols: "list[str]", bits: int, k: int, pin: str
 ) -> DataFrame:
-    """Compress a leaf table (group..., id, cnt) into digest nodes
-    (group..., lvl, id, cnt) — the bottom-up greedy ladder.  No
-    driver round-trips (fixed depth = ``bits``, unlike the
-    data-dependent k-means/BPE ladders), but each round's ``cur`` is a
-    BRANCH point (it feeds both that round's emitted nodes and the
-    next round), so every round is pinned
+    """The q-digest compression ladder over nodes (group..., lvl, id,
+    cnt), unique per (group, lvl, id): level-0 nodes start the climb and
+    nodes at level L join the parents carried up to level L.  NULL-key
+    groups are dropped on both paths.
+
+    The node table is sketch-sized by construction, so when it fits
+    :func:`~dataclass_array_spark.core.table.collect_bounded` the whole
+    ladder is one collect + the integer fold of :func:`_ladder_py` —
+    identical nodes, none of the 2·bits scheduling barriers.  Larger
+    tables (many groups × deep tries) run the fixed-depth join ladder,
+    where each round's ``cur`` is a BRANCH point (it feeds both that
+    round's emitted nodes and the next round), so every round is pinned
     (:func:`~dataclass_array_spark.core.table.pin_materialization`) —
     without this, materializing the digest re-executes an O(bits²)
-    cascade of the (bounded, but shuffle-bearing) round plans, and
-    every downstream action repeats it.
+    cascade of the round plans.  The probe reads the pinned node table,
+    so both paths share its single materialization."""
+    from dataclass_array_spark.core.table import (
+        collect_bounded,
+        pin_materialization,
+    )
 
-    Round 16: the leaf table is sketch-sized by construction, so when
-    it fits the driver (≤ ``_DRIVER_LEAVES_CAP`` rows) the whole
-    ladder runs as one collect + integer fold — identical nodes, none
-    of the 2·bits scheduling barriers.  The leaf aggregation feeding
-    this is still fully distributed either way; the probe reads from
-    the pinned frame, so the distributed fallback shares the same
-    single materialization (no extra corpus pass on the big path)."""
-    from dataclass_array_spark.core.table import pin_materialization
-
-    cur = pin_materialization(leaves, pin)
-    probe = cur.take(_DRIVER_LEAVES_CAP + 1)
-    if len(probe) <= _DRIVER_LEAVES_CAP:
+    nodes = pin_materialization(_non_null_keys(nodes, group_cols), pin)
+    rows = collect_bounded(nodes)
+    if rows is not None:
         import pyspark.sql.types as T
 
-        gkeyed = [
-            (tuple(r[c] for c in group_cols), int(r["id"]), int(r["cnt"]))
-            for r in probe
+        keyed = [
+            (tuple(r[c] for c in group_cols), r["lvl"], r["id"], r["cnt"])
+            for r in rows
         ]
-        nodes = _compress_ladder_py(gkeyed, group_cols, bits, k)
         schema = T.StructType(
-            [leaves.schema[c] for c in group_cols]
+            [nodes.schema[c] for c in group_cols]
             + [
                 T.StructField("lvl", T.LongType(), False),
                 T.StructField("id", T.LongType(), True),
                 T.StructField("cnt", T.LongType(), True),
             ]
         )
-        return leaves.sparkSession.createDataFrame(
-            [(*g, lvl, i, c) for (g, lvl, i, c) in nodes], schema
+        return nodes.sparkSession.createDataFrame(
+            [(*g, lvl, i, c) for g, lvl, i, c in _ladder_py(keyed, bits, k)],
+            schema,
         )
-    # aggregate totals from the PINNED frame — the old code aggregated
-    # from the raw ``leaves`` plan, re-materializing the corpus-sized
-    # leaf aggregation a second time just for the thresholds
     tot = pin_materialization(
-        cur.groupBy(*group_cols).agg(
-            F.sum("cnt").cast("long").alias("__n"),
-            F.floor(F.sum("cnt") / F.lit(int(k))).cast("long").alias("__t"),
-        ),
-        pin,
-    )
-    parts = []
-    for lvl in range(int(bits)):
-        g = _gjoin(
-            cur.groupBy(
-                *group_cols, F.floor(F.col("id") / 2).cast("long").alias("pid")
-            ).agg(F.sum("cnt").cast("long").alias("s")),
-            tot,
-            group_cols,
-        )
-        emitted = (
-            cur.withColumn("pid", F.floor(F.col("id") / 2).cast("long"))
-            .join(g.filter(F.col("s") > F.col("__t")), [*group_cols, "pid"])
-            .select(
-                *group_cols, F.lit(lvl).cast("long").alias("lvl"), "id", "cnt"
-            )
-        )
-        parts.append(emitted)
-        cur = pin_materialization(
-            g.filter(F.col("s") <= F.col("__t")).select(
-                *group_cols, F.col("pid").alias("id"), F.col("s").alias("cnt")
-            ),
-            pin,
-        )
-    parts.append(
-        cur.select(
-            *group_cols, F.lit(int(bits)).cast("long").alias("lvl"), "id", "cnt"
-        )
-    )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    # the digest itself is re-referenced by every consumer (total + cum
-    # window + one pick per quantile) — pin the O(k·bits)-row result
-    return pin_materialization(out, pin)
-
-
-def qdigest_merge(
-    digests: "list[DataFrame]",
-    group_cols: "list[str]",
-    bits: int,
-    k: int = 64,
-    pin: str = "local",
-) -> DataFrame:
-    """Node-level merge of compressed digests (the standard q-digest
-    merge): node-wise count SUM, then one recompression ladder where
-    each level also absorbs the merged nodes CARRIED at that level.
-    Total count is conserved exactly; internal-node counts after a
-    merge are bounded by ≤ 2·T_new (each input's internal nodes were
-    ≤ its own T, and a merged/recompressed node sums at most the two),
-    so the rank error bound doubles per merge generation — use the
-    LEAF-level merge (SUM leaves, compress once — see
-    :func:`qdigest_compress`) when the leaf tables are still
-    available; this node-level form is for merging digests whose
-    leaves are gone (cross-datacenter aggregation of shipped
-    sketches)."""
-    from dataclass_array_spark.core.table import pin_materialization
-
-    merged = digests[0]
-    for d in digests[1:]:
-        merged = merged.unionByName(d)
-    merged = pin_materialization(
-        merged.groupBy(*group_cols, "lvl", "id").agg(
-            F.sum("cnt").cast("long").alias("cnt")
-        ),
-        pin,
-    )
-    tot = pin_materialization(
-        merged.groupBy(*group_cols).agg(
+        nodes.groupBy(*group_cols).agg(
             F.floor(F.sum("cnt") / F.lit(int(k))).cast("long").alias("__t")
         ),
         pin,
     )
-    cur = merged.filter(F.col("lvl") == 0).drop("lvl")
+    cur = nodes.filter(F.col("lvl") == 0).drop("lvl")
     parts = []
     for lvl in range(int(bits)):
         g = _gjoin(
@@ -290,7 +225,7 @@ def qdigest_merge(
         pushed = g.filter(F.col("s") <= F.col("__t")).select(
             *group_cols, F.col("pid").alias("id"), F.col("s").alias("cnt")
         )
-        carried = merged.filter(F.col("lvl") == lvl + 1).drop("lvl")
+        carried = nodes.filter(F.col("lvl") == lvl + 1).drop("lvl")
         cur = pin_materialization(
             pushed.unionByName(carried)
             .groupBy(*group_cols, "id")
@@ -305,7 +240,146 @@ def qdigest_merge(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
+    # the digest itself is re-referenced by every consumer (total + cum
+    # window + one pick per quantile) — pin the O(k·bits)-row result
     return pin_materialization(out, pin)
+
+
+def qdigest_compress(
+    leaves: DataFrame,
+    group_cols: "list[str]",
+    bits: int,
+    k: int = 64,
+    pin: str = "local",
+) -> DataFrame:
+    """Compress a leaf table (group..., id, cnt), unique per (group,
+    id), into digest nodes (group..., lvl, id, cnt) — the bottom-up
+    greedy ladder, with the leaves entering as level-0 nodes of the
+    same ladder :func:`qdigest_merge` runs (fixed depth = ``bits``).
+    A leaf table that fits the driver cap folds in one collect; larger
+    ones run the pinned distributed join ladder (see :func:`_ladder`).
+    NULL-key groups are dropped, as the oracle's equi-join drops them.
+    The leaf aggregation feeding this is fully distributed either
+    way."""
+    nodes = leaves.select(
+        *group_cols, F.lit(0).cast("long").alias("lvl"), "id", "cnt"
+    )
+    return _ladder(nodes, group_cols, bits, k, pin)
+
+
+def qdigest_merge(
+    digests: "list[DataFrame]",
+    group_cols: "list[str]",
+    bits: int,
+    k: int = 64,
+    pin: str = "local",
+) -> DataFrame:
+    """Node-level merge of compressed digests (the standard q-digest
+    merge): node-wise count SUM, then one recompression ladder where
+    each level also absorbs the merged nodes CARRIED at that level.
+    Total count is conserved exactly; internal-node counts after a
+    merge are bounded by ≤ 2·T_new (each input's internal nodes were
+    ≤ its own T, and a merged/recompressed node sums at most the two),
+    so the rank error bound doubles per merge generation — use the
+    LEAF-level merge (SUM leaves, compress once — see
+    :func:`qdigest_compress`) when the leaf tables are still
+    available; this node-level form is for merging digests whose
+    leaves are gone (cross-datacenter aggregation of shipped
+    sketches).  Same ladder and driver fold as compress; NULL-key
+    groups are dropped."""
+    merged = digests[0]
+    for d in digests[1:]:
+        merged = merged.unionByName(d)
+    merged = merged.groupBy(*group_cols, "lvl", "id").agg(
+        F.sum("cnt").cast("long").alias("cnt")
+    )
+    return _ladder(merged, group_cols, bits, k, pin)
+
+
+def _quantile_scan(
+    nodes: DataFrame,
+    group_cols: "list[str]",
+    ps: "list[float]",
+    labels: "list[str]",
+    lo: float,
+    width: float,
+) -> DataFrame:
+    """The cumulative-count quantile scan shared by
+    :func:`~dataclass_array_spark.operators.sketch.hist_quantiles` (a
+    bucket is a ``lvl = 0`` node) and :func:`qdigest_quantiles`, over
+    nodes (group..., maxb, lvl, cnt): for each p, the first node in
+    (maxb, lvl) order whose cumulative count reaches rank ceil(p·n),
+    reported as ``lo + (maxb + 0.5)·width``.  → (group..., n,
+    labels...).  Groups with a NULL key or no qualifying node are
+    dropped.
+
+    The node table is sketch-sized by construction: when it fits
+    :func:`~dataclass_array_spark.core.table.collect_bounded` the scan
+    replays on the driver exactly — integer cum counts, rank =
+    ceil(p · double(n)) (same IEEE product), first node with cum ≥ rank
+    (Python tuple order == min(struct(maxb, lvl))), and the identical
+    double op sequence for the estimate (width is computed driver-side
+    on both paths).  Larger tables run the window + one join per p."""
+    from dataclass_array_spark.core.table import collect_bounded
+
+    nodes = _non_null_keys(nodes, group_cols)
+    rows = collect_bounded(nodes)
+    if rows is not None:
+        import math
+
+        import pyspark.sql.types as T
+
+        by_g: dict = {}
+        for r in rows:
+            by_g.setdefault(tuple(r[c] for c in group_cols), []).append(
+                (r["maxb"], r["lvl"], r["cnt"])
+            )
+        out_rows = []
+        for gkey, ns in by_g.items():
+            ns.sort()
+            n = sum(c for _, _, c in ns)
+            ests = []
+            for p in ps:
+                rank = int(math.ceil(float(p) * float(n)))
+                cum = 0
+                for maxb, _lvl, c in ns:
+                    cum += c
+                    if cum >= rank:
+                        ests.append(float(lo) + (float(maxb) + 0.5) * width)
+                        break
+                else:
+                    break  # no qualifying node: the inner join drops the group
+            if len(ests) == len(ps):
+                out_rows.append((*gkey, n, *ests))
+        schema = T.StructType(
+            [nodes.schema[c] for c in group_cols]
+            + [T.StructField("n", T.LongType(), True)]
+            + [T.StructField(lb, T.DoubleType(), True) for lb in labels]
+        )
+        return nodes.sparkSession.createDataFrame(out_rows, schema)
+    w = (
+        Window.partitionBy(*group_cols)
+        .orderBy("maxb", "lvl")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    tot = nodes.groupBy(*group_cols).agg(F.sum("cnt").cast("long").alias("n"))
+    j = _gjoin(nodes.withColumn("cum", F.sum("cnt").over(w)), tot, group_cols)
+    out = tot
+    for p, label in zip(ps, labels):
+        picked = (
+            j.filter(
+                F.col("cum")
+                >= F.ceil(F.lit(float(p)) * F.col("n").cast("double")).cast("long")
+            )
+            .groupBy(*group_cols)
+            .agg(F.min(F.struct("maxb", "lvl")).alias("__pick"))
+        )
+        est = (
+            F.lit(float(lo))
+            + (F.col("__pick.maxb").cast("double") + F.lit(0.5)) * F.lit(width)
+        ).alias(label)
+        out = _gjoin(out, picked.select(*group_cols, est), group_cols)
+    return out
 
 
 def qdigest_quantiles(
@@ -321,99 +395,24 @@ def qdigest_quantiles(
     count reaches rank ceil(p·n); the answer value is the midpoint of
     the node's LAST bucket (the q-digest upper-bound convention, the
     hist_quantiles presentation).  Output (group..., n, p{p}_est...).
-    Label-collision validation as in hist_quantiles."""
+    NULL-key groups are dropped, as the oracle's equi-join drops them.
+    Label-collision validation as in hist_quantiles; the scan itself
+    is :func:`_quantile_scan`."""
     labels = [f"p{int(p * 100)}_est" for p in ps]
     if len(set(labels)) != len(labels):
         raise ValueError(
             f"qdigest_quantiles: ps produce colliding column labels {labels}"
         )
-    nb = 1 << int(bits)
-    width = (float(hi) - float(lo)) / float(nb)
-    # Round 16: a digest is O(|groups|·k·bits) rows by construction —
-    # when it fits the driver, the quantile scan (window + one join
-    # per p) collapses to a collected sort + Python scan that replays
-    # the distributed ops exactly: integer cum counts, rank =
-    # ceil(p · double(n)) (same IEEE product), first node in
-    # (maxb, lvl) order with cum ≥ rank (Python tuple min ==
-    # min(struct(maxb, lvl))), est = lo + (maxb + 0.5)·width (the
-    # identical double op sequence — width is computed driver-side in
-    # both paths).  Oversized digests keep the distributed scan.
-    probe = digest.take(_DRIVER_LEAVES_CAP + 1)
-    if len(probe) <= _DRIVER_LEAVES_CAP:
-        import math
-
-        import pyspark.sql.types as T
-
-        by_g: dict = {}
-        for r in probe:
-            gkey = tuple(r[c] for c in group_cols)
-            maxb = (int(r["id"]) + 1) * (1 << int(r["lvl"])) - 1
-            by_g.setdefault(gkey, []).append(
-                (maxb, int(r["lvl"]), int(r["cnt"]))
-            )
-        out_rows = []
-        for gkey, nodes in by_g.items():
-            nodes.sort()
-            n = sum(c for _, _, c in nodes)
-            row = [*gkey, n]
-            ok = True
-            for p in ps:
-                rank = int(math.ceil(float(p) * float(n)))
-                cum = 0
-                est = None
-                for maxb, _lvl, c in nodes:
-                    cum += c
-                    if cum >= rank:
-                        est = float(lo) + (float(maxb) + 0.5) * width
-                        break
-                if est is None:
-                    # no qualifying node — the distributed inner join
-                    # drops the group; replicate
-                    ok = False
-                    break
-                row.append(est)
-            if ok:
-                out_rows.append(tuple(row))
-        schema = T.StructType(
-            [digest.schema[c] for c in group_cols]
-            + [T.StructField("n", T.LongType(), True)]
-            + [T.StructField(lb, T.DoubleType(), True) for lb in labels]
-        )
-        return digest.sparkSession.createDataFrame(out_rows, schema)
+    width = (float(hi) - float(lo)) / float(1 << int(bits))
     # shiftleft needs F.expr for a COLUMN bit count (python API takes a
     # literal only — the sketch.py HLL lesson)
-    d = digest.withColumn(
-        "maxb",
-        (
-            (F.col("id") + 1)
-            * F.expr("shiftleft(CAST(1 AS BIGINT), CAST(lvl AS INT))")
-            - 1
-        ).cast("long"),
-    )
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy("maxb", "lvl")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = d.withColumn("cum", F.sum("cnt").over(w))
-    tot = digest.groupBy(*group_cols).agg(F.sum("cnt").cast("long").alias("n"))
-    j = _gjoin(cum, tot, group_cols)
-    out = tot
-    for p in ps:
-        picked = (
-            j.filter(
-                F.col("cum")
-                >= F.ceil(F.lit(float(p)) * F.col("n").cast("double")).cast("long")
-            )
-            .groupBy(*group_cols)
-            .agg(F.min(F.struct("maxb", "lvl")).alias("__pick"))
-        )
-        est = (
-            F.lit(float(lo))
-            + (F.col("__pick.maxb").cast("double") + F.lit(0.5)) * F.lit(width)
-        ).alias(f"p{int(p * 100)}_est")
-        out = _gjoin(out, picked.select(*group_cols, est), group_cols)
-    return out
+    maxb = (
+        (F.col("id") + 1)
+        * F.expr("shiftleft(CAST(1 AS BIGINT), CAST(lvl AS INT))")
+        - 1
+    ).cast("long")
+    nodes = digest.select(*group_cols, maxb.alias("maxb"), "lvl", "cnt")
+    return _quantile_scan(nodes, group_cols, ps, labels, lo, width)
 
 
 # ----------------------------------------------------------- oracle

@@ -35,13 +35,6 @@ from pyspark.sql import functions as F
 
 _CM_P = (1 << 61) - 1
 
-# Driver-dispatch cap for sketch-sized scans (hist quantiles): sketches
-# are bounded by construction (|groups| × nbuckets cells), so within
-# the cap the quantile scan collects once and replays in Python — the
-# q-digest/BPE/k-means bounded-small-side rule.  Forced-distributed
-# differential tests monkeypatch this to 0.
-_DRIVER_SKETCH_CAP = 1 << 16
-
 
 def _cm_constants(depth: int) -> "tuple[list[int], list[int]]":
     """Fixed LCG (seed 7 — deliberately distinct from the minhash
@@ -467,8 +460,16 @@ def hist_quantiles(
     ``ceil(p·n)`` (1-based inverted CDF — the same discrete convention
     the exact side of ``approx_sketches`` uses).  Output ``(group...,
     n, p{p}_est...)``.  Pure arithmetic on mirrored doubles — the
-    oracle reproduces every estimate bit-for-bit."""
-    from pyspark.sql import Window
+    oracle reproduces every estimate bit-for-bit.  NULL-key groups are
+    dropped, as the oracle's equi-join drops them.
+
+    The scan is the q-digest's
+    (:func:`~dataclass_array_spark.operators.qdigest._quantile_scan`)
+    with each bucket as a level-0 node: the histogram is ≤
+    |groups|·nbuckets cells by construction, so within the
+    ``collect_bounded`` cap it replays on the driver, else it runs the
+    distributed window+join scan."""
+    from dataclass_array_spark.operators.qdigest import _quantile_scan
 
     # column labels floor p to an integer percent — ps that collide
     # (0.95 vs 0.955) or repeat would silently emit duplicate column
@@ -480,82 +481,14 @@ def hist_quantiles(
             f"{labels} — use ps that differ at integer-percent "
             "granularity (labels are p<int(p*100)>_est)"
         )
-    nb = int(nbuckets)
-    width_f = (float(hi) - float(lo)) / float(nb)
-    # Round 16 (the q-digest quantile treatment): the histogram is
-    # ≤ |groups|·nbuckets cells by construction — within the driver
-    # cap, collect once and replay the scan in Python: integer cum
-    # counts per bucket order, rank = ceil(p · double(n)) (same IEEE
-    # product), min qualifying bucket, est = lo + (b + 0.5)·width
-    # (identical double op sequence).  Groups with a NULL key or no
-    # qualifying bucket drop exactly as the distributed inner-join
-    # chain drops them.  Oversized histograms keep the distributed
-    # window+join scan.
-    probe = hist.select(*group_cols, "bucket", "cnt").take(
-        _DRIVER_SKETCH_CAP + 1
+    width = (float(hi) - float(lo)) / float(int(nbuckets))
+    nodes = hist.select(
+        *group_cols,
+        F.col("bucket").cast("long").alias("maxb"),
+        F.lit(0).cast("long").alias("lvl"),
+        "cnt",
     )
-    if len(probe) <= _DRIVER_SKETCH_CAP:
-        import math
-
-        import pyspark.sql.types as T
-
-        by_g: dict = {}
-        for r in probe:
-            gkey = tuple(r[c] for c in group_cols)
-            by_g.setdefault(gkey, []).append(
-                (int(r["bucket"]), int(r["cnt"]))
-            )
-        out_rows = []
-        for gkey, cells in by_g.items():
-            n = sum(c for _, c in cells)
-            row = [*gkey, n]
-            if group_cols and any(g is None for g in gkey):
-                continue  # the distributed est joins drop NULL groups
-            cells.sort()
-            ok = True
-            for p in ps:
-                rank = int(math.ceil(float(p) * float(n)))
-                cum = 0
-                est = None
-                for b, c in cells:
-                    cum += c
-                    if cum >= rank:
-                        est = float(lo) + (float(b) + 0.5) * width_f
-                        break
-                if est is None:
-                    ok = False
-                    break
-                row.append(est)
-            if ok:
-                out_rows.append(tuple(row))
-        schema = T.StructType(
-            [hist.schema[c] for c in group_cols]
-            + [T.StructField("n", T.LongType(), True)]
-            + [T.StructField(lb, T.DoubleType(), True) for lb in labels]
-        )
-        return hist.sparkSession.createDataFrame(out_rows, schema)
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = hist.withColumn("cum", F.sum("cnt").over(w))
-    tot = hist.groupBy(*group_cols).agg(F.sum("cnt").cast("long").alias("n"))
-    j = cum.join(tot, group_cols)
-    width = (float(hi) - float(lo)) / float(nb)
-    out = tot
-    for p in ps:
-        picked = (
-            j.filter(F.col("cum") >= F.ceil(F.lit(float(p)) * F.col("n").cast("double")).cast("long"))
-            .groupBy(*group_cols)
-            .agg(F.min("bucket").alias("__b"))
-        )
-        est = (
-            F.lit(float(lo))
-            + (F.col("__b").cast("double") + F.lit(0.5)) * F.lit(width)
-        ).alias(f"p{int(p * 100)}_est")
-        out = out.join(picked.select(*group_cols, est), group_cols)
-    return out
+    return _quantile_scan(nodes, group_cols, ps, labels, lo, width)
 
 
 def hll_intersect_estimate(

@@ -19,6 +19,24 @@ def sf_dir():
     return "/root/testdata/sf0.001"
 
 
+@pytest.fixture
+def force_distributed(monkeypatch):
+    """Context manager under which every bounded driver fold takes its
+    distributed path: ``core.table.collect_bounded`` reports every frame
+    as over its cap (consumers import it lazily, at call time)."""
+    import contextlib
+
+    from dataclass_array_spark.core import table
+
+    @contextlib.contextmanager
+    def forced():
+        with monkeypatch.context() as m:
+            m.setattr(table, "collect_bounded", lambda df, cap=1 << 16: None)
+            yield
+
+    return forced
+
+
 def assert_np_equal(table, expected: dict[str, np.ndarray], rtol=1e-6):
     """Tree-aware compare of a DcaTable against numpy arrays (shape,
     dtype-kind, values) — analog of reference testing.py:38-86."""

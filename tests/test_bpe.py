@@ -287,38 +287,6 @@ def test_bpe_group_nonconflicting_runs():
     assert flat == [("a", "b"), ("c", "d"), ("ab", "cd"), ("x", "y")]
 
 
-def test_bpe_driver_path_equals_distributed_ladder(spark, sf_dir, monkeypatch):
-    """Round-15: small vocabs train/segment on the driver (one corpus
-    scan, zero per-round jobs).  The merge table and the encoded output
-    must be IDENTICAL to the distributed batched ladder — force the
-    ladder by zeroing the dispatch threshold and compare both paths."""
-    import dataclass_array_spark.operators.bpe as B
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(80)
-    # driver path (default dispatch: gate corpora vocabs are tiny)
-    m_drv = B.bpe_train(docs, "text", 12, min_count=2, batch_pairs=16)
-    drv = [
-        (r["merge_rank"], r["left_sym"], r["right_sym"])
-        for r in m_drv.orderBy("merge_rank").collect()
-    ]
-    enc_drv = {
-        r["doc_id"]: (r["n_bpe_tokens"], r["toks_json"])
-        for r in B.bpe_encode(docs, "text", "doc_id", m_drv).collect()
-    }
-    monkeypatch.setattr(B, "_DRIVER_VOCAB_MAX", 0)
-    m_dst = B.bpe_train(docs, "text", 12, min_count=2, batch_pairs=16)
-    dst = [
-        (r["merge_rank"], r["left_sym"], r["right_sym"])
-        for r in m_dst.orderBy("merge_rank").collect()
-    ]
-    assert drv == dst and len(drv) > 0
-    enc_dst = {
-        r["doc_id"]: (r["n_bpe_tokens"], r["toks_json"])
-        for r in B.bpe_encode(docs, "text", "doc_id", m_dst).collect()
-    }
-    assert enc_drv == enc_dst
-
-
 def test_bpe_word_symbols_nonstring_wid_driver_path(spark):
     """Round-16 (advice): the driver path used to hardcode 'wid string',
     so a words table with an integer wid worked on the distributed path

@@ -552,41 +552,6 @@ def test_grouped_cumsum_matches_python_and_handles_null_groups(spark):
         assert got[(g, k)] == acc[g], (g, k)
 
 
-def test_grouped_cumsum_arrow_path_equals_window_fallback(spark):
-    """Round-16 differential: the mapInArrow grouped pass (integral
-    values, exact group keys) must produce bit-identical running sums
-    to the window+broadcast-join fallback it replaces — including NULL
-    groups, multi-column values, and groups spanning partitions."""
-    import random as _r
-
-    from dataclass_array_spark.operators import packing
-
-    _r.seed(461)
-    rows = [
-        (float(i), _r.choice(["a", "b", None]), _r.randint(0, 9),
-         _r.randint(-5, 5))
-        for i in range(1200)
-    ]
-    df = spark.createDataFrame(rows, "k double, g string, v long, w long")
-
-    def run():
-        return {
-            (r["g"], r["k"]): (r["cv"], r["cw"])
-            for r in packing.grouped_cumsum(
-                df, ["g"], "k", ["v", "w"], out_col=["cv", "cw"]
-            ).collect()
-        }
-
-    arrow = run()
-    cap = packing._GROUPED_OFFSETS_CAP
-    packing._GROUPED_OFFSETS_CAP = 0  # force the window fallback
-    try:
-        window = run()
-    finally:
-        packing._GROUPED_OFFSETS_CAP = cap
-    assert arrow == window
-
-
 def test_grouped_cumsum_empty_groups_delegates_to_global(spark):
     from dataclass_array_spark.operators.packing import (
         global_cumsum,

@@ -304,20 +304,6 @@ def test_srp_lsh_topk_recall(spark):
     assert hits >= 12  # recall@3 >= 80% over 5 queries (15 slots)
 
 
-def test_map_in_arrow_decoder_matches_pandas(spark, sf_dir):
-    from dataclass_array_spark.operators.multimodal import (
-        attach_media,
-        decode_media,
-        decode_media_arrow,
-    )
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
-    m = attach_media(d, "doc_id", "text")
-    a = decode_media(m).toPandas().sort_values("doc_id").reset_index(drop=True)
-    b = decode_media_arrow(m).toPandas().sort_values("doc_id").reset_index(drop=True)
-    assert a.equals(b)
-
-
 def test_relational_passthroughs(spark, sf_dir):
     import dataclass_array_spark as das
     from dataclass_array_spark.core.schema import i64, i32, f32
@@ -2045,38 +2031,6 @@ def test_hll_set_operations(spark, sf_dir):
     n_both = cu.join(pu, "user_id").count()
     est_i = (est_a + est_b) - est_u
     assert abs(est_i - n_both) / max(n_both, 1) < 0.35, (est_i, n_both)
-
-
-def test_hist_quantiles_driver_scan_equals_distributed(spark, sf_dir):
-    """Round-16 differential: the driver-side quantile scan (histogram
-    within _DRIVER_SKETCH_CAP) must match the forced distributed
-    window+join scan row-for-row, bit-for-bit."""
-    from dataclass_array_spark.operators import sketch as sk
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_returnflag", F.col("l_extendedprice").cast("double").alias("x")
-    )
-    r = li.agg(F.min("x"), F.max("x")).collect()[0]
-    lo, hi = float(r[0]), float(r[1])
-    nb = 512
-    h = sk.hist_build(li, ["l_returnflag"], "x", lo, hi, nb)
-
-    def run():
-        return sorted(
-            tuple(r)
-            for r in sk.hist_quantiles(
-                h, ["l_returnflag"], [0.5, 0.95], lo, hi, nb
-            ).collect()
-        )
-
-    driver = run()
-    cap = sk._DRIVER_SKETCH_CAP
-    sk._DRIVER_SKETCH_CAP = 0
-    try:
-        distributed = run()
-    finally:
-        sk._DRIVER_SKETCH_CAP = cap
-    assert driver == distributed
 
 
 def test_hist_quantiles_rejects_colliding_labels(spark):

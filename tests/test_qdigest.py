@@ -71,32 +71,6 @@ def test_qdigest_leaf_merge_equals_single_shot(spark, sf_dir):
     assert key(got) == key(want)
 
 
-def test_qdigest_driver_ladder_equals_distributed(spark, sf_dir):
-    """Round-16 differential: the driver-side compress ladder (leaf
-    table within _DRIVER_LEAVES_CAP) must produce node-for-node the
-    same digest as the forced distributed join ladder it dispatches
-    away from — including the grouped case."""
-    from dataclass_array_spark.operators import qdigest as qd
-
-    li, lo, hi = _prices(spark, sf_dir)
-
-    def build():
-        return qd.qdigest_build(
-            li, ["l_returnflag"], "l_extendedprice", lo, hi, BITS, K
-        )
-
-    driver = build()
-    cap = qd._DRIVER_LEAVES_CAP
-    qd._DRIVER_LEAVES_CAP = 0  # force the distributed ladder
-    try:
-        distributed = build()
-    finally:
-        qd._DRIVER_LEAVES_CAP = cap
-    key = lambda df: sorted(tuple(r) for r in df.collect())
-    assert key(driver) == key(distributed)
-    assert driver.schema == distributed.schema
-
-
 def test_qdigest_internal_nodes_bounded_and_counts_conserved(spark, sf_dir):
     """Every INTERNAL digest node (lvl > 0) was created by a collapse,
     so its count must be ≤ T = floor(n/k); total digest count must
