@@ -28,6 +28,9 @@ Egress collects unsorted with ``toArrow()`` and sorts on the driver by
 ``__rowid``: the result is on the driver already, so ordering it there
 costs 8 B per row and no shuffle, where ``orderBy`` ran a cluster range
 sort plus its sampling job.
+The same encoder and decoder also serve ``vectorize_method``'s numpy tier
+on executors: each ``mapInArrow`` batch is decoded by ``_np_field`` and
+its outputs are encoded by ``_arrow_field``.
 """
 
 from __future__ import annotations

@@ -10,17 +10,24 @@ Spark-first compilation tiers (SURVEY.md §4.3):
   composes (arithmetic, ``F.*``), the whole batched computation is a single
   codegen'd ``select`` — the moral equivalent of the reference's compiled
   ``jax.vmap`` path (`vectorization.py:350-378`) but JVM-side.
-- **Tier 2a — Arrow numpy-batch** (round 9): ``mapInPandas``; each Arrow
-  batch is decoded to (B, *inner) numpy arrays and the scalar method runs
-  ONCE on the whole batch via numpy broadcasting — sound only for
-  leading-axis-broadcastable programs, so two guards reject the rest:
-  output shapes must be (B, *out_shape), and the first rows are replayed
-  through the scalar path bit-exactly (see ``try_batch``).
-- **Tier 2b — Arrow per-row loop** (last resort): same ``mapInPandas``,
-  the scalar method runs per row (the reference's numpy backend is
-  exactly this unrolled loop, `vectorization.py:333-347`).
-  Output schema for both 2a/2b is inferred by running the method once on
-  the first row, mirroring the reference's tf signature inference
+- **Tier 2 — the Arrow numpy tier**: one ``mapInArrow`` pass.  Each Arrow
+  batch is decoded ONCE per input column by the core decoder
+  (``core.table._np_field``, the one ``to_numpy_fields`` uses) into
+  (B, *inner) numpy arrays; rows that break the declared shape raise its
+  ShapeError.  Outputs are encoded once per batch by the core encoder
+  (``_arrow_field``) and cast to the Arrow form of the output schema.
+  - **2a — whole batch**: the scalar method runs ONCE on the (B, *inner)
+    arrays via numpy broadcasting — sound only for
+    leading-axis-broadcastable programs, so two guards reject the rest:
+    output shapes must be (B, *out_shape), and spread sample rows are
+    replayed through the scalar path bit-exactly (see ``try_batch``).
+  - **2b — per-row loop** (last resort, pinned for the rest of the task
+    once a batch is rejected): the scalar method runs on row ``i`` of the
+    same decoded arrays (the reference's numpy backend is exactly this
+    unrolled loop, `vectorization.py:333-347`).
+  Output schema for both is inferred by running the method once on the
+  first row (collected with ``toArrow()`` through the same decoder),
+  mirroring the reference's tf signature inference
   (`vectorization.py:437-450`), or declared via ``returns=``.
 
 Argument batching (reference `_broadcast_and_flatten_args`,
@@ -34,13 +41,16 @@ Spark analog of `vectorization.py:488-503`).
 
 from __future__ import annotations
 
+import dataclasses
 import functools
 from typing import Any, Callable, Dict, FrozenSet, Optional, Tuple
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 try:  # Spark >= 4.0 moved the JVM-backed Column to the classic namespace
     from pyspark.sql.classic.column import Column as _ClassicColumn
@@ -48,7 +58,13 @@ except ImportError:  # pyspark 3.x, or a Connect-only (pyspark-client) install
     from pyspark.sql.column import Column as _ClassicColumn
 
 from dataclass_array_spark.core.schema import ArraySpec, ShapeError
-from dataclass_array_spark.core.table import DcaTable, ROWID, _nullable_variant
+from dataclass_array_spark.core.table import (
+    DcaTable,
+    ROWID,
+    _arrow_field,
+    _np_field,
+    _nullable_variant,
+)
 
 _RESULT_CLS_CACHE: Dict[Tuple, type] = {}
 
@@ -208,6 +224,35 @@ def _normalize_out(out: Any) -> Dict[str, Any]:
     return {"value": out}
 
 
+@dataclasses.dataclass(frozen=True)
+class _TableArg:
+    """A DcaTable argument bound into the work frame: its columns carry
+    ``prefix``, and the call gets the view registered under it."""
+
+    prefix: str
+
+
+def _leaf_specs(table: DcaTable) -> Dict[str, ArraySpec]:
+    return {n: s for n, s in type(table)._array_fields().items() if isinstance(s, ArraySpec)}
+
+
+def _out_spec(v: Any) -> ArraySpec:
+    """The spec of one probe output.  A string's dtype name carries its
+    width (``'<U2'`` is ``str32``), so it maps to the width-free ``U``."""
+    a = np.asarray(v)
+    return ArraySpec(np.dtype("U") if a.dtype.kind == "U" else a.dtype, a.shape)
+
+
+def _same(a: Any, b: Any) -> bool:
+    """Bit-exact equality, NaNs equal."""
+    a, b = np.asarray(a), np.asarray(b)
+    if a.shape != b.shape:
+        return False
+    if a.dtype.kind in "fc" or b.dtype.kind in "fc":
+        return bool(np.array_equal(a, b, equal_nan=True))
+    return bool(np.array_equal(a, b))
+
+
 def vectorize_method(
     fn: Optional[Callable] = None,
     *,
@@ -228,16 +273,14 @@ def vectorize_method(
 
             # ---- bind DcaTable arguments: rowid zip-join / broadcast ----
             work_df = self.df
-            bound: list[tuple[str, DcaTable]] = []  # (prefix, table) per arg
+            tables: Dict[str, DcaTable] = {"": self}  # view prefix -> table
 
-            def bind(table: DcaTable, key: str) -> str:
+            def bind(table: Any, key: str) -> Any:
+                if not isinstance(table, DcaTable):
+                    return table  # plain values pass through untouched
                 nonlocal work_df
                 prefix = f"__arg_{key}__"
-                fields = [
-                    n for n, s in type(table)._array_fields().items()
-                    if isinstance(s, ArraySpec)
-                ]
-                renamed = [F.col(n).alias(prefix + n) for n in fields]
+                renamed = [F.col(n).alias(prefix + n) for n in _leaf_specs(table)]
                 if table.shape == self.shape:
                     work_df = work_df.join(
                         table.df.select(F.col(ROWID), *renamed), on=ROWID
@@ -275,36 +318,31 @@ def vectorize_method(
                         f"self shape {self.shape} (per-dim broadcast requires "
                         f"equal rank with dims equal or 1, or scalar ())"
                     )
-                return prefix
+                tables[prefix] = table
+                return _TableArg(prefix)
 
-            new_args = []
-            for i, a in enumerate(args):
-                if isinstance(a, DcaTable):
-                    prefix = bind(a, f"p{i}")
-                    bound.append((prefix, a))
-                    new_args.append(("__table__", prefix, a))
-                else:
-                    new_args.append(("__plain__", a))
-            new_kwargs = {}
-            for k, a in kwargs.items():
-                if isinstance(a, DcaTable):
-                    prefix = bind(a, f"k{k}")
-                    bound.append((prefix, a))
-                    new_kwargs[k] = ("__table__", prefix, a)
-                else:
-                    new_kwargs[k] = ("__plain__", a)
+            # the one argument list both tiers call with: a bound table is
+            # a _TableArg, so closures shipped to executors capture no
+            # DcaTable (→ SparkContext) reference (SPARK-5063)
+            call_args = [bind(a, f"p{i}") for i, a in enumerate(args)]
+            call_kwargs = {k: bind(a, f"k{k}") for k, a in kwargs.items()}
 
-            def materialize(make_view):
-                """Rebuild (args, kwargs) with views for table args."""
-                m_args = [
-                    make_view(t[1], t[2]) if t[0] == "__table__" else t[1]
-                    for t in new_args
-                ]
-                m_kwargs = {
-                    k: make_view(t[1], t[2]) if t[0] == "__table__" else t[1]
-                    for k, t in new_kwargs.items()
-                }
-                return m_args, m_kwargs
+            def call(views: Dict[str, Any]) -> Dict[str, Any]:
+                """Run the method on ``views[""]`` with each table argument
+                replaced by its view.  Static args pass through un-batched,
+                as call kwargs (reference `_map_non_static`,
+                vectorization.py:488-503)."""
+
+                def arg(a):
+                    return views[a.prefix] if isinstance(a, _TableArg) else a
+
+                out = method(
+                    views[""],
+                    *map(arg, call_args),
+                    **{k: arg(a) for k, a in call_kwargs.items()},
+                    **statics,
+                )
+                return _normalize_out(out)
 
             # ---- Tier 1: Column tracing ----
             # two attempts: SymbolicArray wrapping first (methods
@@ -322,20 +360,19 @@ def vectorize_method(
             for symbolic in (True, False):
                 mode = "symbolic-numpy" if symbolic else "raw-Column"
                 try:
-                    view = _ColumnView(self, symbolic=symbolic)
-                    m_args, m_kwargs = materialize(
-                        lambda prefix, tbl: _ColumnView(tbl, prefix, symbolic=symbolic)
-                    )
+                    col_views = {
+                        p: _ColumnView(t, p, symbolic=symbolic) for p, t in tables.items()
+                    }
                     if symbolic:
                         # np.asarray(field) passes through during the
                         # trace call only (see symbolic.trace_context)
                         with trace_context():
-                            out = method(view, *m_args, **{**m_kwargs, **statics})
+                            out = call(col_views)
                     else:
-                        out = method(view, *m_args, **{**m_kwargs, **statics})
+                        out = call(col_views)
                     out_d = {
                         k: (v.col if isinstance(v, SymbolicArray) else v)
-                        for k, v in _normalize_out(out).items()
+                        for k, v in out.items()
                     }
                     if not all(isinstance(v, Column) for v in out_d.values()):
                         bad = {
@@ -386,113 +423,67 @@ def vectorize_method(
                     trace_failures[-1][1] if trace_failures else None
                 )
             warnings.warn(msg, VectorizeFallbackWarning, stacklevel=2)
-            self_specs = {
-                k: v for k, v in type(self)._array_fields().items() if isinstance(v, ArraySpec)
+
+            # worker-safe view layout: prefix -> (leaf field names,
+            # statics); a view's input columns are prefix + field name
+            layout = {p: (list(_leaf_specs(t)), dict(t._statics)) for p, t in tables.items()}
+            in_specs = {
+                p + n: s for p, t in tables.items() for n, s in _leaf_specs(t).items()
             }
-            arg_specs: Dict[str, Tuple[str, ArraySpec]] = {}  # col -> (field, spec)
-            for prefix, tbl in bound:
-                for n, s in type(tbl)._array_fields().items():
-                    if isinstance(s, ArraySpec):
-                        arg_specs[prefix + n] = (n, s)
-            statics_b = dict(self._statics)
-            arg_statics = {prefix: dict(tbl._statics) for prefix, tbl in bound}
+            in_df = work_df.select(ROWID, *in_specs)
 
-            # worker-safe argument templates: prefixes and plain values
-            # only — no DcaTable (→ SparkContext) references may be
-            # captured by closures shipped to executors (SPARK-5063)
-            ship_args = [
-                ("__table__", t[1]) if t[0] == "__table__" else t for t in new_args
-            ]
-            ship_kwargs = {
-                k: (("__table__", t[1]) if t[0] == "__table__" else t)
-                for k, t in new_kwargs.items()
-            }
-            prefixes = [prefix for prefix, _ in bound]
-
-            def row_views(getter):
-                """self-view + per-table-arg views for one row; getter(col)
-                returns the raw cell for a work_df column name."""
-                self_fields = {
-                    k: _to_np(getter(k), spec) for k, spec in self_specs.items()
+            def decode(tbl: pa.Table) -> Dict[str, np.ndarray]:
+                """Every input column of one batch as a (B, *inner) array,
+                through the core decoder: rows that break the declared
+                shape raise ShapeError.  The arrays are read-only, so a
+                method that writes into its inputs fails the whole-batch
+                call instead of corrupting the rows the per-row loop
+                reads."""
+                n = tbl.num_rows
+                cols = {
+                    c: _np_field(tbl.column(c), s, np.arange(n), (n,))
+                    for c, s in in_specs.items()
                 }
-                views = {}
-                for prefix in prefixes:
-                    flds = {
-                        f: _to_np(getter(c), s)
-                        for c, (f, s) in arg_specs.items()
-                        if c.startswith(prefix)
-                    }
-                    views[prefix] = _ScalarView(flds, arg_statics[prefix])
-                return _ScalarView(self_fields, statics_b), views
+                for a in cols.values():
+                    a.flags.writeable = False
+                return cols
 
-            def call_method(self_view, views):
-                m_args = [
-                    views[t[1]] if t[0] == "__table__" else t[1] for t in ship_args
-                ]
-                m_kwargs = {
-                    k: (views[t[1]] if t[0] == "__table__" else t[1])
-                    for k, t in ship_kwargs.items()
+            def views(cols: Dict[str, np.ndarray]) -> Dict[str, _ScalarView]:
+                return {
+                    p: _ScalarView({n: cols[p + n] for n in names}, st)
+                    for p, (names, st) in layout.items()
                 }
-                # static args pass through un-batched, as call kwargs
-                # (reference `_map_non_static`, vectorization.py:488-503)
-                return _normalize_out(method(self_view, *m_args, **m_kwargs, **statics))
 
-            in_cols = list(self_specs) + list(arg_specs)
-            all_specs = {**self_specs, **{c: s for c, (_, s) in arg_specs.items()}}
+            def row(cols: Dict[str, np.ndarray], i: int) -> Dict[str, _ScalarView]:
+                """Views over row ``i`` of a decoded batch, as writable
+                copies (0-d arrays for scalar fields)."""
+                return views({c: a[i, ...].copy() for c, a in cols.items()})
 
             if returns is not None:
                 out_specs = returns
             else:
-                probe = work_df.orderBy(ROWID).limit(1).toPandas()
-                if len(probe) == 0:
+                probe = in_df.orderBy(ROWID).limit(1).toArrow()
+                if not probe.num_rows:
                     raise ValueError("cannot infer vectorized output schema from empty table")
-                sv, vs = row_views(lambda c: probe[c].iloc[0])
-                probe_out = call_method(sv, vs)
-                out_specs = {
-                    k: ArraySpec(np.asarray(v).dtype, tuple(np.asarray(v).shape))
-                    for k, v in probe_out.items()
-                }
+                out_specs = {k: _out_spec(v) for k, v in call(row(decode(probe), 0)).items()}
 
             out_schema = T.StructType(
                 [T.StructField(ROWID, T.LongType(), False)]
                 + [T.StructField(k, s.spark_type, True) for k, s in out_specs.items()]
             )
+            arrow_schema = to_arrow_schema(out_schema)
 
-            def batch_views(pdf):
-                """(B, *inner) numpy views over a whole Arrow batch —
-                the tier-2a input shape (same leading-batch-axis layout
-                the reference's numpy backend vmaps over,
-                vectorization.py:53-110)."""
+            def encode(rowids: pa.Array, outs: Dict[str, np.ndarray]) -> pa.RecordBatch:
+                """(B, *inner) outputs → one batch of the output schema,
+                through the core encoder."""
+                lead = (len(rowids),)
+                arrays = [rowids] + [_arrow_field(outs[k], s, lead) for k, s in out_specs.items()]
+                return pa.RecordBatch.from_arrays(
+                    [a.cast(f.type) for a, f in zip(arrays, arrow_schema)],
+                    schema=arrow_schema,
+                )
 
-                def col_arr(c, spec):
-                    if spec.inner_shape:
-                        # ragged dynamic dims make this stack raise —
-                        # the per-row loop handles those
-                        return np.stack([_to_np(v, spec) for v in pdf[c]])
-                    return np.asarray(pdf[c].to_numpy(), dtype=spec.np_dtype)
-
-                self_fields = {
-                    k: col_arr(k, s) for k, s in self_specs.items()
-                }
-                views = {}
-                for prefix in prefixes:
-                    flds = {
-                        f: col_arr(c, s)
-                        for c, (f, s) in arg_specs.items()
-                        if c.startswith(prefix)
-                    }
-                    views[prefix] = _ScalarView(flds, arg_statics[prefix])
-                return _ScalarView(self_fields, statics_b), views
-
-            def _same(a, b):
-                a, b = np.asarray(a), np.asarray(b)
-                if a.shape != b.shape:
-                    return False
-                if a.dtype.kind in "fc" or b.dtype.kind in "fc":
-                    return bool(np.array_equal(a, b, equal_nan=True))
-                return bool(np.array_equal(a, b))
-
-            def try_batch(pdf):
+            def try_batch(cols, rowids):
                 """Tier 2a: run the scalar-written method ONCE on the
                 whole (B, *inner) batch.  Sound only for methods whose
                 numpy program broadcasts over a leading axis, so two
@@ -517,9 +508,8 @@ def vectorize_method(
                 matmul…) or guard failure returns None and the caller
                 pins the per-row loop for the rest of the task."""
                 try:
-                    sv, vs = batch_views(pdf)
-                    r = call_method(sv, vs)
-                    B = len(pdf)
+                    r = call(views(cols))
+                    B = len(rowids)
                     outs = {}
                     for k, spec in out_specs.items():
                         v = np.asarray(r[k])
@@ -532,78 +522,42 @@ def vectorize_method(
                         outs[k] = v
                     # deterministic (resume-safe) pseudo-random pick,
                     # varied per batch by the first rowid
-                    jitter = (int(pdf[ROWID].iloc[0]) * 2654435761) % B
+                    jitter = (rowids[0].as_py() * 2654435761) % B
                     sample = sorted(
                         i
                         for i in {0, 1, B // 3, B // 2, (2 * B) // 3, B - 1, jitter}
                         if 0 <= i < B
                     )
                     for i in sample:
-                        sv_i, vs_i = row_views(lambda c: pdf[c].iloc[i])
-                        ri = call_method(sv_i, vs_i)
+                        ri = call(row(cols, i))
                         for k in out_specs:
                             if not _same(ri[k], outs[k][i]):
                                 return None
                     return outs
                 except Exception:
-                    import os
-
-                    if os.environ.get("DCA_VECTORIZE_DEBUG"):
-                        import traceback
-
-                        traceback.print_exc()
                     return None
 
             def run(batches):
-                import pandas as pd
-
-                state = {"batch_ok": True}
-                for pdf in batches:
-                    outs = (
-                        try_batch(pdf)
-                        if state["batch_ok"] and len(pdf)
-                        else None
-                    )
-                    res = pd.DataFrame({ROWID: pdf[ROWID]})
-                    if outs is not None:
-                        for k, spec in out_specs.items():
-                            v = outs[k]
-                            res[k] = (
-                                [x.tolist() for x in v]
-                                if spec.inner_shape
-                                else v.tolist()
-                            )
-                        yield res
+                batch_ok = True
+                for batch in batches:
+                    if not batch.num_rows:
                         continue
-                    if len(pdf):
-                        state["batch_ok"] = False  # don't re-probe per batch
-                    out_cols: Dict[str, list] = {k: [] for k in out_specs}
-                    for i in range(len(pdf)):
-                        sv, vs = row_views(lambda c: pdf[c].iloc[i])
-                        r = call_method(sv, vs)
-                        for k in out_specs:
-                            v = np.asarray(r[k])
-                            out_cols[k].append(v.tolist() if v.ndim else v.item())
-                    for k in out_specs:
-                        res[k] = out_cols[k]
-                    yield res
+                    cols = decode(pa.Table.from_batches([batch]))
+                    rowids = batch.column(ROWID)
+                    outs = try_batch(cols, rowids) if batch_ok else None
+                    if outs is None:
+                        batch_ok = False  # don't re-probe per batch
+                        rows = [call(row(cols, i)) for i in range(batch.num_rows)]
+                        outs = {k: np.stack([np.asarray(r[k]) for r in rows]) for k in out_specs}
+                    yield encode(rowids, outs)
 
-            res_df = work_df.select(ROWID, *in_cols).mapInPandas(run, schema=out_schema)
+            res_df = in_df.mapInArrow(run, schema=out_schema)
             cls = make_table_cls(f"{type(self).__name__}_{method.__name__}_out", out_specs)
             return cls._wrap(res_df, self.shape, {}, self.spark)
 
         return wrapper
 
     return decorate(fn) if fn is not None else decorate
-
-
-def _to_np(v: Any, spec: ArraySpec) -> np.ndarray:
-    """One cell → ndarray.  Arrow hands a rank≥2 cell back as an object
-    array of row arrays, which ``np.asarray(v, dtype)`` cannot convert:
-    stack its rows instead."""
-    if isinstance(v, np.ndarray) and v.dtype == object and v.size:
-        return np.stack([_to_np(x, spec) for x in v])
-    return np.asarray(v, dtype=spec.np_dtype)
 
 
 def _spec_from_spark_type(t: T.DataType) -> ArraySpec:

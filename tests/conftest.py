@@ -37,6 +37,20 @@ def force_distributed(monkeypatch):
     return forced
 
 
+# plan-node markers of Python evaluation; a tier-1 (Catalyst-traced) plan
+# contains none of them
+PYTHON_PLAN_NODES = ("MapInPandas", "MapInArrow", "BatchEvalPython", "ArrowEvalPython", "PythonUDF")
+
+
+def to_np_cell(v, spec) -> np.ndarray:
+    """One ``to_pandas()`` cell → ndarray.  Arrow hands a rank≥2 cell back
+    as an object array of row arrays, which ``np.asarray(v, dtype)``
+    cannot convert: stack its rows instead."""
+    if isinstance(v, np.ndarray) and v.dtype == object and v.size:
+        return np.stack([to_np_cell(x, spec) for x in v])
+    return np.asarray(v, dtype=spec.np_dtype)
+
+
 def assert_np_equal(table, expected: dict[str, np.ndarray], rtol=1e-6):
     """Tree-aware compare of a DcaTable against numpy arrays (shape,
     dtype-kind, values) — analog of reference testing.py:38-86."""

@@ -38,6 +38,7 @@ except ImportError:  # pragma: no cover
 
 import dataclass_array_spark as das
 from dataclass_array_spark.core.schema import f64
+from tests.conftest import PYTHON_PLAN_NODES
 
 # The method body under test; swapped per example (driver-side only —
 # tier-1 never ships the closure to an executor).
@@ -411,13 +412,14 @@ def test_fuzz_tier1_nan_corpus(spark, ast):
 
 
 def test_tier1_plan_has_no_python_stage(spark):
-    """The traced plan must stay JVM-side: no MapInPandas /
-    BatchEvalPython / ArrowEvalPython node anywhere."""
+    """The traced plan must stay JVM-side: no Python evaluation node
+    (MapInPandas / MapInArrow / BatchEvalPython / ArrowEvalPython /
+    PythonUDF) anywhere."""
     t = table(spark)
     _BODY["fn"] = lambda view: np.sum(np.asarray(view.v) > 0) + (view.x > 1)
     out = t.compute()
     plan = out.df._jdf.queryExecution().executedPlan().toString()
-    for bad in ("MapInPandas", "BatchEvalPython", "ArrowEvalPython"):
+    for bad in PYTHON_PLAN_NODES:
         assert bad not in plan, f"{bad} found in tier-1 plan:\n{plan}"
 
 

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataclass_array_spark.workload import QUERIES
+from tests.conftest import PYTHON_PLAN_NODES
 
 SF = "/root/testdata/sf0.001"
 
@@ -239,7 +240,7 @@ def test_shape_vectorize_stays_jvm_side(spark):
     with warnings.catch_warnings():
         warnings.simplefilter("error", VectorizeFallbackWarning)
         p = plan(spark, "shape_vectorize")
-    assert "MapInPandas" not in p and "BatchEvalPython" not in p
+    assert not any(m in p for m in PYTHON_PLAN_NODES)
 
 
 def test_minhash_band_shuffle_carries_no_shingles(spark):

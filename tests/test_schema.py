@@ -76,11 +76,11 @@ def _values(dtype, shape, rng):
 
 def _decode_nested(cells, table_cls):
     """Object array of row structs → {leaf: ndarray over cells.shape}."""
-    from dataclass_array_spark.vectorize import _to_np
+    from tests.conftest import to_np_cell
 
     out = {}
     for name, spec in table_cls._array_fields().items():
-        rows = [_to_np(c[name], spec) for c in cells.ravel()]
+        rows = [to_np_cell(c[name], spec) for c in cells.ravel()]
         out[name] = np.stack(rows).reshape(cells.shape + rows[0].shape)
     return out
 

@@ -229,7 +229,7 @@ def test_egress_orders_disordered_rows(spark, kind):
     back equal to numpy through both exits."""
     from pyspark.sql import functions as F
 
-    from dataclass_array_spark.vectorize import _to_np
+    from tests.conftest import to_np_cell
 
     t, want = _disordered(kind, spark)
     physical = t.df.select(F.col("__rowid")).toPandas()["__rowid"].to_numpy()
@@ -241,7 +241,7 @@ def test_egress_orders_disordered_rows(spark, kind):
     np.testing.assert_array_equal(pdf.index.to_numpy(), np.arange(t.size))
     for k, w in want.items():
         spec = Isometrie._array_fields()[k]
-        cells = np.stack([_to_np(c, spec) for c in pdf[k]])
+        cells = np.stack([to_np_cell(c, spec) for c in pdf[k]])
         np.testing.assert_array_equal(cells, w.reshape((t.size,) + w.shape[t.ndim:]))
 
 

@@ -9,6 +9,8 @@ import warnings
 
 import dataclass_array_spark as das
 from dataclass_array_spark.core.schema import f32, f64
+from tests.conftest import PYTHON_PLAN_NODES
+from tests.test_schema import _BATCH, _ROUNDTRIP_DTYPES, _assert_exact, _values
 
 
 @das.dataclass_array(broadcast=True, cast_dtype=True)
@@ -29,7 +31,7 @@ class Ray(das.DcaTable):
     def dir_norm2_t2(self):
         # np.spacing (ulp distance) is deliberately unmapped in the
         # tracer (arcsinh traces tier-1 since round 9, sin since round
-        # 8): forces the tier-2 mapInPandas per-row execution
+        # 8): forces the tier-2 mapInArrow per-row execution
         d = np.asarray(self.dir)
         return {"n2": float(np.dot(d, d) + 0.0 * np.spacing(d).sum())}
 
@@ -145,7 +147,7 @@ def test_symbolic_tracing_compiles_to_catalyst(spark):
     with redirect_stdout(buf):
         out.df.explain("formatted")
     plan = buf.getvalue()
-    assert "MapInPandas" not in plan and "PythonUDF" not in plan, plan
+    assert not any(m in plan for m in PYTHON_PLAN_NODES), plan
 
 
 class RayNeg(Ray):
@@ -209,7 +211,7 @@ def test_symbolic_reductions(spark):
     buf = io.StringIO()
     with redirect_stdout(buf):
         out.df.explain("formatted")
-    assert "MapInPandas" not in buf.getvalue()
+    assert not any(m in buf.getvalue() for m in PYTHON_PLAN_NODES)
 
 
 def test_declared_returns_float_coercion_traces_tier1(spark):
@@ -240,7 +242,7 @@ def test_declared_returns_float_coercion_traces_tier1(spark):
     buf = io.StringIO()
     with redirect_stdout(buf):
         out.df.explain("formatted")
-    assert "MapInPandas" not in buf.getvalue()
+    assert not any(m in buf.getvalue() for m in PYTHON_PLAN_NODES)
 
 
 def test_declared_returns_skips_probe(spark):
@@ -419,7 +421,7 @@ def test_rank2_matmul_traces_to_catalyst(spark):
         out = box.apply()
         got = out.to_numpy_fields()["p"]
     plan = out.df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan and "Python" not in plan
+    assert not any(m in plan for m in PYTHON_PLAN_NODES) and "Python" not in plan
     np.testing.assert_allclose(got, np.einsum("nij,nj->ni", R, t) + t, rtol=1e-6)
 
 
@@ -580,7 +582,7 @@ def test_bool_plan_is_pure_catalyst(spark):
     with redirect_stdout(buf):
         r.stats().df.explain("formatted")
     p = buf.getvalue()
-    assert "MapInPandas" not in p and "BatchEvalPython" not in p
+    assert not any(m in p for m in PYTHON_PLAN_NODES)
 
 
 def test_eq_ne_astype_trace(spark):
@@ -808,3 +810,101 @@ def test_numpy_tier_rank2_field_matches_numpy(spark):
     np.testing.assert_array_equal(s, (np.spacing(rot) + rot * 2.0).reshape(5, 8, 3, 3))
     want = np.array([np.trace(m @ m) for m in rot], dtype=np.float64).reshape(5, 8)
     np.testing.assert_allclose(tr, want, rtol=1e-6)
+
+
+def _identity_cls(dtype, inner, per_row):
+    """A class whose identity method stays off tier 1 (np.spacing has no
+    Catalyst mapping).  ``per_row`` makes the body raise when given a
+    leading batch axis, so only the per-row loop can run it."""
+    from dataclass_array_spark.core.schema import ArraySpec
+
+    def ident(self):
+        x = np.asarray(self.x)
+        np.spacing(np.zeros(np.shape(x)))
+        if per_row and x.ndim != len(inner):
+            raise ValueError("batched call")
+        return {"y": x}
+
+    return das.dataclass_array(cast_dtype=True)(
+        type(
+            "Ident",
+            (das.DcaTable,),
+            {
+                "__annotations__": {"x": ArraySpec(dtype, inner)},
+                "ident": das.vectorize_method(ident),
+            },
+        )
+    )
+
+
+@pytest.mark.parametrize("per_row", [False, True], ids=["batch", "per_row"])
+@pytest.mark.parametrize("inner", [(), (2, 3)], ids=["rank0", "rank2"])
+@pytest.mark.parametrize("dtype", _ROUNDTRIP_DTYPES, ids=lambda d: d.name)
+def test_numpy_tier_dtype_identity(spark, dtype, inner, per_row):
+    """The numpy tier decodes and encodes every dtype of the Spark
+    mapping exactly (iinfo bounds, uint64 past int64, non-ASCII
+    strings, complex as struct<re, im>), on the whole-batch tier and on
+    the per-row loop."""
+    want = _values(dtype, _BATCH + inner, np.random.default_rng(len(inner)))
+    t = _identity_cls(dtype, inner, per_row)(spark, x=want)
+    with pytest.warns(das.VectorizeFallbackWarning, match="ident"):
+        out = t.ident()
+    _assert_exact(out.to_numpy_fields()["y"], want)
+
+
+def test_numpy_tier_rejects_malformed_rows(spark):
+    """Rows whose length breaks the declared inner shape raise the core
+    decoder's ShapeError, as ``to_numpy_fields`` does, instead of being
+    summed silently."""
+    from pyspark.sql import types as T
+
+    from dataclass_array_spark.core.schema import ShapeError
+
+    @das.dataclass_array(broadcast=True, cast_dtype=True)
+    class Vec(das.DcaTable):
+        v: f32["*b 3"]
+
+        @das.vectorize_method
+        def total(self):
+            d = np.asarray(self.v)
+            return {"s": float(np.sum(d) + 0.0 * np.spacing(d).sum())}
+
+    schema = T.StructType([T.StructField("v", T.ArrayType(T.FloatType()))])
+    rows = [([1.0, 2.0, 3.0],), ([1.0, 2.0],), ([4.0, 5.0, 6.0, 7.0],)]
+    t = Vec.from_df(spark.createDataFrame(rows, schema))
+    with pytest.raises(ShapeError, match="ragged or not 3"):
+        t.to_numpy_fields()
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", das.VectorizeFallbackWarning)
+        out = t.total()
+    with pytest.raises(Exception, match="ragged or not 3"):
+        out.to_numpy_fields()
+
+
+@pytest.mark.parametrize("inner", [(), (3,)], ids=["rank0", "rank1"])
+def test_numpy_tier_method_writing_its_inputs(spark, inner):
+    """A method that writes into its input arrays sees each row's values
+    exactly once: the whole-batch call gets read-only arrays (so it fails
+    and the per-row loop runs), and each row gets its own copy."""
+    from dataclass_array_spark.core.schema import ArraySpec
+
+    def bump(self):
+        d = np.asarray(self.x)
+        d += 1.0
+        return {"y": d * 2.0 + 0.0 * np.spacing(d)}
+
+    cls = das.dataclass_array(cast_dtype=True)(
+        type(
+            "Bump",
+            (das.DcaTable,),
+            {
+                "__annotations__": {"x": ArraySpec(np.dtype(np.float64), inner)},
+                "bump": das.vectorize_method(bump),
+            },
+        )
+    )
+    x = np.arange(40 * int(np.prod(inner)), dtype=np.float64).reshape((40,) + inner)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", das.VectorizeFallbackWarning)
+        got = cls(spark, x=x).bump().to_numpy_fields()["y"]
+    np.testing.assert_array_equal(got, (x + 1.0) * 2.0)
