@@ -28,9 +28,11 @@ Egress collects unsorted with ``toArrow()`` and sorts on the driver by
 ``__rowid``: the result is on the driver already, so ordering it there
 costs 8 B per row and no shuffle, where ``orderBy`` ran a cluster range
 sort plus its sampling job.
-The same encoder and decoder also serve ``vectorize_method``'s numpy tier
-on executors: each ``mapInArrow`` batch is decoded by ``_np_field`` and
-its outputs are encoded by ``_arrow_field``.
+The same encoder and decoder are also the executor-side kernel boundary
+(bottom of this module): every numpy kernel — ``vectorize_method``'s
+numpy tier and the operators' Arrow UDF, ``applyInArrow`` and
+``mapInArrow`` kernels — decodes its batch with ``_np_field`` and encodes
+its result with ``_arrow_field``.
 """
 
 from __future__ import annotations
@@ -45,6 +47,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 from dataclass_array_spark.core import schema as dsch
 from dataclass_array_spark.core.schema import ArraySpec, ShapeError, parse_shape
@@ -1307,3 +1310,70 @@ def _np_field(col: pa.ChunkedArray, spec, order: np.ndarray, shape: Tuple[int, .
         flat = np.asarray(values.to_numpy(), dtype=spec.np_dtype)
     dims_t = tuple(dims)
     return flat.reshape((len(order),) + dims_t)[order].reshape(tuple(shape) + dims_t)
+
+
+# ---------------- numpy kernels: the executor side of the same boundary ----------------
+
+
+def np_column(col: Union[pa.Array, pa.ChunkedArray], spec) -> np.ndarray:
+    """One Arrow column of B rows → a ``(B, *inner)`` array, through
+    ``_np_field``.  A static inner dim in ``spec`` keeps a 0-row column
+    at ``(0, dim)``, so kernels need no empty-batch branch."""
+    if isinstance(col, pa.Array):
+        col = pa.chunked_array([col], type=col.type)
+    return _np_field(col, spec, np.arange(len(col)), (len(col),))
+
+
+def scalar_spec(t: T.DataType) -> ArraySpec:
+    """The spec a scalar column of Spark type ``t`` decodes with: the numpy
+    dtype of its Arrow type (object for strings and decimals)."""
+    return ArraySpec(np.dtype(to_arrow_type(t).to_pandas_dtype()))
+
+
+def np_columns(
+    batch: Union[pa.Table, pa.RecordBatch], specs: Dict[str, Any]
+) -> Dict[str, np.ndarray]:
+    """Table form of the kernel boundary, decode side: each column named
+    in ``specs`` as a ``(B, *inner)`` array.  Serves ``applyInArrow``
+    groups and ``mapInArrow`` batches."""
+    return {c: np_column(batch.column(c), s) for c, s in specs.items()}
+
+
+def arrow_table(outs: Dict[str, Any], schema: T.StructType) -> pa.Table:
+    """Table form, encode side: the columns of ``schema`` from ``outs``
+    (each a ``(B, *inner)`` array, or an Arrow array passed through),
+    cast to the Arrow form of ``schema``, as grouped and map UDFs must
+    return it."""
+    arrow_schema = to_arrow_schema(schema)
+    return pa.Table.from_arrays(
+        [_arrow_column(outs[f.name]).cast(f.type) for f in arrow_schema], schema=arrow_schema
+    )
+
+
+def np_udf(returns: Union[str, T.DataType], *specs) -> Callable[[Callable], Any]:
+    """Scalar form: ``@np_udf(returns, *specs)`` turns ``fn(*arrays)`` into
+    an ``F.arrow_udf``.  Each argument is decoded once by ``np_column``
+    (a ``None`` spec passes the Arrow array through); the result, an
+    array or a dict of arrays for a struct ``returns``, is encoded by
+    ``_arrow_field`` and cast to ``returns`` by the Arrow UDF runner."""
+
+    def wrap(fn: Callable) -> Any:
+        def kernel(*cols: pa.Array) -> pa.Array:
+            args = [c if s is None else np_column(c, s) for c, s in zip(cols, specs)]
+            return _arrow_column(fn(*args))
+
+        kernel.__name__ = fn.__name__  # the name plans show
+        return F.arrow_udf(kernel, returns)
+
+    return wrap
+
+
+def _arrow_column(v: Any) -> pa.Array:
+    """A ``(B, *inner)`` array, or a dict of them (a struct), as one Arrow
+    array through ``_arrow_field``; Arrow arrays pass through."""
+    if isinstance(v, pa.Array):
+        return v
+    if isinstance(v, dict):
+        return pa.StructArray.from_arrays([_arrow_column(a) for a in v.values()], names=list(v))
+    v = np.asarray(v)
+    return _arrow_field(v, ArraySpec(v.dtype, v.shape[1:]), (len(v),))

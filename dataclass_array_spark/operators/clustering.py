@@ -36,9 +36,20 @@ from __future__ import annotations
 from typing import List, Tuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from dataclass_array_spark.core.schema import ArraySpec
+from dataclass_array_spark.core.table import (
+    arrow_table,
+    np_column,
+    np_columns,
+    np_udf,
+    pin_materialization,
+    scalar_spec,
+)
 
 _DEC = "decimal(38,9)"
 
@@ -100,22 +111,14 @@ def _argmin_udf(centroids: List[List[float]]):
     """
     C = np.asarray(centroids, dtype=np.float64)  # k x dim
 
-    @F.pandas_udf("struct<cluster: bigint, dist: double>")
-    def assign(v: pd.Series) -> pd.DataFrame:
-        if not len(v):
-            return pd.DataFrame({"cluster": [], "dist": []})
-        V = np.stack(v.to_numpy()).astype(np.float64, copy=False)  # b x dim
+    @np_udf("struct<cluster: bigint, dist: double>", ArraySpec(np.float64, (C.shape[1],)))
+    def assign(V: np.ndarray) -> dict:
         acc = np.zeros((V.shape[0], C.shape[0]), dtype=np.float64)
         for d in range(C.shape[1]):
             diff = V[:, d, None] - C[None, :, d]
             acc += diff * diff
         cid = np.argmin(acc, axis=1)
-        return pd.DataFrame(
-            {
-                "cluster": cid.astype(np.int64),
-                "dist": acc[np.arange(V.shape[0]), cid],
-            }
-        )
+        return {"cluster": cid.astype(np.int64), "dist": acc[np.arange(V.shape[0]), cid]}
 
     return assign
 
@@ -513,7 +516,7 @@ FROM afinal ORDER BY vec_id"""
 #   capped — sqrt(k) clamped to auto_k_cap — so this stays driver
 #   metadata), then a zero-shuffle argmin assigns every row a cell.
 # - FINE: each cell trains its own ceil(n_cell / target) centroids from
-#   the cell's lowest-id sample INSIDE applyInPandas — fine centroids
+#   the cell's lowest-id sample INSIDE applyInArrow — fine centroids
 #   are a distributed (cell, fine, cv) DataFrame that never lands on
 #   the driver.
 # - ASSIGN: rows join their cell's centroid matrix (one hash join on
@@ -546,33 +549,35 @@ def _auto_k_plan(
     return ("two_level", min(max(1, k_coarse), cap))
 
 
-def _argmin_matrix_udf():
+def _argmin_matrix_udf(dim: int):
     """Arrow-batched argmin of each row against ITS OWN centroid matrix
     column (array<array<double>>, the row's cell codebook).  Bit-exact
     replica of the per-cell fold chain: dim-major ``acc += diff^2``
     (the sequential-fold double order) and ``np.argmin`` first-min
     (lower fine id wins ties).  Rows arrive cell-clustered from the
-    join, so the per-batch loop vectorizes over one cell at a time."""
+    join, so the per-batch loop vectorizes over one cell at a time; a
+    cell's matrix is decoded once, from its first row (the matrices'
+    row counts differ between cells, so the column has no batch form)."""
+    cm_spec = ArraySpec(np.float64, (None, dim))
 
-    @F.pandas_udf("struct<fine: bigint, dist: double>")
-    def assign(cell: pd.Series, v: pd.Series, cm: pd.Series) -> pd.DataFrame:
-        if not len(v):
-            return pd.DataFrame({"fine": [], "dist": []})
-        out_f = np.empty(len(v), dtype=np.int64)
-        out_d = np.empty(len(v), dtype=np.float64)
-        cells = cell.to_numpy()
-        for c in pd.unique(cell):
+    @np_udf(
+        "struct<fine: bigint, dist: double>",
+        ArraySpec(np.int64), ArraySpec(np.float64, (dim,)), None,
+    )
+    def assign(cells: np.ndarray, V: np.ndarray, cm: pa.Array) -> dict:
+        out_f = np.empty(len(V), dtype=np.int64)
+        out_d = np.empty(len(V), dtype=np.float64)
+        for c in np.unique(cells):
             idx = np.nonzero(cells == c)[0]
-            C = np.stack(cm.iloc[idx[0]]).astype(np.float64, copy=False)
-            V = np.stack(v.iloc[idx].to_numpy()).astype(np.float64, copy=False)
-            acc = np.zeros((V.shape[0], C.shape[0]), dtype=np.float64)
-            for d in range(C.shape[1]):
-                diff = V[:, d, None] - C[None, :, d]
+            C = np_column(cm.slice(idx[0], 1), cm_spec)[0]
+            acc = np.zeros((len(idx), C.shape[0]), dtype=np.float64)
+            for d in range(dim):
+                diff = V[idx, d, None] - C[None, :, d]
                 acc += diff * diff
             fi = np.argmin(acc, axis=1)
             out_f[idx] = fi
             out_d[idx] = acc[np.arange(len(idx)), fi]
-        return pd.DataFrame({"fine": out_f, "dist": out_d})
+        return {"fine": out_f, "dist": out_d}
 
     return assign
 
@@ -595,7 +600,7 @@ def kmeans_assign_two_level(
     driver-bounded ``k_coarse`` centroids), ``fine`` the within-cell
     cluster: each cell trains ``ceil(n_cell / target_cluster_size)``
     centroids over its ``fine_train_limit`` LOWEST-id rows inside
-    ``applyInPandas`` (the bit-exact :func:`_kmeans_fit_driver`
+    ``applyInArrow`` (the bit-exact :func:`_kmeans_fit_driver`
     replica), so expected fine cluster size ≈ ``target_cluster_size``
     regardless of corpus size while the driver never sees a fine
     centroid.  Size ``fine_train_limit`` ≥ ~a few × the expected
@@ -603,11 +608,10 @@ def kmeans_assign_two_level(
 
     Scale audit: one corpus scan for coarse assignment (zero-shuffle
     argmin), one shuffle on ``cell`` for the per-cell sample window,
-    one bounded ``applyInPandas`` over samples, one hash join of rows
+    one bounded ``applyInArrow`` over samples, one hash join of rows
     to their cell's centroid matrix + Arrow argmin.  No driver-side
     state grows with n.
     """
-    from dataclass_array_spark.core.table import pin_materialization
 
     target = int(target_cluster_size)
     fit_iters = int(iters)
@@ -639,31 +643,37 @@ def kmeans_assign_two_level(
         .join(F.broadcast(cnt), on="cell")
     )
 
-    def _train(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        n_cell = int(pdf["_n"].iloc[0])
-        kf = max(1, -(-n_cell // target))
-        cents = _kmeans_fit_driver(
-            [list(row) for row in pdf["v"]], kf, fit_iters
-        )
-        return pd.DataFrame(
+    dim = len(coarse[0])
+    specs = {
+        id_col: scalar_spec(df.schema[id_col].dataType),
+        "cell": ArraySpec(np.int64),
+        "_n": ArraySpec(np.int64),
+        "v": ArraySpec(np.float64, (dim,)),
+    }
+    train_schema = T.StructType.fromDDL("cell bigint, fine bigint, cv array<double>")
+
+    def _train(tbl: pa.Table) -> pa.Table:
+        g = np_columns(tbl, specs)
+        V = g["v"][np.argsort(g[id_col], kind="stable")]
+        kf = max(1, -(-int(g["_n"][0]) // target))
+        cents = np.asarray(_kmeans_fit_driver(V, kf, fit_iters), dtype=np.float64)
+        return arrow_table(
             {
-                "cell": [int(pdf["cell"].iloc[0])] * len(cents),
-                "fine": list(range(len(cents))),
+                "cell": np.full(len(cents), g["cell"][0]),
+                "fine": np.arange(len(cents), dtype=np.int64),
                 "cv": cents,
-            }
+            },
+            train_schema,
         )
 
-    fine_cents = sample.groupBy("cell").applyInPandas(
-        _train, "cell bigint, fine bigint, cv array<double>"
-    )
+    fine_cents = sample.groupBy("cell").applyInArrow(_train, train_schema)
     cmats = fine_cents.groupBy("cell").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("fine", "cv"))),
             lambda x: x["cv"],
         ).alias("cm")
     )
-    best = _argmin_matrix_udf()(F.col("cell"), F.col("v"), F.col("cm"))
+    best = _argmin_matrix_udf(dim)(F.col("cell"), F.col("v"), F.col("cm"))
     cols = [
         F.col(id_col), F.col("cell"),
         F.col("_b").fine.alias("fine"), F.col("_b").dist.alias("dist"),
@@ -740,7 +750,6 @@ def semantic_dedup_two_level(
     pairing/anti-join shape as :func:`semantic_dedup`, shuffled on the
     composite cluster key; ``max_cluster_size`` caps each fine
     cluster's pairing set exactly as the single-level cap does."""
-    from dataclass_array_spark.core.table import pin_materialization
     from dataclass_array_spark.operators.similarity import cosine, norm2
 
     assign = kmeans_assign_two_level(
@@ -898,7 +907,6 @@ def semantic_dedup(
 
     Returns ``(id, cluster)`` of surviving rows.
     """
-    from dataclass_array_spark.core.table import pin_materialization
     from dataclass_array_spark.operators.similarity import cosine, norm2
 
     # one casted vecs frame feeds the auto-k count, every Lloyd round,

@@ -1,12 +1,13 @@
 """Multimodal column support: image/audio/video as opaque ``binary``
-columns with typed metadata, processed by Arrow-batched pandas UDFs.
+columns with typed metadata, processed by Arrow-batched numpy kernels.
 
 The container has no image/audio codecs, so the actual decode is a
 clearly-marked deterministic STUB (`fake_decode_batch`) — but all the
 Spark-side plumbing is real and tested: BinaryType columns, metadata
-structs, mapInPandas batch iteration, explicit output schemas, and
-partition-preserving flow.  Swap ``_decode_payload`` for PIL/ffmpeg on a
-real cluster and nothing else changes.
+structs, mapInArrow batch iteration through the core Arrow decoder and
+encoder, explicit output schemas, and partition-preserving flow.  Swap
+``_decode_payload`` for PIL/ffmpeg on a real cluster and nothing else
+changes.
 """
 
 from __future__ import annotations
@@ -14,10 +15,14 @@ from __future__ import annotations
 import hashlib
 from typing import Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from dataclass_array_spark.core.schema import ArraySpec
+from dataclass_array_spark.core.table import arrow_table, np_columns
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -82,26 +87,28 @@ def _decode_payload(payload: bytes) -> tuple[int, int]:
     return width, height
 
 
-def fake_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: Arrow batches in, decoded metadata out.  This
+def fake_decode_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow kernel: Arrow batches in, decoded metadata out.  This
     is the exact shape a real decoder runs in (vectorized I/O at the
     batch level, per-row codec calls inside)."""
-    for pdf in batches:
-        dims = [_decode_payload(bytes(p)) for p in pdf["payload"]]
-        yield pd.DataFrame(
+    for batch in batches:
+        g = np_columns(batch, {"doc_id": ArraySpec(np.int64), "payload": ArraySpec(object)})
+        dims = np.asarray([_decode_payload(p) for p in g["payload"]], np.int32).reshape(-1, 2)
+        yield from arrow_table(
             {
-                "doc_id": pdf["doc_id"],
-                "width": [w for w, _ in dims],
-                "height": [h for _, h in dims],
-                "n_bytes": [len(bytes(p)) for p in pdf["payload"]],
-            }
-        )
+                "doc_id": g["doc_id"],
+                "width": dims[:, 0],
+                "height": dims[:, 1],
+                "n_bytes": np.asarray([len(p) for p in g["payload"]], dtype=np.int64),
+            },
+            DECODED_SCHEMA,
+        ).to_batches()
 
 
 def decode_media(media: DataFrame) -> DataFrame:
     """Run the (stub) decoder over a multimodal table.  Column pruning
     matters at scale: select only payload+id into the Python worker."""
-    return media.select("doc_id", "payload").mapInPandas(
+    return media.select("doc_id", "payload").mapInArrow(
         fake_decode_batch, schema=DECODED_SCHEMA
     )
 
@@ -116,21 +123,28 @@ FRAMES_SCHEMA = T.StructType(
 )
 
 
-def sample_frames_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel with 1->N output: each video doc yields
+def sample_frames_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow kernel with 1->N output: each video doc yields
     ``1 + md5(payload)[4:6] % 4`` frames (the deterministic stand-in for
     ffmpeg keyframe extraction); each frame id is a content-derived md5
     so downstream exact-dedup over frames is meaningful."""
-    for pdf in batches:
+    for batch in batches:
+        g = np_columns(batch, {"doc_id": ArraySpec(np.int64), "payload": ArraySpec(object)})
         ids, idxs, md5s = [], [], []
-        for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-            h = hashlib.md5(bytes(p)).hexdigest()
-            n_frames = 1 + int(h[4:6], 16) % 4
-            for i in range(n_frames):
+        for doc_id, p in zip(g["doc_id"], g["payload"]):
+            h = hashlib.md5(p).hexdigest()
+            for i in range(1 + int(h[4:6], 16) % 4):
                 ids.append(doc_id)
                 idxs.append(i)
                 md5s.append(hashlib.md5(f"{h}:{i}".encode()).hexdigest())
-        yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame_md5": md5s})
+        yield from arrow_table(
+            {
+                "doc_id": np.asarray(ids, dtype=np.int64),
+                "frame_idx": np.asarray(idxs, dtype=np.int32),
+                "frame_md5": np.asarray(md5s, dtype=object),
+            },
+            FRAMES_SCHEMA,
+        ).to_batches()
 
 
 def sample_frames(media: DataFrame) -> DataFrame:
@@ -138,70 +152,6 @@ def sample_frames(media: DataFrame) -> DataFrame:
     media_type filter prunes BEFORE the Python worker (metadata lives
     outside the payload), and only id+payload cross the Arrow boundary."""
     vids = media.filter(F.col("meta.media_type") == "video/mp4")
-    return vids.select("doc_id", "payload").mapInPandas(
+    return vids.select("doc_id", "payload").mapInArrow(
         sample_frames_batch, schema=FRAMES_SCHEMA
     )
-
-
-# ---------------------------------------------------------------- resize
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("resized_md5", T.StringType(), True),
-    ]
-)
-
-
-def resize_media(media: DataFrame, max_dim: int = 256) -> DataFrame:
-    """STUB resize: clamp the (fake-decoded) dimensions to ``max_dim``
-    preserving aspect, emit a content-derived id for the resized bytes.
-    Real kernel: PIL ``Image.thumbnail``; the batch shape is identical."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, md5s = [], [], [], []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                w, h = _decode_payload(bytes(p))
-                scale = min(1.0, max_dim / max(w, h))
-                w2, h2 = max(1, int(w * scale)), max(1, int(h * scale))
-                ids.append(doc_id)
-                ws.append(w2)
-                hs.append(h2)
-                md5s.append(
-                    hashlib.md5(
-                        f"{hashlib.md5(bytes(p)).hexdigest()}:{w2}x{h2}".encode()
-                    ).hexdigest()
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "width": ws, "height": hs, "resized_md5": md5s}
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(kernel, schema=RESIZED_SCHEMA)
-
-
-# ---------------------------------------------------------------- features
-def extract_media_features(media: DataFrame, dim: int = 16) -> DataFrame:
-    """STUB featurizer: payload -> float vector (md5-seeded, unit-free),
-    the binary->embedding bridge into the similarity/clustering ops.
-    Real kernel: a vision/audio encoder over the batch; the output
-    contract (id + array<float>) is what ann/kmeans consume."""
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-        ]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vecs = []
-            for p in pdf["payload"]:
-                h = hashlib.md5(bytes(p)).digest()
-                # expand the 16-byte digest deterministically to `dim` floats
-                raw = (h * ((dim // len(h)) + 1))[:dim]
-                vecs.append([(b - 127.5) / 127.5 for b in raw])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "embedding": vecs})
-
-    return media.select("doc_id", "payload").mapInPandas(kernel, schema=schema)

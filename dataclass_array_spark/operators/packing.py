@@ -23,8 +23,20 @@ from __future__ import annotations
 
 from typing import Optional
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from dataclass_array_spark.core.schema import ArraySpec
+from dataclass_array_spark.core.table import (
+    arrow_table,
+    np_columns,
+    pin_materialization,
+    scalar_spec,
+)
 
 
 def global_cumsum(
@@ -51,8 +63,6 @@ def global_cumsum(
     executor-memory) vs ``"reliable"`` (checkpoint dir, survives
     executor loss) — see :func:`~dataclass_array_spark.core.table
     .pin_materialization` for the failure-domain tradeoff."""
-    from dataclass_array_spark.core.table import pin_materialization
-
     value_cols = [value_col] if isinstance(value_col, str) else list(value_col)
     out_cols = [out_col] if isinstance(out_col, str) else list(out_col)
     if len(value_cols) != len(out_cols):
@@ -122,8 +132,6 @@ def _arrow_cumsum(with_pid, offsets, value_cols, out_cols):
     callers, matching the window's long sum), and NULL increments are
     rejected loudly (the callers' aggregates never produce them; the
     window would have silently carried the previous sum forward)."""
-    import pyspark.sql.types as T
-
     out_schema = T.StructType(
         [f for f in with_pid.schema.fields]
         + [T.StructField(o, T.LongType(), True) for o in out_cols]
@@ -133,9 +141,6 @@ def _arrow_cumsum(with_pid, offsets, value_cols, out_cols):
     ocols = list(out_cols)
 
     def fn(it):
-        import numpy as np
-        import pyarrow as pa
-
         run = None
         for batch in it:
             if batch.num_rows == 0:
@@ -202,8 +207,6 @@ def _arrow_grouped_cumsum(with_pid, offsets, gcols, value_cols, out_cols):
     offsets broadcast join.  Bit-exact vs the window form: identical
     addends in identical (sorted) order, int64 adds, NULL increments
     rejected loudly (the callers' aggregates never produce them)."""
-    import pyspark.sql.types as T
-
     out_schema = T.StructType(
         [f for f in with_pid.schema.fields]
         + [T.StructField(o, T.LongType(), True) for o in out_cols]
@@ -215,10 +218,6 @@ def _arrow_grouped_cumsum(with_pid, offsets, gcols, value_cols, out_cols):
     nv = len(vcols)
 
     def fn(it):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         cur = None  # (pid, *group) of the run in progress
         run = None  # its carried totals (list[int], one per value col)
         for batch in it:
@@ -321,10 +320,7 @@ def grouped_cumsum(
     reason as :func:`global_cumsum`: the offsets job and the output
     job must see ONE partitioning, not two independently-sampled
     RangePartitioner runs."""
-    from dataclass_array_spark.core.table import (
-        collect_bounded,
-        pin_materialization,
-    )
+    from dataclass_array_spark.core.table import collect_bounded  # looked up per call: patchable
 
     if isinstance(group_cols, str):  # 'g' would explode per-char
         group_cols = [group_cols]
@@ -479,7 +475,7 @@ def pack_sequences(
 # independent groups (md5 of the id — each bucket sees a REPRESENTATIVE
 # random mix of lengths, which is what FFD quality needs; bucketing by
 # length would starve bins of short filler docs), and each group runs
-# the exact sequential algorithm inside one applyInPandas task whose
+# the exact sequential algorithm inside one applyInArrow task whose
 # state (open-bin remainders) is bounded by the group's document count.
 # Parallelism = nbuckets; per-task memory = docs/nbuckets rows.  At
 # 100 TB scale raise nbuckets (2^10..2^14): waste stays within a
@@ -508,8 +504,6 @@ def pack_sequences_ffd(
     its bin.  Sizes must satisfy ``0 <= size <= block_size`` (a doc
     longer than the window can never be placed whole — loud error, both
     engines)."""
-    import pandas as pd
-
     from dataclass_array_spark.operators.classifier import feature_bucket
 
     B = int(block_size)
@@ -537,14 +531,19 @@ def pack_sequences_ffd(
         ),
     )
 
-    def _pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(
-            ["size", "id"], ascending=[False, True], kind="mergesort"
-        )
+    id_t = df.schema[id_col].dataType
+    specs = {"id": scalar_spec(id_t), "size": ArraySpec(np.int64), "bucket": ArraySpec(np.int64)}
+    schema = T.StructType.fromDDL(
+        f"id {id_t.simpleString()}, size long, bucket long, bin long, bin_off long"
+    )
+
+    def _pack(tbl: pa.Table) -> pa.Table:
+        g = np_columns(tbl, specs)
+        order = np.lexsort((g["id"], -g["size"]))  # size DESC, then id ASC
+        g = {c: a[order] for c, a in g.items()}
         rem: list = []  # remaining capacity per open bin (1-based out)
         bins, offs = [], []
-        for s in pdf["size"].tolist():
-            s = int(s)
+        for s in g["size"].tolist():
             placed = -1
             for i, r in enumerate(rem):
                 if r >= s:
@@ -558,18 +557,13 @@ def pack_sequences_ffd(
                 offs.append(B - rem[placed])
                 rem[placed] -= s
                 bins.append(placed + 1)
-        out = pdf.copy()
-        out["bin"] = pd.Series(bins, index=pdf.index, dtype="int64")
-        out["bin_off"] = pd.Series(offs, index=pdf.index, dtype="int64")
-        return out
+        g["bin"] = np.asarray(bins, dtype=np.int64)
+        g["bin_off"] = np.asarray(offs, dtype=np.int64)
+        return arrow_table(g, schema)
 
-    id_type = dict(df.dtypes)[id_col]
-    return base.groupBy("bucket").applyInPandas(
-        _pack,
-        schema=(
-            f"id {id_type}, size long, bucket long, bin long, bin_off long"
-        ),
-    ).withColumnsRenamed({"id": id_col, "size": size_col})
+    return base.groupBy("bucket").applyInArrow(_pack, schema=schema).withColumnsRenamed(
+        {"id": id_col, "size": size_col}
+    )
 
 
 def sql_pack_ffd(

@@ -49,10 +49,11 @@ from __future__ import annotations
 from typing import List
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dataclass_array_spark.core.schema import ArraySpec
+from dataclass_array_spark.core.table import np_udf
 from dataclass_array_spark.operators.clustering import (
     _ARGMIN_UDF_THRESHOLD,
     _argmin_cluster,
@@ -129,11 +130,10 @@ def _pq_encode_udf(codebooks: Codebooks):
     stage, codebooks ship once per executor in the closure."""
     CBs = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
 
-    @F.pandas_udf("array<bigint>")
-    def enc(v: pd.Series) -> pd.Series:
-        if not len(v):
-            return pd.Series([], dtype=object)
-        V = np.stack(v.to_numpy()).astype(np.float64, copy=False)
+    dim = sum(C.shape[1] for C in CBs)
+
+    @np_udf("array<bigint>", ArraySpec(np.float64, (dim,)))
+    def enc(V: np.ndarray) -> np.ndarray:
         out = np.empty((V.shape[0], len(CBs)), dtype=np.int64)
         off = 0
         for j, C in enumerate(CBs):
@@ -143,7 +143,7 @@ def _pq_encode_udf(codebooks: Codebooks):
                 acc += diff * diff
             out[:, j] = np.argmin(acc, axis=1)
             off += C.shape[1]
-        return pd.Series(list(out))
+        return out
 
     return enc
 
@@ -205,12 +205,10 @@ def _adc_udf(codebooks: Codebooks):
     −0 edge).  O(1) plan size in m×codes×d."""
     CBs = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
 
-    @F.pandas_udf("double")
-    def dist(qv: pd.Series, codes: pd.Series) -> pd.Series:
-        if not len(qv):
-            return pd.Series([], dtype=np.float64)
-        Q = np.stack(qv.to_numpy()).astype(np.float64, copy=False)
-        C = np.stack(codes.to_numpy()).astype(np.int64, copy=False)
+    dim = sum(CB.shape[1] for CB in CBs)
+
+    @np_udf("double", ArraySpec(np.float64, (dim,)), ArraySpec(np.int64, (len(CBs),)))
+    def dist(Q: np.ndarray, C: np.ndarray) -> np.ndarray:
         total = np.zeros(len(Q), dtype=np.float64)
         off = 0
         for j, CB in enumerate(CBs):
@@ -221,7 +219,7 @@ def _adc_udf(codebooks: Codebooks):
                 t += diff * diff
             total += t
             off += CB.shape[1]
-        return pd.Series(total)
+        return total
 
     return dist
 

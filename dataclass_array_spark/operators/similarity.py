@@ -18,9 +18,13 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from dataclass_array_spark.core.schema import ArraySpec
+from dataclass_array_spark.core.table import arrow_table, np_columns, np_udf, scalar_spec
 
 _DEC = "decimal(38,25)"
 
@@ -179,6 +183,7 @@ def srp_lsh_topk(
     scored = _score_pairs(
         c.join(F.broadcast(q), on="bucket").filter(F.col("qid") != F.col("nid")),
         "arrow" if score == "auto" else score,
+        dim,
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     return (
@@ -189,7 +194,7 @@ def srp_lsh_topk(
     )
 
 
-def _pair_cosine_arrow() -> "F.pandas_udf":
+def _pair_cosine_arrow(dim: int):
     """Arrow-batched numpy replica of :func:`cosine` for candidate-pair
     scoring.  Bit-identical to the expression path (and DuckDB's
     ``list_reduce`` oracle): products are computed in double and
@@ -202,28 +207,23 @@ def _pair_cosine_arrow() -> "F.pandas_udf":
     volumes (knn_join at sf1: ~1.9M pairs × dim 64) the Arrow batch
     path is ~5× cheaper.  Same dispatch discipline as the cell-probe
     (`_cells_udf`) and k-means argmin (clustering.py) numpy paths."""
+    vec = ArraySpec(np.float64, (dim,))
 
-    @F.pandas_udf("double")
-    def score(qv: pd.Series, cv: pd.Series, qn2: pd.Series, cn2: pd.Series) -> pd.Series:
-        if not len(qv):
-            return pd.Series([], dtype=np.float64)
-        Q = np.stack(qv.to_numpy()).astype(np.float64, copy=False)
-        C = np.stack(cv.to_numpy()).astype(np.float64, copy=False)
+    @np_udf("double", vec, vec, ArraySpec(np.float64), ArraySpec(np.float64))
+    def score(Q: np.ndarray, C: np.ndarray, qn2: np.ndarray, cn2: np.ndarray) -> np.ndarray:
         dot = np.zeros(len(Q), dtype=np.float64)
-        for d in range(Q.shape[1]):
+        for d in range(dim):
             dot += Q[:, d] * C[:, d]
-        qn = np.sqrt(qn2.to_numpy(dtype=np.float64))
-        cn = np.sqrt(cn2.to_numpy(dtype=np.float64))
-        return pd.Series(dot / (qn * cn))
+        return dot / (np.sqrt(qn2) * np.sqrt(cn2))
 
     return score
 
 
-def _score_pairs(scored: DataFrame, score: str) -> DataFrame:
+def _score_pairs(scored: DataFrame, score: str, dim: int) -> DataFrame:
     """Project (qid, nid, cosine) from a joined candidate frame using
     either the fold expression or the Arrow numpy scorer (bit-equal)."""
     if score == "arrow":
-        c = _pair_cosine_arrow()(
+        c = _pair_cosine_arrow(dim)(
             F.col("qv").cast("array<double>"),
             F.col("cv").cast("array<double>"),
             F.col("qn2"),
@@ -289,19 +289,15 @@ def _cells_udf(cents, nprobe: int):
     pos = np.argsort(cid, kind="stable")
     C, cn2, cid = C[pos], cn2[pos], cid[pos]
 
-    @F.pandas_udf("array<bigint>")
-    def probe(v: pd.Series) -> pd.Series:
-        if not len(v):
-            return pd.Series([], dtype=object)
-        V = np.stack(v.to_numpy()).astype(np.float64, copy=False)
+    @np_udf("array<bigint>", ArraySpec(np.float64, (C.shape[1],)))
+    def probe(V: np.ndarray) -> np.ndarray:
         dot = np.zeros((V.shape[0], C.shape[0]), dtype=np.float64)
         vn2 = np.zeros(V.shape[0], dtype=np.float64)
         for d in range(C.shape[1]):
             dot += V[:, d, None] * C[None, :, d]
             vn2 += V[:, d] * V[:, d]
         cos = dot / (np.sqrt(vn2)[:, None] * np.sqrt(cn2)[None, :])
-        order = np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]
-        return pd.Series([cid[row].tolist() for row in order])
+        return cid[np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]]
 
     return probe
 
@@ -353,6 +349,7 @@ def _cell_block_topk(
     k: int,
     exclude_self: bool,
     max_cell_size: int | None,
+    dim: int,
 ) -> DataFrame:
     """Per-cell blocked scoring for :func:`knn_join`: cogroup both sides
     on cell id and score each |L_c|×|R_c| block in numpy, returning only
@@ -368,59 +365,42 @@ def _cell_block_topk(
     can't collide) and dropped after selection.  NaN cosines (zero-norm
     vectors) rank last here but FIRST in a Spark descending window —
     don't feed zero-norm vectors to the cogroup path."""
-    from pyspark.sql import types as T
-
     qid_t = l_assigned.schema["qid"].dataType
     nid_t = r_assigned.schema["nid"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", qid_t),
-            T.StructField("nid", nid_t),
-            T.StructField("cosine", T.DoubleType()),
-        ]
+    out_schema = T.StructType.fromDDL(
+        f"qid {qid_t.simpleString()}, nid {nid_t.simpleString()}, cosine double"
     )
+    vec, n2 = ArraySpec(np.float64, (dim,)), ArraySpec(np.float64)
+    l_specs = {"qid": scalar_spec(qid_t), "qv": vec, "qn2": n2}
+    r_specs = {"nid": scalar_spec(nid_t), "cv": vec, "cn2": n2}
 
-    def block(left_pdf: pd.DataFrame, right_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(left_pdf) or not len(right_pdf):
-            return pd.DataFrame(
-                {
-                    "qid": pd.Series([], dtype=left_pdf["qid"].dtype),
-                    "nid": pd.Series([], dtype=right_pdf["nid"].dtype),
-                    "cosine": pd.Series([], dtype=np.float64),
-                }
-            )
-        r = right_pdf.sort_values("nid", kind="stable").reset_index(drop=True)
-        if max_cell_size is not None:
-            r = r.iloc[:max_cell_size]
-        Q = np.stack(left_pdf["qv"].to_numpy()).astype(np.float64, copy=False)
-        C = np.stack(r["cv"].to_numpy()).astype(np.float64, copy=False)
+    def block(left: pa.Table, right: pa.Table) -> pa.Table:
+        lc, rc = np_columns(left, l_specs), np_columns(right, r_specs)
+        keep = np.argsort(rc["nid"], kind="stable")[:max_cell_size]
+        Q, qids = lc["qv"], lc["qid"]
+        C, nids = rc["cv"][keep], rc["nid"][keep]
         dot = np.zeros((Q.shape[0], C.shape[0]), dtype=np.float64)
-        for d in range(Q.shape[1]):
+        for d in range(dim):
             dot += Q[:, d, None] * C[None, :, d]
-        qn = np.sqrt(left_pdf["qn2"].to_numpy(dtype=np.float64))
-        cn = np.sqrt(r["cn2"].to_numpy(dtype=np.float64))
-        cos = dot / (qn[:, None] * cn[None, :])
-        qids = left_pdf["qid"].to_numpy()
-        nids = r["nid"].to_numpy()
+        cos = dot / (np.sqrt(lc["qn2"])[:, None] * np.sqrt(rc["cn2"][keep])[None, :])
         if exclude_self:
             cos[qids[:, None] == nids[None, :]] = -np.inf
         kk = min(k, cos.shape[1])
         order = np.argsort(-cos, axis=1, kind="stable")[:, :kk]
-        out = pd.DataFrame(
-            {
-                "qid": np.repeat(qids, kk),
-                "nid": nids[order].ravel(),
-                "cosine": np.take_along_axis(cos, order, axis=1).ravel(),
-            }
-        )
+        out = {
+            "qid": np.repeat(qids, kk),
+            "nid": nids[order].ravel(),
+            "cosine": np.take_along_axis(cos, order, axis=1).ravel(),
+        }
         if exclude_self:
-            out = out[out["qid"] != out["nid"]]
-        return out
+            mask = out["qid"] != out["nid"]
+            out = {c: a[mask] for c, a in out.items()}
+        return arrow_table(out, out_schema)
 
     return (
         l_assigned.groupBy("cell")
         .cogroup(r_assigned.groupBy("cell"))
-        .applyInPandas(block, schema=out_schema)
+        .applyInArrow(block, schema=out_schema)
     )
 
 
@@ -498,7 +478,7 @@ def knn_join(
     the exchange is reused.
 
     ``score``: ``"auto"``/``"cogroup"`` scores each cell's L×R block in
-    one Arrow cogroup (`applyInPandas` over ``groupBy(cell).cogroup``):
+    one Arrow cogroup (`applyInArrow` over ``groupBy(cell).cogroup``):
     every vector crosses to Python ONCE PER CELL — Σ(|L_c|+|R_c|)·dim
     doubles — instead of once per candidate pair (Σ|L_c|·|R_c|·dim, a
     ~100× blow-up at sf1: 12.6M pairs from 40k assignments), and only
@@ -557,7 +537,7 @@ def knn_join(
     if score in ("auto", "cogroup"):
         scored = _cell_block_topk(
             l_assigned, r_assigned, k=k, exclude_self=exclude_self,
-            max_cell_size=max_cell_size,
+            max_cell_size=max_cell_size, dim=len(cents[0]["cent_v"]),
         )
     else:
         if max_cell_size is not None:
@@ -570,7 +550,7 @@ def knn_join(
         pairs = l_assigned.join(r_assigned, on="cell")
         if exclude_self:
             pairs = pairs.filter(F.col("qid") != F.col("nid"))
-        scored = _score_pairs(pairs, score)
+        scored = _score_pairs(pairs, score, len(cents[0]["cent_v"]))
     # global top-k merge: a candidate outside its cell's per-qid top-k
     # has >= k better candidates in that cell alone, so per-cell top-k
     # feeding this window is lossless
@@ -658,6 +638,7 @@ def ivf_topk(
             F.col("qid") != F.col("nid")
         ),
         "arrow" if score == "auto" else score,
+        len(cents[0]["cent_v"]),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     return (

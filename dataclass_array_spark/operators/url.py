@@ -255,9 +255,19 @@ def with_url_columns(
     LINEAR; CollapseProject (Spark ≥3.3) will not merge a projection
     when merging would duplicate a non-cheap alias referenced more
     than once, so the shape survives optimization.  The per-row values
-    are the same expressions over the same inputs."""
+    are the same expressions over the same inputs.
+
+    The stages live in ``__u_*`` temporaries that are dropped at the
+    end, so an input column with one of those names raises ValueError
+    instead of being overwritten and dropped."""
     if canon_col is None and host_col is None:
         raise ValueError("with_url_columns: nothing to compute")
+    temps = ["__u_nf", "__u_isu", "__u_scheme", "__u_after", "__u_hp", "__u_pathq", "__u_host"]
+    if canon_col is not None:
+        temps += ["__u_port", "__u_ppath", "__u_kept", "__u_dpath"]
+    clash = [c for c in df.columns if c.lower() in temps]
+    if clash:
+        raise ValueError(f"with_url_columns: input columns {clash} collide with its temporaries")
     t = F.trim(F.col(url_col))
     out = df.withColumns(
         {"__u_nf": F.trim(F.regexp_replace(t, "#[\\s\\S]*", ""))}
@@ -285,7 +295,6 @@ def with_url_columns(
     out = out.withColumns(
         {"__u_host": F.lower(F.regexp_replace(hp, ":[0-9]*\\z", ""))}
     )
-    temps = ["__u_nf", "__u_isu", "__u_scheme", "__u_after", "__u_hp", "__u_pathq", "__u_host"]
     if host_col is not None:
         out = out.withColumns(
             {host_col: F.when(F.col("__u_isu"), F.col("__u_host")).otherwise(F.lit(""))}
@@ -334,7 +343,6 @@ def with_url_columns(
                 ).otherwise(F.lower(nf))
             }
         )
-        temps += ["__u_port", "__u_ppath", "__u_kept", "__u_dpath"]
     return out.drop(*temps)
 
 

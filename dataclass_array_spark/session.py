@@ -23,8 +23,8 @@ def get_spark(app_name: str = "dataclass_array_spark", cpus: str | None = None) 
     Scale notes (100 TB design point):
     - AQE on: runtime partition coalescing, skew-join splitting, and
       dynamic join-strategy switching replace hand-tuning per query.
-    - Arrow on: every Python exchange (pandas UDF, toPandas, mapInPandas)
-      moves columnar batches, not pickled rows.
+    - Arrow on: every Python exchange (Arrow UDF, toPandas, mapInArrow,
+      applyInArrow) moves columnar batches, not pickled rows.
     - UTC session TZ: parquet timestamps compare bit-identically with the
       DuckDB oracle and with any other engine.
     - ANSI mode off: the reference's semantics (and TPC-H-style queries)

@@ -10,12 +10,13 @@ Spark-first compilation tiers (SURVEY.md §4.3):
   composes (arithmetic, ``F.*``), the whole batched computation is a single
   codegen'd ``select`` — the moral equivalent of the reference's compiled
   ``jax.vmap`` path (`vectorization.py:350-378`) but JVM-side.
-- **Tier 2 — the Arrow numpy tier**: one ``mapInArrow`` pass.  Each Arrow
-  batch is decoded ONCE per input column by the core decoder
-  (``core.table._np_field``, the one ``to_numpy_fields`` uses) into
+- **Tier 2 — the Arrow numpy tier**: one ``mapInArrow`` pass over the
+  core kernel boundary, the one the operators' numpy kernels use.  Each
+  Arrow batch is decoded ONCE per input column by ``core.table.np_columns``
+  (over ``_np_field``, the decoder ``to_numpy_fields`` uses) into
   (B, *inner) numpy arrays; rows that break the declared shape raise its
-  ShapeError.  Outputs are encoded once per batch by the core encoder
-  (``_arrow_field``) and cast to the Arrow form of the output schema.
+  ShapeError.  Outputs are encoded once per batch by ``arrow_table``
+  (over ``_arrow_field``) and cast to the Arrow form of the output schema.
   - **2a — whole batch**: the scalar method runs ONCE on the (B, *inner)
     arrays via numpy broadcasting — sound only for
     leading-axis-broadcastable programs, so two guards reject the rest:
@@ -46,11 +47,9 @@ import functools
 from typing import Any, Callable, Dict, FrozenSet, Optional, Tuple
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 try:  # Spark >= 4.0 moved the JVM-backed Column to the classic namespace
     from pyspark.sql.classic.column import Column as _ClassicColumn
@@ -61,9 +60,9 @@ from dataclass_array_spark.core.schema import ArraySpec, ShapeError
 from dataclass_array_spark.core.table import (
     DcaTable,
     ROWID,
-    _arrow_field,
-    _np_field,
     _nullable_variant,
+    arrow_table,
+    np_columns,
 )
 
 _RESULT_CLS_CACHE: Dict[Tuple, type] = {}
@@ -432,18 +431,14 @@ def vectorize_method(
             }
             in_df = work_df.select(ROWID, *in_specs)
 
-            def decode(tbl: pa.Table) -> Dict[str, np.ndarray]:
+            def decode(batch) -> Dict[str, np.ndarray]:
                 """Every input column of one batch as a (B, *inner) array,
-                through the core decoder: rows that break the declared
-                shape raise ShapeError.  The arrays are read-only, so a
-                method that writes into its inputs fails the whole-batch
-                call instead of corrupting the rows the per-row loop
-                reads."""
-                n = tbl.num_rows
-                cols = {
-                    c: _np_field(tbl.column(c), s, np.arange(n), (n,))
-                    for c, s in in_specs.items()
-                }
+                through the core kernel boundary: rows that break the
+                declared shape raise ShapeError.  The arrays are
+                read-only, so a method that writes into its inputs fails
+                the whole-batch call instead of corrupting the rows the
+                per-row loop reads."""
+                cols = np_columns(batch, in_specs)
                 for a in cols.values():
                     a.flags.writeable = False
                 return cols
@@ -471,18 +466,6 @@ def vectorize_method(
                 [T.StructField(ROWID, T.LongType(), False)]
                 + [T.StructField(k, s.spark_type, True) for k, s in out_specs.items()]
             )
-            arrow_schema = to_arrow_schema(out_schema)
-
-            def encode(rowids: pa.Array, outs: Dict[str, np.ndarray]) -> pa.RecordBatch:
-                """(B, *inner) outputs → one batch of the output schema,
-                through the core encoder."""
-                lead = (len(rowids),)
-                arrays = [rowids] + [_arrow_field(outs[k], s, lead) for k, s in out_specs.items()]
-                return pa.RecordBatch.from_arrays(
-                    [a.cast(f.type) for a, f in zip(arrays, arrow_schema)],
-                    schema=arrow_schema,
-                )
-
             def try_batch(cols, rowids):
                 """Tier 2a: run the scalar-written method ONCE on the
                 whole (B, *inner) batch.  Sound only for methods whose
@@ -542,14 +525,14 @@ def vectorize_method(
                 for batch in batches:
                     if not batch.num_rows:
                         continue
-                    cols = decode(pa.Table.from_batches([batch]))
+                    cols = decode(batch)
                     rowids = batch.column(ROWID)
                     outs = try_batch(cols, rowids) if batch_ok else None
                     if outs is None:
                         batch_ok = False  # don't re-probe per batch
                         rows = [call(row(cols, i)) for i in range(batch.num_rows)]
                         outs = {k: np.stack([np.asarray(r[k]) for r in rows]) for k in out_specs}
-                    yield encode(rowids, outs)
+                    yield from arrow_table({ROWID: rowids, **outs}, out_schema).to_batches()
 
             res_df = in_df.mapInArrow(run, schema=out_schema)
             cls = make_table_cls(f"{type(self).__name__}_{method.__name__}_out", out_specs)

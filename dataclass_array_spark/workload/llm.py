@@ -379,7 +379,7 @@ FROM documents ORDER BY doc_id
 
 
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stub decoder over Arrow batches (mapInPandas) — the oracle
+    """Stub decoder over Arrow batches (mapInArrow) — the oracle
     recomputes the same md5-derived fake dimensions in SQL, which
     cross-checks the whole Python-worker plumbing."""
     d = load_tables(spark, sf_dir, ["documents"])["documents"]

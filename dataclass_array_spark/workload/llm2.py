@@ -210,7 +210,7 @@ QUERIES["domain_mixture_sample"] = Query(
 
 # ------------------------------------------------ multimodal frames
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame sampling through mapInPandas with 1->N output — the
+    """Video frame sampling through mapInArrow with 1->N output — the
     media-type filter prunes before the Python worker.  The stub frame
     ids are md5-derived, so the oracle reproduces them in SQL."""
     from dataclass_array_spark.operators.multimodal import attach_media, sample_frames
@@ -468,7 +468,7 @@ QUERIES["semantic_dedup_auto"] = Query(
 
 # Two-level (coarse -> fine) clustering — the 100 TB auto-k path: the
 # driver holds only the k_coarse coarse centroids; each cell trains its
-# own ceil(n_cell/target) fine centroids inside applyInPandas and rows
+# own ceil(n_cell/target) fine centroids inside applyInArrow and rows
 # join their cell's centroid matrix for the final Arrow argmin.  Gate
 # constants are sized so every stage BINDS at sf0.01 (500 rows): cells
 # ~167 rows > fine_train_limit=64 (sampling exercised), fine k ~6.
@@ -481,7 +481,7 @@ _TL_FTL = 64    # fine_train_limit  (binds: 64 < ~167 rows/cell)
 
 def embedding_kmeans_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level k-means assignment over the embeddings table — coarse
-    sampled training + per-cell fine training (applyInPandas Lloyd
+    sampled training + per-cell fine training (applyInArrow Lloyd
     replica) + matrix-argmin fine assignment, all value-exact vs the
     per-cell unrolled decimal CTE chains."""
     from dataclass_array_spark.operators.clustering import kmeans_assign_two_level

@@ -175,7 +175,8 @@ def test_kn3_lm_joins_unhinted(spark):
             p = buf.getvalue()
             assert "BroadcastHashJoin" not in p, p
             for marker in (
-                "BatchEvalPython", "ArrowEvalPython", "PythonUDF", "MapInPandas"
+                "BatchEvalPython", "ArrowEvalPython", "PythonUDF", "MapInPandas",
+                "MapInArrow",
             ):
                 assert marker not in p, marker
 

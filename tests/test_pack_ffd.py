@@ -1,5 +1,5 @@
 """First-fit-decreasing context packing (round-14 VERDICT item 4):
-Spark applyInPandas fold ≡ DuckDB recursive-CTE mirror ≡ straight-line
+Spark applyInArrow fold ≡ DuckDB recursive-CTE mirror ≡ straight-line
 Python FFD, plus the packing invariants (no split, capacity, waste
 better than one-doc-per-bin and competitive with concat-chop's
 window count)."""

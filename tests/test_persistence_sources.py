@@ -184,7 +184,7 @@ def test_read_wet_plain_and_gz(spark, tmp_path):
     with redirect_stdout(buf):
         conv.explain("formatted")
     p = buf.getvalue()
-    assert "BatchEvalPython" not in p and "MapInPandas" not in p
+    assert "BatchEvalPython" not in p and "MapInPandas" not in p and "MapInArrow" not in p
     assert conv.count() == 6
 
 

@@ -56,7 +56,7 @@ def test_repetition_metrics_no_shuffle(spark):
     import re
     kinds = re.findall(r"Exchange (\w+)", p)
     assert all(k in ("RoundRobinPartitioning", "rangepartitioning") for k in kinds), kinds
-    assert "MapInPandas" not in p and "BatchEvalPython" not in p
+    assert "MapInPandas" not in p and "MapInArrow" not in p and "BatchEvalPython" not in p
 
 
 def test_mixture_sample_broadcasts_rates(spark):
@@ -80,7 +80,7 @@ def test_kmeans_assignment_no_join(spark):
     p = buf.getvalue()
     # assignment is expression-only: no join, no exchange, no python
     assert "Join" not in p and "Exchange" not in p
-    assert "MapInPandas" not in p and "BatchEvalPython" not in p
+    assert "MapInPandas" not in p and "MapInArrow" not in p and "BatchEvalPython" not in p
 
 
 def test_ivf_assignment_no_shuffle(spark):
@@ -111,7 +111,7 @@ def test_ivf_assignment_no_shuffle(spark):
             df.explain("formatted")
         p = buf.getvalue()
         assert "Exchange" not in p and "Join" not in p, f"nprobe={nprobe}"
-        assert "MapInPandas" not in p and "BatchEvalPython" not in p
+        assert "MapInPandas" not in p and "MapInArrow" not in p and "BatchEvalPython" not in p
 
 
 def test_ivf_topk_single_candidate_shuffle(spark):
@@ -205,7 +205,7 @@ def test_lm_quality_vocab_join_degrades_gracefully(spark):
             p = plan(spark, q)
             assert "BroadcastHashJoin" not in p, (q, p)
             assert "CartesianProduct" not in p, q
-            assert "MapInPandas" not in p and "BatchEvalPython" not in p, q
+            assert "MapInPandas" not in p and "MapInArrow" not in p and "BatchEvalPython" not in p, q
 
 
 def test_bounded_vocab_keeps_broadcast_hint(spark):
@@ -285,7 +285,7 @@ def test_pq_encode_no_shuffle(spark):
         df.explain("formatted")
     p = buf.getvalue()
     assert "Exchange" not in p and "Join" not in p
-    assert "MapInPandas" not in p and "BatchEvalPython" not in p
+    assert "MapInPandas" not in p and "MapInArrow" not in p and "BatchEvalPython" not in p
 
 
 def test_pq_topk_broadcast_and_single_qid_shuffle(spark):
@@ -406,7 +406,7 @@ def test_mad_outliers_medians_broadcast_back(spark):
 def test_two_level_assignment_plan_shape(spark):
     """kmeans_assign_two_level's physical plan must keep the 100 TB
     shape: per-cell sample via WindowGroupLimit (map-side limit before
-    the cell exchange), per-cell Lloyd as ONE FlatMapGroupsInPandas,
+    the cell exchange), per-cell Lloyd as ONE FlatMapGroupsInArrow,
     final argmin as an ArrowEvalPython over a hash join — never a
     cartesian."""
     import io
@@ -429,7 +429,7 @@ def test_two_level_assignment_plan_shape(spark):
     assert "WindowGroupLimit" in p        # bounded per-cell sample
     # one fine-training pass (formatted explain prints each node twice:
     # once in the tree, once in the detail section)
-    assert p.count("FlatMapGroupsInPandas") == 2
+    assert p.count("FlatMapGroupsInArrow") == 2
     assert "ArrowEvalPython" in p         # matrix argmin, not per-row python
     assert "BroadcastNestedLoopJoin" not in p
 
@@ -502,7 +502,7 @@ def test_zorder_key_is_pure_expression(spark):
     bit-interleave is shift/AND/OR folds evaluated in the scan
     stage)."""
     p = plan(spark, "zorder_orders_layout")
-    assert "BatchEvalPython" not in p and "MapInPandas" not in p
+    assert "BatchEvalPython" not in p and "MapInPandas" not in p and "MapInArrow" not in p
     # the interleave shows up as shift/AND/OR expression trees in a
     # Project — proof the key is computed scan-side, not in Python
     assert "shiftleft" in p and "FLOOR" in p
@@ -594,7 +594,7 @@ def test_bpe_encode_plan_shapes(spark):
     no forced broadcast hint (both sides corpus-derived — the round-12
     vocab-join rule)."""
     p = plan(spark, "bpe_encode_docs")
-    assert "MapInPandas" not in p and "BatchEvalPython" not in p
+    assert "MapInPandas" not in p and "MapInArrow" not in p and "BatchEvalPython" not in p
     assert "CartesianProduct" not in p
     from dataclass_array_spark.workload import QUERIES as _Q
 
@@ -712,7 +712,7 @@ def test_bpe_pair_agg_map_side_combined(spark):
     with redirect_stdout(buf):
         pairs.explain("formatted")
     p = buf.getvalue()
-    assert "BatchEvalPython" not in p and "MapInPandas" not in p
+    assert "BatchEvalPython" not in p and "MapInPandas" not in p and "MapInArrow" not in p
     # two HashAggregates around one exchange = partial + final
     import re
 
@@ -742,7 +742,7 @@ def test_classifier_weights_broadcast_and_jvm_only(spark):
             out.explain("formatted")
         p = buf.getvalue()
     assert "BroadcastHashJoin" in p, p
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF", "MapInPandas"):
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF", "MapInPandas", "MapInArrow"):
         assert marker not in p, marker
 
 
@@ -762,7 +762,7 @@ def test_dsir_delta_broadcast_and_jvm_only(spark):
             out.explain("formatted")
         p = buf.getvalue()
     assert "BroadcastHashJoin" in p, p
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF", "MapInPandas"):
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF", "MapInPandas", "MapInArrow"):
         assert marker not in p, marker
 
 
@@ -795,7 +795,7 @@ def test_blocklist_phrases_broadcast_and_jvm_only(spark):
             out.explain("formatted")
         p = buf.getvalue()
     assert "BroadcastHashJoin" in p, p
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF", "MapInPandas"):
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF", "MapInPandas", "MapInArrow"):
         assert marker not in p, marker
 
 
@@ -862,7 +862,7 @@ def test_classifier_fit_gradient_plan_shapes(spark):
         p = buf.getvalue()
     assert "BroadcastHashJoin" in p, p
     assert "partial_sum" in p, p  # map-side-combined bucket gradient
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF", "MapInPandas"):
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF", "MapInPandas", "MapInArrow"):
         assert marker not in p, marker
 
 
@@ -925,7 +925,7 @@ def test_classifier_fit_copartitioned_iteration(spark):
             grad.explain("formatted")
         g_plan = buf.getvalue()
         assert "partial_sum" in g_plan, g_plan  # map-side-combined gradient
-        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow"):
             assert marker not in g_plan, marker
     finally:
         inst.unpersist()
@@ -933,8 +933,8 @@ def test_classifier_fit_copartitioned_iteration(spark):
 
 def test_pack_ffd_single_exchange_per_bucket_fold(spark):
     """FFD packing's plan: exactly ONE exchange (hash by bucket) feeds
-    the per-bucket applyInPandas fold — the sequential algorithm runs
-    inside FlatMapGroupsInPandas tasks, never through extra shuffles
+    the per-bucket applyInArrow fold — the sequential algorithm runs
+    inside FlatMapGroupsInArrow tasks, never through extra shuffles
     or a global sort."""
     from dataclass_array_spark.operators.packing import pack_sequences_ffd
     from dataclass_array_spark.operators.text import token_count
@@ -949,7 +949,7 @@ def test_pack_ffd_single_exchange_per_bucket_fold(spark):
     p = buf.getvalue()
     import re
 
-    assert "FlatMapGroupsInPandas" in p, p
+    assert "FlatMapGroupsInArrow" in p, p
     assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, p
     # the only Sort is the grouping's WITHIN-partition sort (global
     # flag false) — never a global sort

@@ -150,6 +150,21 @@ PSL_CASES = [
 ]
 
 
+def test_with_url_columns_rejects_temp_name_collision(spark):
+    """A caller column named like one of the staged temporaries must
+    raise, not be overwritten and then dropped from the output."""
+    from dataclass_array_spark.operators.url import with_url_columns
+
+    df = spark.createDataFrame([("http://a.com/x", 7, 8)], "u string, __u_host long, __U_KEPT long")
+    with pytest.raises(ValueError, match="__u_host"):
+        with_url_columns(df, "u", host_col="h")
+    with pytest.raises(ValueError, match="__U_KEPT"):
+        with_url_columns(df.drop("__u_host"), "u", canon_col="c")
+    # __u_kept is a canonical-form temporary only: the host form keeps it
+    out = with_url_columns(df.drop("__u_host"), "u", host_col="h").collect()
+    assert [(r["__U_KEPT"], r["h"]) for r in out] == [(8, "a.com")]
+
+
 def test_psl_registrable_map_expected(spark):
     from dataclass_array_spark.operators.psl import host_registrable_map
 
@@ -194,7 +209,7 @@ def test_psl_rules_are_broadcast_joined(spark):
         out.explain("formatted")
     p = buf.getvalue()
     assert "BroadcastHashJoin" in p
-    assert "BatchEvalPython" not in p and "MapInPandas" not in p
+    assert "BatchEvalPython" not in p and "MapInPandas" not in p and "MapInArrow" not in p
 
 
 def test_psl_parse_full_file_format():
@@ -270,7 +285,7 @@ def test_dedup_urls_plan_is_single_agg_no_python(spark):
     with redirect_stdout(buf):
         out.explain("formatted")
     p = buf.getvalue()
-    assert "BatchEvalPython" not in p and "MapInPandas" not in p
+    assert "BatchEvalPython" not in p and "MapInPandas" not in p and "MapInArrow" not in p
     assert "Join" not in p  # canonical form is in-scan, not a lookup
 
 
