@@ -211,7 +211,3 @@ def resolve_annotation(ann: Any) -> Optional[ArraySpec]:
     if isinstance(ann, tuple) and len(ann) == 2 and isinstance(ann[1], str):
         return ArraySpec(np.dtype(ann[0]), parse_shape(ann[1]))
     return None
-
-
-def spark_type_for_np(dtype: np.dtype) -> T.DataType:
-    return _NP_TO_SPARK[np.dtype(dtype).name]

@@ -759,9 +759,6 @@ class DcaTable(metaclass=_DcaMeta):
     def groupBy(self, *cols):
         return self._df.drop(ROWID).groupBy(*cols)
 
-    def select_fields(self, *names: str) -> DataFrame:
-        return self._df.select(*names)
-
     def sql(self, query: str, view: str = "self") -> DataFrame:
         """Run SQL with this table registered as ``view``."""
         self._df.createOrReplaceTempView(view)
@@ -876,9 +873,6 @@ class DcaTable(metaclass=_DcaMeta):
             name: _np_field(tbl.column(name), spec, order, self._shape)
             for name, spec in type(self)._array_fields().items()
         }
-
-    def write_parquet(self, path: str, mode: str = "overwrite") -> None:
-        self._df.write.mode(mode).parquet(path)
 
     # ---- tree protocol (reference pytree registration,
     # `array_dataclass.py:772-861`): decompose into (DataFrame, metadata)

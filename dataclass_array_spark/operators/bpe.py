@@ -94,20 +94,6 @@ def _init_symbols(words: DataFrame) -> DataFrame:
     )
 
 
-def _apply_merge(syms_col: Column, left: str, right: str) -> Column:
-    """Symbol array after one leftmost-greedy non-overlapping
-    replacement pass of (left, right): a left fold that merges the
-    incoming symbol into the accumulator's tail when the tail is
-    ``left`` and the symbol is ``right``.  A freshly merged tail is the
-    strictly longer string left||right, so the fold never re-merges its
-    own output — exactly the leftmost-greedy pass (run parity: within a
-    run of equal symbols the 1st, 3rd, … occurrences merge).  NARROW:
-    no shuffle, no window — the per-round shuffle budget is spent only
-    on the pair-count aggregation.  Pure Column helper: the result is a
-    function of ``syms_col`` alone."""
-    return _apply_merge_batch(syms_col, [(left, right)])
-
-
 def _occupied(left: str, right: str) -> set:
     """The symbol strings a merge (left, right) touches: its two inputs
     and its output.  Two merges whose occupied sets are disjoint
@@ -192,7 +178,8 @@ _DRIVER_WORK_MAX = 4_194_304  # n_words * num_merges cap
 
 
 def _apply_merge_py(syms: list, left: str, right: str) -> list:
-    """Pure-Python replica of :func:`_apply_merge`'s left fold: merge
+    """Pure-Python replica of :func:`_apply_merge_batch`'s left fold for
+    one pair: merge
     the incoming symbol into the accumulator tail when tail == left and
     symbol == right.  A freshly merged tail is the strictly longer
     left||right, so the pass never re-merges its own output — identical

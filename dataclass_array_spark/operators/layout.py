@@ -14,20 +14,22 @@ bounding-box area of a Z-ordered layout is a small fraction of a
 single-column sort's.
 
 Everything here is pure Catalyst column arithmetic (shift/AND/OR
-folds — no UDF, no shuffle beyond the final ``repartitionByRange``),
-so the key computation runs in whole-stage codegen at scan speed.
+folds — no UDF, no shuffle; a caller lays a table out with one
+``repartitionByRange`` on the key), so the key computation runs in
+whole-stage codegen at scan speed.
 
 Exactness: the Morton interleave is integer-only bit arithmetic and
-the min-max scaling uses integer ``div`` (no doubles anywhere), so the
-DuckDB oracle mirrors it bit-for-bit; ``zorder_sql`` emits the
-equivalent SQL expression for the gate.
+the min-max scaling's doubles are mirrored op-for-op
+(:func:`scale_expr`/:func:`scale_sql`), so the DuckDB oracle matches
+bit-for-bit; ``morton_sql`` emits the equivalent SQL expression for
+the gate.
 
 Curve menu: :func:`morton_key` (any k, cheapest, small locality
-jumps), :func:`hilbert_key`/:func:`with_hilbert_key` (2-d classic
-walk, best 2-d locality), :func:`with_hilbert_key_kd` (k >= 2,
-Skilling transpose walk — use this for 3+-column layouts; its 2-d
-orientation differs from the classic walk, so don't mix the two
-within one table's files).
+jumps), :func:`with_hilbert_key` (2-d classic walk, best 2-d
+locality), :func:`with_hilbert_key_kd` (k >= 2, Skilling transpose
+walk — use this for 3+-column layouts; its 2-d orientation differs
+from the classic walk, so don't mix the two within one table's
+files).
 """
 
 from __future__ import annotations
@@ -163,115 +165,27 @@ def zorder_key(
     return morton_key(scaled, bits), bounds
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    bits: int = 16,
-    num_files: int = 0,
-) -> List[Tuple[int, int]]:
-    """Write ``df`` as parquet laid out along the Z-order curve of
-    ``cols``: range-partition by the Morton key (one total-order
-    shuffle — the same cost as any global sort) and sort within
-    partitions, so every output file covers one contiguous curve
-    segment = one small bounding box in (cols...) space.  Returns the
-    per-column bounds used for scaling (persist them next to the
-    table; incremental writers must reuse them).  ``num_files=0``
-    keeps the session shuffle width."""
-    key, bounds = zorder_key(df, cols, bits)
-    out = df.withColumn("_zkey", key)
-    out = (
-        out.repartitionByRange(num_files, "_zkey")
-        if num_files
-        else out.repartitionByRange("_zkey")
-    )
-    out.sortWithinPartitions("_zkey").drop("_zkey").write.mode(
-        "overwrite"
-    ).parquet(path)
-    return bounds
-
-
-def _let(bound: Column, body) -> Column:
-    """Lambda-variable let-binding (same trick as operators.text.let):
-    evaluate ``bound`` once per row, reference it many times in
-    ``body``.  Without it the per-level Hilbert state would be
-    re-inlined at every reference and the expression tree would grow
-    exponentially in ``bits``."""
-    return F.element_at(F.transform(F.array(bound), body), 1)
-
-
-def hilbert_key(xcol: Column, ycol: Column, bits: int) -> Column:
-    """Hilbert-curve distance of a 2-d point (the better-locality
-    sibling of :func:`morton_key`: consecutive curve positions are
-    always ADJACENT cells, so range-partition boundaries cut the value
-    space into slightly tighter boxes than the Z-curve's jumps).
-
-    Inputs must already be non-negative ints ``< 2**bits`` (compose
-    with :func:`scale_expr`).  The classic per-bit fold (reflect +
-    swap by quadrant, accumulate ``s² · ((3·rx) XOR ry)``) is unrolled
-    PYTHON-side — ``bits`` is a plan-time constant, so every level's
-    ``s`` is a literal and the whole key is one codegen'd integer
-    expression; each level's (x, y, d) state is let-bound so the tree
-    stays linear in ``bits``.  ``2*bits`` must fit a signed 64-bit
-    key."""
-    if 2 * bits > 63:
-        raise ValueError(f"2*bits = {2 * bits} > 63 overflows BIGINT")
-
-    one = F.lit(1).cast("long")
-    zero = F.lit(0).cast("long")
-
-    def rec(i: int):
-        def level(st: Column) -> Column:
-            x, y, d = st.x, st.y, st.d
-            s = F.lit(1 << i).cast("long")
-            rx = F.when(x.bitwiseAND(s) > 0, one).otherwise(zero)
-            ry = F.when(y.bitwiseAND(s) > 0, one).otherwise(zero)
-            d2 = d + F.lit((1 << i) * (1 << i)).cast("long") * (
-                (rx * F.lit(3).cast("long")).bitwiseXOR(ry)
-            )
-            # quadrant rotation: only when ry == 0 — reflect (if rx)
-            # then swap x/y
-            xr = F.when(rx == one, s - 1 - x).otherwise(x)
-            yr = F.when(rx == one, s - 1 - y).otherwise(y)
-            x2 = F.when(ry == zero, yr).otherwise(x)
-            y2 = F.when(ry == zero, xr).otherwise(y)
-            nxt = F.struct(x2.alias("x"), y2.alias("y"), d2.alias("d"))
-            if i == 0:
-                return nxt.d
-            return _let(nxt, rec(i - 1))
-
-        return level
-
-    init = F.struct(
-        xcol.cast("long").alias("x"),
-        ycol.cast("long").alias("y"),
-        F.lit(0).cast("long").alias("d"),
-    )
-    return _let(init, rec(bits - 1))
-
-
 def with_hilbert_key(
     df: DataFrame, xcol: Column, ycol: Column, bits: int, out: str = "hkey"
 ) -> DataFrame:
-    """:func:`hilbert_key` as a CHAIN OF PROJECTIONS instead of one
-    nested expression — the fast form for full-table key computation.
+    """Hilbert-curve distance of a 2-d point, added as column ``out``
+    (the better-locality sibling of :func:`morton_key`: consecutive
+    curve positions are always ADJACENT cells, so range-partition
+    boundaries cut the value space into slightly tighter boxes than
+    the Z-curve's jumps).
 
-    The Column form threads the per-level (x, y, d) state through
-    ``_let`` (``element_at(transform(array(struct(...)), ...), 1)``),
-    and Catalyst higher-order functions are interpreted, not
-    codegen'd: 13 levels allocate 13 one-element arrays + structs PER
-    ROW (measured: 3.2 s warm for 150k rows at sf0.1 where the Morton
-    key takes 1.1 s, plus ~1.5 s of plan/codegen).  Here each level is
-    one ``withColumns`` projection over plain integer expressions —
-    Catalyst's CollapseProject keeps multiply-referenced state columns
-    materialized (it refuses to inline non-cheap exprs used more than
-    once), adjacent projections fuse into a single WholeStageCodegen
-    stage, and the per-level state becomes codegen LOCALS: zero per-row
-    allocation, same arithmetic, bit-identical keys (differentially
-    tested against :func:`hilbert_key`).
-
-    Use the Column form inside other expressions; use this to key a
-    whole table (the 100 TB write path)."""
+    Inputs must already be non-negative ints ``< 2**bits`` (compose
+    with :func:`scale_expr`); ``2*bits`` must fit a signed 64-bit key.
+    The classic per-bit fold (reflect + swap by quadrant, accumulate
+    ``s² · ((3·rx) XOR ry)``) is unrolled Python-side into one
+    ``withColumns`` projection per level over plain integer
+    expressions — no higher-order function, so nothing is interpreted
+    (PERF.md round 10).  Catalyst's CollapseProject keeps
+    multiply-referenced state columns materialized (it refuses to
+    inline non-cheap exprs used more than once), adjacent projections
+    fuse into a single WholeStageCodegen stage, and the per-level state
+    becomes codegen LOCALS: zero per-row allocation (tested against the
+    pure-Python reference walk in ``tests/test_layout.py``)."""
     if 2 * bits > 63:
         raise ValueError(f"2*bits = {2 * bits} > 63 overflows BIGINT")
     x, y, d, rx, ry = "_hil_x", "_hil_y", "_hil_d", "_hil_rx", "_hil_ry"
@@ -315,7 +229,7 @@ def with_hilbert_key(
 
 def hilbert_sql(x_expr: str, y_expr: str, bits: int, from_clause: str,
                 select_cols: str) -> str:
-    """DuckDB mirror of :func:`hilbert_key` as a chain of per-level
+    """DuckDB mirror of :func:`with_hilbert_key` as a chain of per-level
     CTEs (one projection per bit, every ``s`` a literal — identical
     integer arithmetic).  Returns a full query ``SELECT {select_cols},
     d AS hkey FROM ...``; callers wrap/append as needed."""
@@ -540,45 +454,3 @@ def hilbert_kd_sql(
         + " | ".join(terms)
         + f") AS BIGINT) AS hkey FROM g{step}"
     )
-
-
-def write_hilbert_kd(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    bits: int = 13,
-    num_files: int = 0,
-) -> List[Tuple[int, int]]:
-    """Write ``df`` as parquet laid out along the k-d HILBERT curve of
-    ``cols`` — :func:`write_zordered`'s sibling with the
-    better-locality curve (consecutive positions are L1-adjacent
-    cells, so range-partition files get the tightest k-d bounding
-    boxes).  Scales each column with :func:`scale_expr` (one bounds
-    aggregate, two BIGINTs of driver state per column — persist the
-    returned bounds with the table; incremental writers must reuse
-    them), keys with :func:`with_hilbert_key_kd`, range-partitions and
-    sorts within partitions.  ``num_files=0`` keeps the session
-    shuffle width."""
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).cast("long"), F.max(c).cast("long")]
-    row = df.agg(*aggs).collect()[0]
-    if row[0] is None:
-        # min/max of an empty frame are NULL — fail loudly instead of
-        # letting scale_expr hit a NoneType (mirrors sq8_bounds)
-        raise ValueError("write_hilbert_kd: empty input (no rows to bound)")
-    bounds = [(row[2 * i], row[2 * i + 1]) for i in range(len(cols))]
-    scaled = [
-        scale_expr(F.col(c), mn, mx, bits)
-        for c, (mn, mx) in zip(cols, bounds)
-    ]
-    out = with_hilbert_key_kd(df, scaled, bits, out="_hkey")
-    out = (
-        out.repartitionByRange(num_files, "_hkey")
-        if num_files
-        else out.repartitionByRange("_hkey")
-    )
-    out.sortWithinPartitions("_hkey").drop("_hkey").write.mode(
-        "overwrite"
-    ).parquet(path)
-    return bounds

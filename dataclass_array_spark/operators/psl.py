@@ -1,12 +1,11 @@
 """Public-suffix-list registrable domains (round-13 VERDICT item 2).
 
-``url.url_domain``'s last-two-label form is WRONG for multi-label
-public suffixes (``a.b.example.co.uk`` → ``co.uk``).  This module
-implements the publicsuffix.org algorithm as a Spark-first
-longest-matching-suffix JOIN against a rules table that is bounded by
-construction (the full PSL is ~10k rules; the broadcast hint is legal
-— the round-12 no-forced-broadcast rule exempts bounded-by-
-construction sides):
+A last-two-label domain is WRONG for multi-label public suffixes
+(``a.b.example.co.uk`` → ``co.uk``).  This module implements the
+publicsuffix.org algorithm as a Spark-first longest-matching-suffix
+JOIN against a rules table that is bounded by construction (the full
+PSL is ~10k rules; the broadcast hint is legal — the round-12
+no-forced-broadcast rule exempts bounded-by-construction sides):
 
 1. each host generates ≤ ``2·max_rule_labels − 1`` candidate keys
    in-scan: its label suffixes (``a.b.co.uk`` → ``uk``, ``co.uk``,

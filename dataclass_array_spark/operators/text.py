@@ -944,14 +944,26 @@ def token_entropy_scores(df, text_col: str, id_col: str):
     both aggregations (round 16) — it contributes nothing to either
     aggregate (conditional sum; ``collect_list`` skips NULL entries)
     but keeps the doc present, so the old corpus-sized re-join of the
-    id column (one extra scan + exchange) is gone; ``id_col`` must be
-    unique per row (every caller's doc key)."""
+    id column (one extra scan + exchange) is gone; non-NULL ``id_col``
+    values must be unique per row (every caller's doc key).  Each
+    NULL-id row gets its own grouping tag, taken once before the
+    explode and carried through both aggregations, so NULL-id docs
+    keep one output row each instead of merging into one group."""
     tok = df.select(
-        F.col(id_col), F.explode_outer(tokens(F.col(text_col))).alias("t")
+        F.col(id_col),
+        F.when(F.col(id_col).isNull(), F.monotonically_increasing_id()).alias(
+            "__nid"
+        ),
+        F.col(text_col),
+    ).select(
+        id_col, "__nid", F.explode_outer(tokens(F.col(text_col))).alias("t")
     )
-    cnt = tok.groupBy(id_col, "t").agg(F.count("*").cast("long").alias("c"))
+    cnt = tok.groupBy(id_col, "__nid", "t").agg(
+        F.count("*").cast("long").alias("c")
+    )
     term = cnt.select(
         id_col,
+        "__nid",
         "t",
         F.when(F.col("t").isNotNull(), F.col("c")).alias("c"),
         F.when(
@@ -963,7 +975,7 @@ def token_entropy_scores(df, text_col: str, id_col: str):
         F.col("t").isNotNull(),
         F.struct(F.col("t"), F.col("cl").alias("cl")),
     )
-    per_doc = term.groupBy(id_col).agg(
+    per_doc = term.groupBy(id_col, "__nid").agg(
         F.sum("c").cast("long").alias("__n"),
         F.aggregate(
             F.transform(F.array_sort(F.collect_list(entry)), lambda s: s.cl),

@@ -50,11 +50,9 @@ matches before a final line terminator while RE2's does not, so a
 crawl URL ending in a newline would canonicalize differently per
 engine (round-13 review fix; the fuzz alphabet includes ``\n``).
 
-Registrable-domain extraction: :func:`url_domain` is the LAST-TWO-LABEL
-approximation (``a.b.example.co.uk`` → ``co.uk``, which is WRONG under
-the public-suffix list) — kept as the cheap in-scan column form; the
-PSL-correct path is :mod:`dataclass_array_spark.operators.psl`
-(broadcast longest-matching-suffix join over a rules snapshot).
+Registrable domains come from :mod:`dataclass_array_spark.operators.psl`
+(broadcast longest-matching-suffix join over a public-suffix rules
+snapshot).
 """
 
 from __future__ import annotations
@@ -66,11 +64,9 @@ __all__ = [
     "canonicalize_url",
     "with_url_columns",
     "url_host",
-    "url_domain",
     "dedup_urls",
     "canon_sql",
     "host_sql",
-    "domain_sql",
     "TRACKING_RE",
 ]
 
@@ -222,14 +218,6 @@ def url_host(u: Column) -> Column:
     """Lowercased host of a URL column ('' for non-URLs)."""
     _, _, is_url, _, host, _, _, _ = _parts(u)
     return F.when(is_url, host).otherwise(F.lit(""))
-
-
-def url_domain(u: Column) -> Column:
-    """Approximate registrable domain: the last two host labels —
-    WRONG for multi-label public suffixes (``co.uk``); the cheap
-    in-scan form.  PSL-correct extraction is
-    :func:`dataclass_array_spark.operators.psl.host_registrable_map`."""
-    return F.regexp_extract(url_host(u), r"([^.]+\.[^.]+)\z", 1)
 
 
 def with_url_columns(
@@ -423,13 +411,4 @@ def host_sql(u_expr: str) -> str:
     return (
         f"CASE WHEN regexp_matches({nf}, '^[A-Za-z][A-Za-z0-9+.-]*://') "
         f"THEN {host} ELSE '' END"
-    )
-
-
-def domain_sql(u_expr: str) -> str:
-    """DuckDB mirror of :func:`url_domain` (last-two-label
-    approximation of the registrable domain)."""
-    return (
-        f"COALESCE(regexp_extract({host_sql(u_expr)}, "
-        "'([^.]+\\.[^.]+)\\z', 1), '')"
     )

@@ -13,10 +13,6 @@ from dataclass_array_spark.streaming.core import (
     kn3_stream_score,
     ngram_counts_stream,
     events_stream,
-    events_from_kafka_json,
-    kafka_stream,
-    rate_events,
-    rate_stream,
     run_stream_to_memory,
     tumbling_counts,
     session_window_stats,
@@ -29,10 +25,6 @@ __all__ = [
     "kn3_stream_score",
     "ngram_counts_stream",
     "events_stream",
-    "events_from_kafka_json",
-    "kafka_stream",
-    "rate_events",
-    "rate_stream",
     "run_stream_to_memory",
     "tumbling_counts",
     "session_window_stats",

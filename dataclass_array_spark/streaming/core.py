@@ -90,168 +90,6 @@ def events_stream(
     return normalize_events_ts(_parquet_stream(reader, path))
 
 
-# JSON payload schema for Kafka-carried events (ts as integer micros —
-# the same normalized form the file source produces)
-EVENTS_JSON_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts_us", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-
-def rate_stream(
-    spark: SparkSession, rows_per_second: int = 100, num_partitions: int | None = None
-) -> DataFrame:
-    """Built-in rate source: (timestamp, value) rows at a fixed rate —
-    the zero-infra stand-in for a real message bus."""
-    reader = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second)
-    if num_partitions is not None:
-        reader = reader.option("numPartitions", num_partitions)
-    return reader.load()
-
-
-def rate_events(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Rate-source stream shaped exactly like ``events_stream`` output
-    (ts/ts_us/user_id/event_type/value/props) — every streaming operator
-    in this module runs on it unchanged, demonstrating the operators are
-    source-agnostic."""
-    r = rate_stream(spark, rows_per_second)
-    return r.select(
-        F.col("value").alias("event_id"),
-        F.col("timestamp").alias("ts"),
-        F.unix_micros("timestamp").alias("ts_us"),
-        (F.col("value") % 50).alias("user_id"),
-        F.when(F.col("value") % 10 == 0, F.lit("purchase"))
-        .otherwise(F.lit("click"))
-        .alias("event_type"),
-        (F.col("value") % 100).cast("double").alias("value"),
-        F.to_json(F.struct(F.col("value").alias("seq"))).alias("props"),
-    )
-
-
-def kafka_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topics: str,
-    starting_offsets: str = "earliest",
-    **options: str,
-) -> DataFrame:
-    """Kafka source (raw key/value records).  Config-gated like the
-    lakehouse sinks: the spark-sql-kafka connector jars are not bundled
-    with pyspark, so absence raises a clear error instead of a bare
-    ClassNotFound.  At scale: one Spark input partition per Kafka
-    partition; use ``minPartitions`` to fan out hotter topics.
-    """
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topics)
-        .option("startingOffsets", starting_offsets)
-    )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    try:
-        return reader.load()
-    except Exception as e:  # DataSourceNotFound / ClassNotFound
-        if "kafka" in str(e).lower():
-            raise RuntimeError(
-                "Kafka source needs the spark-sql-kafka connector on the "
-                "classpath (spark.jars.packages = "
-                "org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>). "
-                "The streaming operators are source-agnostic: develop against "
-                "rate_events() or events_stream() and swap the source in "
-                "production."
-            ) from e
-        raise
-
-
-def events_from_kafka_json(kafka_df: DataFrame) -> DataFrame:
-    """Decode Kafka value payloads (JSON events) to the canonical events
-    stream schema, so ``kafka_stream(...) |> events_from_kafka_json``
-    feeds every operator below."""
-    return (
-        kafka_df.select(
-            F.from_json(F.col("value").cast("string"), EVENTS_JSON_SCHEMA).alias("e")
-        )
-        .select("e.*")
-        .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-    )
-
-
-def kafka_sink(
-    out: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint_dir: str,
-    key_col: str | None = None,
-    value_cols: list[str] | None = None,
-    output_mode: str = "append",
-    **options: str,
-):
-    """Kafka sink: serialize rows to JSON ``value`` (plus optional
-    ``key``) and write via the kafka connector.  Same jar gate as
-    :func:`kafka_stream`.  At scale the sink parallelism follows the
-    stream's partitioning; checkpointing makes delivery at-least-once —
-    pair with idempotent/transactional consumers for exactly-once (or
-    use foreachBatch + an idempotent upsert, see tests/test_streaming).
-
-    Returns the started StreamingQuery.
-    """
-    cols = value_cols or [c for c in out.columns if c != key_col]
-    payload = F.to_json(F.struct(*[F.col(c) for c in cols])).alias("value")
-    sel = [payload] if key_col is None else [F.col(key_col).cast("string").alias("key"), payload]
-    writer = (
-        out.select(*sel)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-    )
-    for k, v in options.items():
-        writer = writer.option(k, v)
-    try:
-        return writer.start()
-    except Exception as e:
-        if "kafka" in str(e).lower():
-            raise RuntimeError(
-                "Kafka sink needs the spark-sql-kafka connector on the "
-                "classpath (spark.jars.packages = "
-                "org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>). "
-                "Develop against run_stream_to_memory()/foreachBatch and "
-                "swap the sink in production."
-            ) from e
-        raise
-
-
-def run_available_now(
-    out: DataFrame, checkpoint_dir: str, output_dir: str
-) -> DataFrame:
-    """Incremental-batch execution: Trigger(availableNow) processes
-    exactly the data available at start (respecting source rate limits),
-    then stops — the production pattern for periodic jobs that must
-    only touch NEW files since the last checkpointed run.  Re-invoking
-    with the same checkpoint_dir resumes from the recorded offsets, so
-    a nightly corpus-ingest job costs O(new data), not O(corpus).
-    Writes append-mode parquet (memory sinks cannot recover from a
-    checkpoint); returns a reader over the accumulated output."""
-    q = (
-        out.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return out.sparkSession.read.parquet(output_dir)
-
-
 def dedup_within_watermark(
     stream: DataFrame, keys: list, ts_col: str = "ts", delay: str = "2 hours"
 ) -> DataFrame:

@@ -22,131 +22,80 @@ class Query:
 
 # The driver's per-round correctness gate checks roughly the first 50
 # registry entries, so the window is ROTATED each round to keep every
-# query under recurring driver verification.  Round 16 ordering
-# (VERDICT r15 item 1, followed exactly): the 15 optimizer-touched
-# gates whose physical plans changed in round 15 (BPE family, KN/KN3
-# scorers, pmi/ccnet/dsir, dedup_components/incremental,
-# classifier_auc_by_source) but which the rotated r15 window did not
-# cover come FIRST — they convert the round-15 wins from
-# builder-attested to driver-attested.  Then the remaining 6
-# never-driver-verified round-15 gates, then the first 29 of the 38
-# r12-cohort entries the original r16 plan targeted — exactly 50.
-# Just past the window: the 50 gates the r15 driver window verified
-# (freshest, lowest re-verification urgency is wrong — they are
-# freshly verified, so they sit behind the stale blocks), then the
-# last 9 r12-cohort entries, the rest of the r13 cohort and the
-# r14-verified block.  Python dicts preserve insertion order, so this
-# ordering is exactly what ``queries()`` exposes to the driver.
-#
-# r17 rotation plan: last 9 r12-cohort entries + the remainder of the
-# r13 cohort, then the head of the r14-verified block.
+# query under recurring driver verification.  Round 17 ordering: the
+# gates whose code changed since the driver last verified them come
+# first — the layout and url gates (their modules lost gate-less
+# code), token_entropy_docs (NULL-id fix), the 17 kernel gates whose
+# numpy kernels moved onto the Arrow kernel boundary, VERDICT r16
+# item 2's driver-fold/sketch list, the five BPE gates, the seven
+# shape_* gates and the cumsum consumers — exactly 50.  Just past the
+# window: the one overflow gate, then the rest by staleness (r12
+# cohort, r13/r14 blocks, r15-verified block), with the r16 window —
+# the freshest — last.  Python dicts preserve insertion order, so
+# this ordering is exactly what ``queries()`` exposes to the driver.
 _PRIORITY: Tuple[str, ...] = (
-    # ---- 15 round-15 optimizer-touched, driver-unverified gates ----
+    # ---- three layout gates + two url gates (modules edited) ----
+    "hilbert_orders_layout",
+    "zorder_orders_layout",
+    "hilbert3d_orders_layout",
+    "url_dedup_docs",
+    "url_domain_stats_docs",
+    # ---- token_entropy_docs (NULL-id grouping fix) ----
+    "token_entropy_docs",
+    # ---- 17 kernel gates on the Arrow kernel boundary ----
+    "embedding_kmeans_clusters",
+    "embedding_kmeans_two_level",
+    "semantic_dedup_auto",
+    "semantic_dedup_embeddings",
+    "semantic_dedup_two_level",
+    "text_cluster_topics",
+    "embedding_ann_ivf",
+    "embedding_ann_ivf_kmeans",
+    "ann_recall_ivf_docs",
+    "embedding_knn_join",
+    "embedding_knn_join_kmeans",
+    "dedup_embedding_neardup",
+    "embedding_ann_pq",
+    "embedding_ann_ivf_pq",
+    "pack_ffd_docs",
+    "multimodal_decode",
+    "multimodal_frames",
+    # ---- VERDICT r16 item 2: driver-fold and sketch gates ----
+    "bloom_filter_orders",
+    "streaming_bloom_orders",
+    "qdigest_quantiles_prices",
+    "streaming_qdigest_prices",
+    "hist_quantiles_prices",
+    "streaming_hist_prices",
+    "pagerank_event_hotspots",
+    "grouped_rank_prices",
+    "bigram_lm_docs",
+    "bigram_lm_heldout_docs",
+    "streaming_kn_score_docs",
+    # ---- five BPE gates (driver-path nullability) ----
     "bpe_train_docs",
     "bpe_train_batched_docs",
     "bpe_encode_docs",
     "bpe_heldout_encode_docs",
     "bpe_fertility_langs",
-    "kneser_ney3_lm_docs",
-    "kneser_ney3_heldout_docs",
-    "kneser_ney_heldout_docs",
-    "kn_perplexity_docs",
-    "pmi_collocations_docs",
-    "ccnet_buckets_docs",
-    "dsir_weights_docs",
-    "dedup_components",
-    "dedup_incremental_docs",
-    "classifier_auc_by_source_docs",
-    # ---- remaining 6 never-driver-verified round-15 gates ----
-    "classifier_ece_docs",
-    "classifier_ece_by_source_docs",
-    "classifier_brier_docs",
-    "classifier_ks_docs",
-    "classifier_f1_best_docs",
-    "classifier_brier_by_source_docs",
-    # ---- first 29 of the remaining 38 r12-cohort entries ----
-    "embedding_ann_ivf_kmeans",
-    "embedding_knn_join_kmeans",
-    "dedup_ngram_jaccard",
+    # ---- seven shape_* gates (the Arrow DcaTable boundary) ----
+    "shape_vectorize",
     "shape_vectorize_mat",
-    "streaming_purchase_clicks",
-    "streaming_quality_filter",
-    "streaming_tumbling_hourly",
-    "streaming_session_windows",
-    "streaming_dedup_events",
-    "streaming_user_totals_stateful",
-    "streaming_sliding_hourly",
-    "streaming_decontam_docs",
-    "domain_mixture_sample",
-    "multimodal_frames",
-    "pipeline_pretrain_corpus",
-    "tokenize_docs",
-    "token_rarity_docs",
-    "lm_quality_docs",
     "shape_mask_filter",
     "shape_gather",
     "shape_transpose",
     "shape_slice",
     "shape_concat_mapfield",
-    "median_quantity_by_flag",
-    "approx_sketches",
-    "q2_min_cost_supplier",
-    "q11_important_parts",
-    "q16_supplier_counts",
-    "q20_promotion_suppliers",
-    # ==== window boundary (50) ====
-    # ---- driver-verified in round 15 ----
-    "classifier_train_docs",
-    "pack_ffd_docs",
-    "streaming_kn_score_docs",
+    # ---- cumsum consumers: grouped_cumsum (auc by source), then the
+    #      global_cumsum twin's auc/ks/pr gates ----
+    "classifier_auc_by_source_docs",
+    "classifier_ks_docs",
     "classifier_auc_docs",
     "classifier_pr_docs",
-    "ann_recall_ivf_docs",
-    "classifier_calibration_docs",
-    "linkage_entity_clusters",
-    "linkage_part_entities",
-    "multimodal_decode",
-    "multimodal_metadata",
-    "nucleus_select_docs",
-    "ols_price_vs_quantity",
-    "outlier_mad_quantity",
+    # ==== window boundary (50) ====
+    # ---- overflow of the cumsum consumers (packing.pack_sequences) ----
     "pack_context_windows",
-    "pagerank_event_hotspots",
-    "pipeline_quality_corpus",
-    "scd2_customer_history",
-    "simhash_fingerprints",
-    "split_train_val_test",
-    "stratified_sample_docs",
-    "streaming_incremental_dedup",
-    "text_stats",
-    "tfidf_top_terms",
-    "triangle_counts_events",
-    "vocab_top_words",
-    "weighted_sample_docs",
-    "winsorize_price_stats",
-    "hilbert3d_orders_layout",
-    "bigram_lm_docs",
-    "bigram_lm_heldout_docs",
-    "countmin_token_freq",
-    "streaming_countmin_tokens",
-    "hll_distinct_users",
-    "token_entropy_docs",
-    "bloom_filter_orders",
-    "ols2_price_model",
-    "streaming_hll_users",
-    "dedup_keep_best_docs",
-    "embedding_ann_sq8",
-    "hist_quantiles_prices",
-    "hll_overlap_users",
-    "streaming_bloom_orders",
-    "streaming_hist_prices",
-    "gap_fill_events",
-    "embedding_kmeans_clusters",
-    "embedding_kmeans_two_level",
-    "semantic_dedup_auto",
-    "semantic_dedup_embeddings",
-    "text_cluster_topics",
-    # ---- last 9 r12-cohort entries (head of the r17 window) ----
+    # ---- last 9 r12-cohort entries (stalest) ----
     "q10_returned_items",
     "q4_order_priority",
     "q12_shipmode_priority",
@@ -156,20 +105,11 @@ _PRIORITY: Tuple[str, ...] = (
     "q19_disjunctive_revenue",
     "q22_in_subquery",
     "q7_nation_volume",
-    # ---- r13/r14-verified blocks, minus gates moved into the
-    #      window above, original order ----
-    "url_dedup_docs",
-    "url_domain_stats_docs",
+    # ---- r13/r14-verified blocks, minus gates moved above, original order ----
     "skew_zipf_salted_agg",
-    "qdigest_quantiles_prices",
-    "streaming_qdigest_prices",
     "kneser_ney_lm_docs",
     "ewma_user_values",
-    "hilbert_orders_layout",
     "repetition_filter_docs",
-    "semantic_dedup_two_level",
-    "shape_vectorize",
-    "zorder_orders_layout",
     "asof_purchase_last_click",
     "budget_select_docs",
     "cohort_retention_events",
@@ -178,14 +118,12 @@ _PRIORITY: Tuple[str, ...] = (
     "date_functions",
     "dedup_apply_minhash",
     "dedup_apply_simhash",
-    "dedup_embedding_neardup",
     "dedup_exact_docs",
     "dedup_minhash_lsh",
     "dedup_minhash_lsh_auto",
     "dedup_simhash_pairs",
     "distinct_parts_per_supplier",
     "dq_validate_orders",
-    "embedding_knn_join",
     "funnel_conversion_events",
     "grouping_sets_revenue",
     "join_variants_nulls",
@@ -204,7 +142,6 @@ _PRIORITY: Tuple[str, ...] = (
     "range_join_price_buckets",
     "rank_functions",
     "classifier_quality_docs",
-    "grouped_rank_prices",
     "blocklist_filter_docs",
     "domain_cap_docs",
     "classifier_sigmoid_docs",
@@ -236,14 +173,76 @@ _PRIORITY: Tuple[str, ...] = (
     "dedup_chunks_exact",
     "doc_fingerprints",
     "duplicate_spans_docs",
-    "embedding_ann_ivf",
-    "embedding_ann_ivf_pq",
-    "embedding_ann_pq",
     "embedding_ann_srp",
     "embedding_topk_cosine",
     "fuzzy_join_part_names",
     "kcore_user_states",
     "lang_id_docs",
+    # ---- r15-verified block, minus gates moved above ----
+    "classifier_train_docs",
+    "classifier_calibration_docs",
+    "linkage_entity_clusters",
+    "linkage_part_entities",
+    "multimodal_metadata",
+    "nucleus_select_docs",
+    "ols_price_vs_quantity",
+    "outlier_mad_quantity",
+    "pipeline_quality_corpus",
+    "scd2_customer_history",
+    "simhash_fingerprints",
+    "split_train_val_test",
+    "stratified_sample_docs",
+    "streaming_incremental_dedup",
+    "text_stats",
+    "tfidf_top_terms",
+    "triangle_counts_events",
+    "vocab_top_words",
+    "weighted_sample_docs",
+    "winsorize_price_stats",
+    "countmin_token_freq",
+    "streaming_countmin_tokens",
+    "hll_distinct_users",
+    "ols2_price_model",
+    "streaming_hll_users",
+    "dedup_keep_best_docs",
+    "embedding_ann_sq8",
+    "hll_overlap_users",
+    "gap_fill_events",
+    # ---- r16 window, minus gates moved above (freshest: verified in r16) ----
+    "kneser_ney3_lm_docs",
+    "kneser_ney3_heldout_docs",
+    "kneser_ney_heldout_docs",
+    "kn_perplexity_docs",
+    "pmi_collocations_docs",
+    "ccnet_buckets_docs",
+    "dsir_weights_docs",
+    "dedup_components",
+    "dedup_incremental_docs",
+    "classifier_ece_docs",
+    "classifier_ece_by_source_docs",
+    "classifier_brier_docs",
+    "classifier_f1_best_docs",
+    "classifier_brier_by_source_docs",
+    "dedup_ngram_jaccard",
+    "streaming_purchase_clicks",
+    "streaming_quality_filter",
+    "streaming_tumbling_hourly",
+    "streaming_session_windows",
+    "streaming_dedup_events",
+    "streaming_user_totals_stateful",
+    "streaming_sliding_hourly",
+    "streaming_decontam_docs",
+    "domain_mixture_sample",
+    "pipeline_pretrain_corpus",
+    "tokenize_docs",
+    "token_rarity_docs",
+    "lm_quality_docs",
+    "median_quantity_by_flag",
+    "approx_sketches",
+    "q2_min_cost_supplier",
+    "q11_important_parts",
+    "q16_supplier_counts",
+    "q20_promotion_suppliers",
 )
 
 
@@ -273,11 +272,3 @@ def _collect() -> Dict[str, Query]:
 
 
 QUERIES: Dict[str, Query] = _collect()
-
-
-def query_fns() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {k: q.fn for k, q in QUERIES.items()}
-
-
-def oracle_sqls() -> Dict[str, str]:
-    return {k: q.oracle for k, q in QUERIES.items() if q.oracle}

@@ -8,7 +8,11 @@ from contextlib import redirect_stdout
 import pytest
 from pyspark.sql import functions as F
 
-from dataclass_array_spark import sources
+
+def _write_bucketed(df, path, n, col, table_name):
+    df.write.mode("overwrite").bucketBy(n, col).sortBy(col).option(
+        "path", path
+    ).saveAsTable(table_name)
 
 
 @pytest.fixture(scope="module")
@@ -22,8 +26,8 @@ def warehouse(spark, sf_dir, tmp_path_factory):
     )
     spark.sql("DROP TABLE IF EXISTS li_b")
     spark.sql("DROP TABLE IF EXISTS o_b")
-    sources.write(li, str(wh / "li_b"), bucket_by=(8, ["l_orderkey"]), table_name="li_b")
-    sources.write(o, str(wh / "o_b"), bucket_by=(8, ["o_orderkey"]), table_name="o_b")
+    _write_bucketed(li, str(wh / "li_b"), 8, "l_orderkey", "li_b")
+    _write_bucketed(o, str(wh / "o_b"), 8, "o_orderkey", "o_b")
     return wh
 
 

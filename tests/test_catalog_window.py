@@ -1,54 +1,58 @@
 """The driver's correctness gate checks roughly the FIRST 50 registry
 entries, so the _PRIORITY ordering is a per-round contract (VERDICT
-item every round).  Pin the round-16 window so a refactor or a
+item every round).  Pin the round-17 window so a refactor or a
 mid-round gate insertion can never silently reorder it."""
 
 from dataclass_array_spark.workload.catalog import QUERIES
 
-_R16_WINDOW = [
-    # 15 round-15 optimizer-touched gates the r15 driver window missed
-    # (VERDICT r15 item 1 order): BPE family, KN/KN3 scorers,
-    # pmi/ccnet/dsir, dedup_components/incremental, auc_by_source.
+_R17_WINDOW = [
+    # layout and url gates, whose modules lost gate-less code
+    "hilbert_orders_layout", "zorder_orders_layout",
+    "hilbert3d_orders_layout", "url_dedup_docs", "url_domain_stats_docs",
+    # NULL-id grouping fix
+    "token_entropy_docs",
+    # the 17 kernel gates on the Arrow kernel boundary
+    "embedding_kmeans_clusters", "embedding_kmeans_two_level",
+    "semantic_dedup_auto", "semantic_dedup_embeddings",
+    "semantic_dedup_two_level", "text_cluster_topics", "embedding_ann_ivf",
+    "embedding_ann_ivf_kmeans", "ann_recall_ivf_docs", "embedding_knn_join",
+    "embedding_knn_join_kmeans", "dedup_embedding_neardup",
+    "embedding_ann_pq", "embedding_ann_ivf_pq", "pack_ffd_docs",
+    "multimodal_decode", "multimodal_frames",
+    # VERDICT r16 item 2: driver-fold and sketch gates
+    "bloom_filter_orders", "streaming_bloom_orders",
+    "qdigest_quantiles_prices", "streaming_qdigest_prices",
+    "hist_quantiles_prices", "streaming_hist_prices",
+    "pagerank_event_hotspots", "grouped_rank_prices", "bigram_lm_docs",
+    "bigram_lm_heldout_docs", "streaming_kn_score_docs",
+    # the five BPE gates
     "bpe_train_docs", "bpe_train_batched_docs", "bpe_encode_docs",
     "bpe_heldout_encode_docs", "bpe_fertility_langs",
-    "kneser_ney3_lm_docs", "kneser_ney3_heldout_docs",
-    "kneser_ney_heldout_docs", "kn_perplexity_docs",
-    "pmi_collocations_docs", "ccnet_buckets_docs", "dsir_weights_docs",
-    "dedup_components", "dedup_incremental_docs",
-    "classifier_auc_by_source_docs",
-    # remaining 6 never-driver-verified round-15 gates
-    "classifier_ece_docs", "classifier_ece_by_source_docs",
-    "classifier_brier_docs", "classifier_ks_docs",
-    "classifier_f1_best_docs", "classifier_brier_by_source_docs",
-    # first 29 of the remaining 38 r12-cohort entries, catalog order
-    "embedding_ann_ivf_kmeans", "embedding_knn_join_kmeans",
-    "dedup_ngram_jaccard", "shape_vectorize_mat",
-    "streaming_purchase_clicks", "streaming_quality_filter",
-    "streaming_tumbling_hourly", "streaming_session_windows",
-    "streaming_dedup_events", "streaming_user_totals_stateful",
-    "streaming_sliding_hourly", "streaming_decontam_docs",
-    "domain_mixture_sample", "multimodal_frames",
-    "pipeline_pretrain_corpus", "tokenize_docs", "token_rarity_docs",
-    "lm_quality_docs", "shape_mask_filter", "shape_gather",
-    "shape_transpose", "shape_slice", "shape_concat_mapfield",
-    "median_quantity_by_flag", "approx_sketches",
-    "q2_min_cost_supplier", "q11_important_parts",
-    "q16_supplier_counts", "q20_promotion_suppliers",
+    # the seven shape_* gates
+    "shape_vectorize", "shape_vectorize_mat", "shape_mask_filter",
+    "shape_gather", "shape_transpose", "shape_slice",
+    "shape_concat_mapfield",
+    # cumsum consumers: grouped (auc by source), then the global twin's
+    "classifier_auc_by_source_docs", "classifier_ks_docs",
+    "classifier_auc_docs", "classifier_pr_docs",
 ]
 
 
-def test_round16_driver_window_is_pinned():
-    assert list(QUERIES)[:50] == _R16_WINDOW
+def test_driver_window_is_pinned():
+    assert list(QUERIES)[:50] == _R17_WINDOW
 
 
-def test_r15_verified_block_sits_after_the_window():
-    """The 50 gates the r15 driver window verified are the freshest —
-    they queue immediately after the r16 window, never inside it."""
+def test_previous_window_sits_after_the_window():
+    """Past the boundary: the one overflow gate, then the stalest
+    entries (the r12 cohort's tail), and the r16 window — verified by
+    the driver last round, so the freshest — queues last."""
     names = list(QUERIES)
-    assert names[50] == "classifier_train_docs"
-    assert names[56] == "classifier_calibration_docs"
-    for g in names[50:100]:
-        assert g not in _R16_WINDOW
+    assert names[50] == "pack_context_windows"
+    assert names[51] == "q10_returned_items"
+    assert names[-34] == "kneser_ney3_lm_docs"
+    assert names[-1] == "q20_promotion_suppliers"
+    for g in names[50:]:
+        assert g not in _R17_WINDOW
 
 
 def test_every_query_has_full_oracle():

@@ -10,8 +10,8 @@ from dataclass_array_spark.operators.layout import (
     morton_key,
     morton_sql,
     scale_expr,
+    with_hilbert_key,
     zorder_key,
-    write_zordered,
 )
 
 
@@ -182,52 +182,6 @@ def test_zorder_layout_prunes_both_dimensions(spark):
     )
 
 
-def test_write_zordered_roundtrip(spark, tmp_path):
-    rng = np.random.RandomState(13)
-    n = 2000
-    df = spark.createDataFrame(
-        [(i, int(x), int(y)) for i, (x, y) in
-         enumerate(zip(rng.randint(0, 512, n), rng.randint(0, 512, n)))],
-        "id long, x long, y long",
-    )
-    path = str(tmp_path / "zt")
-    bounds = write_zordered(df, path, ["x", "y"], bits=9, num_files=8)
-    back = spark.read.parquet(path)
-    assert back.count() == n
-    assert sorted(r["id"] for r in back.select("id").collect()) == list(range(n))
-    assert len(bounds) == 2 and all(mn <= mx for mn, mx in bounds)
-    # _zkey must not leak into the written schema
-    assert set(back.columns) == {"id", "x", "y"}
-    # REAL parquet footer stats: the min/max a pruned scan actually
-    # sees must form tight boxes in BOTH dims for most files.  Files
-    # whose range-partition boundary straddles a curve row legitimately
-    # span one full dimension (observed: 1 of 8), so assert the bulk,
-    # not every file — a single-column sort would leave the y span at
-    # ~full range in EVERY file.
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    files = _glob.glob(f"{path}/part-*.parquet")
-    assert len(files) >= 4
-    tight = 0
-    for fp in files:
-        md = pq.ParquetFile(fp).metadata
-        cols = {
-            md.row_group(0).column(i).path_in_schema: i
-            for i in range(md.row_group(0).num_columns)
-        }
-        spans = {}
-        for dim in ("x", "y"):
-            mn = min(md.row_group(g).column(cols[dim]).statistics.min
-                     for g in range(md.num_row_groups))
-            mx = max(md.row_group(g).column(cols[dim]).statistics.max
-                     for g in range(md.num_row_groups))
-            spans[dim] = mx - mn
-        tight += spans["x"] <= 384 and spans["y"] <= 384
-    assert tight >= len(files) - 2, f"only {tight}/{len(files)} tight boxes"
-
-
 def _hilbert_ref(x, y, bits):
     """Classic xy2d reference."""
     rx = ry = 0
@@ -247,34 +201,31 @@ def _hilbert_ref(x, y, bits):
     return d
 
 
-def test_hilbert_key_matches_reference(spark):
-    from dataclass_array_spark.operators.layout import hilbert_key
-
+@pytest.mark.parametrize("bits", [10, 13])
+def test_hilbert_key_matches_reference(spark, bits):
     rng = np.random.RandomState(23)
-    a = rng.randint(0, 1 << 10, 300)
-    b = rng.randint(0, 1 << 10, 300)
+    a = rng.randint(0, 1 << bits, 300)
+    b = rng.randint(0, 1 << bits, 300)
     df = spark.createDataFrame(
         [(int(x), int(y)) for x, y in zip(a, b)], "a long, b long"
     )
     got = (
-        df.withColumn("h", hilbert_key(F.col("a"), F.col("b"), 10))
+        with_hilbert_key(df, F.col("a"), F.col("b"), bits, out="h")
         .orderBy("a", "b")
         .collect()
     )
     for r in got:
-        assert r["h"] == _hilbert_ref(r["a"], r["b"], 10), (r["a"], r["b"])
+        assert r["h"] == _hilbert_ref(r["a"], r["b"], bits), (r["a"], r["b"])
 
 
 def test_hilbert_is_a_bijection_with_adjacency(spark):
     """Every cell of the 16x16 grid gets a distinct curve position in
     [0, 256), and consecutive positions are ADJACENT cells (the
     locality property Morton lacks)."""
-    from dataclass_array_spark.operators.layout import hilbert_key
-
     df = spark.createDataFrame(
         [(x, y) for x in range(16) for y in range(16)], "x long, y long"
     )
-    rows = df.select("x", "y", hilbert_key(F.col("x"), F.col("y"), 4).alias("h")).collect()
+    rows = with_hilbert_key(df, F.col("x"), F.col("y"), 4, out="h").collect()
     pos = {r["h"]: (r["x"], r["y"]) for r in rows}
     assert sorted(pos) == list(range(256))
     for d in range(255):
@@ -283,14 +234,9 @@ def test_hilbert_is_a_bijection_with_adjacency(spark):
 
 
 def test_with_hilbert_key_matches_column_form(spark):
-    """The chained-projection form must be bit-identical to the nested
-    Column form (same arithmetic, different plan shape), and its plan
-    must contain no higher-order functions (the perf point)."""
-    from dataclass_array_spark.operators.layout import (
-        hilbert_key,
-        with_hilbert_key,
-    )
-
+    """The chained-projection form must match the Python reference
+    walk, and its plan must contain no higher-order functions (the
+    perf point)."""
     rng = np.random.RandomState(11)
     n, bits = 500, 13
     pts = rng.randint(0, 1 << bits, size=(n, 2))
@@ -298,13 +244,11 @@ def test_with_hilbert_key_matches_column_form(spark):
         [(i, int(x), int(y)) for i, (x, y) in enumerate(pts)],
         "id long, x long, y long",
     )
-    a = df.select("id", hilbert_key(F.col("x"), F.col("y"), bits).alias("h"))
     b = with_hilbert_key(df, F.col("x"), F.col("y"), bits, out="h").select(
         "id", "h"
     )
-    got_a = {r["id"]: r["h"] for r in a.collect()}
-    got_b = {r["id"]: r["h"] for r in b.collect()}
-    assert got_a == got_b
+    got = {r["id"]: r["h"] for r in b.collect()}
+    assert got == {i: _hilbert_ref(x, y, bits) for i, (x, y) in enumerate(pts)}
     import io
     from contextlib import redirect_stdout
 
@@ -483,49 +427,6 @@ def test_with_hilbert_key_kd_validation(spark):
         with_hilbert_key_kd(df.withColumn("_hil_t", F.lit(1)), cols3, 8)
 
 
-def test_write_hilbert_kd_roundtrip_and_boxes(spark, tmp_path):
-    """3-d Hilbert layout write: lossless roundtrip, no key leak, and
-    the per-file bounding boxes are bounded in EVERY keyed dimension
-    (the pruning property), unlike a 1-column sort."""
-    rng = np.random.RandomState(5)
-    n = 4096
-    df = spark.createDataFrame(
-        [
-            (i, int(a), int(b), int(c))
-            for i, (a, b, c) in enumerate(
-                zip(
-                    rng.randint(0, 512, n),
-                    rng.randint(0, 512, n),
-                    rng.randint(0, 512, n),
-                )
-            )
-        ],
-        "id long, x long, y long, z long",
-    )
-    from dataclass_array_spark.operators.layout import write_hilbert_kd
-
-    path = str(tmp_path / "h3")
-    bounds = write_hilbert_kd(df, path, ["x", "y", "z"], bits=9, num_files=16)
-    back = spark.read.parquet(path)
-    assert back.count() == n
-    assert set(back.columns) == {"id", "x", "y", "z"}
-    assert len(bounds) == 3 and all(mn <= mx for mn, mx in bounds)
-    # per-file boxes: every dimension's summed extent far below the
-    # all-files-full-range worst case
-    import glob as g
-
-    files = [f for f in g.glob(f"{path}/*.parquet")]
-    assert len(files) >= 8
-    tot = {"x": 0, "y": 0, "z": 0}
-    for f in files:
-        pdf = spark.read.parquet(f).toPandas()
-        for c in tot:
-            tot[c] += int(pdf[c].max() - pdf[c].min())
-    worst = 512 * len(files)
-    for c, t in tot.items():
-        assert t < 0.75 * worst, (c, t, worst)
-
-
 def test_hilbert_kd_fuzz_vs_reference(spark):
     """Randomized (k, bits, coords) differential: the chained-projection
     Spark form == the Python Skilling reference, across the parameter
@@ -551,18 +452,9 @@ def test_hilbert_kd_fuzz_vs_reference(spark):
             assert got[i] == want, (k, bits, i)
 
 
-def test_layout_empty_input_raises_clear_error(spark, tmp_path):
-    """min/max bounds of an empty frame are NULL; both layout entry
-    points must fail loudly instead of feeding None into scale_expr."""
-    import pytest as _pytest
-
-    from dataclass_array_spark.operators.layout import (
-        write_hilbert_kd,
-        zorder_key,
-    )
-
+def test_layout_empty_input_raises_clear_error(spark):
+    """min/max bounds of an empty frame are NULL; zorder_key must fail
+    loudly instead of feeding None into scale_expr."""
     empty = spark.range(0).selectExpr("id AS a", "id AS b")
-    with _pytest.raises(ValueError, match="empty input"):
+    with pytest.raises(ValueError, match="empty input"):
         zorder_key(empty, ["a", "b"], bits=8)
-    with _pytest.raises(ValueError, match="empty input"):
-        write_hilbert_kd(empty, str(tmp_path / "h"), ["a", "b"], bits=8)

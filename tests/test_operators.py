@@ -1845,6 +1845,23 @@ def test_token_entropy_hand_example(spark):
     assert got[4] == (0, 0.0)
 
 
+def test_token_entropy_null_ids_keep_one_row_each(spark):
+    """NULL-id docs are not merged into one group: each keeps its own
+    row and token count, next to the non-NULL ids."""
+    from dataclass_array_spark.operators.text import token_entropy_scores
+
+    df = spark.createDataFrame(
+        [(None, "a a"), (None, "b c d"), (7, "x y")],
+        "doc_id long, text string",
+    )
+    rows = token_entropy_scores(df, "text", "doc_id").collect()
+    assert sorted((r["doc_id"] is None, r["n_tokens"]) for r in rows) == [
+        (False, 2),
+        (True, 2),
+        (True, 3),
+    ]
+
+
 def test_bloom_no_false_negatives_and_union_merge(spark, sf_dir):
     from dataclass_array_spark.operators.sketch import bloom_build, bloom_probe
 

@@ -442,60 +442,6 @@ def test_winsorize_quantiles_broadcast_back(spark):
     assert "BroadcastHashJoin" in p
 
 
-def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
-    """The bucketBy sink's 100 TB claim, asserted on the plan: two
-    tables bucketed+sorted on the join key must sort-merge join with
-    ZERO Exchange nodes (bucket layout replaces the shuffle) — the
-    co-located-join lever a recurring big join pays for once at write
-    time."""
-    from pyspark.sql import functions as F
-
-    from dataclass_array_spark.sources import write
-
-    o = spark.read.parquet(f"{SF}/orders.parquet").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    for name in ("t_orders_b", "t_lineitem_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-    write(o, str(tmp_path / "ob"), bucket_by=(8, ["o_orderkey"]),
-          table_name="t_orders_b")
-    write(li, str(tmp_path / "lb"), bucket_by=(8, ["l_orderkey"]),
-          table_name="t_lineitem_b")
-    try:
-        joined = (
-            spark.table("t_orders_b")
-            .join(
-                spark.table("t_lineitem_b").hint("merge"),
-                F.col("o_orderkey") == F.col("l_orderkey"),
-            )
-            .groupBy("o_orderkey")
-            .agg(F.count("*").alias("n"))
-        )
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            joined.explain("formatted")
-        p = buf.getvalue()
-        assert "SortMergeJoin" in p
-        # the join itself reads bucketed layout: no exchange below it
-        # (the only allowed exchange is none — bucket counts match)
-        join_sect = p.split("SortMergeJoin")[0]
-        assert "Exchange" not in join_sect, join_sect
-        # sanity: result matches the plain-parquet join
-        want = (
-            o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-            .groupBy("o_orderkey").agg(F.count("*").alias("n"))
-        )
-        got = {r["o_orderkey"]: r["n"] for r in joined.collect()}
-        exp = {r["o_orderkey"]: r["n"] for r in want.collect()}
-        assert got == exp
-    finally:
-        for name in ("t_orders_b", "t_lineitem_b"):
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-
-
 def test_zorder_key_is_pure_expression(spark):
     """The Morton key must be codegen'd column arithmetic — no Python
     UDF, no extra shuffle beyond the gate's final orderBy (the
@@ -509,8 +455,8 @@ def test_zorder_key_is_pure_expression(spark):
 
 
 def test_write_zordered_range_partitions(spark):
-    """write_zordered's layout shuffle is a single RangePartitioning
-    on the key — the same exchange any total-order sort pays."""
+    """A Z-order layout's shuffle is a single RangePartitioning on
+    the key — the same exchange any total-order sort pays."""
     import io
     from contextlib import redirect_stdout
 
@@ -683,7 +629,7 @@ def test_bpe_pair_agg_map_side_combined(spark):
     from pyspark.sql import functions as F
 
     from dataclass_array_spark.operators.bpe import (
-        _apply_merge,
+        _apply_merge_batch,
         _init_symbols,
         _word_counts,
     )
@@ -691,7 +637,9 @@ def test_bpe_pair_agg_map_side_combined(spark):
     d = spark.read.parquet(f"{SF}/documents.parquet")
     sym = _init_symbols(_word_counts(d, "text"))
     sym = sym.select(
-        "wid", "cnt", _apply_merge(F.col("syms"), "e", "r").alias("syms")
+        "wid",
+        "cnt",
+        _apply_merge_batch(F.col("syms"), [("e", "r")]).alias("syms"),
     )
     pair_arr = F.when(
         F.size("syms") >= 2,

@@ -179,82 +179,6 @@ def test_foreach_batch_idempotent_sink(spark, sf_dir, tmp_path):
     assert total == n_events
 
 
-def test_rate_source_feeds_operators(spark):
-    """Operators are source-agnostic: the built-in rate source, shaped
-    like the events stream, drives the same tumbling aggregation."""
-    from dataclass_array_spark.streaming import rate_events, tumbling_counts
-
-    stream = rate_events(spark, rows_per_second=200)
-    assert stream.isStreaming
-    assert {"ts", "ts_us", "user_id", "event_type", "value"} <= set(stream.columns)
-    out = tumbling_counts(stream, width="1 minute")
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("rate_tumbling")
-        .start()
-    )
-    try:
-        deadline = time.time() + 30
-        n = 0
-        while time.time() < deadline:
-            q.processAllAvailable()
-            n = spark.table("rate_tumbling").count()
-            if n > 0:
-                break
-            time.sleep(0.5)
-        assert n > 0
-        row = spark.table("rate_tumbling").first()
-        assert row["n"] > 0
-    finally:
-        q.stop()
-
-
-def test_kafka_source_config_gated(spark):
-    """Without the connector jars the Kafka constructor must fail with
-    an actionable message (not a bare ClassNotFound)."""
-    from dataclass_array_spark.streaming import kafka_stream
-
-    with pytest.raises(RuntimeError, match="spark-sql-kafka"):
-        kafka_stream(spark, "localhost:9092", "events")
-
-
-def test_kafka_json_decode_shape(spark):
-    """events_from_kafka_json turns raw key/value records into the
-    canonical events schema (batch frame stands in for the kafka one —
-    the decode logic is identical)."""
-    from dataclass_array_spark.streaming import events_from_kafka_json
-
-    payload = '{"event_id": 7, "ts_us": 1700000000000000, "user_id": 3, "event_type": "click", "value": 1.5, "props": "{}"}'
-    raw = spark.createDataFrame([(bytearray(payload, "utf8"),)], "value binary")
-    got = events_from_kafka_json(raw).collect()[0]
-    assert got["event_id"] == 7 and got["user_id"] == 3
-    assert got["ts"] is not None and got["value"] == 1.5
-
-
-def test_kafka_sink_payload_shape_and_jar_gate(spark, tmp_path):
-    """The sink's row->JSON projection is testable without the connector;
-    the connector-less environment must raise the clear jar-gate error."""
-    import pyspark.sql.functions as F
-    import pytest
-    from dataclass_array_spark.streaming.core import kafka_sink, rate_events
-
-    stream = rate_events(spark, rows_per_second=5)
-    # shape check: same projection the sink applies, on a batch frame
-    batch = spark.range(3).select(
-        F.col("id").alias("user_id"), (F.col("id") * 2).alias("amount")
-    )
-    payload = batch.select(
-        F.col("user_id").cast("string").alias("key"),
-        F.to_json(F.struct("user_id", "amount")).alias("value"),
-    ).collect()
-    assert payload[1]["key"] == "1" and '"amount":2' in payload[1]["value"]
-    with pytest.raises(RuntimeError, match="spark-sql-kafka"):
-        kafka_sink(
-            stream, "localhost:9092", "events", str(tmp_path / "ckpt"), key_col="user_id"
-        )
-
-
 def test_dedup_within_watermark_multi_batch(spark, tmp_path):
     """Re-deliveries of a key within the delay are suppressed even when
     they arrive in different micro-batches (state carried across)."""
@@ -396,30 +320,6 @@ def test_events_stream_definable_before_data(spark, tmp_path):
     ).to_parquet(os.path.join(d, "a.parquet"))
     out, _ = run_stream_to_memory(s.groupBy("event_type").count(), mode="complete")
     assert out.collect()[0]["count"] == 2
-
-
-def test_available_now_incremental_ingest(spark, tmp_path):
-    """Trigger(availableNow) + a persistent checkpoint = process only
-    files that arrived since the previous run."""
-    import pandas as pd
-    from dataclass_array_spark.streaming.core import run_available_now
-    from pyspark.sql import types as T
-
-    src = tmp_path / "in"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    schema = T.StructType([T.StructField("doc_id", T.LongType())])
-    outdir = str(tmp_path / "out")
-    pd.DataFrame({"doc_id": [1, 2]}).to_parquet(src / "a.parquet")
-    s = spark.readStream.schema(schema).parquet(str(src))
-    got1 = run_available_now(s, ckpt, outdir)
-    assert sorted(r["doc_id"] for r in got1.collect()) == [1, 2]
-    # second run with the same checkpoint processes ONLY the new file:
-    # output grows by exactly the new rows (reprocessing would dup 1,2)
-    pd.DataFrame({"doc_id": [3]}).to_parquet(src / "b.parquet")
-    s2 = spark.readStream.schema(schema).parquet(str(src))
-    got2 = run_available_now(s2, ckpt, outdir)
-    assert sorted(r["doc_id"] for r in got2.collect()) == [1, 2, 3]
 
 
 def test_events_stream_sniff_failure_modes(spark, tmp_path):

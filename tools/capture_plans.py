@@ -1,5 +1,8 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") for named queries into plans/<round>/.
+"""Capture .explain("formatted") for named queries into plans/<round>/
+and print one line per query: plan size, Exchange count, and the plan
+properties that matter at scale (parquet filter pushdown, broadcast
+joins, WindowGroupLimit, AQE).
 
 Usage: python tools/capture_plans.py <round> before|after q1 q2 ...
   e.g. python tools/capture_plans.py r17 before q1 q18
@@ -9,6 +12,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -18,6 +22,22 @@ from dataclass_array_spark.session import get_spark
 from dataclass_array_spark.workload import QUERIES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+CHECKS = {
+    "pushed_filters": "PushedFilters: [",
+    "broadcast_join": "BroadcastHashJoin",
+    "window_group_limit": "WindowGroupLimit",
+    "aqe": "AdaptiveSparkPlan",
+}
+
+
+def properties(p: str) -> "list[str]":
+    """Names of the CHECKS found in plan text ``p``; pushdown reads
+    ``pushed_filters(+)`` when some scan pushes a non-empty list."""
+    hits = [k for k, pat in CHECKS.items() if pat in p]
+    if "PushedFilters: []" not in p and "PushedFilters: [" in p:
+        hits = [h if h != "pushed_filters" else "pushed_filters(+)" for h in hits]
+    return hits
 
 
 def main() -> None:
@@ -39,8 +59,12 @@ def main() -> None:
             p = f"ERROR: {type(e).__name__}: {e}"
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(p)
-        n_ex = p.count("Exchange")
-        print(f"{name}: {len(p)} bytes, Exchange x{n_ex}", flush=True)
+        n_ex = len(re.findall(r"^\(\d+\) Exchange", p, re.M))
+        print(
+            f"{name}: {len(p)} bytes, Exchange x{n_ex}, "
+            f"{', '.join(properties(p))}",
+            flush=True,
+        )
 
 
 if __name__ == "__main__":
