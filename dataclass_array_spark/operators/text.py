@@ -10,8 +10,12 @@ bit-identical results in DuckDB for the oracle).
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from dataclass_array_spark.core.table import pin_materialization
 
 # Whole-token stopword markers per language for the lang-ID heuristic.
 LANG_MARKERS = {
@@ -632,26 +636,9 @@ def checked_i64(n: Column, what: str) -> Column:
     )
 
 
-def _pin_lm(df):
-    """Materialize a multiply-referenced LM-sized count table ONCE
-    (``localCheckpoint``) so the derived aggregations and join-backs
-    all read the SAME materialized rows instead of each re-expanding
-    the corpus subtree (round-15 measure-first finding: the trigram-KN
-    held-out plan carried 40 parquet scans / 156 Exchange nodes —
-    every derived table re-tokenized the corpus; with the count tables
-    pinned the plan collapses to the two inherent corpus scans).  At
-    100 TB this is exactly the "materialize the LM once" step: the
-    count table is Heaps-bounded (type-sized, not corpus-sized), and
-    pinning it also truncates the O(branches × corpus-plan) Catalyst
-    analysis cost.  Values are untouched — the pin stores the exact
-    aggregated counts that every branch previously recomputed."""
-    from dataclass_array_spark.core.table import pin_materialization
-
-    return pin_materialization(df, "local")
-
-
-def _dec38(c: Column) -> Column:
-    return c.cast("decimal(38,0)")
+def _dec38(c) -> Column:
+    """A Column, or the column of that name, as ``decimal(38,0)``."""
+    return (F.col(c) if isinstance(c, str) else c).cast("decimal(38,0)")
 
 
 def checked_dec38(n: Column, what: str) -> Column:
@@ -667,6 +654,115 @@ def checked_dec38(n: Column, what: str) -> Column:
         F.assert_true(
             ok, F.lit(f"{what} exceeds decimal(38,0)")
         ).cast("decimal(38,0)")
+    )
+
+
+def _ln_dec(n: Column, what: str) -> Column:
+    """:func:`ln_exact_dec` of a :func:`checked_dec38` product."""
+    return ln_exact_dec(checked_dec38(n, what))
+
+
+def _positive(c: Column, what: str) -> Column:
+    """``c``, failing LOUDLY unless it is > 0 — the held-out scorers'
+    guard on the 1-row V / T of an EMPTY training corpus, which would
+    otherwise feed ln(0) garbage into every unseen-event row."""
+    return F.when(c > 0, c).otherwise(
+        F.assert_true(c > 0, F.lit(what)).cast("long")
+    )
+
+
+# ---- the n-gram LM pipeline ----------------------------------------
+# Every LM scorer below is the same three steps: n-gram instances of
+# the scored corpus (_ngram_instances), the LM's statistics derived
+# from ONE n-gram count table (_ngram_counts → _bigram_lm /
+# _trigram_lm), and the per-doc position-ordered fold of the
+# per-instance nll (_per_doc_xent).  Counts are additive, so a count
+# table is a complete LM — which is what lets ngram_counts_stream feed
+# kn3_score_from_counts.
+
+
+def _ngram_keys(n: int) -> "list[str]":
+    return [f"w{k}" for k in range(1, n + 1)]
+
+
+def _ngram_instances(df, text_col: str, id_col, n: int):
+    """``(id, __nid, pos, w1..wn)`` n-gram instances of each doc, with a
+    single (pos NULL) row for docs that have < n tokens, so the per-doc
+    fold still sees every doc.  ``__nid`` gives each NULL-id row its
+    own tag, taken once before the explode, so NULL-id docs keep one
+    output row each instead of merging into one group.  The token
+    array is let-bound so the regex split runs once per row, not once
+    per element of the per-element lambdas.  ``id_col=None`` (the count
+    builder) emits the n-gram columns alone."""
+    ws = _ngram_keys(n)
+    empty = "array<struct<%s>>" % ",".join(f"{w}:string" for w in ws)
+
+    def build(toks: Column) -> Column:
+        mk = F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.struct(
+                *[
+                    F.element_at(toks, i + k if k else i).alias(w)
+                    for k, w in enumerate(ws)
+                ]
+            ),
+        )
+        # sequence(1, size-n+1) DESCENDS for size < n: guard like quality._grams
+        return F.when(F.size(toks) >= n, mk).otherwise(F.array().cast(empty))
+
+    keys = []
+    if id_col is not None:
+        keys = [id_col, "__nid"]
+        df = df.withColumn(
+            "__nid",
+            F.when(F.col(id_col).isNull(), F.monotonically_increasing_id()),
+        )
+    grams = F.posexplode_outer(let(tokens(F.col(text_col)), build))
+    return df.select(*keys, grams.alias("pos", "g")).select(
+        *keys, "pos", *[F.col(f"g.{w}").alias(w) for w in ws]
+    )
+
+
+def _ngram_counts(df, text_col: str, n: int):
+    """The n-gram count table ``(w1..wn, c)`` of ``df``'s corpus — the
+    one count builder of the trainers, :func:`pmi_collocations` and
+    ``streaming.ngram_counts_stream``.  Trainers pin it with
+    ``pin_materialization``: every derived table reads the SAME
+    materialized counts instead of re-tokenizing the corpus per branch."""
+    return (
+        _ngram_instances(df, text_col, None, n)
+        .filter(F.col("pos").isNotNull())
+        .groupBy(*_ngram_keys(n))
+        .agg(F.count("*").cast("long").alias("c"))
+    )
+
+
+def _per_doc_xent(scored, id_col: str, nll: Column, unit: str):
+    """The one per-doc fold of the LM scorers → ``(id, <unit>,
+    xent_nats)``: the mean per-instance ``nll`` of each doc, summed in
+    POSITION order (the order-dependent IEEE sum recipe — the oracle
+    folds in the same sequence, so the doubles hash-match), 0.0 for a
+    doc without n-grams.  ``scored`` is an :func:`_ngram_instances`
+    frame with its LM terms attached; grouping on ``__nid`` keeps
+    NULL-id docs apart."""
+    entry = F.when(
+        F.col("pos").isNotNull(), F.struct(F.col("pos"), nll.alias("nll"))
+    )
+    n = F.col(unit)
+    per_doc = scored.groupBy(id_col, "__nid").agg(
+        F.count("pos").cast("long").alias(unit),
+        F.aggregate(
+            F.transform(F.array_sort(F.collect_list(entry)), lambda s: s.nll),
+            F.lit(0.0),
+            lambda a, x: a + x,
+        ).alias("__s"),
+    )
+    return per_doc.select(
+        F.col(id_col),
+        n,
+        F.when(n > 0, F.col("__s") / n.cast("double"))
+        .otherwise(F.lit(0.0))
+        .alias("xent_nats"),
     )
 
 
@@ -689,71 +785,87 @@ def unigram_xent_scores(df, text_col: str, id_col: str):
     folds doubles in token-position order so both engines add in the
     same sequence (order-dependent IEEE sums).  One explode shuffle +
     one per-doc aggregation — same plan family as tf-idf."""
-    tok = df.select(
-        F.col(id_col),
-        F.posexplode_outer(tokens(F.col(text_col))).alias("pos", "t"),
-    )
-    freq = tok.filter(F.col("t").isNotNull()).groupBy("t").agg(
-        F.count("*").alias("c")
-    )
-    lnc = freq.select("t", ln_exact(F.col("c")).alias("lnc"))
+    freq = _ngram_counts(df, text_col, 1)
+    lnc = freq.select("w1", ln_exact(F.col("c")).alias("lnc"))
     tot = freq.agg(F.sum("c").cast("long").alias("n_total")).select(
         ln_exact(F.col("n_total")).alias("ln_total")
     )
-    entry = F.when(
-        F.col("pos").isNotNull(), F.struct(F.col("pos"), F.col("lnc").alias("lnc"))
+    scored = (
+        _ngram_instances(df, text_col, id_col, 1)
+        .join(lnc, ["w1"], "left")
+        .crossJoin(F.broadcast(tot))
     )
-    per_doc = (
-        tok.join(lnc, "t", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count("pos").alias("n_tokens"),
-            F.transform(
-                F.array_sort(F.collect_list(entry)), lambda s: s.lnc
-            ).alias("__lns"),
+    return _per_doc_xent(
+        scored, id_col, F.col("ln_total") - F.col("lnc"), "n_tokens"
+    )
+
+
+def _bigram_lm(df, text_col: str):
+    """The order-2 counts of ``df``'s corpus that both bigram LMs start
+    from: the pinned count table ``cb(w1, w2, c)`` and the prefix table
+    ``cu(w1, cu, n1w1)`` = c(w1·), N1+(w1·).
+
+    Every table derived from them is corpus-derived and unbounded
+    (Heaps' law), so none carries a broadcast hint; AQE broadcasts
+    whichever actually fits at runtime (a forced hint = 8 GB limit /
+    driver OOM at 100 TB).  Only the bounded-by-construction 1-row
+    V / T keep hints.  Values are hint-independent."""
+    cb = pin_materialization(_ngram_counts(df, text_col, 2))
+    cu = cb.groupBy("w1").agg(
+        F.sum("c").cast("long").alias("cu"),
+        F.count("*").cast("long").alias("n1w1"),
+    )
+    return cb, cu
+
+
+def _add1_lm(df, text_col: str):
+    """The add-one bigram LM of ``df``'s corpus as ln tables, shared by
+    :func:`bigram_xent_scores` and its held-out form: ``(num(w1, w2,
+    ln_num), den(w1, ln_den), vocab)``, ``vocab`` the 1-row unigram
+    vocab size V.  Each LM family builds only its own tables: the ln
+    series make each one cost tenths of a second of driver analysis."""
+    cb, cu = _bigram_lm(df, text_col)
+    vocab = df.select(F.explode(tokens(F.col(text_col))).alias("t")).agg(
+        F.countDistinct("t").cast("long").alias("V")
+    )
+    num = cb.select("w1", "w2", ln_exact(F.col("c") + F.lit(1)).alias("ln_num"))
+    den = cu.crossJoin(F.broadcast(vocab)).select(
+        "w1", ln_exact(F.col("cu") + F.col("V")).alias("ln_den")
+    )
+    return num, den, vocab
+
+
+def _kn_lm(df, text_col: str):
+    """The Kneser-Ney bigram LM of ``df``'s corpus, shared by
+    :func:`kneser_ney_xent_scores` and its held-out form: ``(num(w1,
+    w2, ln_num), den(w1, n1w1, ln_den), ncw2(w2, ncw2), tt)`` with
+    ``ncw2`` = N1+(·w2) and ``tt`` the 1-row bigram-type count T;
+    ``den`` carries N1+(w1·) for the held-out backoff."""
+    cb, cu = _bigram_lm(df, text_col)
+    ncw2 = cb.groupBy("w2").agg(F.count("*").cast("long").alias("ncw2"))
+    tt = cb.agg(F.count("*").cast("long").alias("T"))
+    num = (
+        cb.join(ncw2, ["w2"])
+        .join(cu.select("w1", "n1w1"), ["w1"])
+        .crossJoin(F.broadcast(tt))
+        .select(
+            "w1",
+            "w2",
+            _ln_dec(
+                (_dec38("c") * 4 - 3) * _dec38("T")
+                + _dec38("n1w1") * _dec38("ncw2") * 3,
+                "kneser_ney numerator (4c-3)T + 3*N1+*N1+",
+            ).alias("ln_num"),
         )
     )
-    summed = per_doc.crossJoin(F.broadcast(tot)).withColumn(
-        "__s",
-        F.aggregate(
-            F.col("__lns"), F.lit(0.0), lambda a, x: a + (F.col("ln_total") - x)
-        ),
+    den = cu.crossJoin(F.broadcast(tt)).select(
+        "w1",
+        "n1w1",
+        _ln_dec(
+            _dec38("cu") * 4 * _dec38("T"), "kneser_ney denominator 4*c(w1.)*T"
+        ).alias("ln_den"),
     )
-    return summed.select(
-        F.col(id_col),
-        F.col("n_tokens"),
-        F.when(F.col("n_tokens") > 0, F.col("__s") / F.col("n_tokens").cast("double"))
-        .otherwise(F.lit(0.0))
-        .alias("xent_nats"),
-    )
-
-
-def _bigram_instances(df, text_col: str, id_col: str):
-    """(id, pos, w1, w2) bigram instances of each doc, with a single
-    (pos NULL) row for docs that have < 2 tokens (so downstream
-    per-doc aggregation still sees every doc).  The token array is
-    let-bound so the regex split runs once per row, not once per
-    element of the per-element lambdas."""
-
-    def build(toks: Column) -> Column:
-        mk = F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.struct(
-                F.element_at(toks, i).alias("w1"),
-                F.element_at(toks, i + 1).alias("w2"),
-            ),
-        )
-        # sequence(1, n-1) DESCENDS for n < 2 — guard like quality._grams
-        return F.when(F.size(toks) >= 2, mk).otherwise(
-            F.array().cast("array<struct<w1:string,w2:string>>")
-        )
-
-    big_arr = let(tokens(F.col(text_col)), build)
-    return df.select(
-        F.col(id_col), F.posexplode_outer(big_arr).alias("pos", "bg")
-    ).select(
-        id_col, "pos", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2")
-    )
+    return num, den, ncw2, tt
 
 
 def bigram_xent_scores(df, text_col: str, id_col: str):
@@ -780,61 +892,16 @@ def bigram_xent_scores(df, text_col: str, id_col: str):
     sums are one explode shuffle + one per-doc aggregation — the same
     plan family as tf-idf and the unigram LM.  Scoring the training
     corpus itself means no OOV rows (every doc bigram is in the LM by
-    construction); to score a HELD-OUT corpus against this LM, smooth
-    the unseen-bigram branch with ``ln_den − ln(1)`` via a left join +
-    coalesce — deliberately not done here to keep the gate's join
-    strictness visible."""
-    inst = _bigram_instances(df, text_col, id_col)
-    nn = inst.filter(F.col("pos").isNotNull())
-    cb = _pin_lm(nn.groupBy("w1", "w2").agg(F.count("*").alias("cb")))
-    cu = cb.groupBy("w1").agg(F.sum("cb").cast("long").alias("cu"))
-    vocab = (
-        df.select(F.explode(tokens(F.col(text_col))).alias("t"))
-        .agg(F.countDistinct("t").cast("long").alias("V"))
+    construction); :func:`bigram_xent_scores_heldout` scores a
+    different corpus."""
+    num, den, _ = _add1_lm(df, text_col)
+    scored = (
+        _ngram_instances(df, text_col, id_col, 2)
+        .join(num, ["w1", "w2"], "left")
+        .join(den, ["w1"], "left")
     )
-    ln_num = cb.select(
-        "w1", "w2", ln_exact(F.col("cb") + F.lit(1)).alias("ln_num")
-    )
-    ln_den = cu.crossJoin(F.broadcast(vocab)).select(
-        "w1", ln_exact(F.col("cu") + F.col("V")).alias("ln_den")
-    )
-    entry = F.when(
-        F.col("pos").isNotNull(),
-        F.struct(
-            F.col("pos"),
-            (F.col("ln_den") - F.col("ln_num")).alias("nll"),
-        ),
-    )
-    # ln_num is BIGRAM-TYPE-sized and ln_den prefix-VOCAB-sized — both
-    # corpus-derived and unbounded (Heaps' law), so neither carries a
-    # broadcast hint; AQE broadcasts whichever actually fits at runtime
-    # (a forced hint = 8 GB limit / driver OOM at 100 TB).  Only
-    # bounded-by-construction sides (the 1-row vocab total, ln_v) keep
-    # hints.  Values are hint-independent.
-    per_doc = (
-        inst.join(ln_num, ["w1", "w2"], "left")
-        .join(ln_den, ["w1"], "left")
-        .groupBy(id_col)
-        .agg(
-            F.count("pos").cast("long").alias("n_bigrams"),
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(entry)), lambda s: s.nll
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ).alias("__s"),
-        )
-    )
-    return per_doc.select(
-        F.col(id_col),
-        F.col("n_bigrams"),
-        F.when(
-            F.col("n_bigrams") > 0,
-            F.col("__s") / F.col("n_bigrams").cast("double"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("xent_nats"),
+    return _per_doc_xent(
+        scored, id_col, F.col("ln_den") - F.col("ln_num"), "n_bigrams"
     )
 
 
@@ -855,72 +922,22 @@ def bigram_xent_scores_heldout(train_df, score_df, text_col: str, id_col: str):
     hash-matches the DuckDB oracle bit-for-bit.  Self-scoring
     (``train_df is score_df``) reproduces :func:`bigram_xent_scores`
     value-identically (the OOV branches never fire)."""
-    inst_t = _bigram_instances(train_df, text_col, id_col).filter(
-        F.col("pos").isNotNull()
-    )
-    cb = _pin_lm(inst_t.groupBy("w1", "w2").agg(F.count("*").alias("cb")))
-    cu = cb.groupBy("w1").agg(F.sum("cb").cast("long").alias("cu"))
-    vocab = (
-        train_df.select(F.explode(tokens(F.col(text_col))).alias("t"))
-        .agg(F.countDistinct("t").cast("long").alias("V"))
-    )
-    ln_num = cb.select(
-        "w1", "w2", ln_exact(F.col("cb") + F.lit(1)).alias("ln_num")
-    )
-    ln_den = cu.crossJoin(F.broadcast(vocab)).select(
-        "w1", ln_exact(F.col("cu") + F.col("V")).alias("ln_den")
-    )
-    # an EMPTY training corpus would feed ln(0) garbage into every OOV
-    # row — fail loudly instead (evaluated once, on the 1-row vocab)
+    num, den, vocab = _add1_lm(train_df, text_col)
     ln_v = vocab.select(
         ln_exact(
-            F.when(F.col("V") > 0, F.col("V")).otherwise(
-                F.assert_true(
-                    F.col("V") > 0,
-                    F.lit("bigram LM: empty training corpus (V = 0)"),
-                ).cast("long")
-            )
+            _positive(F.col("V"), "bigram LM: empty training corpus (V = 0)")
         ).alias("ln_v")
     )
-    inst_s = _bigram_instances(score_df, text_col, id_col)
-    entry = F.when(
-        F.col("pos").isNotNull(),
-        F.struct(
-            F.col("pos"),
-            (
-                F.coalesce(F.col("ln_den"), F.col("ln_v"))
-                - F.coalesce(F.col("ln_num"), F.lit(0.0))
-            ).alias("nll"),
-        ),
-    )
-    # ln_num / ln_den: corpus-derived, unhinted (see bigram_xent_scores);
-    # ln_v is one row — hint kept.
-    per_doc = (
-        inst_s.join(ln_num, ["w1", "w2"], "left")
-        .join(ln_den, ["w1"], "left")
+    scored = (
+        _ngram_instances(score_df, text_col, id_col, 2)
+        .join(num, ["w1", "w2"], "left")
+        .join(den, ["w1"], "left")
         .crossJoin(F.broadcast(ln_v))
-        .groupBy(id_col)
-        .agg(
-            F.count("pos").cast("long").alias("n_bigrams"),
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(entry)), lambda s: s.nll
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ).alias("__s"),
-        )
     )
-    return per_doc.select(
-        F.col(id_col),
-        F.col("n_bigrams"),
-        F.when(
-            F.col("n_bigrams") > 0,
-            F.col("__s") / F.col("n_bigrams").cast("double"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("xent_nats"),
+    nll = F.coalesce(F.col("ln_den"), F.col("ln_v")) - F.coalesce(
+        F.col("ln_num"), F.lit(0.0)
     )
+    return _per_doc_xent(scored, id_col, nll, "n_bigrams")
 
 
 def token_entropy_scores(df, text_col: str, id_col: str):
@@ -996,6 +1013,7 @@ def token_entropy_scores(df, text_col: str, id_col: str):
     )
 
 
+
 def kneser_ney_xent_scores(df, text_col: str, id_col: str):
     """Per-document conditional cross-entropy (nats/bigram) under the
     corpus's own INTERPOLATED KNESER-NEY bigram LM — the
@@ -1035,70 +1053,14 @@ def kneser_ney_xent_scores(df, text_col: str, id_col: str):
     prefix; join-backs are UNHINTED (corpus-derived — the round-12
     vocab-join rule; only the 1-row T is broadcast); per-doc sums
     fold in position order (the order-dependent IEEE sum recipe)."""
-    inst = _bigram_instances(df, text_col, id_col)
-    nn = inst.filter(F.col("pos").isNotNull())
-    cb = _pin_lm(nn.groupBy("w1", "w2").agg(F.count("*").alias("cb")))
-    cu = cb.groupBy("w1").agg(
-        F.sum("cb").cast("long").alias("cu"),
-        F.count("*").cast("long").alias("n1w1"),
-    )
-    ncw2 = cb.groupBy("w2").agg(F.count("*").cast("long").alias("ncw2"))
-    tt = cb.agg(F.count("*").cast("long").alias("T"))
-    num = (
-        cb.join(ncw2, ["w2"])
-        .join(cu.select("w1", "n1w1"), ["w1"])
-        .crossJoin(F.broadcast(tt))
-        .select(
-            "w1",
-            "w2",
-            ln_exact_dec(
-                checked_dec38(
-                    (_dec38(F.col("cb")) * 4 - 3) * _dec38(F.col("T"))
-                    + _dec38(F.col("n1w1")) * _dec38(F.col("ncw2")) * 3,
-                    "kneser_ney numerator (4c-3)T + 3*N1+*N1+",
-                )
-            ).alias("ln_num"),
-        )
-    )
-    den = cu.crossJoin(F.broadcast(tt)).select(
-        "w1",
-        ln_exact_dec(
-            checked_dec38(
-                _dec38(F.col("cu")) * 4 * _dec38(F.col("T")),
-                "kneser_ney denominator 4*c(w1.)*T",
-            )
-        ).alias("ln_den"),
-    )
-    entry = F.when(
-        F.col("pos").isNotNull(),
-        F.struct(
-            F.col("pos"), (F.col("ln_den") - F.col("ln_num")).alias("nll")
-        ),
-    )
-    per_doc = (
-        inst.join(num, ["w1", "w2"], "left")
+    num, den, _, _ = _kn_lm(df, text_col)
+    scored = (
+        _ngram_instances(df, text_col, id_col, 2)
+        .join(num, ["w1", "w2"], "left")
         .join(den, ["w1"], "left")
-        .groupBy(id_col)
-        .agg(
-            F.count("pos").cast("long").alias("n_bigrams"),
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(entry)), lambda s: s.nll
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ).alias("__s"),
-        )
     )
-    return per_doc.select(
-        F.col(id_col),
-        F.col("n_bigrams"),
-        F.when(
-            F.col("n_bigrams") > 0,
-            F.col("__s") / F.col("n_bigrams").cast("double"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("xent_nats"),
+    return _per_doc_xent(
+        scored, id_col, F.col("ln_den") - F.col("ln_num"), "n_bigrams"
     )
 
 
@@ -1140,102 +1102,38 @@ def kneser_ney_xent_scores_heldout(train_df, score_df, text_col: str, id_col: st
     expression — linear tax, no extra shuffle); the DuckDB mirror
     computes them per DISTINCT pair, bit-identical because
     ln_exact_dec is a pure function of the integer."""
-    inst_t = _bigram_instances(train_df, text_col, id_col).filter(
-        F.col("pos").isNotNull()
-    )
-    cb = _pin_lm(inst_t.groupBy("w1", "w2").agg(F.count("*").alias("cb")))
-    cu = cb.groupBy("w1").agg(
-        F.sum("cb").cast("long").alias("cu"),
-        F.count("*").cast("long").alias("n1w1"),
-    )
-    ncw2 = cb.groupBy("w2").agg(F.count("*").cast("long").alias("ncw2"))
-    # empty training corpus → T = 0 → ln garbage everywhere; fail loudly
-    # on the 1-row aggregate instead (cf. bigram_xent_scores_heldout's V)
-    tt = cb.agg(F.count("*").cast("long").alias("T")).select(
-        F.when(F.col("T") > 0, F.col("T"))
-        .otherwise(
-            F.assert_true(
-                F.col("T") > 0,
-                F.lit("kneser_ney heldout: empty training corpus (T = 0)"),
-            ).cast("long")
-        )
-        .alias("T")
-    )
-    num1 = (
-        cb.join(ncw2, ["w2"])
-        .join(cu.select("w1", "n1w1"), ["w1"])
-        .crossJoin(F.broadcast(tt))
-        .select(
-            "w1",
-            "w2",
-            ln_exact_dec(
-                checked_dec38(
-                    (_dec38(F.col("cb")) * 4 - 3) * _dec38(F.col("T"))
-                    + _dec38(F.col("n1w1")) * _dec38(F.col("ncw2")) * 3,
-                    "kneser_ney numerator (4c-3)T + 3*N1+*N1+",
-                )
-            ).alias("ln_num"),
-        )
-    )
-    # carries n1w1 so the branch-2 numerator needs no second w1 join
-    den = cu.crossJoin(F.broadcast(tt)).select(
-        "w1",
-        F.col("n1w1"),
+    num, den, ncw2, tt = _kn_lm(train_df, text_col)
+    ln_t = tt.select(
         ln_exact_dec(
-            checked_dec38(
-                _dec38(F.col("cu")) * 4 * _dec38(F.col("T")),
-                "kneser_ney denominator 4*c(w1.)*T",
+            _dec38(
+                _positive(
+                    F.col("T"),
+                    "kneser_ney heldout: empty training corpus (T = 0)",
+                )
             )
-        ).alias("ln_den"),
+        ).alias("ln_t")
     )
-    ln_t = tt.select(ln_exact_dec(_dec38(F.col("T"))).alias("ln_t"))
-    inst_s = _bigram_instances(score_df, text_col, id_col)
     ncf = F.coalesce(F.col("ncw2"), F.lit(1).cast("long"))
     nll = (
         F.when(F.col("ln_num").isNotNull(), F.col("ln_den") - F.col("ln_num"))
         .when(
             F.col("ln_den").isNotNull(),
             F.col("ln_den")
-            - ln_exact_dec(
-                checked_dec38(
-                    _dec38(F.col("n1w1")) * _dec38(ncf) * 3,
-                    "kneser_ney backoff numerator 3*N1+*N1+",
-                )
+            - _ln_dec(
+                _dec38("n1w1") * _dec38(ncf) * 3,
+                "kneser_ney backoff numerator 3*N1+*N1+",
             ),
         )
         .otherwise(F.col("ln_t") - ln_exact_dec(_dec38(ncf)))
     )
-    entry = F.when(
-        F.col("pos").isNotNull(),
-        F.struct(F.col("pos"), nll.alias("nll")),
-    )
-    per_doc = (
-        inst_s.join(num1, ["w1", "w2"], "left")
+    scored = (
+        _ngram_instances(score_df, text_col, id_col, 2)
+        .join(num, ["w1", "w2"], "left")
         .join(den, ["w1"], "left")
         .join(ncw2, ["w2"], "left")
         .crossJoin(F.broadcast(ln_t))
-        .groupBy(id_col)
-        .agg(
-            F.count("pos").cast("long").alias("n_bigrams"),
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(entry)), lambda s: s.nll
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ).alias("__s"),
-        )
     )
-    return per_doc.select(
-        F.col(id_col),
-        F.col("n_bigrams"),
-        F.when(
-            F.col("n_bigrams") > 0,
-            F.col("__s") / F.col("n_bigrams").cast("double"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("xent_nats"),
-    )
+    return _per_doc_xent(scored, id_col, nll, "n_bigrams")
 
 
 def pmi_collocations(
@@ -1266,67 +1164,66 @@ def pmi_collocations(
     1-row N broadcast."""
     if min_count < 1:
         raise ValueError("pmi_collocations: min_count must be >= 1")
-    inst = _bigram_instances(
-        df.select(F.lit(1).alias("__one"), F.col(text_col)), text_col, "__one"
-    ).filter(F.col("pos").isNotNull())
-    cb = _pin_lm(
-        inst.groupBy("w1", "w2").agg(F.count("*").cast("long").alias("n_pair"))
-    )
-    c1 = cb.groupBy("w1").agg(F.sum("n_pair").cast("long").alias("c1"))
-    c2 = cb.groupBy("w2").agg(F.sum("n_pair").cast("long").alias("c2"))
-    nn = cb.agg(F.sum("n_pair").cast("long").alias("N"))
+    cb = pin_materialization(_ngram_counts(df, text_col, 2))
+    c1 = cb.groupBy("w1").agg(F.sum("c").cast("long").alias("c1"))
+    c2 = cb.groupBy("w2").agg(F.sum("c").cast("long").alias("c2"))
+    nn = cb.agg(F.sum("c").cast("long").alias("N"))
     cand = (
-        cb.filter(F.col("n_pair") >= F.lit(int(min_count)))
+        cb.filter(F.col("c") >= F.lit(int(min_count)))
         .join(c1, ["w1"])
         .join(c2, ["w2"])
         .crossJoin(F.broadcast(nn))
     )
     pmi = ln_exact(
-        checked_i64(
-            _dec38(F.col("n_pair")) * _dec38(F.col("N")), "pmi numerator c*N"
-        )
+        checked_i64(_dec38("c") * _dec38("N"), "pmi numerator c*N")
     ) - ln_exact(
-        checked_i64(
-            _dec38(F.col("c1")) * _dec38(F.col("c2")),
-            "pmi denominator c1*c2",
-        )
+        checked_i64(_dec38("c1") * _dec38("c2"), "pmi denominator c1*c2")
     )
     return (
-        cand.select("w1", "w2", "n_pair", pmi.alias("pmi"))
+        cand.select("w1", "w2", F.col("c").alias("n_pair"), pmi.alias("pmi"))
         .orderBy(F.desc("pmi"), F.asc("w1"), F.asc("w2"))
         .limit(int(top_k))
     )
 
 
-def _trigram_instances(df, text_col: str, id_col: str):
-    """(id, pos, w1, w2, w3) trigram instances of each doc, with a
-    single (pos NULL) row for docs that have < 3 tokens (downstream
-    per-doc aggregation still sees every doc) — the order-3 analog of
-    :func:`_bigram_instances` (same let-bound token array)."""
-
-    def build(toks: Column) -> Column:
-        mk = F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 2),
-            lambda i: F.struct(
-                F.element_at(toks, i).alias("w1"),
-                F.element_at(toks, i + 1).alias("w2"),
-                F.element_at(toks, i + 2).alias("w3"),
-            ),
-        )
-        # sequence(1, n-2) DESCENDS for n < 3 — guard like _bigram_instances
-        return F.when(F.size(toks) >= 3, mk).otherwise(
-            F.array().cast("array<struct<w1:string,w2:string,w3:string>>")
-        )
-
-    tri_arr = let(tokens(F.col(text_col)), build)
-    return df.select(
-        F.col(id_col), F.posexplode_outer(tri_arr).alias("pos", "tg")
-    ).select(
-        id_col,
-        "pos",
-        F.col("tg.w1").alias("w1"),
-        F.col("tg.w2").alias("w2"),
-        F.col("tg.w3").alias("w3"),
+def _trigram_lm(t3):
+    """The order-3 Kneser-Ney LM of the trigram count table ``t3(w1,
+    w2, w3, c)``, shared by the self-scoring and held-out scorers: the
+    pinned ``t3`` and ``t23(w2, w3, n23)`` = N1+(·w2w3), and derived
+    from them ``b12(w1, w2, bb, n1)`` = B, N1 ; ``e2(w2, ee)`` = E ;
+    ``n2(w2, nn2)`` = N2 ; ``m3(w3, mm)`` = M ; ``tt`` the 1-row T.
+    ``ln_num`` / ``ln_den`` are the fused KN3 ln expressions over a row
+    carrying those columns (see :func:`kneser_ney3_xent_scores`)."""
+    t3 = pin_materialization(t3)
+    t23 = pin_materialization(
+        t3.groupBy("w2", "w3").agg(F.count("*").cast("long").alias("n23"))
+    )
+    # p2's numerator (4n-3)*T + 3*N2*M: inside ln_num, and the held-out
+    # form's branch 2a on its own
+    p2_num = (_dec38("n23") * 4 - 3) * _dec38("T") + (
+        _dec38("nn2") * 3 * _dec38("mm")
+    )
+    return SimpleNamespace(
+        t3=t3,
+        b12=t3.groupBy("w1", "w2").agg(
+            F.sum("c").cast("long").alias("bb"),
+            F.count("*").cast("long").alias("n1"),
+        ),
+        t23=t23,
+        e2=t3.groupBy("w2").agg(F.count("*").cast("long").alias("ee")),
+        n2=t23.groupBy("w2").agg(F.count("*").cast("long").alias("nn2")),
+        m3=t23.groupBy("w3").agg(F.count("*").cast("long").alias("mm")),
+        tt=t23.agg(F.count("*").cast("long").alias("T")),
+        p2_num=p2_num,
+        ln_num=_ln_dec(
+            (_dec38("c") * 4 - 3) * 4 * _dec38("ee") * _dec38("T")
+            + _dec38("n1") * 3 * p2_num,
+            "numerator (4c-3)*4*E*T + 3*N1*((4n-3)*T + 3*N2*M)",
+        ),
+        ln_den=_ln_dec(
+            _dec38("bb") * 16 * _dec38("ee") * _dec38("T"),
+            "denominator 16*B*E*T",
+        ),
     )
 
 
@@ -1376,93 +1273,27 @@ def kneser_ney3_xent_scores(df, text_col: str, id_col: str):
     round-12 vocab-join rule; only the 1-row T broadcasts); per-doc
     sums fold in position order (the order-dependent IEEE sum
     recipe)."""
-    inst = _trigram_instances(df, text_col, id_col)
-    nn = inst.filter(F.col("pos").isNotNull())
-    t3 = _pin_lm(nn.groupBy("w1", "w2", "w3").agg(F.count("*").alias("c")))
-    b12 = t3.groupBy("w1", "w2").agg(
-        F.sum("c").cast("long").alias("bb"),
-        F.count("*").cast("long").alias("n1"),
-    )
-    t23 = _pin_lm(
-        t3.groupBy("w2", "w3").agg(F.count("*").cast("long").alias("n23"))
-    )
-    e2 = t3.groupBy("w2").agg(F.count("*").cast("long").alias("ee"))
-    n2 = t23.groupBy("w2").agg(F.count("*").cast("long").alias("nn2"))
-    m3 = t23.groupBy("w3").agg(F.count("*").cast("long").alias("mm"))
-    tt = t23.agg(F.count("*").cast("long").alias("T"))
-    w2tab = e2.join(n2, ["w2"])
+    lm = _trigram_lm(_ngram_counts(df, text_col, 3))
     num = (
-        t3.join(t23, ["w2", "w3"])
-        .join(b12.select("w1", "w2", "n1"), ["w1", "w2"])
-        .join(w2tab, ["w2"])
-        .join(m3, ["w3"])
-        .crossJoin(F.broadcast(tt))
-        .select(
-            "w1",
-            "w2",
-            "w3",
-            ln_exact_dec(
-                checked_dec38(
-                    (_dec38(F.col("c")) * 4 - 3)
-                    * 4
-                    * _dec38(F.col("ee"))
-                    * _dec38(F.col("T"))
-                    + _dec38(F.col("n1"))
-                    * 3
-                    * (
-                        (_dec38(F.col("n23")) * 4 - 3) * _dec38(F.col("T"))
-                        + _dec38(F.col("nn2")) * 3 * _dec38(F.col("mm"))
-                    ),
-                    "numerator (4c-3)*4*E*T + 3*N1*((4n-3)*T + 3*N2*M)",
-                )
-            ).alias("ln_num"),
-        )
+        lm.t3.join(lm.t23, ["w2", "w3"])
+        .join(lm.b12.select("w1", "w2", "n1"), ["w1", "w2"])
+        .join(lm.e2.join(lm.n2, ["w2"]), ["w2"])
+        .join(lm.m3, ["w3"])
+        .crossJoin(F.broadcast(lm.tt))
+        .select("w1", "w2", "w3", lm.ln_num.alias("ln_num"))
     )
     den = (
-        b12.join(e2, ["w2"])
-        .crossJoin(F.broadcast(tt))
-        .select(
-            "w1",
-            "w2",
-            ln_exact_dec(
-                checked_dec38(
-                    _dec38(F.col("bb")) * 16 * _dec38(F.col("ee"))
-                    * _dec38(F.col("T")),
-                    "denominator 16*B*E*T",
-                )
-            ).alias("ln_den"),
-        )
+        lm.b12.join(lm.e2, ["w2"])
+        .crossJoin(F.broadcast(lm.tt))
+        .select("w1", "w2", lm.ln_den.alias("ln_den"))
     )
-    entry = F.when(
-        F.col("pos").isNotNull(),
-        F.struct(
-            F.col("pos"), (F.col("ln_den") - F.col("ln_num")).alias("nll")
-        ),
-    )
-    per_doc = (
-        inst.join(num, ["w1", "w2", "w3"], "left")
+    scored = (
+        _ngram_instances(df, text_col, id_col, 3)
+        .join(num, ["w1", "w2", "w3"], "left")
         .join(den, ["w1", "w2"], "left")
-        .groupBy(id_col)
-        .agg(
-            F.count("pos").cast("long").alias("n_trigrams"),
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(entry)), lambda s: s.nll
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ).alias("__s"),
-        )
     )
-    return per_doc.select(
-        F.col(id_col),
-        F.col("n_trigrams"),
-        F.when(
-            F.col("n_trigrams") > 0,
-            F.col("__s") / F.col("n_trigrams").cast("double"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("xent_nats"),
+    return _per_doc_xent(
+        scored, id_col, F.col("ln_den") - F.col("ln_num"), "n_trigrams"
     )
 
 
@@ -1511,11 +1342,9 @@ def kneser_ney3_xent_scores_heldout(
     scored instance; all join-backs UNHINTED (corpus-derived); only
     the 1-row T / ln T broadcasts; per-doc sums fold in position
     order."""
-    inst_t = _trigram_instances(train_df, text_col, id_col).filter(
-        F.col("pos").isNotNull()
+    return kn3_score_from_counts(
+        _ngram_counts(train_df, text_col, 3), score_df, text_col, id_col
     )
-    t3 = inst_t.groupBy("w1", "w2", "w3").agg(F.count("*").alias("c"))
-    return kn3_score_from_counts(t3, score_df, text_col, id_col)
 
 
 def kn3_score_from_counts(t3, score_df, text_col: str, id_col: str):
@@ -1531,158 +1360,58 @@ def kn3_score_from_counts(t3, score_df, text_col: str, id_col: str):
     backoff branches, same decimal(38)/``ln_exact_dec`` exactness,
     same plan shape as the held-out scorer (which now delegates
     here)."""
-    t3 = _pin_lm(t3)
-    b12 = t3.groupBy("w1", "w2").agg(
-        F.sum("c").cast("long").alias("bb"),
-        F.count("*").cast("long").alias("n1"),
+    lm = _trigram_lm(t3)
+    tt = lm.tt.select(
+        _positive(
+            F.col("T"), "kneser_ney3 heldout: empty training corpus (T = 0)"
+        ).alias("T")
     )
-    t23 = _pin_lm(
-        t3.groupBy("w2", "w3").agg(F.count("*").cast("long").alias("n23"))
-    )
-    e2 = t3.groupBy("w2").agg(F.count("*").cast("long").alias("ee"))
-    n2 = t23.groupBy("w2").agg(F.count("*").cast("long").alias("nn2"))
-    m3 = t23.groupBy("w3").agg(F.count("*").cast("long").alias("mm"))
-    # empty training corpus -> T = 0 -> ln garbage everywhere; fail
-    # loudly on the 1-row aggregate (the bigram held-out discipline)
-    tt = t23.agg(F.count("*").cast("long").alias("T")).select(
-        F.when(F.col("T") > 0, F.col("T"))
-        .otherwise(
-            F.assert_true(
-                F.col("T") > 0,
-                F.lit("kneser_ney3 heldout: empty training corpus (T = 0)"),
-            ).cast("long")
-        )
-        .alias("T")
-    )
-    # Round 16 restructure (results bit-identical): the per-trigram
-    # nll depends only on the trigram TYPE, so score the DISTINCT
-    # types of the corpus (a Heaps-bounded table) and attach the
-    # result to the instance frame with ONE corpus-sized join.  The
-    # old shape left-joined the FULL instance frame against five
-    # pre-joined branch tables (num1a/d12/c23/w2t/w3t) — five
-    # corpus-sized shuffles (one per join key), plus ~7 more
-    # LM-sized joins building the branches.  Now: the six raw stat
-    # tables (t3, b12, t23, e2, n2, m3) attach to the type table
-    # with six type-level left joins, and all ln terms are computed
-    # in one projection over the flat row.  The null patterns are
-    # unchanged — every branch table's inner-join chain was total on
-    # its gate column (a trigram in t3 always has its prefix in b12,
-    # its (w2,w3) in t23, its w2 in e2/n2, its w3 in m3, because
-    # those tables aggregate t3 itself), so gating each ln on that
-    # column's presence reproduces the old left-join NULLs exactly.
-    # The ln series are bound through ONE struct let() so each runs
-    # once per type row, as the branch-table projections did.
-    inst_s = _trigram_instances(score_df, text_col, id_col)
+    # The per-trigram nll depends only on the trigram TYPE, so score the
+    # DISTINCT types of the corpus (a Heaps-bounded table) with
+    # type-level left joins and attach the result to the instances with
+    # ONE corpus-sized join.
+    inst_s = _ngram_instances(score_df, text_col, id_col, 3)
     types = (
         inst_s.filter(F.col("pos").isNotNull())
         .select("w1", "w2", "w3")
         .distinct()
     )
     stats = (
-        types.join(t3, ["w1", "w2", "w3"], "left")
-        .join(b12, ["w1", "w2"], "left")
-        .join(t23, ["w2", "w3"], "left")
-        .join(e2, ["w2"], "left")
-        .join(n2, ["w2"], "left")
-        .join(m3, ["w3"], "left")
+        types.join(lm.t3, ["w1", "w2", "w3"], "left")
+        .join(lm.b12, ["w1", "w2"], "left")
+        .join(lm.t23, ["w2", "w3"], "left")
+        .join(lm.e2, ["w2"], "left")
+        .join(lm.n2, ["w2"], "left")
+        .join(lm.m3, ["w3"], "left")
         .crossJoin(F.broadcast(tt))
     )
-    # The ln terms, as direct expressions over the flat row.  The old
-    # branch tables' attachment NULLs map 1:1 onto cheap raw-column
-    # null tests: ln_num1a existed iff the trigram was in t3 (c), the
-    # d12 terms iff the prefix was in b12 (bb), ln_2a iff (w2,w3) was
-    # in t23 (n23), the w2t terms iff w2 was in e2/n2 (ee ≡ nn2 key
-    # sets — both aggregate t3's w2), ln_m iff w3 was in m3 (mm); the
-    # remaining stat inputs of each term are total on its gate column
-    # because every stat table aggregates t3 itself.  Gating the
-    # CASE WHEN chain on those raw columns means each type row
-    # lazily evaluates ONLY the ln series of the branch it takes —
-    # strictly fewer series than the old shape's 9-per-matched-row
-    # branch projections.
-    ln_num1a = ln_exact_dec(
-        checked_dec38(
-            (_dec38(F.col("c")) * 4 - 3)
-            * 4
-            * _dec38(F.col("ee"))
-            * _dec38(F.col("T"))
-            + _dec38(F.col("n1"))
-            * 3
-            * (
-                (_dec38(F.col("n23")) * 4 - 3) * _dec38(F.col("T"))
-                + _dec38(F.col("nn2")) * 3 * _dec38(F.col("mm"))
-            ),
-            "numerator (4c-3)*4*E*T + 3*N1*((4n-3)*T + 3*N2*M)",
-        )
-    )
-    ln_den3 = ln_exact_dec(
-        checked_dec38(
-            _dec38(F.col("bb")) * 16 * _dec38(F.col("ee"))
-            * _dec38(F.col("T")),
-            "denominator 16*B*E*T",
-        )
-    )
-    ln_4b = ln_exact_dec(checked_dec38(_dec38(F.col("bb")) * 4, "4*B"))
-    ln_3n1 = ln_exact_dec(checked_dec38(_dec38(F.col("n1")) * 3, "3*N1"))
-    ln_2a = ln_exact_dec(
-        checked_dec38(
-            (_dec38(F.col("n23")) * 4 - 3) * _dec38(F.col("T"))
-            + _dec38(F.col("nn2")) * 3 * _dec38(F.col("mm")),
-            "p2 numerator (4n-3)*T + 3*N2*M",
-        )
-    )
-    ln_d2 = ln_exact_dec(
-        checked_dec38(_dec38(F.col("ee")) * 4 * _dec38(F.col("T")), "4*E*T")
-    )
-    ln_3n2 = ln_exact_dec(checked_dec38(_dec38(F.col("nn2")) * 3, "3*N2"))
-    ln_m = ln_exact_dec(_dec38(F.col("mm")))
-    ln_t = ln_exact_dec(_dec38(F.col("T")))
-    lnm_fl = F.when(F.col("mm").isNotNull(), ln_m).otherwise(
-        F.lit(0.0)
-    )  # max(M,1): ln 1 = 0
-    seen_c = F.col("c").isNotNull()
+    # Each branch's stat inputs are total on its gate column (every
+    # stat table aggregates t3 itself: a trigram in t3 always has its
+    # prefix in b12, its (w2,w3) in t23, its w2 in e2/n2, its w3 in
+    # m3), and the CASE WHEN chain evaluates only the ln series of the
+    # branch a type row takes.
+    ln_4b = _ln_dec(_dec38("bb") * 4, "4*B")
+    ln_3n1 = _ln_dec(_dec38("n1") * 3, "3*N1")
+    ln_2a = _ln_dec(lm.p2_num, "p2 numerator (4n-3)*T + 3*N2*M")
+    ln_d2 = _ln_dec(_dec38("ee") * 4 * _dec38("T"), "4*E*T")
+    ln_3n2 = _ln_dec(_dec38("nn2") * 3, "3*N2")
+    # max(M,1): ln 1 = 0
+    lnm_fl = F.when(
+        F.col("mm").isNotNull(), ln_exact_dec(_dec38("mm"))
+    ).otherwise(F.lit(0.0))
     seen_b = F.col("bb").isNotNull()
     seen_n23 = F.col("n23").isNotNull()
-    seen_e = F.col("ee").isNotNull()
     nll = (
-        F.when(seen_c, ln_den3 - ln_num1a)
-        .when(
-            seen_b & seen_n23,
-            (ln_4b + ln_d2) - (ln_3n1 + ln_2a),
-        )
-        .when(
-            seen_b,
-            (ln_4b + ln_d2) - (ln_3n1 + ln_3n2 + lnm_fl),
-        )
+        F.when(F.col("c").isNotNull(), lm.ln_den - lm.ln_num)
+        .when(seen_b & seen_n23, (ln_4b + ln_d2) - (ln_3n1 + ln_2a))
+        .when(seen_b, (ln_4b + ln_d2) - (ln_3n1 + ln_3n2 + lnm_fl))
         .when(seen_n23, ln_d2 - ln_2a)
-        .when(seen_e, ln_d2 - (ln_3n2 + lnm_fl))
-        .otherwise(ln_t - lnm_fl)
+        .when(F.col("ee").isNotNull(), ln_d2 - (ln_3n2 + lnm_fl))
+        .otherwise(ln_exact_dec(_dec38("T")) - lnm_fl)
     )
-    scored_types = stats.select("w1", "w2", "w3", nll.alias("__nll"))
-    entry = F.when(
-        F.col("pos").isNotNull(),
-        F.struct(F.col("pos"), F.col("__nll").alias("nll")),
+    scored = inst_s.join(
+        stats.select("w1", "w2", "w3", nll.alias("__nll")),
+        ["w1", "w2", "w3"],
+        "left",
     )
-    per_doc = (
-        inst_s.join(scored_types, ["w1", "w2", "w3"], "left")
-        .groupBy(id_col)
-        .agg(
-            F.count("pos").cast("long").alias("n_trigrams"),
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(entry)), lambda s: s.nll
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ).alias("__s"),
-        )
-    )
-    return per_doc.select(
-        F.col(id_col),
-        F.col("n_trigrams"),
-        F.when(
-            F.col("n_trigrams") > 0,
-            F.col("__s") / F.col("n_trigrams").cast("double"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("xent_nats"),
-    )
+    return _per_doc_xent(scored, id_col, F.col("__nll"), "n_trigrams")

@@ -598,17 +598,11 @@ def ngram_counts_stream(
     (the ``countmin_stream`` discipline).  Feed the merged counts to
     the KN estimators' count tables to refresh a quality-filter LM as
     the crawl lands — O(new data) per run under ``availableNow`` with
-    a persistent checkpoint."""
-    from dataclass_array_spark.operators.text import (
-        _bigram_instances,
-        _trigram_instances,
-    )
+    a persistent checkpoint.  Counts are per corpus, so ``id_col`` does
+    not enter them."""
+    from dataclass_array_spark.operators.text import _ngram_counts, _ngram_keys
 
-    if n == 2:
-        inst_fn, keys = _bigram_instances, ["w1", "w2"]
-    elif n == 3:
-        inst_fn, keys = _trigram_instances, ["w1", "w2", "w3"]
-    else:
+    if n not in (2, 3):
         raise ValueError(f"ngram_counts_stream: n must be 2 or 3, got {n}")
     # Stale-output guard: batch ids restart at 0 under a FRESH
     # checkpoint, so leftover batch=1..N partitions from a prior run
@@ -672,13 +666,7 @@ def ngram_counts_stream(
             )
 
     def _process(batch_df: DataFrame, _batch_id: int) -> None:
-        inst = inst_fn(batch_df, text_col, id_col)
-        counts = (
-            inst.filter(F.col("pos").isNotNull())
-            .groupBy(*keys)
-            .agg(F.count("*").cast("long").alias("c"))
-        )
-        counts.write.mode("overwrite").parquet(
+        _ngram_counts(batch_df, text_col, n).write.mode("overwrite").parquet(
             f"{output_dir}/batch={_batch_id}"
         )
 
@@ -691,7 +679,7 @@ def ngram_counts_stream(
     q.awaitTermination()
     return (
         docs.sparkSession.read.parquet(output_dir)
-        .groupBy(*keys)
+        .groupBy(*_ngram_keys(n))
         .agg(F.sum("c").cast("long").alias("c"))
     )
 

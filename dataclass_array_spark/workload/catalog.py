@@ -22,78 +22,31 @@ class Query:
 
 # The driver's per-round correctness gate checks roughly the first 50
 # registry entries, so the window is ROTATED each round to keep every
-# query under recurring driver verification.  Round 17 ordering: the
-# gates whose code changed since the driver last verified them come
-# first — the layout and url gates (their modules lost gate-less
-# code), token_entropy_docs (NULL-id fix), the 17 kernel gates whose
-# numpy kernels moved onto the Arrow kernel boundary, VERDICT r16
-# item 2's driver-fold/sketch list, the five BPE gates, the seven
-# shape_* gates and the cumsum consumers — exactly 50.  Just past the
-# window: the one overflow gate, then the rest by staleness (r12
-# cohort, r13/r14 blocks, r15-verified block), with the r16 window —
-# the freshest — last.  Python dicts preserve insertion order, so
-# this ordering is exactly what ``queries()`` exposes to the driver.
+# query under recurring verification.  Round 18 ordering: the
+# gates whose code changed since they were last verified come
+# first — the 12 n-gram LM gates, whose seven scorers now share one
+# instance builder, count builder and per-doc fold — then the r17
+# overflow gate (pack_context_windows), the r12 cohort's last nine
+# and the r13/r14 blocks up to exactly 50.  Past the window, the rest
+# by staleness (r13/r14 tail, r15-verified block, r16 window), with
+# the r17 window — the freshest — last.  Python dicts preserve
+# insertion order, so this ordering is exactly what ``queries()``
+# exposes.
 _PRIORITY: Tuple[str, ...] = (
-    # ---- three layout gates + two url gates (modules edited) ----
-    "hilbert_orders_layout",
-    "zorder_orders_layout",
-    "hilbert3d_orders_layout",
-    "url_dedup_docs",
-    "url_domain_stats_docs",
-    # ---- token_entropy_docs (NULL-id grouping fix) ----
-    "token_entropy_docs",
-    # ---- 17 kernel gates on the Arrow kernel boundary ----
-    "embedding_kmeans_clusters",
-    "embedding_kmeans_two_level",
-    "semantic_dedup_auto",
-    "semantic_dedup_embeddings",
-    "semantic_dedup_two_level",
-    "text_cluster_topics",
-    "embedding_ann_ivf",
-    "embedding_ann_ivf_kmeans",
-    "ann_recall_ivf_docs",
-    "embedding_knn_join",
-    "embedding_knn_join_kmeans",
-    "dedup_embedding_neardup",
-    "embedding_ann_pq",
-    "embedding_ann_ivf_pq",
-    "pack_ffd_docs",
-    "multimodal_decode",
-    "multimodal_frames",
-    # ---- VERDICT r16 item 2: driver-fold and sketch gates ----
-    "bloom_filter_orders",
-    "streaming_bloom_orders",
-    "qdigest_quantiles_prices",
-    "streaming_qdigest_prices",
-    "hist_quantiles_prices",
-    "streaming_hist_prices",
-    "pagerank_event_hotspots",
-    "grouped_rank_prices",
+    # ---- the 12 n-gram LM gates (one instance/count/fold pipeline) ----
+    "lm_quality_docs",
     "bigram_lm_docs",
     "bigram_lm_heldout_docs",
+    "kneser_ney_lm_docs",
+    "kneser_ney_heldout_docs",
+    "ccnet_buckets_docs",
+    "kn_perplexity_docs",
+    "kneser_ney3_lm_docs",
+    "kneser_ney3_heldout_docs",
     "streaming_kn_score_docs",
-    # ---- five BPE gates (driver-path nullability) ----
-    "bpe_train_docs",
-    "bpe_train_batched_docs",
-    "bpe_encode_docs",
-    "bpe_heldout_encode_docs",
-    "bpe_fertility_langs",
-    # ---- seven shape_* gates (the Arrow DcaTable boundary) ----
-    "shape_vectorize",
-    "shape_vectorize_mat",
-    "shape_mask_filter",
-    "shape_gather",
-    "shape_transpose",
-    "shape_slice",
-    "shape_concat_mapfield",
-    # ---- cumsum consumers: grouped_cumsum (auc by source), then the
-    #      global_cumsum twin's auc/ks/pr gates ----
-    "classifier_auc_by_source_docs",
-    "classifier_ks_docs",
-    "classifier_auc_docs",
-    "classifier_pr_docs",
-    # ==== window boundary (50) ====
-    # ---- overflow of the cumsum consumers (packing.pack_sequences) ----
+    "streaming_trigram_counts_docs",
+    "pmi_collocations_docs",
+    # ---- pack_context_windows (r17 overflow) ----
     "pack_context_windows",
     # ---- last 9 r12-cohort entries (stalest) ----
     "q10_returned_items",
@@ -107,7 +60,6 @@ _PRIORITY: Tuple[str, ...] = (
     "q7_nation_volume",
     # ---- r13/r14-verified blocks, minus gates moved above, original order ----
     "skew_zipf_salted_agg",
-    "kneser_ney_lm_docs",
     "ewma_user_values",
     "repetition_filter_docs",
     "asof_purchase_last_click",
@@ -135,6 +87,8 @@ _PRIORITY: Tuple[str, ...] = (
     "profile_lineitem",
     "q1_pricing_summary",
     "q3_shipping_priority",
+    # ==== window boundary (50) ====
+    # ---- rest of the r13/r14-verified blocks ----
     "q5_local_supplier_volume",
     "q6_forecast_revenue",
     "q8_market_share",
@@ -145,7 +99,6 @@ _PRIORITY: Tuple[str, ...] = (
     "blocklist_filter_docs",
     "domain_cap_docs",
     "classifier_sigmoid_docs",
-    "streaming_trigram_counts_docs",
     "temperature_mixture_alpha_docs",
     "rollup_flag_status",
     "salted_revenue_by_flag",
@@ -208,13 +161,7 @@ _PRIORITY: Tuple[str, ...] = (
     "embedding_ann_sq8",
     "hll_overlap_users",
     "gap_fill_events",
-    # ---- r16 window, minus gates moved above (freshest: verified in r16) ----
-    "kneser_ney3_lm_docs",
-    "kneser_ney3_heldout_docs",
-    "kneser_ney_heldout_docs",
-    "kn_perplexity_docs",
-    "pmi_collocations_docs",
-    "ccnet_buckets_docs",
+    # ---- r16 window, minus gates moved above ----
     "dsir_weights_docs",
     "dedup_components",
     "dedup_incremental_docs",
@@ -236,13 +183,60 @@ _PRIORITY: Tuple[str, ...] = (
     "pipeline_pretrain_corpus",
     "tokenize_docs",
     "token_rarity_docs",
-    "lm_quality_docs",
     "median_quantity_by_flag",
     "approx_sketches",
     "q2_min_cost_supplier",
     "q11_important_parts",
     "q16_supplier_counts",
     "q20_promotion_suppliers",
+    # ---- r17 window, minus gates moved above (freshest: verified in r17) ----
+    "hilbert_orders_layout",
+    "zorder_orders_layout",
+    "hilbert3d_orders_layout",
+    "url_dedup_docs",
+    "url_domain_stats_docs",
+    "token_entropy_docs",
+    "embedding_kmeans_clusters",
+    "embedding_kmeans_two_level",
+    "semantic_dedup_auto",
+    "semantic_dedup_embeddings",
+    "semantic_dedup_two_level",
+    "text_cluster_topics",
+    "embedding_ann_ivf",
+    "embedding_ann_ivf_kmeans",
+    "ann_recall_ivf_docs",
+    "embedding_knn_join",
+    "embedding_knn_join_kmeans",
+    "dedup_embedding_neardup",
+    "embedding_ann_pq",
+    "embedding_ann_ivf_pq",
+    "pack_ffd_docs",
+    "multimodal_decode",
+    "multimodal_frames",
+    "bloom_filter_orders",
+    "streaming_bloom_orders",
+    "qdigest_quantiles_prices",
+    "streaming_qdigest_prices",
+    "hist_quantiles_prices",
+    "streaming_hist_prices",
+    "pagerank_event_hotspots",
+    "grouped_rank_prices",
+    "bpe_train_docs",
+    "bpe_train_batched_docs",
+    "bpe_encode_docs",
+    "bpe_heldout_encode_docs",
+    "bpe_fertility_langs",
+    "shape_vectorize",
+    "shape_vectorize_mat",
+    "shape_mask_filter",
+    "shape_gather",
+    "shape_transpose",
+    "shape_slice",
+    "shape_concat_mapfield",
+    "classifier_auc_by_source_docs",
+    "classifier_ks_docs",
+    "classifier_auc_docs",
+    "classifier_pr_docs",
 )
 
 

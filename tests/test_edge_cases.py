@@ -137,15 +137,17 @@ def test_round11_ops_degenerate_inputs(spark):
         hll_distinct,
     )
     from dataclass_array_spark.operators.text import (
-        bigram_xent_scores,
         bigram_xent_scores_heldout,
         token_entropy_scores,
     )
+    from tests.test_operators import LM_SCORERS, lm_score
 
     empty_docs = spark.createDataFrame([], "doc_id long, text string")
     one_empty = spark.createDataFrame([(1, "")], "doc_id long, text string")
-    assert bigram_xent_scores(empty_docs, "text", "doc_id").count() == 0
-    assert bigram_xent_scores(one_empty, "text", "doc_id").collect()[0][1:] == (0, 0.0)
+    train = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    for name in LM_SCORERS:
+        assert lm_score(name, train, empty_docs).count() == 0, name
+        assert lm_score(name, train, one_empty).collect()[0][1:] == (0, 0.0), name
     assert token_entropy_scores(one_empty, "text", "doc_id").collect()[0][1:] == (0, 0.0)
 
     ek = spark.createDataFrame([], "key string")

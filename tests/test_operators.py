@@ -1845,21 +1845,50 @@ def test_token_entropy_hand_example(spark):
     assert got[4] == (0, 0.0)
 
 
-def test_token_entropy_null_ids_keep_one_row_each(spark):
-    """NULL-id docs are not merged into one group: each keeps its own
-    row and token count, next to the non-NULL ids."""
-    from dataclass_array_spark.operators.text import token_entropy_scores
+LM_SCORERS = {  # the seven n-gram LM scorers -> their n-gram order
+    "unigram_xent_scores": 1,
+    "bigram_xent_scores": 2,
+    "bigram_xent_scores_heldout": 2,
+    "kneser_ney_xent_scores": 2,
+    "kneser_ney_xent_scores_heldout": 2,
+    "kneser_ney3_xent_scores": 3,
+    "kn3_score_from_counts": 3,
+}
 
-    df = spark.createDataFrame(
-        [(None, "a a"), (None, "b c d"), (7, "x y")],
-        "doc_id long, text string",
+
+def lm_score(name, train, score):
+    """Run LM scorer ``name`` on ``score``: self-scoring forms ignore
+    ``train``, held-out forms train on it, and ``kn3_score_from_counts``
+    takes its trigram count table."""
+    from dataclass_array_spark.operators import text as tx
+
+    fn = getattr(tx, name)
+    if name == "kn3_score_from_counts":
+        return fn(tx._ngram_counts(train, "text", 3), score, "text", "doc_id")
+    if name.endswith("_heldout"):
+        return fn(train, score, "text", "doc_id")
+    return fn(score, "text", "doc_id")
+
+
+@pytest.mark.parametrize(
+    "scorer", ["token_entropy_scores", *LM_SCORERS]
+)
+def test_token_entropy_null_ids_keep_one_row_each(spark, scorer):
+    """NULL-id docs are not merged into one group: each keeps its own
+    row and n-gram count, next to the non-NULL ids — in the token
+    entropy and in every LM scorer (held-out forms with train = score)."""
+    data = [(None, "a a"), (None, "b c d"), (7, "x y")]
+    df = spark.createDataFrame(data, "doc_id long, text string")
+    order = LM_SCORERS.get(scorer, 1)
+    if scorer == "token_entropy_scores":
+        from dataclass_array_spark.operators.text import token_entropy_scores
+
+        out = token_entropy_scores(df, "text", "doc_id")
+    else:
+        out = lm_score(scorer, df, df)
+    assert sorted((r[0] is None, r[1]) for r in out.collect()) == sorted(
+        (i is None, max(len(t.split()) - order + 1, 0)) for i, t in data
     )
-    rows = token_entropy_scores(df, "text", "doc_id").collect()
-    assert sorted((r["doc_id"] is None, r["n_tokens"]) for r in rows) == [
-        (False, 2),
-        (True, 2),
-        (True, 3),
-    ]
 
 
 def test_bloom_no_false_negatives_and_union_merge(spark, sf_dir):

@@ -434,7 +434,7 @@ def test_ngram_counts_stream_equals_batch_and_replay_idempotent(
     micro-batches; (b) a crash-replayed micro-batch (re-overwriting its
     batch=<id> partition) must not double-count (the countmin_stream
     replay discipline)."""
-    from dataclass_array_spark.operators.text import _trigram_instances
+    from dataclass_array_spark.operators.text import _ngram_instances
     from dataclass_array_spark.streaming import ngram_counts_stream
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -453,7 +453,7 @@ def test_ngram_counts_stream_equals_batch_and_replay_idempotent(
         output_dir=str(out), checkpoint_dir=str(tmp_path / "ckpt"), n=3,
     )
     want = (
-        _trigram_instances(d, "text", "doc_id")
+        _ngram_instances(d, "text", "doc_id", 3)
         .filter(F.col("pos").isNotNull())
         .groupBy("w1", "w2", "w3")
         .agg(F.count("*").cast("long").alias("c"))

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Capture .explain("formatted") for named queries into plans/<round>/
-and print one line per query: plan size, Exchange count, and the plan
-properties that matter at scale (parquet filter pushdown, broadcast
-joins, WindowGroupLimit, AQE).
+and print one line per query: plan size, Exchange count, the count of
+each join strategy (so a before/after pair compares join shapes from
+the summary alone), and the plan properties that matter at scale
+(parquet filter pushdown, broadcast joins, WindowGroupLimit, AQE).
 
 Usage: python tools/capture_plans.py <round> before|after q1 q2 ...
   e.g. python tools/capture_plans.py r17 before q1 q18
@@ -29,6 +30,16 @@ CHECKS = {
     "window_group_limit": "WindowGroupLimit",
     "aqe": "AdaptiveSparkPlan",
 }
+
+
+JOINS = ("SortMergeJoin", "BroadcastHashJoin", "BroadcastNestedLoopJoin")
+
+
+def node_count(p: str, node: str) -> int:
+    """Physical-plan nodes named ``node`` in formatted plan text ``p``
+    (one per numbered operator line, so a repeated name in a node's
+    details is not counted twice)."""
+    return len(re.findall(rf"^\(\d+\) {node}\b", p, re.M))
 
 
 def properties(p: str) -> "list[str]":
@@ -59,10 +70,10 @@ def main() -> None:
             p = f"ERROR: {type(e).__name__}: {e}"
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(p)
-        n_ex = len(re.findall(r"^\(\d+\) Exchange", p, re.M))
+        joins = "".join(f"{j} x{node_count(p, j)}, " for j in JOINS)
         print(
-            f"{name}: {len(p)} bytes, Exchange x{n_ex}, "
-            f"{', '.join(properties(p))}",
+            f"{name}: {len(p)} bytes, Exchange x{node_count(p, 'Exchange')}, "
+            f"{joins}{', '.join(properties(p))}",
             flush=True,
         )
 
