@@ -7,18 +7,23 @@ Reference semantics re-expressed on a DataFrame (design per SURVEY.md §1.4):
   batch shape) plus one column per array field; the logical batch shape is
   wrapper metadata.  (reference: per-field ndarrays sharing a batch shape,
   `array_dataclass.py:164-214`)
-- ``reshape``/``flatten`` are metadata-only (``__rowid`` invariant) — the
-  Spark analog of numpy's O(1) view reshape.  Einops-style transposes and
-  basic indexing are pure ``__rowid`` arithmetic in a ``select`` — no
-  shuffle.  (reference `array_dataclass.py:333-390`)
+- An instance is a strided view over that frame, its *base*: numpy's
+  ``(offset, shape, strides)`` in rowid units.  Basic indexing, tuple
+  reshape of a C-contiguous view, einops split/permute/merge and
+  ``broadcast_to`` only compute a new view — integer arithmetic, no
+  DataFrame call (reference `array_dataclass.py:333-390`).  The view's
+  own frame is built once, by ``_materialize``, when ``.df`` is first
+  read.
 - Static fields are wrapper metadata, untouched by every op (reference
   `array_dataclass.py:196-198`).
 - Nested DcaTable fields are struct columns, recursed into by field ops
   (reference ``_map_field`` dc recursion, `array_dataclass.py:740-770`).
 
-Scale notes: all shape ops are narrow (select/filter) except boolean-mask
-re-densification and gather, which are a range-repartition and an equi-join
-respectively — both AQE-managed, both the minimum the semantics admit.
+Scale notes: a view's frame is one filter and one projection of its base
+(no shuffle) unless it broadcasts, when it is ``range(size) ⋈ base``;
+boolean-mask re-densification and gather are a range-repartition and an
+equi-join respectively — all AQE-managed, all the minimum the semantics
+admit.
 Every driver↔Spark data move goes through one Arrow encoder and one
 decoder (bottom of this module).  Ingest — construction, ``replace`` with
 numpy values, and the mask/gather/rowid-offset index tables — builds a
@@ -113,6 +118,12 @@ def _strides(shape: Sequence[int]) -> List[int]:
     for i in range(len(shape) - 2, -1, -1):
         out[i] = out[i + 1] * shape[i + 1]
     return out
+
+
+def _view_strides(shape: Sequence[int], strides: Sequence[int]) -> Tuple[int, ...]:
+    """``strides`` with the size-1 dims' set to 0: their index is always 0,
+    so a zero stride on a dim > 1 is what marks a broadcast dim."""
+    return tuple(0 if d == 1 else int(s) for d, s in zip(shape, strides))
 
 
 def _size(shape: Sequence[int]) -> int:
@@ -383,9 +394,17 @@ class DcaTable(metaclass=_DcaMeta):
         cols.update(_arrow_columns(cls, arrays, batch_shape))
         self._bind(_local_frame(spark, cols, cls.spark_schema()), batch_shape, statics, spark)
 
-    def _bind(self, df: DataFrame, shape: Tuple[int, ...], statics: Dict[str, Any], spark: SparkSession):
-        self._df = df
+    def _bind(self, df: DataFrame, shape: Tuple[int, ...], statics: Dict[str, Any],
+              spark: SparkSession, view: Optional[Tuple[int, int, Tuple[int, ...]]] = None):
+        """``df`` is the base frame, dense C-order in ``__rowid``; ``view``
+        is ``(base_size, offset, strides)`` over it, the identity view if
+        omitted."""
+        self._base = df
         self._shape = tuple(shape)
+        self._base_size, self._offset, self._strides = view or (
+            _size(shape), 0, _view_strides(shape, _strides(shape))
+        )
+        self._frame = None
         self._statics = dict(statics)
         self._spark = spark
         for k, v in self._statics.items():
@@ -468,11 +487,69 @@ class DcaTable(metaclass=_DcaMeta):
                 )
         return val
 
-    # ---------------- introspection ----------------
+    # ---------------- the strided view and its one materializer ----------------
+
+    def _view(self, shape: Sequence[int], offset: int, strides: Sequence[int]) -> "DcaTable":
+        """A view over this object's base frame."""
+        out = type(self).__new__(type(self))
+        shape = tuple(shape)
+        view = (self._base_size, offset, _view_strides(shape, strides))
+        out._bind(self._base, shape, self._statics, self._spark, view)
+        return out
+
+    def _contiguous(self) -> bool:
+        return self.size == 0 or self._strides == _view_strides(self._shape, _strides(self._shape))
 
     @property
     def df(self) -> DataFrame:
-        return self._df
+        """The view's frame, dense C-order in ``__rowid``: built by
+        :meth:`_materialize` on first read, then cached on the object."""
+        if self._frame is None:
+            self._frame = self._materialize()
+        return self._frame
+
+    def _materialize(self) -> DataFrame:
+        """The one builder of a view's frame; the identity view is its base.
+        Without a broadcast dim every base row is at most one view row:
+        one filter keeps the rows whose ``__rowid - offset`` decomposes,
+        over the non-zero strides in descending order, into in-range
+        indices with no remainder (a view as large as its base holds every
+        row and needs none), and one projection writes the C-order rowid
+        of those indices.  A broadcast dim (stride 0) repeats base
+        rows, so the frame is ``range(size) ⋈ base`` on the source rowid
+        of :meth:`_source_rowid`."""
+        shape, base = self._shape, self._base
+        if self._contiguous() and self._offset == 0 and self.size == self._base_size:
+            return base
+        if any(s == 0 and d > 1 for d, s in zip(shape, self._strides)):
+            rng = self._spark.range(self.size).withColumnRenamed("id", "__new_rowid")
+            return (
+                rng.withColumn(ROWID, self._source_rowid(F.col("__new_rowid")))
+                .join(base, on=ROWID, how="inner")
+                .drop(ROWID)
+                .withColumnRenamed("__new_rowid", ROWID)
+            )
+        r = F.col(ROWID) - self._offset
+        keep, rid = F.lit(self.size > 0) & (r >= 0), F.lit(0)
+        for s, d, c in sorted(zip(self._strides, shape, _strides(shape)), reverse=True):
+            if s == 0:
+                break  # the rest are size-1 dims, whose index is 0
+            idx = _idiv(r, s)
+            keep, rid, r = keep & (idx < d), rid + idx * c, r % s
+        if self.size < self._base_size:  # else the view holds every base row
+            base = base.filter(keep & (r == 0))
+        return base.withColumn(ROWID, rid.cast("long"))
+
+    def _source_rowid(self, rid: Column) -> Column:
+        """The forward index map: the base rowid behind the view's C-order
+        rowid ``rid``, ``offset + Σ idx_k · stride_k``."""
+        src = F.lit(self._offset)
+        for d, s, c in zip(self._shape, self._strides, _strides(self._shape)):
+            if s:
+                src = src + (_idiv(rid, c) % d) * s
+        return src.cast("long")
+
+    # ---------------- introspection ----------------
 
     @property
     def spark(self) -> SparkSession:
@@ -507,14 +584,14 @@ class DcaTable(metaclass=_DcaMeta):
     def __repr__(self) -> str:
         return f"{type(self).__name__}(shape={self._shape}, fields={list(type(self)._array_fields())})"
 
-    # ---------------- shape ops (all shuffle-free) ----------------
+    # ---------------- shape ops: views over the base frame ----------------
 
     def reshape(self, shape: Union[Tuple[int, ...], str], **axes_length: int) -> "DcaTable":
-        """Tuple reshape is metadata-only (``__rowid`` is already the
-        C-order linear index — reference `array_dataclass.py:333-369`).
-        A string is einops-style ``'b h w -> b (h w)'`` (transpose +
-        regroup), compiled to pure ``__rowid`` arithmetic in one select
-        (reference `array_dataclass.py:351-362`)."""
+        """A view, as in numpy (reference `array_dataclass.py:333-369`): a
+        tuple reshape of a C-contiguous view only changes shape and
+        strides; any other tuple reshape materializes first, where numpy
+        copies.  A string is einops-style ``'b h w -> b (h w)'``, see
+        :meth:`_reshape_einops`."""
         if isinstance(shape, str):
             return self._reshape_einops(shape, axes_length)
         shape = tuple(shape)
@@ -529,12 +606,20 @@ class DcaTable(metaclass=_DcaMeta):
             shape = tuple(n // rest if d == -1 else d for d in shape)
         if _size(shape) != n:
             raise ShapeError(f"cannot reshape size {n} into {shape}")
-        return type(self)._wrap(self._df, shape, self._statics, self._spark)
+        if shape == self._shape:
+            return self._view(shape, self._offset, self._strides)
+        if self._contiguous():
+            return self._view(shape, self._offset, _strides(shape))
+        return type(self)._wrap(self.df, shape, self._statics, self._spark)
 
     def flatten(self) -> "DcaTable":
         return self.reshape((-1,))
 
     def _reshape_einops(self, pattern: str, axes_length: Dict[str, int]) -> "DcaTable":
+        """Einops ``'b (h w) -> (w b) h'`` (reference
+        `array_dataclass.py:351-362`): each lhs dim splits into its atoms
+        and the atoms permute into rhs order, both views; then a tuple
+        reshape merges the rhs groups."""
         lhs, rhs = [s.strip() for s in pattern.split("->")]
         lhs_groups = _parse_einops_side(lhs)
         rhs_groups = _parse_einops_side(rhs)
@@ -555,34 +640,20 @@ class DcaTable(metaclass=_DcaMeta):
                 dim_size[unknown[0]] = actual // known
             elif known != actual:
                 raise ShapeError(f"group {group} sizes {known} != dim {actual}")
-        atoms = [a for g in lhs_groups for a in g]
-        if sorted(atoms) != sorted([a for g in rhs_groups for a in g]):
-            raise ShapeError(f"einops sides use different axes: {pattern!r}")
-        atom_shape = [dim_size[a] for a in atoms]
-        atom_strides = _strides(atom_shape)
-        atom_pos = {a: i for i, a in enumerate(atoms)}
-        # new linear index = Σ idx[atom] * new_stride[atom] over rhs order
-        new_shape = tuple(_size([dim_size[a] for a in g]) for g in rhs_groups)
         rhs_atoms = [a for g in rhs_groups for a in g]
-        rhs_atom_shape = [dim_size[a] for a in rhs_atoms]
-        rhs_strides = _strides(rhs_atom_shape)
-        rid = F.col(ROWID)
-        new_rid: Optional[Column] = None
-        for a, stride in zip(rhs_atoms, rhs_strides):
-            i = atom_pos[a]
-            idx = _idiv(rid, atom_strides[i]) % atom_shape[i]
-            term = idx * stride
-            new_rid = term if new_rid is None else (new_rid + term)
-        out = self._df.withColumn(ROWID, new_rid.cast("long"))
-        return type(self)._wrap(out, new_shape, self._statics, self._spark)
+        if sorted(a for g in lhs_groups for a in g) != sorted(rhs_atoms):
+            raise ShapeError(f"einops sides use different axes: {pattern!r}")
+        stride: Dict[str, int] = {}
+        for group, s in zip(lhs_groups, self._strides):
+            for a, c in zip(group, _strides([dim_size[a] for a in group])):
+                stride[a] = s * c
+        atoms = self._view([dim_size[a] for a in rhs_atoms], self._offset, [stride[a] for a in rhs_atoms])
+        return atoms.reshape(tuple(_size([dim_size[a] for a in g]) for g in rhs_groups))
 
     def broadcast_to(self, shape: Tuple[int, ...]) -> "DcaTable":
-        """Tile batch dims (reference `array_dataclass.py:375-380`).
-
-        Implemented as ``range(new_size) ⋈ df`` on the computed source
-        rowid — an equi-join Catalyst turns into a broadcast join whenever
-        either side is small; for pure prefix extension the join key is
-        ``new_rowid % old_size`` so AQE handles it even at scale."""
+        """Tile batch dims as a view (reference `array_dataclass.py:375-380`):
+        new leading dims and size-1 dims get stride 0, so the frame is the
+        ``range(new_size) ⋈ base`` join of :meth:`_materialize`."""
         shape = tuple(int(d) for d in shape)
         old = self._shape
         if len(shape) < len(old):
@@ -591,33 +662,14 @@ class DcaTable(metaclass=_DcaMeta):
         for i, d in enumerate(old):
             if d != shape[pad + i] and d != 1:
                 raise ShapeError(f"cannot broadcast {old} to {shape}")
-        new_size = _size(shape)
-        old_strides = _strides(old) if old else []
-        new_strides = _strides(shape)
-        rng = self._spark.range(new_size).withColumnRenamed("id", "__new_rowid")
-        rid = F.col("__new_rowid")
-        src: Optional[Column] = None
-        for i, d in enumerate(old):
-            new_idx = _idiv(rid, new_strides[pad + i]) % shape[pad + i]
-            old_idx = new_idx if d != 1 else F.lit(0)
-            term = old_idx * old_strides[i]
-            src = term if src is None else (src + term)
-        if src is None:
-            src = F.lit(0)
-        rng = rng.withColumn(ROWID, src.cast("long"))
-        out = (
-            rng.join(self._df, on=ROWID, how="inner")
-            .drop(ROWID)
-            .withColumnRenamed("__new_rowid", ROWID)
-        )
-        return type(self)._wrap(out, shape, self._statics, self._spark)
+        return self._view(shape, self._offset, (0,) * pad + self._strides)
 
     def __getitem__(self, indices) -> "DcaTable":
         """Numpy basic indexing on batch dims (int/slice/Ellipsis/None
-        tuples — reference `array_dataclass.py:382-390`, `:1017-1035`)
-        compiled to filter + rowid-arithmetic select (no shuffle), plus
-        boolean-mask (→ filter + dense reindex) and integer-array gather
-        (→ equi-join) — reference README "Numpy slicing/indexing/masking"."""
+        tuples — reference `array_dataclass.py:382-390`, `:1017-1035`) is
+        a view: a new offset, shape and strides.  Boolean masks (→ filter
+        + dense reindex) and integer-array gathers (→ equi-join) build a
+        new frame — reference README "Numpy slicing/indexing/masking"."""
         if isinstance(indices, (np.ndarray, list)) and np.asarray(indices).dtype == bool:
             return self._mask(np.asarray(indices))
         if isinstance(indices, Column):
@@ -642,55 +694,30 @@ class DcaTable(metaclass=_DcaMeta):
         else:
             indices = indices + (slice(None),) * (self.ndim - n_real)
 
-        old_shape = self._shape
-        old_strides = _strides(old_shape)
-        rid = F.col(ROWID)
-        filters: List[Column] = []
-        out_dims: List[int] = []
-        out_idx_exprs: List[Column] = []
+        offset, shape, strides = self._offset, [], []
         dim_i = 0
         for ix in indices:
             if ix is None:
-                out_dims.append(1)
-                out_idx_exprs.append(F.lit(0))
+                shape.append(1)
+                strides.append(0)
                 continue
-            d = old_shape[dim_i]
-            idx_expr = _idiv(rid, old_strides[dim_i]) % d
+            d, s = self._shape[dim_i], self._strides[dim_i]
             if isinstance(ix, (int, np.integer)):
-                i = int(ix)
-                if i < 0:
-                    i += d
+                i = int(ix) + (d if ix < 0 else 0)
                 if not (0 <= i < d):
                     raise IndexError(f"index {ix} out of bounds for axis {dim_i} with size {d}")
-                filters.append(idx_expr == i)
-                # dim removed
+                offset += i * s  # dim removed
             elif isinstance(ix, slice):
                 start, stop, step = ix.indices(d)
                 if step <= 0:
                     raise IndexError("negative slice steps not supported")
-                length = max(0, (stop - start + step - 1) // step)
-                if start != 0 or stop != d or step != 1:
-                    filters.append((idx_expr >= start) & (idx_expr < stop))
-                    if step != 1:
-                        filters.append(((idx_expr - start) % step) == 0)
-                out_dims.append(length)
-                out_idx_exprs.append(_idiv(idx_expr - start, step))
+                shape.append(max(0, (stop - start + step - 1) // step))
+                strides.append(s * step)
+                offset += start * s
             else:
                 raise IndexError(f"unsupported index {ix!r}")
             dim_i += 1
-        new_shape = tuple(out_dims)
-        new_strides = _strides(new_shape)
-        new_rid: Optional[Column] = None
-        for e, s in zip(out_idx_exprs, new_strides):
-            term = e * s
-            new_rid = term if new_rid is None else (new_rid + term)
-        if new_rid is None:
-            new_rid = F.lit(0)
-        df = self._df
-        for f_ in filters:
-            df = df.filter(f_)
-        df = df.withColumn(ROWID, new_rid.cast("long"))
-        return type(self)._wrap(df, new_shape, self._statics, self._spark)
+        return self._view(shape, offset, strides)
 
     def _mask(self, mask: np.ndarray) -> "DcaTable":
         """numpy boolean-mask semantics: the mask matches the LEADING
@@ -708,7 +735,7 @@ class DcaTable(metaclass=_DcaMeta):
         """Filter by a Column predicate — the distributed mask path.
         Result is flattened to 1-D with re-densified rowids (two-pass
         partition-offset numbering; see ``attach_dense_rowid``)."""
-        out = attach_dense_rowid(self._df.filter(pred).drop(ROWID))
+        out = attach_dense_rowid(self.df.filter(pred).drop(ROWID))
         n = out.count()
         return type(self)._wrap(out, (n,), self._statics, self._spark)
 
@@ -737,7 +764,7 @@ class DcaTable(metaclass=_DcaMeta):
         )
         rid = F.col(ROWID)
         out = (
-            self._df.withColumn("__old", _idiv(rid, rest_sz))
+            self.df.withColumn("__old", _idiv(rid, rest_sz))
             .join(F.broadcast(idx_df), on="__old", how="inner")
             .withColumn(ROWID, (F.col("__new") * rest_sz + rid % rest_sz).cast("long"))
             .drop("__old", "__new")
@@ -754,14 +781,14 @@ class DcaTable(metaclass=_DcaMeta):
         if isinstance(other, DcaTable):
             assert_same_session(self, other)
             odf = odf.drop(ROWID)
-        return self._df.drop(ROWID).join(odf, on=on, how=how)
+        return self.df.drop(ROWID).join(odf, on=on, how=how)
 
     def groupBy(self, *cols):
-        return self._df.drop(ROWID).groupBy(*cols)
+        return self.df.drop(ROWID).groupBy(*cols)
 
     def sql(self, query: str, view: str = "self") -> DataFrame:
         """Run SQL with this table registered as ``view``."""
-        self._df.createOrReplaceTempView(view)
+        self.df.createOrReplaceTempView(view)
         return self._spark.sql(query)
 
     def filter(self, pred: Column) -> "DcaTable":
@@ -786,7 +813,7 @@ class DcaTable(metaclass=_DcaMeta):
             exprs.append(_map_field_expr(F.col(name), spec, lambda c, s: fn(c)).alias(name))
         if not type(self)._array_fields():
             exprs.append(F.col("__dummy"))
-        out = self._df.select(*exprs)
+        out = self.df.select(*exprs)
         return type(self)._wrap(out, self._shape, self._statics, self._spark)
 
     def map_leaves(self, fn: Callable[[Column], Column]) -> "DcaTable":
@@ -805,7 +832,7 @@ class DcaTable(metaclass=_DcaMeta):
         exprs = [F.col(ROWID)]
         for name, spec in type(self)._array_fields().items():
             exprs.append(_map_field_expr(F.col(name), spec, leafwise).alias(name))
-        out = self._df.select(*exprs)
+        out = self.df.select(*exprs)
         return type(self)._wrap(out, self._shape, self._statics, self._spark)
 
     def replace(self, **changes) -> "DcaTable":
@@ -832,7 +859,7 @@ class DcaTable(metaclass=_DcaMeta):
                     )
             else:
                 raise TypeError(f"unknown field {name!r}")
-        df = self._df
+        df = self.df
         if col_changes:
             df = df.withColumns(
                 {k: v.cast(specs[k].spark_type) if isinstance(specs[k], ArraySpec) else v
@@ -858,7 +885,7 @@ class DcaTable(metaclass=_DcaMeta):
     def to_pandas(self):
         """Rowid-ordered local export: one unsorted Arrow collect, put in
         rowid order on the driver (see :func:`_rowid_order`)."""
-        pdf = self._df.toPandas()
+        pdf = self.df.toPandas()
         order = _rowid_order(pdf[ROWID].to_numpy(), self.size)
         return pdf.iloc[order].set_index(ROWID, drop=True)
 
@@ -867,7 +894,7 @@ class DcaTable(metaclass=_DcaMeta):
         ``batch_shape + inner_shape`` (the reference's ``as_np`` exit,
         `array_dataclass.py:496-538`).  Nested fields come back as object
         arrays of row structs over ``batch_shape + extra_inner_shape``."""
-        tbl = self._df.toArrow()
+        tbl = self.df.toArrow()
         order = _rowid_order(tbl.column(ROWID).to_numpy(), self.size)
         return {
             name: _np_field(tbl.column(name), spec, order, self._shape)
@@ -884,7 +911,7 @@ class DcaTable(metaclass=_DcaMeta):
             "shape": list(self._shape),
             "statics": dict(self._statics),
         }
-        return self._df, meta
+        return self.df, meta
 
     @classmethod
     def tree_unflatten(cls, df: DataFrame, meta: Dict[str, Any]) -> "DcaTable":
@@ -904,7 +931,7 @@ class DcaTable(metaclass=_DcaMeta):
         where ``path`` is rarely driver-local."""
         import json
 
-        self._df.write.mode(mode).parquet(path)
+        self.df.write.mode(mode).parquet(path)
         _, meta = self.tree_flatten()
         _hadoop_write_text(
             self._spark, f"{path.rstrip('/')}/_dca_meta.json", json.dumps(meta)
@@ -921,13 +948,15 @@ class DcaTable(metaclass=_DcaMeta):
         return cls.tree_unflatten(df, meta)
 
     def cache(self) -> "DcaTable":
-        self._df = self._df.cache()
+        """Cache the view's frame and rebase on it: later views of this
+        object read the cached rows."""
+        self._bind(self.df.cache(), self._shape, self._statics, self._spark)
         return self
 
     def explain(self, mode: str = "formatted") -> None:
         """Show the physical plan — the first thing to check when an op
         chain might be shuffling more than it should (see PERF.md)."""
-        self._df.explain(mode)
+        self.df.explain(mode)
 
 
 def _hadoop_fs(spark: SparkSession, path_str: str):

@@ -580,7 +580,6 @@ def hist_stream(
 def ngram_counts_stream(
     docs: DataFrame,
     text_col: str,
-    id_col: str,
     output_dir: str,
     checkpoint_dir: str,
     n: int = 3,
@@ -598,8 +597,8 @@ def ngram_counts_stream(
     (the ``countmin_stream`` discipline).  Feed the merged counts to
     the KN estimators' count tables to refresh a quality-filter LM as
     the crawl lands — O(new data) per run under ``availableNow`` with
-    a persistent checkpoint.  Counts are per corpus, so ``id_col`` does
-    not enter them."""
+    a persistent checkpoint.  Counts are per corpus, so no document id
+    enters them."""
     from dataclass_array_spark.operators.text import _ngram_counts, _ngram_keys
 
     if n not in (2, 3):
@@ -710,7 +709,6 @@ def kn3_stream_score(
     counts = ngram_counts_stream(
         docs_stream,
         text_col,
-        id_col,
         output_dir=output_dir,
         checkpoint_dir=checkpoint_dir,
         n=3,

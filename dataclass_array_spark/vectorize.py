@@ -293,22 +293,13 @@ def vectorize_method(
                 ):
                     # per-dim broadcast (reference `_update_batch_shape`,
                     # vectorization.py:246-282): dims of size 1 repeat —
-                    # map self's rowid to the arg's rowid by zeroing the
-                    # broadcast dims, then equi-join on that key
-                    from dataclass_array_spark.core.table import _idiv, _strides
-
-                    s_str = _strides(self.shape)
-                    a_str = _strides(table.shape)
-                    rid = F.col(ROWID)
-                    expr = F.lit(0).cast("long")
-                    for i, (sd, ad) in enumerate(zip(self.shape, table.shape)):
-                        if ad > 1:
-                            idx = _idiv(rid, s_str[i]) % sd
-                            expr = expr + idx * a_str[i]
+                    # the broadcast view's forward map turns self's rowid
+                    # into the arg's base rowid, the equi-join key
+                    view = table.broadcast_to(self.shape)
                     keycol = f"{prefix}rid"
-                    adf = table.df.select(F.col(ROWID).alias(keycol), *renamed)
-                    work_df = work_df.withColumn(keycol, expr).join(
-                        F.broadcast(adf) if table.size < 1_000_000 else adf,
+                    adf = view._base.select(F.col(ROWID).alias(keycol), *renamed)
+                    work_df = work_df.withColumn(keycol, view._source_rowid(F.col(ROWID))).join(
+                        F.broadcast(adf) if view._base_size < 1_000_000 else adf,
                         on=keycol,
                     ).drop(keycol)
                 else:

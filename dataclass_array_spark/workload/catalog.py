@@ -22,73 +22,25 @@ class Query:
 
 # The driver's per-round correctness gate checks roughly the first 50
 # registry entries, so the window is ROTATED each round to keep every
-# query under recurring verification.  Round 18 ordering: the
+# query under recurring verification.  Round 19 ordering: the
 # gates whose code changed since they were last verified come
-# first — the 12 n-gram LM gates, whose seven scorers now share one
-# instance builder, count builder and per-doc fold — then the r17
-# overflow gate (pack_context_windows), the r12 cohort's last nine
-# and the r13/r14 blocks up to exactly 50.  Past the window, the rest
-# by staleness (r13/r14 tail, r15-verified block, r16 window), with
-# the r17 window — the freshest — last.  Python dicts preserve
-# insertion order, so this ordering is exactly what ``queries()``
-# exposes.
+# first — the 7 shape gates, whose slice, einops, reshape and
+# broadcast ops are now strided views over one base frame — then the
+# rest of the r13/r14 blocks (the stalest) and the head of the r15
+# block up to exactly 50.  Past the window, the rest by staleness
+# (r15 block, r16 window, r17 window), with the r18 window — the
+# freshest — last.  Python dicts preserve insertion order, so this
+# ordering is exactly what ``queries()`` exposes.
 _PRIORITY: Tuple[str, ...] = (
-    # ---- the 12 n-gram LM gates (one instance/count/fold pipeline) ----
-    "lm_quality_docs",
-    "bigram_lm_docs",
-    "bigram_lm_heldout_docs",
-    "kneser_ney_lm_docs",
-    "kneser_ney_heldout_docs",
-    "ccnet_buckets_docs",
-    "kn_perplexity_docs",
-    "kneser_ney3_lm_docs",
-    "kneser_ney3_heldout_docs",
-    "streaming_kn_score_docs",
-    "streaming_trigram_counts_docs",
-    "pmi_collocations_docs",
-    # ---- pack_context_windows (r17 overflow) ----
-    "pack_context_windows",
-    # ---- last 9 r12-cohort entries (stalest) ----
-    "q10_returned_items",
-    "q4_order_priority",
-    "q12_shipmode_priority",
-    "q14_promo_revenue",
-    "q18_large_orders",
-    "q17_below_avg_parts",
-    "q19_disjunctive_revenue",
-    "q22_in_subquery",
-    "q7_nation_volume",
-    # ---- r13/r14-verified blocks, minus gates moved above, original order ----
-    "skew_zipf_salted_agg",
-    "ewma_user_values",
-    "repetition_filter_docs",
-    "asof_purchase_last_click",
-    "budget_select_docs",
-    "cohort_retention_events",
-    "corr_price_quantity",
-    "cube_nation_segment",
-    "date_functions",
-    "dedup_apply_minhash",
-    "dedup_apply_simhash",
-    "dedup_exact_docs",
-    "dedup_minhash_lsh",
-    "dedup_minhash_lsh_auto",
-    "dedup_simhash_pairs",
-    "distinct_parts_per_supplier",
-    "dq_validate_orders",
-    "funnel_conversion_events",
-    "grouping_sets_revenue",
-    "join_variants_nulls",
-    "json_extract_props",
-    "merge_upsert_customers",
-    "ntile_price_quartiles",
-    "pii_scrub_docs",
-    "pivot_user_event_counts",
-    "profile_lineitem",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    # ==== window boundary (50) ====
-    # ---- rest of the r13/r14-verified blocks ----
+    # ---- the 7 shape gates (shape ops are strided views) ----
+    "shape_vectorize",
+    "shape_vectorize_mat",
+    "shape_mask_filter",
+    "shape_gather",
+    "shape_transpose",
+    "shape_slice",
+    "shape_concat_mapfield",
+    # ---- rest of the r13/r14-verified blocks (stalest) ----
     "q5_local_supplier_volume",
     "q6_forecast_revenue",
     "q8_market_share",
@@ -131,8 +83,10 @@ _PRIORITY: Tuple[str, ...] = (
     "fuzzy_join_part_names",
     "kcore_user_states",
     "lang_id_docs",
-    # ---- r15-verified block, minus gates moved above ----
+    # ---- r15-verified block, head ----
     "classifier_train_docs",
+    # ---- ==== window boundary (50) ====
+    # ---- rest of the r15-verified block ----
     "classifier_calibration_docs",
     "linkage_entity_clusters",
     "linkage_part_entities",
@@ -161,7 +115,7 @@ _PRIORITY: Tuple[str, ...] = (
     "embedding_ann_sq8",
     "hll_overlap_users",
     "gap_fill_events",
-    # ---- r16 window, minus gates moved above ----
+    # ---- r16 window ----
     "dsir_weights_docs",
     "dedup_components",
     "dedup_incremental_docs",
@@ -189,7 +143,7 @@ _PRIORITY: Tuple[str, ...] = (
     "q11_important_parts",
     "q16_supplier_counts",
     "q20_promotion_suppliers",
-    # ---- r17 window, minus gates moved above (freshest: verified in r17) ----
+    # ---- r17 window, minus the shape gates moved above ----
     "hilbert_orders_layout",
     "zorder_orders_layout",
     "hilbert3d_orders_layout",
@@ -226,17 +180,61 @@ _PRIORITY: Tuple[str, ...] = (
     "bpe_encode_docs",
     "bpe_heldout_encode_docs",
     "bpe_fertility_langs",
-    "shape_vectorize",
-    "shape_vectorize_mat",
-    "shape_mask_filter",
-    "shape_gather",
-    "shape_transpose",
-    "shape_slice",
-    "shape_concat_mapfield",
     "classifier_auc_by_source_docs",
     "classifier_ks_docs",
     "classifier_auc_docs",
     "classifier_pr_docs",
+    # ---- r18 window (freshest: verified in r18) ----
+    "lm_quality_docs",
+    "bigram_lm_docs",
+    "bigram_lm_heldout_docs",
+    "kneser_ney_lm_docs",
+    "kneser_ney_heldout_docs",
+    "ccnet_buckets_docs",
+    "kn_perplexity_docs",
+    "kneser_ney3_lm_docs",
+    "kneser_ney3_heldout_docs",
+    "streaming_kn_score_docs",
+    "streaming_trigram_counts_docs",
+    "pmi_collocations_docs",
+    "pack_context_windows",
+    "q10_returned_items",
+    "q4_order_priority",
+    "q12_shipmode_priority",
+    "q14_promo_revenue",
+    "q18_large_orders",
+    "q17_below_avg_parts",
+    "q19_disjunctive_revenue",
+    "q22_in_subquery",
+    "q7_nation_volume",
+    "skew_zipf_salted_agg",
+    "ewma_user_values",
+    "repetition_filter_docs",
+    "asof_purchase_last_click",
+    "budget_select_docs",
+    "cohort_retention_events",
+    "corr_price_quantity",
+    "cube_nation_segment",
+    "date_functions",
+    "dedup_apply_minhash",
+    "dedup_apply_simhash",
+    "dedup_exact_docs",
+    "dedup_minhash_lsh",
+    "dedup_minhash_lsh_auto",
+    "dedup_simhash_pairs",
+    "distinct_parts_per_supplier",
+    "dq_validate_orders",
+    "funnel_conversion_events",
+    "grouping_sets_revenue",
+    "join_variants_nulls",
+    "json_extract_props",
+    "merge_upsert_customers",
+    "ntile_price_quartiles",
+    "pii_scrub_docs",
+    "pivot_user_event_counts",
+    "profile_lineitem",
+    "q1_pricing_summary",
+    "q3_shipping_priority",
 )
 
 

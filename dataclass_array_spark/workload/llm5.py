@@ -501,7 +501,7 @@ def streaming_trigram_counts_docs(spark: SparkSession, sf_dir: str) -> DataFrame
     s = documents_stream(spark, f"{sf_dir}/documents.parquet")
     tmp = fresh_stream_tmpdir("ngram", sf_dir)
     merged = ngram_counts_stream(
-        s, "text", "doc_id",
+        s, "text",
         output_dir=f"{tmp}/out", checkpoint_dir=f"{tmp}/ckpt", n=3,
     )
     return merged.orderBy("w1", "w2", "w3")

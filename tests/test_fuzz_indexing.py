@@ -4,7 +4,7 @@ cases in tests/test_indexing.py (reference strategy:
 array_dataclass_test.py:459-494 ``test_normalize_indices``).
 
 Every generated index expression is evaluated BOTH ways: numpy on the
-backing ndarray and the Spark table's rowid-arithmetic compiler.  The
+backing ndarray and the Spark table's strided view of its base frame.  The
 result (shape, values) must match exactly — and when numpy raises
 IndexError, the table must raise IndexError too, so the error surface
 is fuzzed along with the happy path.
@@ -47,13 +47,11 @@ SHAPES = st.lists(st.integers(1, 4), min_size=1, max_size=3).map(tuple)
 
 
 @st.composite
-def shape_and_index(draw):
-    """A batch shape plus a basic-index tuple: ints (possibly out of
+def index_tuple(draw, ndim):
+    """A basic-index tuple for an ``ndim``-d batch: ints (possibly out of
     bounds), positive-step slices, Nones, and at most one Ellipsis —
-    numpy decides validity, so both the happy and IndexError paths
-    are exercised."""
-    shape = draw(SHAPES)
-    ndim = len(shape)
+    numpy decides validity, so both the happy and IndexError paths are
+    exercised."""
     n_real = draw(st.integers(0, min(ndim + 1, 3)))  # +1 → too-many-indices path
     atom = st.one_of(
         st.integers(-5, 5),
@@ -69,7 +67,14 @@ def shape_and_index(draw):
         parts.insert(draw(st.integers(0, len(parts))), None)
     if draw(st.booleans()):
         parts.insert(draw(st.integers(0, len(parts))), Ellipsis)
-    return shape, tuple(parts)
+    return tuple(parts)
+
+
+@st.composite
+def shape_and_index(draw):
+    """A batch shape plus a basic-index tuple for it."""
+    shape = draw(SHAPES)
+    return shape, draw(index_tuple(len(shape)))
 
 
 @settings(
@@ -203,3 +208,132 @@ def test_fuzz_tuple_reshape(spark, data):
     exp = v.reshape(tuple(dims))
     assert got.shape == exp.shape
     assert_np_equal(got, {"v": exp})
+
+
+# ---- op chains: views of views, against numpy ----
+
+MAX_SIZE = 96  # keeps every intermediate a small job
+
+
+def _factorization(data, n):
+    """A random tuple of dims with product ``n``, sometimes with a -1."""
+    if n == 0:
+        return (data.draw(st.integers(0, 3), label="lead"), 0)
+    dims, rem = [], n
+    while rem > 1 and len(dims) < 3:
+        d = data.draw(st.sampled_from([d for d in range(1, rem + 1) if rem % d == 0]), label="factor")
+        dims.append(d)
+        rem //= d
+    if rem > 1 or not dims:
+        dims.append(rem)
+    if data.draw(st.booleans(), label="wildcard?"):
+        dims[data.draw(st.integers(0, len(dims) - 1), label="wild_pos")] = -1
+    return tuple(dims)
+
+
+def _einops(data, shape):
+    """An einops pattern that splits at most one dim in two, permutes the
+    atoms and merges random runs of them, with its numpy oracle."""
+    names = [[c] for c in "abcdefghijklmnop"[: len(shape)]]
+    sizes = [[d] for d in shape]
+    lengths = {}
+    k = data.draw(st.integers(-1, len(shape) - 1), label="split_dim")
+    if k >= 0 and shape[k] > 0:
+        f = data.draw(st.sampled_from([f for f in range(1, shape[k] + 1) if shape[k] % f == 0]), label="f")
+        names[k], sizes[k] = [names[k][0], names[k][0] + "2"], [f, shape[k] // f]
+        lengths[names[k][0]] = f
+    atoms = [a for g in names for a in g]
+    atom_shape = [d for g in sizes for d in g]
+    perm = data.draw(st.permutations(list(range(len(atoms)))), label="perm")
+    cuts = sorted(c for c in data.draw(st.sets(st.integers(1, 3), max_size=3), label="cuts") if c < len(atoms))
+    groups = [perm[lo:hi] for lo, hi in zip([0] + cuts, cuts + [len(atoms)])]
+
+    def side(groups):
+        return " ".join(g[0] if len(g) == 1 else "(" + " ".join(g) + ")" for g in groups)
+
+    pattern = f"{side(names)} -> {side([[atoms[i] for i in g] for g in groups])}"
+    new_shape = tuple(int(np.prod([atom_shape[i] for i in g])) for g in groups)
+    return (
+        lambda t: t.reshape(pattern, **lengths),
+        lambda a: a.reshape(atom_shape).transpose(perm).reshape(new_shape),
+    )
+
+
+def _broadcast_target(data, shape):
+    """A target that numpy may or may not accept: new leading dims, size-1
+    dims grown, and now and then a dim > 1 changed."""
+    lead = tuple(data.draw(st.lists(st.integers(1, 3), max_size=1), label="lead"))
+    grow = lambda d: data.draw(st.integers(1, 3), label="grow") if d == 1 else d
+    out = lead + tuple(grow(d) for d in shape)
+    if shape and data.draw(st.integers(0, 5), label="bad?") == 0:
+        k = data.draw(st.integers(0, len(shape) - 1), label="bad_dim")
+        out = out[: len(lead) + k] + (out[len(lead) + k] + 1,) + out[len(lead) + k + 1 :]
+    return out
+
+
+def _chain_op(data, v):
+    """One random op as ``(table_fn, numpy_fn)``, or None if it does not
+    apply to an ``v.shape`` batch.  numpy's IndexError must come back as
+    IndexError, its ValueError as ShapeError."""
+    op = data.draw(
+        st.sampled_from(["index", "einops", "reshape", "broadcast", "stack", "concat"]), label="op"
+    )
+    if op == "index":
+        idx = data.draw(index_tuple(v.ndim), label="idx")
+        return lambda t: t[idx], lambda a: a[idx]
+    if op == "einops" and v.ndim:
+        return _einops(data, v.shape)
+    if op == "reshape":
+        dims = _factorization(data, v.size)
+        if data.draw(st.integers(0, 5), label="bad?") == 0:
+            dims = dims + (2,)  # numpy decides: a -1 may absorb it
+        return lambda t: t.reshape(dims), lambda a: a.reshape(dims)
+    if op == "broadcast":
+        target = _broadcast_target(data, v.shape)
+        return lambda t: t.broadcast_to(target), lambda a: np.broadcast_to(a, target)
+    if op == "stack" and v.ndim:
+        axis = data.draw(st.integers(1, v.ndim), label="axis")
+        return (
+            lambda t: das.stack([t, t.map_field(lambda c: c + 1000)], axis=axis),
+            lambda a: np.stack([a, a + 1000], axis=axis),
+        )
+    if op == "concat" and v.ndim >= 2:
+        axis = data.draw(st.integers(1, v.ndim - 1), label="axis")
+        head = (slice(None),) * axis + (slice(0, 1),)
+        return (
+            lambda t: das.concat([t, t[head].map_field(lambda c: c + 1000)], axis=axis),
+            lambda a: np.concatenate([a, a[head] + 1000], axis=axis),
+        )
+    return None
+
+
+@settings(max_examples=60, deadline=None, derandomize=True, suppress_health_check=[HealthCheck.too_slow])
+@given(st.data())
+def test_fuzz_view_chains(spark, data):
+    """Random 2-4 op chains — basic index, einops split/permute/merge,
+    tuple reshape (contiguous or not), broadcast_to, and stack/concat on
+    an axis > 0 — each step compared with numpy, so views of views and
+    both materializer forms are checked together."""
+    from dataclass_array_spark.core.schema import ShapeError
+
+    t, v = cached(data.draw(SHAPES, label="shape"), spark)
+    for _ in range(data.draw(st.integers(2, 4), label="n_ops")):
+        op = _chain_op(data, v)
+        if op is None:
+            continue
+        table_fn, np_fn = op
+        try:
+            exp = np.asarray(np_fn(v))
+        except IndexError:
+            with pytest.raises(IndexError):
+                table_fn(t)
+            return
+        except ValueError:
+            with pytest.raises(ShapeError):
+                table_fn(t)
+            return
+        if exp.size > MAX_SIZE:
+            continue
+        t, v = table_fn(t), exp
+        assert t.shape == v.shape
+        assert_np_equal(t, {"v": v})

@@ -903,3 +903,41 @@ def test_pack_ffd_single_exchange_per_bucket_fold(spark):
     # flag false) — never a global sort
     for args in re.findall(r"\(\d+\) Sort[^\n]*\nInput[^\n]*\nArguments: (.*)", p):
         assert ", false, " in args, args
+
+
+def _view_chain_plan(spark, tail):
+    """The formatted physical plan of ``tail`` applied to a 4x6 batch
+    whose base frame is a ``range`` source, and its node names."""
+    import re
+
+    import dataclass_array_spark as das
+    from dataclass_array_spark.core.schema import f32
+    from dataclass_array_spark.core.table import ROWID
+
+    class V(das.DcaTable):
+        v: f32
+
+    src = spark.range(24).select(F.col("id").alias(ROWID), F.col("id").cast("float").alias("v"))
+    t = V.from_df(src, shape=(4, 6), validate=False)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        tail(t).df.explain("formatted")
+    p = buf.getvalue()
+    return re.findall(r"^\(\d+\) (\w+)", p, re.M), p
+
+
+def test_view_chain_is_one_filter_and_one_project(spark):
+    """slice∘einops∘slice is one strided view: its frame is one Filter and
+    one Project over the source, with no join and no shuffle."""
+    nodes, p = _view_chain_plan(spark, lambda t: t[1:, ::2].reshape("a b -> b a")[1:])
+    assert nodes.count("Filter") == 1 and nodes.count("Project") == 1, p
+    assert not [n for n in nodes if "Join" in n or n == "Exchange"], p
+
+
+def test_view_chain_to_broadcast_is_one_join(spark):
+    """A chain that ends in broadcast_to joins ``range(size)`` to the
+    source once; the slices before it add no join of their own."""
+    nodes, p = _view_chain_plan(
+        spark, lambda t: t[1:, ::2].reshape("a b -> b a")[1:, :1].broadcast_to((2, 2, 3))
+    )
+    assert len([n for n in nodes if "Join" in n]) == 1, p

@@ -449,7 +449,7 @@ def test_ngram_counts_stream_equals_batch_and_replay_idempotent(
     )
     out = tmp_path / "out"
     got = ngram_counts_stream(
-        s, "text", "doc_id",
+        s, "text",
         output_dir=str(out), checkpoint_dir=str(tmp_path / "ckpt"), n=3,
     )
     want = (
@@ -492,7 +492,7 @@ def test_ngram_counts_stream_rejects_bad_n(spark, tmp_path):
         str(tmp_path)
     )
     with pytest.raises(ValueError, match="n must be 2 or 3"):
-        ngram_counts_stream(s, "text", "doc_id", "o", "c", n=4)
+        ngram_counts_stream(s, "text", "o", "c", n=4)
 
 
 def test_ngram_counts_stream_rejects_cleared_output(spark, tmp_path):
@@ -517,7 +517,7 @@ def test_ngram_counts_stream_rejects_cleared_output(spark, tmp_path):
     )
     out, ckpt = tmp_path / "out", tmp_path / "ckpt"
     got = ngram_counts_stream(
-        s, "text", "doc_id", output_dir=str(out), checkpoint_dir=str(ckpt),
+        s, "text", output_dir=str(out), checkpoint_dir=str(ckpt),
         n=2,
     )
     assert got.count() > 0
@@ -529,7 +529,7 @@ def test_ngram_counts_stream_rejects_cleared_output(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="output partitions are missing"):
         ngram_counts_stream(
-            s2, "text", "doc_id", output_dir=str(out),
+            s2, "text", output_dir=str(out),
             checkpoint_dir=str(ckpt), n=2,
         )
 
@@ -587,7 +587,7 @@ def test_ngram_counts_stream_rejects_partial_output_deletion(spark, tmp_path):
     )
     out, ckpt = tmp_path / "out", tmp_path / "ckpt"
     ngram_counts_stream(
-        s, "text", "doc_id", output_dir=str(out), checkpoint_dir=str(ckpt),
+        s, "text", output_dir=str(out), checkpoint_dir=str(ckpt),
         n=2,
     ).count()
     batch_dirs = sorted(p for p in out.iterdir() if p.name.startswith("batch="))
@@ -600,7 +600,7 @@ def test_ngram_counts_stream_rejects_partial_output_deletion(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="output partitions are missing"):
         ngram_counts_stream(
-            s2, "text", "doc_id", output_dir=str(out),
+            s2, "text", output_dir=str(out),
             checkpoint_dir=str(ckpt), n=2,
         )
 
@@ -626,6 +626,6 @@ def test_ngram_counts_stream_detects_purged_commit_listing(spark, tmp_path):
     )
     with pytest.raises(ValueError, match=r"\[0, 1\]"):
         ngram_counts_stream(
-            s, "text", "doc_id", output_dir=str(out),
+            s, "text", output_dir=str(out),
             checkpoint_dir=str(ckpt), n=2,
         )

@@ -80,6 +80,30 @@ def test_broadcast_to(spark):
     assert_np_equal(b, {"x": np.broadcast_to(x, (4, 3)), "y": np.broadcast_to(y, (4, 3))})
 
 
+def test_shape_ops_are_views_of_one_base(spark):
+    """Basic indexing, reshape, einops and broadcast_to are strided views:
+    each returns an object over the same base frame as its input, views
+    of views included, and the frame is built only when read."""
+    p, x, y = make_point((4, 6), spark)
+    views = {
+        "int": p[1],
+        "slice": p[1:, ::2],
+        "none+ellipsis": p[None, ..., 3],
+        "reshape": p.reshape((3, 8)),
+        "einops": p.reshape("a (b c) -> c a b", c=2),
+        "broadcast_to": p[:, 2:3].broadcast_to((5, 4, 3)),
+        "chain": p.reshape("a b -> b a")[1:5, ::2].broadcast_to((2, 4, 2)),
+    }
+    for name, v in views.items():
+        assert v._base is p._base, name
+        assert v._frame is None, name
+    chain = views["chain"]
+    want = np.broadcast_to(x.T[1:5, ::2], (2, 4, 2))
+    assert_np_equal(chain, {"x": want, "y": np.broadcast_to(y.T[1:5, ::2], (2, 4, 2))})
+    assert chain._frame is not None  # built once, on read
+    assert chain.df is chain.df
+
+
 def test_inner_shape_fields(spark):
     r = np.arange(18, dtype=np.float32).reshape(2, 3, 3)
     t = np.arange(4, dtype=np.int32).reshape(2, 2)
