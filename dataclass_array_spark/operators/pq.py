@@ -20,11 +20,10 @@ there applies per subspace):
   fit IS :func:`~dataclass_array_spark.operators.clustering.kmeans_fit`
   on a ``slice()`` projection, so init/tie-break/decimal-mean semantics
   are inherited, not re-implemented.
-- **Encoding** (:func:`pq_encode`): zero-shuffle — either an unrolled
-  in-scan argmin expression per subspace (tiny codebooks) or ONE
-  Arrow-batched kernel computing all ``m`` codes per batch (plan size
-  O(1) in ``m*codes*dim``); both bit-identical (same dim-major
-  accumulation, first-min tie-break) like the k-means dispatch.
+- **Encoding** (:func:`pq_encode`): zero-shuffle — ONE Arrow-batched
+  kernel computes all ``m`` codes per batch (plan size O(1) in
+  ``m*codes*dim``): dim-major accumulation inside each subspace and a
+  first-min tie-break, the k-means argmin's semantics per subspace.
 - **ADC top-k** (:func:`pq_topk`): broadcast(queries) × encoded corpus;
   the per-pair distance is ``m`` codebook lookups summed in subspace
   order, each subspace term a dim-major sequential fold — the exact
@@ -55,8 +54,6 @@ from pyspark.sql import functions as F
 from dataclass_array_spark.core.schema import ArraySpec
 from dataclass_array_spark.core.table import np_udf
 from dataclass_array_spark.operators.clustering import (
-    _ARGMIN_UDF_THRESHOLD,
-    _argmin_cluster,
     _collect_train_sample,
     _kmeans_fit_driver,
     kmeans_fit,
@@ -122,12 +119,12 @@ def pq_fit(
 
 
 def _pq_encode_udf(codebooks: Codebooks):
-    """Arrow-batched all-subspace encoder.  Bit-exact replica of the
-    per-subspace :func:`_argmin_cluster` expression: ``acc += diff^2``
-    accumulates dim-major inside each subspace (the sequential-fold
-    order) and ``np.argmin`` takes the FIRST minimum (lower code id
-    wins ties).  Zero shuffle: an ArrowEvalPython node in the scan
-    stage, codebooks ship once per executor in the closure."""
+    """Arrow-batched all-subspace encoder: per subspace, ``acc +=
+    diff^2`` accumulates dim-major (the sequential-fold order of the
+    k-means argmin and the DuckDB oracle) and ``np.argmin`` takes the
+    FIRST minimum (lower code id wins ties).  Zero shuffle: an
+    ArrowEvalPython node in the scan stage, codebooks ship once per
+    executor in the closure."""
     CBs = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
 
     dim = sum(C.shape[1] for C in CBs)
@@ -148,61 +145,22 @@ def _pq_encode_udf(codebooks: Codebooks):
     return enc
 
 
-def _encode_col(vec: Column, codebooks: Codebooks) -> Column:
-    """``array<bigint>`` of per-subspace nearest-code ids; expression
-    argmin for tiny codebooks (JITs into the scan), Arrow kernel above
-    the same plan-size threshold k-means uses."""
-    m = len(codebooks)
-    d = len(codebooks[0][0])
-    if m * len(codebooks[0]) * d <= _ARGMIN_UDF_THRESHOLD:
-        return F.array(
-            *[
-                _argmin_cluster(
-                    F.slice(vec, j * d + 1, d), codebooks[j]
-                ).cluster
-                for j in range(m)
-            ]
-        )
-    return _pq_encode_udf(codebooks)(vec)
-
-
 def pq_encode(
     df: DataFrame, id_col: str, vec_col: str, codebooks: Codebooks
 ) -> DataFrame:
     """``(id, codes array<bigint>)`` — the compressed corpus.  One
     narrow pass, no shuffle (plan-asserted in tests/test_plans.py)."""
     vec = F.col(vec_col).cast("array<double>")
-    return df.select(F.col(id_col), _encode_col(vec, codebooks).alias("codes"))
-
-
-def _adc_expr(qv: Column, codes: Column, codebooks: Codebooks) -> Column:
-    """Unrolled ADC expression: Σ_j ||q_j − CB[j][codes[j]]||², subspace
-    terms summed left-to-right, each term a dim-major sequential fold —
-    the association order the oracle mirrors.  Plan size grows with
-    m×codes×d literals; the Arrow kernel below takes over past the
-    threshold (real PQ deployments use codes=256 → 16k+ literals)."""
-    m = len(codebooks)
-    d = len(codebooks[0][0])
-    total = None
-    for j in range(m):
-        cb = F.array(
-            *[F.array(*[F.lit(float(x)) for x in c]) for c in codebooks[j]]
-        )
-        cent = F.element_at(cb, F.element_at(codes, j + 1).cast("int") + 1)
-        diffs = F.zip_with(
-            F.slice(qv, j * d + 1, d), cent, lambda x, y: (x - y) * (x - y)
-        )
-        t = F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
-        total = t if total is None else total + t
-    return total
+    return df.select(F.col(id_col), _pq_encode_udf(codebooks)(vec).alias("codes"))
 
 
 def _adc_udf(codebooks: Codebooks):
-    """Arrow-batched ADC scorer — bit-exact replica of :func:`_adc_expr`:
-    each subspace term accumulates dim-major from +0.0 (the sequential
-    fold order) and terms add in subspace order (``0 + t0 + t1 + …``
-    equals ``t0 + t1 + …`` exactly — squares are non-negative, so no
-    −0 edge).  O(1) plan size in m×codes×d."""
+    """Arrow-batched ADC scorer: Σ_j ||q_j − CB[j][codes[j]]||².  Each
+    subspace term accumulates dim-major from +0.0 (the sequential fold
+    order) and terms add in subspace order (``0 + t0 + t1 + …`` equals
+    ``t0 + t1 + …`` exactly — squares are non-negative, so no −0 edge)
+    — the association order the DuckDB oracle replays.  O(1) plan size
+    in m×codes×d (real PQ deployments use codes=256)."""
     CBs = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
 
     dim = sum(CB.shape[1] for CB in CBs)
@@ -222,17 +180,6 @@ def _adc_udf(codebooks: Codebooks):
         return total
 
     return dist
-
-
-def _adc_dist(qv: Column, codes: Column, codebooks: Codebooks) -> Column:
-    """Dispatch: unrolled expression (tiny codebooks, JITs into the
-    stage) vs Arrow kernel (O(1) plan size) — the same threshold
-    machinery as encoding and k-means, bit-identical both ways
-    (tests/test_operators.py::test_pq_adc_expr_matches_arrow)."""
-    m = len(codebooks)
-    if m * len(codebooks[0]) * len(codebooks[0][0]) <= _ARGMIN_UDF_THRESHOLD:
-        return _adc_expr(qv, codes, codebooks)
-    return _adc_udf(codebooks)(qv, codes)
 
 
 def pq_topk(
@@ -260,7 +207,7 @@ def pq_topk(
         F.col(vec_col).cast("array<double>").alias("qv"),
     )
     scored = enc.join(F.broadcast(q), F.col("qid") != F.col("nid") if exclude_self else F.lit(True)).select(
-        "qid", "nid", _adc_dist(F.col("qv"), F.col("codes"), codebooks).alias("dist")
+        "qid", "nid", _adc_udf(codebooks)(F.col("qv"), F.col("codes")).alias("dist")
     )
     w = Window.partitionBy("qid").orderBy(F.asc("dist"), F.asc("nid"))
     return (
@@ -288,48 +235,29 @@ def ivf_pq_topk(
     """IVF-PQ (the FAISS IVFADC recipe): coarse IVF cells prune the
     candidate set, ADC over PQ codes scores it.
 
-    The corpus is read ONCE: cell assignment (zero-shuffle literal-
-    centroid expression / Arrow probe, see
+    The corpus is read ONCE: cell assignment (the Arrow cell probe of
     :func:`~dataclass_array_spark.operators.similarity.assign_cells`)
-    and PQ encoding are fused into the same scan projection, after
-    which the corpus side of the search carries only
-    ``(nid, cell, codes)`` — at 100 TB that is the entire resident
-    index.  Queries (the small side) broadcast with their probed cells
-    and the full query vector; the equi-join on ``cell`` bounds
-    candidates, and the only hash shuffle partitions candidates by
-    ``qid`` for the top-k window.  Ranking is approximate squared L2
+    and PQ encoding (the Arrow encoder :func:`_pq_encode_udf`) run in
+    the same scan stage with no shuffle, after which the corpus side of
+    the search carries only ``(nid, cell, codes)`` — at 100 TB that is
+    the entire resident index.  Queries (the small side) broadcast with
+    their ``nprobe >= 1`` probed cells and the full query vector; the
+    equi-join on ``cell`` bounds candidates, and the only hash shuffle
+    partitions candidates by ``qid`` for the top-k window.  Ranking is approximate squared L2
     (``dist`` ASC, ties → lower ``nid``), same blocked fold order as
     :func:`pq_topk` — value-exactly replayed by the DuckDB oracle
     (``workload.llm3``).
     """
-    from dataclass_array_spark.operators.similarity import (
-        _trained_cents,
-        assign_cells,
-        norm2,
-    )
+    from dataclass_array_spark.operators.similarity import _ivf_cents, assign_cells
 
-    if centroids == "kmeans":
-        cents = _trained_cents(
-            corpus, corpus_id, vec_col, n_centroids, kmeans_iters,
-            kmeans_train_limit,
-        )
-    elif centroids == "first":
-        cents = (
-            corpus.orderBy(corpus_id)
-            .limit(n_centroids)
-            .select(
-                F.col(corpus_id).alias("cent_id"),
-                F.col(vec_col).cast("array<double>").alias("cent_v"),
-                norm2(F.col(vec_col)).alias("cent_n2"),
-            )
-            .collect()
-        )
-    else:
-        raise ValueError(f"centroids must be 'first' or 'kmeans', got {centroids!r}")
+    cents = _ivf_cents(
+        corpus, corpus_id, vec_col, n_centroids, centroids, kmeans_iters,
+        kmeans_train_limit,
+    )
     enc = assign_cells(corpus, corpus_id, vec_col, cents, nprobe=1).select(
         F.col("__id").alias("nid"),
         "cell",
-        _encode_col(F.col("__v").cast("array<double>"), codebooks).alias("codes"),
+        _pq_encode_udf(codebooks)(F.col("__v").cast("array<double>")).alias("codes"),
     )
     q = assign_cells(queries, query_id, vec_col, cents, nprobe=nprobe).select(
         F.col("__id").alias("qid"),
@@ -344,7 +272,7 @@ def ivf_pq_topk(
         .select(
             "qid",
             "nid",
-            _adc_dist(F.col("qv"), F.col("codes"), codebooks).alias("dist"),
+            _adc_udf(codebooks)(F.col("qv"), F.col("codes")).alias("dist"),
         )
     )
     w = Window.partitionBy("qid").orderBy(F.asc("dist"), F.asc("nid"))

@@ -26,8 +26,6 @@ from pyspark.sql import types as T
 from dataclass_array_spark.core.schema import ArraySpec
 from dataclass_array_spark.core.table import arrow_table, np_columns, np_udf, scalar_spec
 
-_DEC = "decimal(38,25)"
-
 
 def _exact_dot(a: Column, b: Column) -> Column:
     """Σ a[i]*b[i] as a sequential left-to-right double fold — identical
@@ -137,7 +135,6 @@ def srp_lsh_topk(
     dim: int,
     k: int = 5,
     n_planes: int = 8,
-    score: str = "auto",
     planes: str = "random",
     kmeans_iters: int = 2,
     kmeans_train_limit: "int | None" = None,
@@ -179,10 +176,8 @@ def srp_lsh_topk(
         norm2(F.col(vec_col)).alias("cn2"),
         srp_signature(F.col(vec_col), dim, n_planes, plane_list).alias("bucket"),
     )
-    # bucket-collision candidates are corpus-scale → "auto" = Arrow
     scored = _score_pairs(
         c.join(F.broadcast(q), on="bucket").filter(F.col("qid") != F.col("nid")),
-        "arrow" if score == "auto" else score,
         dim,
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
@@ -196,17 +191,17 @@ def srp_lsh_topk(
 
 def _pair_cosine_arrow(dim: int):
     """Arrow-batched numpy replica of :func:`cosine` for candidate-pair
-    scoring.  Bit-identical to the expression path (and DuckDB's
+    scoring.  Bit-identical to the fold expression (and DuckDB's
     ``list_reduce`` oracle): products are computed in double and
     accumulated dim-major — the sequential left-fold order — and
-    ``sqrt``/division are single IEEE ops.  Differentially tested in
+    ``sqrt``/division are single IEEE ops.  Tested against a
+    pure-Python fold and against :func:`brute_force_topk` in
     tests/test_operators.py.
 
     Rationale: the HOF ``aggregate`` lambda pays per-element Catalyst
     interpretation per candidate pair; at corpus-scale candidate
     volumes (knn_join at sf1: ~1.9M pairs × dim 64) the Arrow batch
-    path is ~5× cheaper.  Same dispatch discipline as the cell-probe
-    (`_cells_udf`) and k-means argmin (clustering.py) numpy paths."""
+    path is ~5× cheaper."""
     vec = ArraySpec(np.float64, (dim,))
 
     @np_udf("double", vec, vec, ArraySpec(np.float64), ArraySpec(np.float64))
@@ -219,73 +214,31 @@ def _pair_cosine_arrow(dim: int):
     return score
 
 
-def _score_pairs(scored: DataFrame, score: str, dim: int) -> DataFrame:
-    """Project (qid, nid, cosine) from a joined candidate frame using
-    either the fold expression or the Arrow numpy scorer (bit-equal)."""
-    if score == "arrow":
-        c = _pair_cosine_arrow(dim)(
-            F.col("qv").cast("array<double>"),
-            F.col("cv").cast("array<double>"),
-            F.col("qn2"),
-            F.col("cn2"),
-        )
-    else:
-        c = cosine(F.col("qv"), F.col("cv"), F.col("qn2"), F.col("cn2"))
+def _score_pairs(scored: DataFrame, dim: int) -> DataFrame:
+    """Project (qid, nid, cosine) from a joined candidate frame with the
+    Arrow numpy pair scorer."""
+    c = _pair_cosine_arrow(dim)(
+        F.col("qv").cast("array<double>"),
+        F.col("cv").cast("array<double>"),
+        F.col("qn2"),
+        F.col("cn2"),
+    )
     return scored.select("qid", "nid", c.alias("cosine"))
 
 
-def _cell_candidates(vec_double: Column, n2: Column, cents) -> Column:
-    """Array of ``struct(negcs, cid)`` — cosine to every literal centroid,
-    negated so ascending struct order = best-cosine-first with lower
-    centroid id winning ties.  Pure column expression: the centroids are
-    driver-collected rows (``cent_id``, ``cent_v`` double array,
-    ``cent_n2``), inlined as literals, so evaluating this costs zero
-    joins and zero shuffles — the same shape as k-means assignment
-    (clustering._argmin_cluster)."""
-    return F.array(
-        *[
-            F.named_struct(
-                F.lit("negcs"),
-                -(
-                    _exact_dot(vec_double, F.lit(list(r["cent_v"])))
-                    / (F.sqrt(n2) * F.sqrt(F.lit(float(r["cent_n2"]))))
-                ),
-                F.lit("cid"),
-                F.lit(r["cent_id"]),
-            )
-            for r in cents
-        ]
-    )
-
-
-# Above this many k*dim centroid literals the expression-based cell
-# assignment is replaced by an Arrow numpy probe — same rationale and
-# same bit-exactness discipline as clustering._ARGMIN_UDF_THRESHOLD
-# (plan compile cost grows with literal count; the cosine-to-centroid
-# expression is ~3x the argmin's nodes per centroid).  Re-measured
-# round 7 after the k-means threshold finding: at 16×64 = 1024 literals
-# the Arrow probe wins 1.0-1.7 s vs 3.1-3.4 s warm on the sf0.1 IVF
-# gate — the literal tree's analysis+codegen is paid per plan and was
-# mispriced here exactly as it was for the argmin.  256 keeps only
-# genuinely tiny centroid sets (unit fixtures / 4-cell plan tests) on
-# the in-scan expression.
-_ASSIGN_UDF_THRESHOLD = 256
-
-
 def _cells_udf(cents, nprobe: int):
-    """Arrow-batched numpy replica of :func:`_cell_candidates` ranking:
-    returns the ``nprobe`` nearest cell ids per vector.  Bit-identical
-    to the expression path — dot and norm accumulate dim-major (the
-    sequential fold order), ``sqrt``/division are single IEEE ops, and
+    """Arrow-batched numpy cell ranking: returns the ``nprobe`` nearest
+    cell ids per vector by cosine to each centroid.  Dot and norm
+    accumulate dim-major (the sequential fold order of :func:`cosine`
+    and the DuckDB oracle), ``sqrt``/division are single IEEE ops, and
     the stable argsort over descending cosine breaks ties on the lower
-    centroid id exactly like the (negcs, cid) struct ordering."""
+    centroid id."""
     C = np.asarray([list(r["cent_v"]) for r in cents], dtype=np.float64)
     cn2 = np.asarray([float(r["cent_n2"]) for r in cents], dtype=np.float64)
     cid = np.asarray([r["cent_id"] for r in cents], dtype=np.int64)
-    # the expression path breaks cosine ties by cent_id VALUE (the
-    # (negcs, cid) struct order); the stable argsort below breaks by
-    # POSITION — sort by cent_id so the two coincide for ANY input
-    # order, not just the orderBy(id) convention the callers follow
+    # the stable argsort below breaks cosine ties by POSITION; sort by
+    # cent_id so ties go to the lower cent_id VALUE for any input order,
+    # not just the orderBy(id) convention the callers follow
     pos = np.argsort(cid, kind="stable")
     C, cn2, cid = C[pos], cn2[pos], cid[pos]
 
@@ -306,40 +259,19 @@ def assign_cells(
     df: DataFrame, id_col: str, vec_col: str, cents, nprobe: int = 1
 ) -> DataFrame:
     """IVF cell assignment: ``(id, v, n2, cell)`` with one row per
-    probed cell.  Small centroid sets use a pure expression —
-    ``nprobe=1`` is an ``array_min``, ``nprobe>1`` sorts the candidate
-    array and explodes the first ``nprobe`` — expression-only, no
-    Exchange anywhere (plan-asserted in tests/test_plans.py).  Above
-    ``_ASSIGN_UDF_THRESHOLD`` k×dim literals the ranking runs as an
-    Arrow numpy probe instead (O(1) plan size, bit-identical —
-    tests/test_operators.py::test_assign_cells_udf_matches_expression)."""
-    base = df.select(
+    probed cell (``nprobe >= 1``).  The ranking is one Arrow numpy probe
+    (:func:`_cells_udf`) in the input's own scan stage: its plan size is
+    O(1) in the centroid count and there is no Exchange or join
+    (plan-asserted in tests/test_plans.py).  ``nprobe=1`` takes the
+    probe's first cell; ``nprobe>1`` explodes the ``nprobe`` nearest."""
+    if nprobe < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+    probed = _cells_udf(cents, nprobe)(F.col(vec_col).cast("array<double>"))
+    return df.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__v"),
         norm2(F.col(vec_col)).alias("__n2"),
-    )
-    k, dim = len(cents), len(cents[0]["cent_v"])
-    if k * dim > _ASSIGN_UDF_THRESHOLD:
-        probed = _cells_udf(cents, nprobe)(F.col("__v").cast("array<double>"))
-        if nprobe <= 1:
-            return base.select(
-                "__id", "__v", "__n2", F.element_at(probed, 1).alias("cell")
-            )
-        return base.select(
-            "__id", "__v", "__n2", F.explode(probed).alias("cell")
-        )
-    cands = _cell_candidates(F.col("__v").cast("array<double>"), F.col("__n2"), cents)
-    if nprobe <= 1:
-        return base.select(
-            "__id", "__v", "__n2", F.array_min(cands).cid.alias("cell")
-        )
-    return (
-        base.select(
-            "__id", "__v", "__n2",
-            F.slice(F.array_sort(cands), 1, nprobe).alias("__cells"),
-        )
-        .select("__id", "__v", "__n2", F.explode("__cells").alias("__c"))
-        .select("__id", "__v", "__n2", F.col("__c.cid").alias("cell"))
+        (F.element_at(probed, 1) if nprobe == 1 else F.explode(probed)).alias("cell"),
     )
 
 
@@ -413,11 +345,11 @@ def _trained_cents(
     train_limit: "int | None",
 ) -> list:
     """Lloyd's-trained IVF centroids in the ``cents`` row shape the
-    cell-assignment paths consume (``cent_id``/``cent_v``/``cent_n2``).
+    cell probe consumes (``cent_id``/``cent_v``/``cent_n2``).
     ``cent_n2`` is a sequential left-fold in python — the same
     IEEE-double fold order as the Spark/DuckDB ``aggregate``/
-    ``list_reduce`` norms, so expression, Arrow, and SQL-oracle cell
-    rankings all agree bit-for-bit."""
+    ``list_reduce`` norms, so the Arrow probe and the SQL oracle rank
+    cells identically."""
     from dataclass_array_spark.operators.clustering import kmeans_fit
 
     cks = kmeans_fit(
@@ -433,6 +365,36 @@ def _trained_cents(
     return cents
 
 
+def _ivf_cents(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_centroids: int,
+    centroids: str,
+    iters: int,
+    train_limit: "int | None",
+) -> list:
+    """The IVF centroid set of ``knn_join``, ``ivf_topk`` and
+    ``pq.ivf_pq_topk``: ``"first"`` collects the first ``n_centroids``
+    corpus vectors by id (cell ids are their ids), ``"kmeans"`` trains
+    Lloyd's centroids (:func:`_trained_cents`, cell ids
+    0..n_centroids-1)."""
+    if centroids == "kmeans":
+        return _trained_cents(corpus, id_col, vec_col, n_centroids, iters, train_limit)
+    if centroids != "first":
+        raise ValueError(f"centroids must be 'first' or 'kmeans', got {centroids!r}")
+    return (
+        corpus.orderBy(id_col)
+        .limit(n_centroids)
+        .select(
+            F.col(id_col).alias("cent_id"),
+            F.col(vec_col).cast("array<double>").alias("cent_v"),
+            norm2(F.col(vec_col)).alias("cent_n2"),
+        )
+        .collect()
+    )
+
+
 def knn_join(
     left: DataFrame,
     right: DataFrame,
@@ -444,7 +406,6 @@ def knn_join(
     k: int = 3,
     exclude_self: bool = False,
     max_cell_size: int | None = None,
-    score: str = "auto",
     centroids: str = "first",
     kmeans_iters: int = 3,
     kmeans_train_limit: "int | None" = None,
@@ -456,14 +417,21 @@ def knn_join(
     query side and stops scaling once the query set is itself huge).
 
     Scale shape: centroids (n_centroids × dim doubles) are collected
-    once and inlined, so BOTH sides are cell-assigned with zero-shuffle
-    expressions inside their own scans; the join is then a plain
-    partitioned equi-join on cell id — one shuffle of each side, and
-    AQE's skew-join splitting handles hot cells.  The per-left top-k
-    rides the same cell partitioning (WindowGroupLimit caps state at k
-    before any filter).  Candidate volume is Σ_cells |L_c|·|R_c|·nprobe
-    — bounded by choosing n_centroids ∝ √(|L|·|R|)/target just like
-    IVF nlist sizing.
+    once and shipped in the probe's closure, so BOTH sides are
+    cell-assigned by an Arrow probe inside their own scans, with no
+    shuffle.  Each cell's L×R block is then scored in one Arrow
+    cogroup (`applyInArrow` over ``groupBy(cell).cogroup``): one
+    shuffle of each side on cell id, and every vector crosses to Python
+    ONCE PER CELL — Σ(|L_c|+|R_c|)·dim doubles — instead of once per
+    candidate pair (Σ|L_c|·|R_c|·dim, a ~100× blow-up at sf1: 12.6M
+    pairs from 40k assignments).  Only per-qid-per-cell top-k survivors
+    come back, so the candidate set never materializes as rows; the
+    global top-k window then merges them per qid.  The block product
+    accumulates dim-major (the sequential-fold order) and right rows
+    are pre-sorted by id so the stable argsort tie-break equals the
+    window's ``(cosine DESC, nid ASC)``.  Candidate volume is
+    Σ_cells |L_c|·|R_c|·nprobe — bounded by choosing n_centroids ∝
+    √(|L|·|R|)/target just like IVF nlist sizing.
 
     Right rows live in exactly one cell (nprobe=1) and a left row's
     probed cells are distinct, so (left, right) pairs are unique — no
@@ -474,21 +442,6 @@ def knn_join(
     corpora where one cell swallows most vectors, |L_c|·|R_c| goes
     quadratic; the cap bounds it at |L_c|·cap, trading recall inside
     oversized cells — the same insurance as the MinHash-LSH bucket cap.
-    The capping window runs on the SAME key the join shuffles on, so
-    the exchange is reused.
-
-    ``score``: ``"auto"``/``"cogroup"`` scores each cell's L×R block in
-    one Arrow cogroup (`applyInArrow` over ``groupBy(cell).cogroup``):
-    every vector crosses to Python ONCE PER CELL — Σ(|L_c|+|R_c|)·dim
-    doubles — instead of once per candidate pair (Σ|L_c|·|R_c|·dim, a
-    ~100× blow-up at sf1: 12.6M pairs from 40k assignments), and only
-    per-qid-per-cell top-k survivors come back, so the candidate set
-    never materializes as rows.  The block product accumulates
-    dim-major (the sequential-fold order) and right rows are pre-sorted
-    by id so the stable argsort tie-break equals the window's
-    ``(cosine DESC, nid ASC)`` — bit-identical to ``"expression"``
-    (the joined fold-expression path, kept for differential tests;
-    differentially verified in tests/test_operators.py).
 
     ``centroids``: ``"first"`` uses the first ``n_centroids`` right
     vectors by id — deterministic, zero extra jobs, the oracle-friendly
@@ -503,25 +456,12 @@ def knn_join(
     standard IVF recipe and the 100 TB path).  The centroid squared
     norm is a sequential left-fold in python — the same IEEE-double
     fold order as the Spark/DuckDB ``aggregate``/``list_reduce``
-    expressions, so both dispatch paths and the SQL oracle rank cells
+    expressions, so the probe and the SQL oracle rank cells
     identically."""
-    if centroids == "kmeans":
-        cents = _trained_cents(
-            right, right_id, vec_col, n_centroids, kmeans_iters, kmeans_train_limit
-        )
-    elif centroids == "first":
-        cents = (
-            right.orderBy(right_id)
-            .limit(n_centroids)
-            .select(
-                F.col(right_id).alias("cent_id"),
-                F.col(vec_col).cast("array<double>").alias("cent_v"),
-                norm2(F.col(vec_col)).alias("cent_n2"),
-            )
-            .collect()
-        )
-    else:
-        raise ValueError(f"centroids must be 'first' or 'kmeans', got {centroids!r}")
+    cents = _ivf_cents(
+        right, right_id, vec_col, n_centroids, centroids, kmeans_iters,
+        kmeans_train_limit,
+    )
     l_assigned = (
         assign_cells(left, left_id, vec_col, cents, nprobe=nprobe)
         .withColumnRenamed("__id", "qid")
@@ -534,23 +474,10 @@ def knn_join(
         .withColumnRenamed("__v", "cv")
         .withColumnRenamed("__n2", "cn2")
     )
-    if score in ("auto", "cogroup"):
-        scored = _cell_block_topk(
-            l_assigned, r_assigned, k=k, exclude_self=exclude_self,
-            max_cell_size=max_cell_size, dim=len(cents[0]["cent_v"]),
-        )
-    else:
-        if max_cell_size is not None:
-            wcell = Window.partitionBy("cell").orderBy("nid")
-            r_assigned = (
-                r_assigned.withColumn("__rn", F.row_number().over(wcell))
-                .filter(F.col("__rn") <= max_cell_size)
-                .drop("__rn")
-            )
-        pairs = l_assigned.join(r_assigned, on="cell")
-        if exclude_self:
-            pairs = pairs.filter(F.col("qid") != F.col("nid"))
-        scored = _score_pairs(pairs, score, len(cents[0]["cent_v"]))
+    scored = _cell_block_topk(
+        l_assigned, r_assigned, k=k, exclude_self=exclude_self,
+        max_cell_size=max_cell_size, dim=len(cents[0]["cent_v"]),
+    )
     # global top-k merge: a candidate outside its cell's per-qid top-k
     # has >= k better candidates in that cell alone, so per-cell top-k
     # feeding this window is lossless
@@ -572,7 +499,6 @@ def ivf_topk(
     n_centroids: int = 16,
     nprobe: int = 2,
     k: int = 5,
-    score: str = "auto",
     centroids: str = "first",
     kmeans_iters: int = 3,
     kmeans_train_limit: "int | None" = None,
@@ -592,31 +518,18 @@ def ivf_topk(
     identical in both modes — only the cell boundaries move.
 
     Scale shape: the centroids (n_centroids × dim doubles) are collected
-    once on the driver and inlined as literals, so the billion-vector
-    corpus side is assigned with a zero-shuffle column expression inside
-    its own scan stage — no corpus-wide window, no cross join (that was
+    once on the driver and shipped in the probe's closure, so the
+    billion-vector corpus side is assigned by an Arrow probe inside its
+    own scan stage — no corpus-wide window, no cross join (that was
     this operator's weakness through round 3: a corpus×centroids cross
     join followed by a full ``Window.partitionBy(id)`` shuffle).  Search
-    is then a broadcast equi-join on cell id, and the only shuffle left
-    is the per-query top-k over the candidate set."""
-    if centroids == "kmeans":
-        cents = _trained_cents(
-            corpus, corpus_id, vec_col, n_centroids, kmeans_iters,
-            kmeans_train_limit,
-        )
-    elif centroids == "first":
-        cents = (
-            corpus.orderBy(corpus_id)
-            .limit(n_centroids)
-            .select(
-                F.col(corpus_id).alias("cent_id"),
-                F.col(vec_col).cast("array<double>").alias("cent_v"),
-                norm2(F.col(vec_col)).alias("cent_n2"),
-            )
-            .collect()
-        )
-    else:
-        raise ValueError(f"centroids must be 'first' or 'kmeans', got {centroids!r}")
+    is then a broadcast equi-join on cell id, candidates are scored by
+    the Arrow pair scorer, and the only shuffle left is the per-query
+    top-k over the candidate set."""
+    cents = _ivf_cents(
+        corpus, corpus_id, vec_col, n_centroids, centroids, kmeans_iters,
+        kmeans_train_limit,
+    )
     c_assigned = (
         assign_cells(corpus, corpus_id, vec_col, cents, nprobe=1)
         .withColumnRenamed("__id", "nid")
@@ -631,13 +544,10 @@ def ivf_topk(
     )
     # corpus rows live in exactly one cell and a query's probed cells are
     # distinct, so each (qid, nid) pair appears at most once — no dedup.
-    # Candidates ≈ |corpus matched cells| × nprobe — corpus-scale, so
-    # "auto" scores via the Arrow path (bit-equal to the expression).
     scored = _score_pairs(
         c_assigned.join(F.broadcast(q_assigned), on="cell").filter(
             F.col("qid") != F.col("nid")
         ),
-        "arrow" if score == "auto" else score,
         len(cents[0]["cent_v"]),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))

@@ -22,71 +22,26 @@ class Query:
 
 # The driver's per-round correctness gate checks roughly the first 50
 # registry entries, so the window is ROTATED each round to keep every
-# query under recurring verification.  Round 19 ordering: the
-# gates whose code changed since they were last verified come
-# first — the 7 shape gates, whose slice, einops, reshape and
-# broadcast ops are now strided views over one base frame — then the
-# rest of the r13/r14 blocks (the stalest) and the head of the r15
-# block up to exactly 50.  Past the window, the rest by staleness
-# (r15 block, r16 window, r17 window), with the r18 window — the
-# freshest — last.  Python dicts preserve insertion order, so this
-# ordering is exactly what ``queries()`` exposes.
+# query under recurring verification.  Round 20 ordering: the
+# gates whose operator code changed since they were last verified come
+# first — the 8 SRP/IVF/kNN/PQ gates, whose cell ranking, pair scoring
+# and PQ encode/ADC each run one Arrow kernel now — then the rest of
+# the r15 block (the stalest) and the head of the r16 window up to
+# exactly 50.  Past the window, the rest by staleness (r16 window, r17
+# window, r18 window), with the r19 window — the freshest — last.
+# Python dicts preserve insertion order, so this ordering is exactly
+# what ``queries()`` exposes.
 _PRIORITY: Tuple[str, ...] = (
-    # ---- the 7 shape gates (shape ops are strided views) ----
-    "shape_vectorize",
-    "shape_vectorize_mat",
-    "shape_mask_filter",
-    "shape_gather",
-    "shape_transpose",
-    "shape_slice",
-    "shape_concat_mapfield",
-    # ---- rest of the r13/r14-verified blocks (stalest) ----
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q8_market_share",
-    "q9_product_profit",
-    "range_join_price_buckets",
-    "rank_functions",
-    "classifier_quality_docs",
-    "blocklist_filter_docs",
-    "domain_cap_docs",
-    "classifier_sigmoid_docs",
-    "temperature_mixture_alpha_docs",
-    "rollup_flag_status",
-    "salted_revenue_by_flag",
-    "scalar_functions",
-    "semi_anti_customers",
-    "sessionize_events",
-    "setops_repeat_customers",
-    "sliding_hourly_stats",
-    "string_functions2",
-    "topk_orders_per_segment",
-    "tumbling_hourly_stats",
-    "udtf_bigram_counts",
-    "unpivot_part_metrics",
-    "window_moving_avg",
-    "window_range_frame",
-    "window_running_total",
-    "order_quantity_arrays",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q21_waiting_supplier",
-    "bm25_doc_ranking",
-    "chunk_documents",
-    "community_user_states",
-    "decontam_ngram_overlap",
-    "dedup_chunks_exact",
-    "doc_fingerprints",
-    "duplicate_spans_docs",
+    # ---- the 8 IVF/PQ/SRP gates (one kernel per IVF/PQ step) ----
     "embedding_ann_srp",
-    "embedding_topk_cosine",
-    "fuzzy_join_part_names",
-    "kcore_user_states",
-    "lang_id_docs",
-    # ---- r15-verified block, head ----
-    "classifier_train_docs",
-    # ---- ==== window boundary (50) ====
-    # ---- rest of the r15-verified block ----
+    "embedding_ann_ivf",
+    "embedding_ann_ivf_kmeans",
+    "ann_recall_ivf_docs",
+    "embedding_knn_join",
+    "embedding_knn_join_kmeans",
+    "embedding_ann_pq",
+    "embedding_ann_ivf_pq",
+    # ---- rest of the r15-verified block (stalest) ----
     "classifier_calibration_docs",
     "linkage_entity_clusters",
     "linkage_part_entities",
@@ -115,7 +70,7 @@ _PRIORITY: Tuple[str, ...] = (
     "embedding_ann_sq8",
     "hll_overlap_users",
     "gap_fill_events",
-    # ---- r16 window ----
+    # ---- r16 window, head ----
     "dsir_weights_docs",
     "dedup_components",
     "dedup_incremental_docs",
@@ -130,6 +85,8 @@ _PRIORITY: Tuple[str, ...] = (
     "streaming_tumbling_hourly",
     "streaming_session_windows",
     "streaming_dedup_events",
+    # ---- ==== window boundary (50) ====
+    # ---- rest of the r16 window ----
     "streaming_user_totals_stateful",
     "streaming_sliding_hourly",
     "streaming_decontam_docs",
@@ -143,7 +100,7 @@ _PRIORITY: Tuple[str, ...] = (
     "q11_important_parts",
     "q16_supplier_counts",
     "q20_promotion_suppliers",
-    # ---- r17 window, minus the shape gates moved above ----
+    # ---- r17 window, minus the shape and IVF/PQ gates moved above ----
     "hilbert_orders_layout",
     "zorder_orders_layout",
     "hilbert3d_orders_layout",
@@ -156,14 +113,7 @@ _PRIORITY: Tuple[str, ...] = (
     "semantic_dedup_embeddings",
     "semantic_dedup_two_level",
     "text_cluster_topics",
-    "embedding_ann_ivf",
-    "embedding_ann_ivf_kmeans",
-    "ann_recall_ivf_docs",
-    "embedding_knn_join",
-    "embedding_knn_join_kmeans",
     "dedup_embedding_neardup",
-    "embedding_ann_pq",
-    "embedding_ann_ivf_pq",
     "pack_ffd_docs",
     "multimodal_decode",
     "multimodal_frames",
@@ -184,7 +134,7 @@ _PRIORITY: Tuple[str, ...] = (
     "classifier_ks_docs",
     "classifier_auc_docs",
     "classifier_pr_docs",
-    # ---- r18 window (freshest: verified in r18) ----
+    # ---- r18 window ----
     "lm_quality_docs",
     "bigram_lm_docs",
     "bigram_lm_heldout_docs",
@@ -235,6 +185,56 @@ _PRIORITY: Tuple[str, ...] = (
     "profile_lineitem",
     "q1_pricing_summary",
     "q3_shipping_priority",
+    # ---- r19 window, minus embedding_ann_srp (freshest: verified in r19) ----
+    "shape_vectorize",
+    "shape_vectorize_mat",
+    "shape_mask_filter",
+    "shape_gather",
+    "shape_transpose",
+    "shape_slice",
+    "shape_concat_mapfield",
+    "q5_local_supplier_volume",
+    "q6_forecast_revenue",
+    "q8_market_share",
+    "q9_product_profit",
+    "range_join_price_buckets",
+    "rank_functions",
+    "classifier_quality_docs",
+    "blocklist_filter_docs",
+    "domain_cap_docs",
+    "classifier_sigmoid_docs",
+    "temperature_mixture_alpha_docs",
+    "rollup_flag_status",
+    "salted_revenue_by_flag",
+    "scalar_functions",
+    "semi_anti_customers",
+    "sessionize_events",
+    "setops_repeat_customers",
+    "sliding_hourly_stats",
+    "string_functions2",
+    "topk_orders_per_segment",
+    "tumbling_hourly_stats",
+    "udtf_bigram_counts",
+    "unpivot_part_metrics",
+    "window_moving_avg",
+    "window_range_frame",
+    "window_running_total",
+    "order_quantity_arrays",
+    "q13_customer_distribution",
+    "q15_top_supplier",
+    "q21_waiting_supplier",
+    "bm25_doc_ranking",
+    "chunk_documents",
+    "community_user_states",
+    "decontam_ngram_overlap",
+    "dedup_chunks_exact",
+    "doc_fingerprints",
+    "duplicate_spans_docs",
+    "embedding_topk_cosine",
+    "fuzzy_join_part_names",
+    "kcore_user_states",
+    "lang_id_docs",
+    "classifier_train_docs",
 )
 
 

@@ -455,8 +455,8 @@ def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Oracle replica of ivf_topk(n_centroids=16, nprobe=4, k=5): centroids =
 # first 16 corpus vectors; every vector ranks cells by cosine (ties ->
-# lower centroid id, same convention as the struct-min on the Spark
-# side); corpus keeps rn=1, queries probe rn<=4; per-cell exact cosine
+# lower centroid id, as the Spark probe's stable argsort by cent_id);
+# corpus keeps rn=1, queries probe rn<=4; per-cell exact cosine
 # top-5 with (cosine DESC, nid) ordering matching the Spark window.
 _IVF_CELL_DOT = (
     "list_reduce(list_prepend(0.0, list_transform(list_zip(e.v, c.cv), "

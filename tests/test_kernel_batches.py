@@ -60,8 +60,7 @@ def _cell_probe(spark, e, corpus, cents, cbs):
 
 def _pair_cosine(spark, e, corpus, cents, cbs):
     return similarity.ivf_topk(
-        e, corpus, "vec_id", "vec_id", "embedding", n_centroids=4, nprobe=2, k=3,
-        score="arrow",
+        e, corpus, "vec_id", "vec_id", "embedding", n_centroids=4, nprobe=2, k=3
     )
 
 
@@ -76,7 +75,7 @@ def _pq_adc(spark, e, corpus, cents, cbs):
 def _cogroup_block(spark, e, corpus, cents, cbs):
     return similarity.knn_join(
         e, corpus, "vec_id", "vec_id", "embedding", n_centroids=5, nprobe=2, k=3,
-        exclude_self=True, score="cogroup",
+        exclude_self=True,
     )
 
 
@@ -203,9 +202,7 @@ EXPECTED = {
 
 @pytest.mark.parametrize("variant", ["empty", "one_partition"])
 @pytest.mark.parametrize("kernel", [*EMBEDDING_KERNELS, *DOCUMENT_KERNELS])
-def test_kernel_empty_and_sparse_batches(spark, inputs, monkeypatch, kernel, variant):
-    monkeypatch.setattr(similarity, "_ASSIGN_UDF_THRESHOLD", 0)
-    monkeypatch.setattr(pq, "_ARGMIN_UDF_THRESHOLD", 0)
+def test_kernel_empty_and_sparse_batches(spark, inputs, kernel, variant):
     e, cents, cbs, d = inputs
     if kernel in EMBEDDING_KERNELS:
         out = EMBEDDING_KERNELS[kernel](spark, _shrink(e, "vec_id", variant), e, cents, cbs)

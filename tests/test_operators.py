@@ -196,12 +196,65 @@ def test_knn_join_kmeans_full_probe_equals_brute_force(spark):
     )
 
 
-def test_assign_cells_udf_matches_expression(spark, monkeypatch):
-    """The Arrow numpy cell probe must be BIT-IDENTICAL to the
-    expression ranking (dim-major fold order, lower-cid tie-break) for
-    both nprobe=1 and nprobe>1."""
-    import pandas as pd
-    from dataclass_array_spark.operators import similarity
+def _fold(terms):
+    """Sequential left fold of IEEE doubles from +0.0 in index order —
+    the order of Spark ``aggregate`` and DuckDB ``list_reduce``, so it
+    reproduces every engine fold and numpy kernel bit for bit."""
+    acc = 0.0
+    for t in terms:
+        acc += t
+    return acc
+
+
+def _ref_cosine(a, b, an2, bn2):
+    return _fold(x * y for x, y in zip(a, b)) / (math.sqrt(an2) * math.sqrt(bn2))
+
+
+def _ref_cells(v, cents, nprobe):
+    """The ``nprobe`` best cells of ``v``: cosine DESC, lower cent_id on ties."""
+    vn2 = _fold(x * x for x in v)
+    ranked = sorted(
+        (-_ref_cosine(v, cv, vn2, cn2), cid) for cid, cv, cn2 in cents
+    )
+    return [cid for _, cid in ranked[:nprobe]]
+
+
+def _ref_ivf(vecs, qids, n_centroids, nprobe, k, cap=None):
+    """Pure-Python IVF top-k over ``{id: vector}`` with self-pairs
+    excluded: centroids are the first ``n_centroids`` ids, corpus rows
+    sit in their best cell (keeping the ``cap`` lowest ids per cell),
+    each query scans its ``nprobe`` best cells, ranked by
+    ``(cosine DESC, nid ASC)``.  Rows are ``(qid, rank, nid, cosine)``."""
+    ids = sorted(vecs)
+    n2 = {i: _fold(x * x for x in vecs[i]) for i in ids}
+    cents = [(i, vecs[i], n2[i]) for i in ids[:n_centroids]]
+    cells = {}
+    for i in ids:
+        cells.setdefault(_ref_cells(vecs[i], cents, 1)[0], []).append(i)
+    rows = []
+    for q in sorted(qids):
+        cands = sorted(
+            (-_ref_cosine(vecs[q], vecs[n], n2[q], n2[n]), n)
+            for c in _ref_cells(vecs[q], cents, nprobe)
+            for n in cells.get(c, [])[:cap]
+            if n != q
+        )
+        rows += [(q, r + 1, n, -neg) for r, (neg, n) in enumerate(cands[:k])]
+    return rows
+
+
+def _assert_rows_equal(out, rows):
+    """``out`` (a pandas frame) equals ``rows`` in order, with raw
+    double equality on every float column."""
+    exp = pd.DataFrame(rows, columns=out.columns).astype(out.dtypes.to_dict())
+    pd.testing.assert_frame_equal(out.reset_index(drop=True), exp)
+    assert list(out.itertuples(index=False, name=None)) == rows
+
+
+def test_assign_cells_udf_matches_expression(spark):
+    """The Arrow numpy cell probe must pick exactly the cells a
+    pure-Python sequential fold ranks first (cosine DESC, lower-cid
+    tie-break) for both nprobe=1 and nprobe>1."""
     from dataclass_array_spark.operators.similarity import assign_cells, norm2
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -214,14 +267,54 @@ def test_assign_cells_udf_matches_expression(spark, monkeypatch):
         )
         .collect()
     )
+    ref_cents = [(r["cent_id"], list(r["cent_v"]), r["cent_n2"]) for r in cents]
+    vecs = [(r["vec_id"], list(r["embedding"])) for r in e.collect()]
     for nprobe in (1, 3):
-        monkeypatch.setattr(similarity, "_ASSIGN_UDF_THRESHOLD", 10**9)
-        expr = assign_cells(e, "vec_id", "embedding", cents, nprobe=nprobe)
-        expr_rows = sorted((r["__id"], r["cell"]) for r in expr.collect())
-        monkeypatch.setattr(similarity, "_ASSIGN_UDF_THRESHOLD", 0)
+        want = sorted(
+            (i, c) for i, v in vecs for c in _ref_cells(v, ref_cents, nprobe)
+        )
         udf = assign_cells(e, "vec_id", "embedding", cents, nprobe=nprobe)
         udf_rows = sorted((r["__id"], r["cell"]) for r in udf.collect())
-        assert expr_rows == udf_rows, f"nprobe={nprobe}"
+        assert udf_rows == want, f"nprobe={nprobe}"
+
+
+def test_ivf_nprobe_below_one_raises(spark):
+    """nprobe < 1 is rejected by every IVF operator instead of being
+    read as 1 or as an empty probe."""
+    from dataclass_array_spark.operators.pq import ivf_pq_topk
+    from dataclass_array_spark.operators.similarity import ivf_topk, knn_join
+
+    rng = np.random.RandomState(31)
+    vecs = rng.randn(40, 8).astype(np.float32)
+    pdf = pd.DataFrame({"id": range(40), "v": [v.tolist() for v in vecs]})
+    df = spark.createDataFrame(pdf).select("id", F.col("v").cast("array<float>").alias("v"))
+    cbs = [[[0.0] * 4, [1.0] * 4]] * 2
+    for nprobe in (0, -1):
+        with pytest.raises(ValueError, match="nprobe"):
+            ivf_topk(df, df, "id", "id", "v", n_centroids=4, nprobe=nprobe).collect()
+        with pytest.raises(ValueError, match="nprobe"):
+            knn_join(df, df, "id", "id", "v", n_centroids=4, nprobe=nprobe).collect()
+        with pytest.raises(ValueError, match="nprobe"):
+            ivf_pq_topk(df, df, "id", "id", "v", cbs, n_centroids=4, nprobe=nprobe).collect()
+
+
+def test_ivf_topk_full_probe_equals_brute_force(spark):
+    """With nprobe = n_centroids every query scans the whole corpus, so
+    ivf_topk's Arrow pair scorer must reproduce brute_force_topk's fold
+    expression exactly (ids, ranks and raw cosines)."""
+    from dataclass_array_spark.operators.similarity import brute_force_topk, ivf_topk
+
+    rng = np.random.RandomState(41)
+    vecs = rng.randn(60, 8).astype(np.float32)
+    pdf = pd.DataFrame({"id": range(60), "v": [v.tolist() for v in vecs]})
+    df = spark.createDataFrame(pdf).select("id", F.col("v").cast("array<float>").alias("v"))
+    q = df.filter(F.col("id") % 7 == 0)
+    exact = brute_force_topk(q, df, "id", "id", "v", k=4).toPandas()
+    approx = ivf_topk(q, df, "id", "id", "v", n_centroids=4, nprobe=4, k=4).toPandas()
+    pd.testing.assert_frame_equal(
+        exact.reset_index(drop=True), approx.reset_index(drop=True)
+    )
+    assert (exact.cosine == approx.cosine).all()  # exact, not allclose
 
 
 def test_knn_join_cell_cap(spark):
@@ -802,49 +895,45 @@ SELECT n, ln FROM lnv ORDER BY n
 
 
 def test_pair_scoring_arrow_matches_expression(spark):
-    """The Arrow pair scorer must be BIT-IDENTICAL to the fold
-    expression (dim-major accumulation, IEEE sqrt/div) — raw double
-    equality, no tolerance, across knn_join and ivf_topk."""
-    import pandas as pd
+    """The Arrow pair scorer (ivf_topk) and the cogroup block scorer
+    (knn_join) must be BIT-IDENTICAL to a pure-Python sequential fold
+    (dim-major accumulation, IEEE sqrt/div) — raw double equality, no
+    tolerance."""
     from dataclass_array_spark.operators.similarity import ivf_topk, knn_join
 
     rng = np.random.RandomState(47)
     vecs = rng.randn(80, 16).astype(np.float32)
     pdf = pd.DataFrame({"id": range(80), "v": [v.tolist() for v in vecs]})
     df = spark.createDataFrame(pdf).select("id", F.col("v").cast("array<float>").alias("v"))
+    ref = {i: [float(x) for x in v] for i, v in enumerate(vecs)}
 
-    kw = dict(n_centroids=6, nprobe=3, k=4, exclude_self=True)
-    expr = knn_join(df, df, "id", "id", "v", score="expression", **kw).toPandas()
-    arrow = knn_join(df, df, "id", "id", "v", score="arrow", **kw).toPandas()
-    pd.testing.assert_frame_equal(expr, arrow)
-    assert (expr.cosine == arrow.cosine).all()  # exact, not allclose
+    kw = dict(n_centroids=6, nprobe=3, k=4)
+    joined = knn_join(df, df, "id", "id", "v", exclude_self=True, **kw).toPandas()
+    _assert_rows_equal(joined, _ref_ivf(ref, range(80), **kw))
 
     q = df.filter(F.col("id") < 5)
-    e1 = ivf_topk(q, df, "id", "id", "v", n_centroids=6, nprobe=2, k=4,
-                  score="expression").toPandas()
-    a1 = ivf_topk(q, df, "id", "id", "v", n_centroids=6, nprobe=2, k=4,
-                  score="arrow").toPandas()
-    pd.testing.assert_frame_equal(e1, a1)
-    assert (e1.cosine == a1.cosine).all()
+    kw = dict(n_centroids=6, nprobe=2, k=4)
+    probed = ivf_topk(q, df, "id", "id", "v", **kw).toPandas()
+    _assert_rows_equal(probed, _ref_ivf(ref, range(5), **kw))
 
 
 def test_knn_join_cogroup_matches_expression(spark):
-    """The cogroup blocked scorer (default path) must be BIT-IDENTICAL
-    to the joined fold-expression path — ids, ranks, and raw cosines —
-    including with a cell cap and self-exclusion."""
-    import pandas as pd
+    """The cogroup blocked scorer must be BIT-IDENTICAL to a pure-Python
+    fold — ids, ranks, and raw cosines — including with a cell cap
+    (the lowest nids of each cell) and self-exclusion."""
     from dataclass_array_spark.operators.similarity import knn_join
 
     rng = np.random.RandomState(53)
     vecs = rng.randn(90, 16).astype(np.float32)
     pdf = pd.DataFrame({"id": range(90), "v": [v.tolist() for v in vecs]})
     df = spark.createDataFrame(pdf).select("id", F.col("v").cast("array<float>").alias("v"))
+    ref = {i: [float(x) for x in v] for i, v in enumerate(vecs)}
     for cap in (None, 7):
-        kw = dict(n_centroids=5, nprobe=2, k=3, exclude_self=True, max_cell_size=cap)
-        expr = knn_join(df, df, "id", "id", "v", score="expression", **kw).toPandas()
-        cg = knn_join(df, df, "id", "id", "v", score="cogroup", **kw).toPandas()
-        pd.testing.assert_frame_equal(expr, cg)
-        assert (expr.cosine == cg.cosine).all(), cap
+        kw = dict(n_centroids=5, nprobe=2, k=3)
+        cg = knn_join(
+            df, df, "id", "id", "v", exclude_self=True, max_cell_size=cap, **kw
+        ).toPandas()
+        _assert_rows_equal(cg, _ref_ivf(ref, range(90), cap=cap, **kw))
 
 
 def test_semantic_dedup_cluster_cap_bounds_candidates(spark):
@@ -1117,26 +1206,37 @@ def test_pq_fit_matches_sliced_kmeans(spark):
     assert cbs[1] == want
 
 
-def test_pq_encode_expr_matches_arrow(spark, monkeypatch):
-    """The unrolled expression encoder and the Arrow kernel must agree
-    bit-for-bit (same dim-major fold, same first-min tie-break)."""
+def _ref_pq_codes(v, cbs):
+    """Per-subspace nearest code: squared L2 as a dim-major fold, the
+    first minimum winning ties."""
+    d = len(cbs[0][0])
+    sub = [v[j * d : (j + 1) * d] for j in range(len(cbs))]
+    return [
+        min(
+            range(len(cb)),
+            key=lambda c: _fold((x - y) * (x - y) for x, y in zip(s, cb[c])),
+        )
+        for s, cb in zip(sub, cbs)
+    ]
+
+
+def test_pq_encode_expr_matches_arrow(spark):
+    """The Arrow encoder must agree bit-for-bit with a pure-Python
+    encoder (same dim-major fold, same first-min tie-break)."""
     import dataclass_array_spark.operators.pq as pqmod
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cbs = pqmod.pq_fit(
         e, "vec_id", "embedding", dim=64, m=4, codes=4, iters=1, train_limit=50
     )
-    monkeypatch.setattr(pqmod, "_ARGMIN_UDF_THRESHOLD", 10**9)
-    expr = {
-        r["vec_id"]: list(r["codes"])
-        for r in pqmod.pq_encode(e, "vec_id", "embedding", cbs).collect()
+    want = {
+        r["vec_id"]: _ref_pq_codes(list(r["embedding"]), cbs) for r in e.collect()
     }
-    monkeypatch.setattr(pqmod, "_ARGMIN_UDF_THRESHOLD", 0)
     arrow = {
         r["vec_id"]: list(r["codes"])
         for r in pqmod.pq_encode(e, "vec_id", "embedding", cbs).collect()
     }
-    assert expr == arrow
+    assert arrow == want
 
 
 def test_pq_topk_recall(spark):
@@ -1365,9 +1465,10 @@ def test_pagerank_star_graph(spark):
     assert sum(out.values()) <= 1.0 + 1e-9
 
 
-def test_pq_adc_expr_matches_arrow(spark, monkeypatch):
-    """The unrolled ADC expression and the Arrow scorer must agree
-    bit-for-bit (same blocked fold order) on full top-k output."""
+def test_pq_adc_matches_python_fold(spark):
+    """The Arrow ADC scorer must agree bit-for-bit with a pure-Python
+    ADC (a fold per subspace, subspace terms added in order) on full
+    top-k output."""
     import dataclass_array_spark.operators.pq as pqmod
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -1375,21 +1476,29 @@ def test_pq_adc_expr_matches_arrow(spark, monkeypatch):
         e, "vec_id", "embedding", dim=64, m=4, codes=4, iters=1, train_limit=50
     )
     q = e.filter(F.col("vec_id") < 5)
+    d = len(cbs[0][0])
+    vecs = {r["vec_id"]: list(r["embedding"]) for r in e.collect()}
+    codes = {i: _ref_pq_codes(v, cbs) for i, v in vecs.items()}
 
-    def run():
-        return {
-            (r["qid"], r["rank"]): (r["nid"], r["dist"])
-            for r in pqmod.pq_topk(
-                q, e, "vec_id", "vec_id", "embedding", cbs, k=4,
-                exclude_self=True,
-            ).collect()
-        }
+    def adc(qv, cs):
+        total = 0.0
+        for j, c in enumerate(cs):
+            total += _fold(
+                (x - y) * (x - y) for x, y in zip(qv[j * d : (j + 1) * d], cbs[j][c])
+            )
+        return total
 
-    monkeypatch.setattr(pqmod, "_ARGMIN_UDF_THRESHOLD", 10**9)
-    expr = run()
-    monkeypatch.setattr(pqmod, "_ARGMIN_UDF_THRESHOLD", 0)
-    arrow = run()
-    assert expr == arrow
+    want = {}
+    for qid in sorted(i for i in vecs if i < 5):
+        ranked = sorted((adc(vecs[qid], cs), n) for n, cs in codes.items() if n != qid)
+        want.update({(qid, r + 1): (n, dist) for r, (dist, n) in enumerate(ranked[:4])})
+    arrow = {
+        (r["qid"], r["rank"]): (r["nid"], r["dist"])
+        for r in pqmod.pq_topk(
+            q, e, "vec_id", "vec_id", "embedding", cbs, k=4, exclude_self=True,
+        ).collect()
+    }
+    assert arrow == want
 
 
 def test_triangle_counts_known_graph(spark):
