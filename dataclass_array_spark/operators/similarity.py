@@ -194,9 +194,10 @@ def _pair_cosine_arrow(dim: int):
     scoring.  Bit-identical to the fold expression (and DuckDB's
     ``list_reduce`` oracle): products are computed in double and
     accumulated dim-major — the sequential left-fold order — and
-    ``sqrt``/division are single IEEE ops.  Tested against a
-    pure-Python fold and against :func:`brute_force_topk` in
-    tests/test_operators.py.
+    ``sqrt``/division are single IEEE ops.  A zero norm gives NULL, as
+    the expression's division by zero does (a NaN would rank first in
+    the descending window).  Tested against a pure-Python fold and
+    against :func:`brute_force_topk` in tests/test_operators.py.
 
     Rationale: the HOF ``aggregate`` lambda pays per-element Catalyst
     interpretation per candidate pair; at corpus-scale candidate
@@ -209,7 +210,9 @@ def _pair_cosine_arrow(dim: int):
         dot = np.zeros(len(Q), dtype=np.float64)
         for d in range(dim):
             dot += Q[:, d] * C[:, d]
-        return dot / (np.sqrt(qn2) * np.sqrt(cn2))
+        den = np.sqrt(qn2) * np.sqrt(cn2)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return pa.array(dot / den, mask=den == 0)
 
     return score
 

@@ -29,6 +29,12 @@ def get_spark(app_name: str = "dataclass_array_spark", cpus: str | None = None) 
       DuckDB oracle and with any other engine.
     - ANSI mode off: the reference's semantics (and TPC-H-style queries)
       expect permissive casts/overflow, and Spark 4.x flipped the default.
+    - Python workers fork from ``dataclass_array_spark._daemon``: pyspark
+      ends every task with ``importlib.invalidate_caches()``, which made
+      the stock zip importers re-parse pyspark.zip and the spark-core jar
+      (0.15-0.45 s a task); at 32 shuffle partitions every Python stage
+      paid that on each of its 32 tasks.  The daemon's importer re-reads
+      an archive only when it changed on disk.
     """
     cpus = cpus or _DEFAULT_CPUS
     builder = (
@@ -41,6 +47,7 @@ def get_spark(app_name: str = "dataclass_array_spark", cpus: str | None = None) 
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.python.daemon.module", "dataclass_array_spark._daemon")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

@@ -22,71 +22,22 @@ class Query:
 
 # The driver's per-round correctness gate checks roughly the first 50
 # registry entries, so the window is ROTATED each round to keep every
-# query under recurring verification.  Round 20 ordering: the
+# query under recurring verification.  Round 21 ordering: the
 # gates whose operator code changed since they were last verified come
-# first — the 8 SRP/IVF/kNN/PQ gates, whose cell ranking, pair scoring
-# and PQ encode/ADC each run one Arrow kernel now — then the rest of
-# the r15 block (the stalest) and the head of the r16 window up to
-# exactly 50.  Past the window, the rest by staleness (r16 window, r17
-# window, r18 window), with the r19 window — the freshest — last.
+# first — the 4 gates on the ivf_topk/srp_lsh_topk pair scorer, which
+# now scores a zero-norm pair NULL — then the rest of the r16 window
+# and the r17 block (the stalest), exactly 50.  Past the window, the
+# r18 and r19 windows, with the rest of the r20 window — the freshest —
+# last.
 # Python dicts preserve insertion order, so this ordering is exactly
 # what ``queries()`` exposes.
 _PRIORITY: Tuple[str, ...] = (
-    # ---- the 8 IVF/PQ/SRP gates (one kernel per IVF/PQ step) ----
+    # ---- the 4 gates on the pair scorer (a zero norm scores NULL now) ----
     "embedding_ann_srp",
     "embedding_ann_ivf",
     "embedding_ann_ivf_kmeans",
     "ann_recall_ivf_docs",
-    "embedding_knn_join",
-    "embedding_knn_join_kmeans",
-    "embedding_ann_pq",
-    "embedding_ann_ivf_pq",
-    # ---- rest of the r15-verified block (stalest) ----
-    "classifier_calibration_docs",
-    "linkage_entity_clusters",
-    "linkage_part_entities",
-    "multimodal_metadata",
-    "nucleus_select_docs",
-    "ols_price_vs_quantity",
-    "outlier_mad_quantity",
-    "pipeline_quality_corpus",
-    "scd2_customer_history",
-    "simhash_fingerprints",
-    "split_train_val_test",
-    "stratified_sample_docs",
-    "streaming_incremental_dedup",
-    "text_stats",
-    "tfidf_top_terms",
-    "triangle_counts_events",
-    "vocab_top_words",
-    "weighted_sample_docs",
-    "winsorize_price_stats",
-    "countmin_token_freq",
-    "streaming_countmin_tokens",
-    "hll_distinct_users",
-    "ols2_price_model",
-    "streaming_hll_users",
-    "dedup_keep_best_docs",
-    "embedding_ann_sq8",
-    "hll_overlap_users",
-    "gap_fill_events",
-    # ---- r16 window, head ----
-    "dsir_weights_docs",
-    "dedup_components",
-    "dedup_incremental_docs",
-    "classifier_ece_docs",
-    "classifier_ece_by_source_docs",
-    "classifier_brier_docs",
-    "classifier_f1_best_docs",
-    "classifier_brier_by_source_docs",
-    "dedup_ngram_jaccard",
-    "streaming_purchase_clicks",
-    "streaming_quality_filter",
-    "streaming_tumbling_hourly",
-    "streaming_session_windows",
-    "streaming_dedup_events",
-    # ---- ==== window boundary (50) ====
-    # ---- rest of the r16 window ----
+    # ---- rest of the r16 window (stalest) ----
     "streaming_user_totals_stateful",
     "streaming_sliding_hourly",
     "streaming_decontam_docs",
@@ -100,7 +51,7 @@ _PRIORITY: Tuple[str, ...] = (
     "q11_important_parts",
     "q16_supplier_counts",
     "q20_promotion_suppliers",
-    # ---- r17 window, minus the shape and IVF/PQ gates moved above ----
+    # ---- r17 window, minus the shape and IVF/PQ gates moved out ----
     "hilbert_orders_layout",
     "zorder_orders_layout",
     "hilbert3d_orders_layout",
@@ -134,6 +85,7 @@ _PRIORITY: Tuple[str, ...] = (
     "classifier_ks_docs",
     "classifier_auc_docs",
     "classifier_pr_docs",
+    # ---- ==== window boundary (50) ====
     # ---- r18 window ----
     "lm_quality_docs",
     "bigram_lm_docs",
@@ -185,7 +137,7 @@ _PRIORITY: Tuple[str, ...] = (
     "profile_lineitem",
     "q1_pricing_summary",
     "q3_shipping_priority",
-    # ---- r19 window, minus embedding_ann_srp (freshest: verified in r19) ----
+    # ---- r19 window, minus embedding_ann_srp ----
     "shape_vectorize",
     "shape_vectorize_mat",
     "shape_mask_filter",
@@ -235,6 +187,53 @@ _PRIORITY: Tuple[str, ...] = (
     "kcore_user_states",
     "lang_id_docs",
     "classifier_train_docs",
+    # ---- rest of the r20 window (freshest: verified in r20) ----
+    "embedding_knn_join",
+    "embedding_knn_join_kmeans",
+    "embedding_ann_pq",
+    "embedding_ann_ivf_pq",
+    "classifier_calibration_docs",
+    "linkage_entity_clusters",
+    "linkage_part_entities",
+    "multimodal_metadata",
+    "nucleus_select_docs",
+    "ols_price_vs_quantity",
+    "outlier_mad_quantity",
+    "pipeline_quality_corpus",
+    "scd2_customer_history",
+    "simhash_fingerprints",
+    "split_train_val_test",
+    "stratified_sample_docs",
+    "streaming_incremental_dedup",
+    "text_stats",
+    "tfidf_top_terms",
+    "triangle_counts_events",
+    "vocab_top_words",
+    "weighted_sample_docs",
+    "winsorize_price_stats",
+    "countmin_token_freq",
+    "streaming_countmin_tokens",
+    "hll_distinct_users",
+    "ols2_price_model",
+    "streaming_hll_users",
+    "dedup_keep_best_docs",
+    "embedding_ann_sq8",
+    "hll_overlap_users",
+    "gap_fill_events",
+    "dsir_weights_docs",
+    "dedup_components",
+    "dedup_incremental_docs",
+    "classifier_ece_docs",
+    "classifier_ece_by_source_docs",
+    "classifier_brier_docs",
+    "classifier_f1_best_docs",
+    "classifier_brier_by_source_docs",
+    "dedup_ngram_jaccard",
+    "streaming_purchase_clicks",
+    "streaming_quality_filter",
+    "streaming_tumbling_hourly",
+    "streaming_session_windows",
+    "streaming_dedup_events",
 )
 
 

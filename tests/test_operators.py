@@ -317,6 +317,34 @@ def test_ivf_topk_full_probe_equals_brute_force(spark):
     assert (exact.cosine == approx.cosine).all()  # exact, not allclose
 
 
+def test_pair_scorer_zero_norm_is_null(spark):
+    """A zero-norm vector has no cosine: the Arrow pair scorer returns
+    NULL, as the ``cosine`` expression does, so ivf_topk ranks it last
+    like brute_force_topk.  A NaN would rank first in the descending
+    window."""
+    from dataclass_array_spark.operators.similarity import _score_pairs, cosine, ivf_topk
+
+    rng = np.random.RandomState(43)
+    vecs = rng.randn(30, 8)
+    vecs[17] = 0.0
+    pdf = pd.DataFrame({"id": range(30), "v": [v.tolist() for v in vecs]})
+    df = spark.createDataFrame(pdf).select("id", F.col("v").cast("array<float>").alias("v"))
+    q = df.filter(F.col("id") % 10 == 0)
+    exact = brute_force_topk(q, df, "id", "id", "v", k=3).toPandas()
+    approx = ivf_topk(q, df, "id", "id", "v", n_centroids=4, nprobe=4, k=3).toPandas()
+    assert 17 not in set(approx.nid)
+    pd.testing.assert_frame_equal(exact.reset_index(drop=True), approx.reset_index(drop=True))
+
+    pairs = spark.createDataFrame(
+        [(0, 17, [1.0] * 8, [0.0] * 8, 8.0, 0.0), (0, 1, [1.0] * 8, [2.0] * 8, 8.0, 32.0)],
+        "qid long, nid long, qv array<double>, cv array<double>, qn2 double, cn2 double",
+    )
+    expr = cosine(F.col("qv"), F.col("cv"), F.col("qn2"), F.col("cn2"))
+    want = {r.nid: r.c for r in pairs.select("nid", expr.alias("c")).collect()}
+    got = {r.nid: r.cosine for r in _score_pairs(pairs, 8).collect()}
+    assert got == want and got[17] is None
+
+
 def test_knn_join_cell_cap(spark):
     """max_cell_size bounds right-side candidates per cell (keep lowest
     ids); a generous cap must change nothing, and cap=1 must return only
