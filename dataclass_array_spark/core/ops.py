@@ -1,21 +1,24 @@
 """Module-level combination ops — the reference's ``ops.py`` re-expressed
-as unions (reference `ops.py:90-121`).
+on views (reference `ops.py:90-121`).
 
-``concat`` is UNION ALL of the inputs' frames with rowid offsetting;
-``stack`` adds a new batch dim.  Both are narrow (no shuffle): Spark's
-union just concatenates partition lists.
+``concat`` joins the inputs' C-orders along axis 0 and ``stack`` along a
+new leading dim; another axis is a transposed view of that.  Inputs over
+one base frame become the pieces of one view of it (see
+``core/table.py``), so the result scans that base once.  Inputs over
+different bases are UNION ALL-ed with rowid offsets, which is narrow (no
+shuffle): Spark's union just concatenates partition lists.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Sequence, Tuple
 
 from pyspark.sql import functions as F
 
-from dataclass_array_spark.core.table import DcaTable, ROWID
+from dataclass_array_spark.core.table import DcaTable, ROWID, _size
 
 
-def _check_homogeneous(items: Sequence[DcaTable]) -> type:
+def _check_homogeneous(items: Sequence[DcaTable]) -> None:
     if not items:
         raise ValueError("empty sequence")
     cls = type(items[0])
@@ -28,19 +31,30 @@ def _check_homogeneous(items: Sequence[DcaTable]) -> type:
     from dataclass_array_spark.core.table import assert_same_session
 
     assert_same_session(*items)  # reference assert_same_xnp analog
-    return cls
+
+
+def _joined(items: Sequence[DcaTable], shape: Tuple[int, ...]) -> DcaTable:
+    """The items' C-orders one after another, as a ``shape`` batch with
+    the first item's statics (reference `ops.py:79-83`): the pieces of
+    one view when the items' ``_flat`` forms share a base and have no
+    index table, else UNION ALL of their frames."""
+    flats = [it._flat() for it in items]
+    if all(f._base is flats[0]._base and f._outer is None for f in flats):
+        pieces = [p for f in flats for p in f._pieces if _size(p[1])]
+        return flats[0]._mapped(pieces, None, shape)
+    df, offset = items[0].df, items[0].size
+    for it in items[1:]:
+        df = df.unionByName(it.df.withColumn(ROWID, (F.col(ROWID) + offset).cast("long")))
+        offset += it.size
+    return type(items[0])._wrap(df, shape, items[0]._statics, items[0].spark)
 
 
 def stack(items: Sequence[DcaTable], axis: int = 0) -> DcaTable:
-    """Stack along a NEW batch dim (reference `ops.py:90-106`).
-
-    The inputs' frames are UNION ALL-ed with rowids offset by position, so
-    the axis-0 stack is dense C-order; another axis is a transposed view
-    of that (no shuffle).  Static fields are taken from the first element
-    (reference `ops.py:79-83`).
-    """
+    """Stack along a NEW batch dim (reference `ops.py:90-106`): the axis-0
+    stack joins the items in order, and another axis is a transposed
+    view of it."""
     items = list(items)
-    cls = _check_homogeneous(items)
+    _check_homogeneous(items)
     base = items[0]
     ndim = base.ndim + 1
     axis = axis if axis >= 0 else axis + ndim
@@ -49,11 +63,7 @@ def stack(items: Sequence[DcaTable], axis: int = 0) -> DcaTable:
     for it in items[1:]:
         if it.shape != base.shape:
             raise ValueError(f"stack: shapes differ {it.shape} != {base.shape}")
-    sz = base.size
-    df = base.df
-    for i, it in enumerate(items[1:], 1):
-        df = df.unionByName(it.df.withColumn(ROWID, (F.col(ROWID) + i * sz).cast("long")))
-    out = cls._wrap(df, (len(items),) + base.shape, base._statics, base.spark)
+    out = _joined(items, (len(items),) + base.shape)
     if axis != 0:
         # move new dim 0 → axis: an einops transpose view
         names = [f"d{i}" for i in range(ndim)]
@@ -64,12 +74,12 @@ def stack(items: Sequence[DcaTable], axis: int = 0) -> DcaTable:
 
 
 def concat(items: Sequence[DcaTable], axis: int = 0) -> DcaTable:
-    """Concatenate along an EXISTING batch dim (reference `ops.py:109-121`)
-    — UNION ALL of the inputs' frames with cumulative rowid offsets (axis
-    0); another axis concatenates transposed views on axis 0 and returns
-    the transposed-back view of the result."""
+    """Concatenate along an EXISTING batch dim (reference `ops.py:109-121`):
+    the axis-0 concat joins the items in order; another axis concatenates
+    transposed views on axis 0 and returns the transposed-back view of
+    the result."""
     items = list(items)
-    cls = _check_homogeneous(items)
+    _check_homogeneous(items)
     base = items[0]
     ndim = base.ndim
     if ndim == 0:
@@ -87,9 +97,4 @@ def concat(items: Sequence[DcaTable], axis: int = 0) -> DcaTable:
     for it in items[1:]:
         if it.shape[1:] != rest:
             raise ValueError(f"concat: trailing shapes differ {it.shape[1:]} != {rest}")
-    df, offset = base.df, base.size
-    for it in items[1:]:
-        df = df.unionByName(it.df.withColumn(ROWID, (F.col(ROWID) + offset).cast("long")))
-        offset += it.size
-    total0 = sum(it.shape[0] for it in items)
-    return cls._wrap(df, (total0,) + rest, base._statics, base.spark)
+    return _joined(items, (sum(it.shape[0] for it in items),) + rest)

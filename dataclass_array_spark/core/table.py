@@ -7,23 +7,32 @@ Reference semantics re-expressed on a DataFrame (design per SURVEY.md §1.4):
   batch shape) plus one column per array field; the logical batch shape is
   wrapper metadata.  (reference: per-field ndarrays sharing a batch shape,
   `array_dataclass.py:164-214`)
-- An instance is a strided view over that frame, its *base*: numpy's
-  ``(offset, shape, strides)`` in rowid units.  Basic indexing, tuple
-  reshape of a C-contiguous view, einops split/permute/merge and
-  ``broadcast_to`` only compute a new view — integer arithmetic, no
-  DataFrame call (reference `array_dataclass.py:333-390`).  The view's
-  own frame is built once, by ``_materialize``, when ``.df`` is first
-  read.
+- An instance is a view over that frame, its *base*, composed on the
+  driver from three small parts: *pieces*, strided maps over the base
+  (numpy's ``(offset, shape, strides)`` in rowid units) whose C-orders
+  concatenate; an optional *index table* that picks leading entries of
+  that concatenation (masks and gathers, one row per picked entry); and
+  the view's own strides over the result.  Basic indexing, reshape,
+  einops split/permute/merge and ``broadcast_to`` change the strides;
+  ``concat`` and ``stack`` of items over one base join their pieces;
+  masks and gathers compose into the index table — integer arithmetic
+  on the driver, no DataFrame call, and nothing held per element
+  (reference `array_dataclass.py:333-390`).  The view's own frame is
+  built once, by ``_materialize``, when ``.df`` is first read.
 - Static fields are wrapper metadata, untouched by every op (reference
   `array_dataclass.py:196-198`).
 - Nested DcaTable fields are struct columns, recursed into by field ops
   (reference ``_map_field`` dc recursion, `array_dataclass.py:740-770`).
 
-Scale notes: a view's frame is one filter and one projection of its base
-(no shuffle) unless it broadcasts, when it is ``range(size) ⋈ base``;
-boolean-mask re-densification and gather are a range-repartition and an
-equi-join respectively — all AQE-managed, all the minimum the semantics
-admit.
+Scale notes: a view's frame is one scan of its base (no shuffle): one
+filter the scan can prune on, an ``explode`` where a base row is more
+than one view row (two pieces, a broadcast dim), and one broadcast join
+against the index table when there is one.  A broadcast dim of size
+``d`` is a ``d``-entry array per kept row (at most 2**31 - 16), and a
+kept row's copies are made in the task that holds it: a few rows
+broadcast to a large shape run in few tasks.  A Column-predicate mask
+re-densifies its rowids with the two-pass numbering of
+``attach_dense_rowid``.
 Every driver↔Spark data move goes through one Arrow encoder and one
 decoder (bottom of this module).  Ingest — construction, ``replace`` with
 numpy values, and the mask/gather/rowid-offset index tables — builds a
@@ -42,7 +51,10 @@ its result with ``_arrow_field``.
 
 from __future__ import annotations
 
+import bisect
 import dataclasses
+import functools
+import itertools
 import math
 from typing import Any, Callable, Dict, Iterator, List, Optional, Sequence, Tuple, Union
 
@@ -137,6 +149,138 @@ def _idiv(a: Column, b) -> Column:
     a quotient half-ulp under an integer would round up and silently
     misindex a row."""
     return F.call_function("div", a, F.lit(b) if isinstance(b, int) else b)
+
+
+# A strided map ``(offset, shape, strides)`` sends C-order rowid ``rid`` of
+# a ``shape`` batch to ``offset + Σ idx_k · stride_k`` of a flat source.
+# Strides are never negative; a size-1 dim has stride 0 (``_view_strides``).
+
+
+def _dense(offset: int, shape: Sequence[int], strides: Sequence[int], n_src: int) -> bool:
+    """Whether the map is the identity of an ``n_src``-position source."""
+    return offset == 0 and _size(shape) == n_src and tuple(strides) == _view_strides(shape, _strides(shape))
+
+
+def _source_size(pieces: Sequence[tuple], outer: Optional[tuple]) -> int:
+    """Positions in the source of a view's strides: the index table's
+    rows times the entries under each, else the pieces' total size."""
+    return len(outer[0]) * outer[1] if outer is not None else sum(_size(p[1]) for p in pieces)
+
+
+def _top(offset: int, shape: Sequence[int], strides: Sequence[int]) -> int:
+    """The last source position the map reaches."""
+    return offset + sum((d - 1) * s for d, s in zip(shape, strides))
+
+
+def _sum(terms: List[Column]) -> Column:
+    return functools.reduce(lambda a, b: a + b, terms) if terms else F.lit(0)
+
+
+def _any(preds: List[Column]) -> Column:
+    return functools.reduce(lambda a, b: a | b, preds)
+
+
+def _forward(rid: Column, offset: int, shape: Sequence[int], strides: Sequence[int]) -> Column:
+    """The source position of C-order rowid ``rid``."""
+    terms = [F.lit(offset)] if offset else []
+    for k, (d, s, c) in enumerate(zip(shape, strides, _strides(shape))):
+        if s:
+            idx = rid if c == 1 else _idiv(rid, c)
+            idx = idx if k == 0 else idx % d  # rid < size bounds the leading index
+            terms.append(idx if s == 1 else idx * s)
+    return _sum(terms)
+
+
+def _inverse(x: Column, offset: int, shape: Sequence[int], strides: Sequence[int],
+             n_src: int) -> Tuple[Optional[Column], Column]:
+    """``(keep, rid)``: whether the map reaches source position ``x``, and
+    the C-order rowid that reaches it with every stride-0 dim at index 0.
+    ``x - offset`` decomposes over the non-zero strides in descending
+    order into in-range indices with no remainder.  ``keep`` is a rowid
+    range first, so a scan can prune on it, and is None when the map
+    reaches every source position."""
+    reach = sorted(((s, d, c) for d, s, c in zip(shape, strides, _strides(shape)) if s), reverse=True)
+    keep = None
+    if _size([d for _, d, _ in reach]) != n_src:
+        keep = x.between(offset, _top(offset, shape, strides))
+    r, rid = (x - offset) if offset else x, []
+    for s, d, c in reach:
+        idx = r if s == 1 else _idiv(r, s)
+        rid.append(idx if c == 1 else idx * c)
+        keep = None if keep is None else keep & (idx < d)
+        r = None if s == 1 else r % s  # a stride of 1 is the last, and leaves no remainder
+    if keep is not None and r is not None:
+        keep = keep & (r == 0)
+    return keep, _sum(rid)
+
+
+def _compose(piece: tuple, offset: int, shape: Sequence[int], strides: Sequence[int]) -> Optional[tuple]:
+    """The map over the base that is ``(offset, shape, strides)`` over the
+    C-order of ``piece`` (a map over the base with no stride-0 dim > 1),
+    or None when a step of it carries across two dims of the piece that
+    are not contiguous in the base (numpy's rule for a reshape without a
+    copy)."""
+    dims: List[List[int]] = []  # [size, base stride], size-1 dims dropped, contiguous ones merged
+    for d, s in zip(piece[1], piece[2]):
+        if d > 1 and dims and dims[-1][1] == s * d:
+            dims[-1] = [dims[-1][0] * d, s]
+        elif d > 1:
+            dims.append([d, s])
+    cs = _strides([d for d, _ in dims])
+    digit = [offset // c % d for c, (d, _) in zip(cs, dims)]
+    start = piece[0] + sum(g * s for g, (_, s) in zip(digit, dims))
+    out = []
+    for d, s in zip(shape, strides):
+        if d == 1:
+            out.append(0)
+            continue
+        m = next(m for m, c in enumerate(cs) if c <= s)
+        digit[m] += s // cs[m] * (d - 1)
+        if s % cs[m] or digit[m] >= dims[m][0]:
+            return None
+        out.append(s // cs[m] * dims[m][1])
+    return start, tuple(shape), _view_strides(shape, out)
+
+
+def _pieces_of(offset: int, shape: Sequence[int], strides: Sequence[int], pieces: Sequence[tuple]) -> Optional[tuple]:
+    """Maps over the base whose concatenated C-orders are the map
+    ``(offset, shape, strides)`` over the concatenated C-orders of
+    ``pieces``; None for a broadcast dim, for rows that interleave across
+    a piece boundary, or when :func:`_compose` fails.  Rows that fit in
+    one piece are cut in runs, and at most one row straddles each
+    boundary, so the result has O(len(pieces)) maps per dim, whatever
+    the sizes."""
+    if any(d > 1 and not s for d, s in zip(shape, strides)):
+        return None
+    ends = list(itertools.accumulate(_size(p[1]) for p in pieces))
+
+    def cut(offset, shape, strides):
+        i = bisect.bisect_right(ends, offset)
+        top = _top(offset, shape, strides)
+        if top < ends[i]:
+            p = _compose(pieces[i], offset - ends[i] + _size(pieces[i][1]), shape, strides)
+            return None if p is None else [p]
+        (d0, *rest), (s0, *rest_s) = shape, strides
+        if d0 == 1:
+            return cut(offset, rest, rest_s)
+        if top - (d0 - 1) * s0 - offset >= s0:
+            return None  # rows interleave: a piece boundary would cut each one
+        out, j = [], 0
+        while j < d0:
+            o = offset + j * s0
+            i = bisect.bisect_right(ends, o)
+            run = min(d0, (ends[i] - 1 - top + (d0 - 1) * s0) // s0 + 1) - j
+            sub = cut(o, [run] + rest, [s0] + rest_s) if run > 0 else cut(o, rest, rest_s)
+            if sub is None:
+                return None
+            out += sub
+            j += max(run, 1)
+        return out
+
+    if _size(shape) == 0:
+        return ()
+    out = cut(offset, list(shape), list(strides))
+    return None if out is None else tuple(out)
 
 
 class _DcaMeta(type):
@@ -395,14 +539,15 @@ class DcaTable(metaclass=_DcaMeta):
         self._bind(_local_frame(spark, cols, cls.spark_schema()), batch_shape, statics, spark)
 
     def _bind(self, df: DataFrame, shape: Tuple[int, ...], statics: Dict[str, Any],
-              spark: SparkSession, view: Optional[Tuple[int, int, Tuple[int, ...]]] = None):
+              spark: SparkSession, view: Optional[tuple] = None):
         """``df`` is the base frame, dense C-order in ``__rowid``; ``view``
-        is ``(base_size, offset, strides)`` over it, the identity view if
-        omitted."""
+        is ``(base_size, pieces, outer, offset, strides)`` over it (see
+        :meth:`_mapped`), the identity view if omitted."""
         self._base = df
         self._shape = tuple(shape)
-        self._base_size, self._offset, self._strides = view or (
-            _size(shape), 0, _view_strides(shape, _strides(shape))
+        n = _size(shape)
+        self._base_size, self._pieces, self._outer, self._offset, self._strides = view or (
+            n, ((0, (n,), _view_strides((n,), (1,))),), None, 0, _view_strides(shape, _strides(shape))
         )
         self._frame = None
         self._statics = dict(statics)
@@ -487,18 +632,42 @@ class DcaTable(metaclass=_DcaMeta):
                 )
         return val
 
-    # ---------------- the strided view and its one materializer ----------------
+    # ---------------- the view and its one materializer ----------------
 
     def _view(self, shape: Sequence[int], offset: int, strides: Sequence[int]) -> "DcaTable":
-        """A view over this object's base frame."""
+        """New strides over this view's source: its pieces and index table."""
+        return self._mapped(self._pieces, self._outer, shape, offset, strides)
+
+    def _mapped(self, pieces, outer, shape: Sequence[int], offset: int = 0,
+                strides: Optional[Sequence[int]] = None) -> "DcaTable":
+        """A view over this object's base frame: ``(offset, shape, strides)``
+        (C-order by default) over the concatenated C-orders of ``pieces``,
+        each a strided map over the base, picked through the index table
+        ``outer`` when it is given."""
         out = type(self).__new__(type(self))
         shape = tuple(shape)
-        view = (self._base_size, offset, _view_strides(shape, strides))
+        strides = _view_strides(shape, _strides(shape) if strides is None else strides)
+        view = (self._base_size, tuple(pieces), outer, offset, strides)
         out._bind(self._base, shape, self._statics, self._spark, view)
         return out
 
     def _contiguous(self) -> bool:
         return self.size == 0 or self._strides == _view_strides(self._shape, _strides(self._shape))
+
+    def _flat(self) -> "DcaTable":
+        """This batch as a view whose C-order is its source's: itself when
+        it is one, else its strides cut into pieces of the base (no
+        DataFrame call), else a view of its materialized frame."""
+        if _dense(self._offset, self._shape, self._strides, _source_size(self._pieces, self._outer)):
+            return self
+        if self._outer is None:
+            pieces = _pieces_of(self._offset, self._shape, self._strides, self._pieces)
+            if pieces is not None:
+                return self._mapped(pieces, None, self._shape)
+        return self._rebased()
+
+    def _rebased(self) -> "DcaTable":
+        return type(self)._wrap(self.df, self._shape, self._statics, self._spark)
 
     @property
     def df(self) -> DataFrame:
@@ -509,45 +678,68 @@ class DcaTable(metaclass=_DcaMeta):
         return self._frame
 
     def _materialize(self) -> DataFrame:
-        """The one builder of a view's frame; the identity view is its base.
-        Without a broadcast dim every base row is at most one view row:
-        one filter keeps the rows whose ``__rowid - offset`` decomposes,
-        over the non-zero strides in descending order, into in-range
-        indices with no remainder (a view as large as its base holds every
-        row and needs none), and one projection writes the C-order rowid
-        of those indices.  A broadcast dim (stride 0) repeats base
-        rows, so the frame is ``range(size) ⋈ base`` on the source rowid
-        of :meth:`_source_rowid`."""
-        shape, base = self._shape, self._base
-        if self._contiguous() and self._offset == 0 and self.size == self._base_size:
+        """Every view's frame comes from here, as one scan of the base;
+        the identity view is the base itself.
+
+        1. One filter keeps the base rows some piece holds (a rowid
+           range and a no-remainder stride decomposition per piece) and
+           gives each kept row its position in the pieces' concatenation;
+           when there are several pieces, one ``explode`` of the kept
+           row's hits (a base row two pieces hold is two rows).
+        2. An index table (masks and gathers) is at most one broadcast
+           join, on ``position // rest``.
+        3. The view's strides over that source are one more filter and
+           projection, and one ``posexplode`` per broadcast dim (stride
+           0) of ``d`` copies of the kept row's rowid: the copy's index
+           moves the row's position along that dim.  The array refers to
+           the row, so Catalyst cannot fold it into a literal on the
+           driver.  It has ``d`` entries (Spark caps an array at
+           2**31 - 16), and the task that holds a kept row makes all of
+           its copies, so a few rows broadcast to a large shape run in
+           few tasks."""
+        base, pieces, outer = self._base, self._pieces, self._outer
+        offset, shape, strides = self._offset, self._shape, self._strides
+        if self.size == 0:
+            return base.filter(F.lit(False))
+        n_src = _source_size(pieces, outer)
+        dense = _dense(offset, shape, strides, n_src)
+        if outer is None and dense and len(pieces) == 1 and _dense(*pieces[0], self._base_size):
             return base
-        if any(s == 0 and d > 1 for d, s in zip(shape, self._strides)):
-            rng = self._spark.range(self.size).withColumnRenamed("id", "__new_rowid")
-            return (
-                rng.withColumn(ROWID, self._source_rowid(F.col("__new_rowid")))
-                .join(base, on=ROWID, how="inner")
-                .drop(ROWID)
-                .withColumnRenamed("__new_rowid", ROWID)
-            )
-        r = F.col(ROWID) - self._offset
-        keep, rid = F.lit(self.size > 0) & (r >= 0), F.lit(0)
-        for s, d, c in sorted(zip(self._strides, shape, _strides(shape)), reverse=True):
-            if s == 0:
-                break  # the rest are size-1 dims, whose index is 0
-            idx = _idiv(r, s)
-            keep, rid, r = keep & (idx < d), rid + idx * c, r % s
-        if self.size < self._base_size:  # else the view holds every base row
-            base = base.filter(keep & (r == 0))
-        return base.withColumn(ROWID, rid.cast("long"))
+        hits, start = [], 0
+        for p in pieces:
+            keep, rid = _inverse(F.col(ROWID), *p, self._base_size)
+            hits.append((keep, rid + start if start else rid))
+            start += _size(p[1])
+        if all(k is not None for k, _ in hits):
+            keep = _any([k for k, _ in hits])
+            if len(hits) > 1:  # the pieces' rowid ranges on their own, which a scan can prune on
+                keep = _any([F.col(ROWID).between(p[0], _top(*p)) for p in pieces]) & keep
+            base = base.filter(keep)
+        pos = hits[0][1]
+        if len(hits) > 1:
+            arr = F.array(*[r if k is None else F.when(k, r) for k, r in hits])
+            base, pos = base.withColumn("__pos", F.explode(F.array_compact(arr))), F.col("__pos")
+        if outer is not None:
+            table, rest = outer
+            idx = _local_frame(self._spark, {"__old": table, "__new": np.arange(len(table), dtype=np.int64)})
+            base = base.withColumn("__old", _idiv(pos, rest)).join(F.broadcast(idx), on="__old")
+            pos = F.col("__new") * rest + pos % rest
+        reps = []
+        if not dense:
+            keep, pos = _inverse(pos, offset, shape, strides, n_src)
+            if keep is not None:
+                base = base.filter(keep)
+            reps = [(f"__rep{k}", d, c) for k, (d, s, c) in enumerate(zip(shape, strides, _strides(shape))) if d > 1 and s == 0]
+            for rep, d, c in reps:  # d copies of the row, an array of its own rowid (never a literal)
+                base = base.select("*", F.posexplode(F.array_repeat(F.col(ROWID), d)).alias(rep, "__copy")).drop("__copy")
+                pos = pos + F.col(rep) * c
+        return base.withColumn(ROWID, pos.cast("long")).drop("__pos", "__old", "__new", *[rep for rep, _, _ in reps])
 
     def _source_rowid(self, rid: Column) -> Column:
-        """The forward index map: the base rowid behind the view's C-order
-        rowid ``rid``, ``offset + Σ idx_k · stride_k``."""
-        src = F.lit(self._offset)
-        for d, s, c in zip(self._shape, self._strides, _strides(self._shape)):
-            if s:
-                src = src + (_idiv(rid, c) % d) * s
-        return src.cast("long")
+        """The forward index map of a view with one piece and no index
+        table: the base rowid behind the view's C-order rowid ``rid``."""
+        (piece,) = self._pieces
+        return _forward(_forward(rid, self._offset, self._shape, self._strides), *piece).cast("long")
 
     # ---------------- introspection ----------------
 
@@ -587,11 +779,11 @@ class DcaTable(metaclass=_DcaMeta):
     # ---------------- shape ops: views over the base frame ----------------
 
     def reshape(self, shape: Union[Tuple[int, ...], str], **axes_length: int) -> "DcaTable":
-        """A view, as in numpy (reference `array_dataclass.py:333-369`): a
-        tuple reshape of a C-contiguous view only changes shape and
-        strides; any other tuple reshape materializes first, where numpy
-        copies.  A string is einops-style ``'b h w -> b (h w)'``, see
-        :meth:`_reshape_einops`."""
+        """A view (reference `array_dataclass.py:333-369`): a tuple reshape
+        of a C-contiguous view only changes shape and strides; any other
+        tuple reshape is C-order strides over :meth:`_flat`'s pieces,
+        where numpy copies.  A string is einops-style
+        ``'b h w -> b (h w)'``, see :meth:`_reshape_einops`."""
         if isinstance(shape, str):
             return self._reshape_einops(shape, axes_length)
         shape = tuple(shape)
@@ -608,9 +800,8 @@ class DcaTable(metaclass=_DcaMeta):
             raise ShapeError(f"cannot reshape size {n} into {shape}")
         if shape == self._shape:
             return self._view(shape, self._offset, self._strides)
-        if self._contiguous():
-            return self._view(shape, self._offset, _strides(shape))
-        return type(self)._wrap(self.df, shape, self._statics, self._spark)
+        src = self if self._contiguous() else self._flat()
+        return src._view(shape, src._offset, _strides(shape))
 
     def flatten(self) -> "DcaTable":
         return self.reshape((-1,))
@@ -652,8 +843,10 @@ class DcaTable(metaclass=_DcaMeta):
 
     def broadcast_to(self, shape: Tuple[int, ...]) -> "DcaTable":
         """Tile batch dims as a view (reference `array_dataclass.py:375-380`):
-        new leading dims and size-1 dims get stride 0, so the frame is the
-        ``range(new_size) ⋈ base`` join of :meth:`_materialize`."""
+        new leading dims and size-1 dims get stride 0, which
+        :meth:`_materialize` repeats with one ``posexplode`` per dim: a
+        dim may have at most 2**31 - 16 entries, and each kept row's
+        copies are made in one task."""
         shape = tuple(int(d) for d in shape)
         old = self._shape
         if len(shape) < len(old):
@@ -665,11 +858,14 @@ class DcaTable(metaclass=_DcaMeta):
         return self._view(shape, self._offset, (0,) * pad + self._strides)
 
     def __getitem__(self, indices) -> "DcaTable":
-        """Numpy basic indexing on batch dims (int/slice/Ellipsis/None
-        tuples — reference `array_dataclass.py:382-390`, `:1017-1035`) is
-        a view: a new offset, shape and strides.  Boolean masks (→ filter
-        + dense reindex) and integer-array gathers (→ equi-join) build a
-        new frame — reference README "Numpy slicing/indexing/masking"."""
+        """Numpy indexing on batch dims, every form a view (reference
+        `array_dataclass.py:382-390`, `:1017-1035`, README "Numpy
+        slicing/indexing/masking").  Basic indexing (int/slice/Ellipsis/
+        None tuples) is a new offset, shape and strides.  A boolean mask
+        or an integer-array gather is an index table over the view's
+        leading dims, composed with the one it already has (see
+        :meth:`_take`).  A Column predicate is the distributed filter
+        (:meth:`_mask_column`), which builds a frame."""
         if isinstance(indices, (np.ndarray, list)) and np.asarray(indices).dtype == bool:
             return self._mask(np.asarray(indices))
         if isinstance(indices, Column):
@@ -729,7 +925,7 @@ class DcaTable(metaclass=_DcaMeta):
                 f"mask shape {mask.shape} != leading batch dims {self._shape[:k]}"
             )
         sel = np.flatnonzero(mask.reshape(-1))
-        return self._take_outer(sel, (len(sel),), self._shape[k:])
+        return self._take(sel, (len(sel),), k)
 
     def _mask_column(self, pred: Column) -> "DcaTable":
         """Filter by a Column predicate — the distributed mask path.
@@ -740,8 +936,8 @@ class DcaTable(metaclass=_DcaMeta):
         return type(self)._wrap(out, (n,), self._statics, self._spark)
 
     def _gather(self, idx: np.ndarray) -> "DcaTable":
-        """Integer-array indexing along axis 0 — an equi-join in disguise
-        (reference gather, SURVEY §2 #15)."""
+        """Integer-array indexing along axis 0 (reference gather, SURVEY
+        §2 #15): an index table of ``idx.size`` rows, see :meth:`_take`."""
         if self.ndim == 0:
             raise IndexError("cannot gather from scalar batch")
         d0 = self._shape[0]
@@ -752,24 +948,23 @@ class DcaTable(metaclass=_DcaMeta):
             raise IndexError(
                 f"gather index {int(flat[bad][0])} out of bounds for axis 0 size {d0}"
             )
-        return self._take_outer(norm, tuple(idx.shape), self._shape[1:])
+        return self._take(norm, tuple(idx.shape), 1)
 
-    def _take_outer(self, old: np.ndarray, outer: Tuple[int, ...], rest: Tuple[int, ...]) -> "DcaTable":
-        """Rows whose outer index (``rowid // size(rest)``) is ``old[j]``
-        become outer index ``j``: a broadcast join against an index table
-        built by :func:`_local_frame`."""
-        rest_sz = _size(rest)
-        idx_df = _local_frame(
-            self._spark, {"__old": old.astype(np.int64), "__new": np.arange(len(old), dtype=np.int64)}
-        )
-        rid = F.col(ROWID)
-        out = (
-            self.df.withColumn("__old", _idiv(rid, rest_sz))
-            .join(F.broadcast(idx_df), on="__old", how="inner")
-            .withColumn(ROWID, (F.col("__new") * rest_sz + rid % rest_sz).cast("long"))
-            .drop("__old", "__new")
-        )
-        return type(self)._wrap(out, outer + tuple(rest), self._statics, self._spark)
+    def _take(self, sel: np.ndarray, outer: Tuple[int, ...], k: int) -> "DcaTable":
+        """The batch whose ``outer``-shaped leading entries are the view's
+        leading-``k``-dims entries at flat indices ``sel``: an index table
+        over the C-order of :meth:`_flat`, with ``len(sel)`` rows.  An
+        index table there already is composed with it when its rows
+        split evenly into the new ones, else the view is rebased on its
+        frame first."""
+        src, rest = self._flat(), _size(self._shape[k:])
+        sel = sel.astype(np.int64)
+        if src._outer is not None and rest and src._outer[1] % rest == 0:
+            table, r0 = src._outer
+            sel = table[sel * rest // r0] * (r0 // rest) + sel * rest % r0 // rest
+        elif src._outer is not None:
+            src = src._rebased()
+        return src._mapped(src._pieces, (sel, rest), outer + self._shape[k:])
 
     # ---- relational passthroughs (§2.B surfaced on the wrapper):
     # thin delegations so users never need to drop to .df for the
@@ -923,7 +1118,8 @@ class DcaTable(metaclass=_DcaMeta):
     # parquet + JSON sidecar carrying logical shape and static fields.
 
     def save(self, path: str, mode: str = "overwrite") -> None:
-        """Write parquet + a `_dca_meta.json` sidecar (shape metadata).
+        """Write parquet + a `_dca_meta.json` sidecar: shape metadata and
+        the frame's schema, which :meth:`load` reads with.
 
         The sidecar goes through the Hadoop FileSystem API, not local
         ``open()`` — so it lands next to the parquet on ANY supported
@@ -931,21 +1127,27 @@ class DcaTable(metaclass=_DcaMeta):
         where ``path`` is rarely driver-local."""
         import json
 
-        self.df.write.mode(mode).parquet(path)
-        _, meta = self.tree_flatten()
+        df, meta = self.tree_flatten()
+        df.write.mode(mode).parquet(path)
+        meta["schema"] = df.schema.json()
         _hadoop_write_text(
             self._spark, f"{path.rstrip('/')}/_dca_meta.json", json.dumps(meta)
         )
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "DcaTable":
+        """Read what :meth:`save` wrote.  The recorded schema spares the
+        Parquet footer-inference job; a sidecar without one (written
+        before schemas were recorded) still infers."""
         import json
 
-        df = spark.read.parquet(path)
         meta = json.loads(
             _hadoop_read_text(spark, f"{path.rstrip('/')}/_dca_meta.json")
         )
-        return cls.tree_unflatten(df, meta)
+        reader = spark.read
+        if "schema" in meta:
+            reader = reader.schema(T.StructType.fromJson(json.loads(meta["schema"])))
+        return cls.tree_unflatten(reader.parquet(path), meta)
 
     def cache(self) -> "DcaTable":
         """Cache the view's frame and rebase on it: later views of this

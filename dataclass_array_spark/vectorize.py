@@ -295,6 +295,8 @@ def vectorize_method(
                     # vectorization.py:246-282): dims of size 1 repeat —
                     # the broadcast view's forward map turns self's rowid
                     # into the arg's base rowid, the equi-join key
+                    if table._outer is not None or len(table._pieces) != 1:
+                        table = table._rebased()  # the forward map needs one piece
                     view = table.broadcast_to(self.shape)
                     keycol = f"{prefix}rid"
                     adf = view._base.select(F.col(ROWID).alias(keycol), *renamed)

@@ -22,71 +22,24 @@ class Query:
 
 # The driver's per-round correctness gate checks roughly the first 50
 # registry entries, so the window is ROTATED each round to keep every
-# query under recurring verification.  Round 21 ordering: the
-# gates whose operator code changed since they were last verified come
-# first — the 4 gates on the ivf_topk/srp_lsh_topk pair scorer, which
-# now scores a zero-norm pair NULL — then the rest of the r16 window
-# and the r17 block (the stalest), exactly 50.  Past the window, the
-# r18 and r19 windows, with the rest of the r20 window — the freshest —
+# query under recurring verification.  Round 22 ordering: the 7 shape
+# gates come first — their views (concat, stack, masks, gathers) became
+# pieces and an index table over one base scan — then the r18 window
+# (the stalest), exactly 50.  Past the window, the rest of the r18
+# window, the r19 and r20 windows, with the r21 window — the freshest —
 # last.
 # Python dicts preserve insertion order, so this ordering is exactly
 # what ``queries()`` exposes.
 _PRIORITY: Tuple[str, ...] = (
-    # ---- the 4 gates on the pair scorer (a zero norm scores NULL now) ----
-    "embedding_ann_srp",
-    "embedding_ann_ivf",
-    "embedding_ann_ivf_kmeans",
-    "ann_recall_ivf_docs",
-    # ---- rest of the r16 window (stalest) ----
-    "streaming_user_totals_stateful",
-    "streaming_sliding_hourly",
-    "streaming_decontam_docs",
-    "domain_mixture_sample",
-    "pipeline_pretrain_corpus",
-    "tokenize_docs",
-    "token_rarity_docs",
-    "median_quantity_by_flag",
-    "approx_sketches",
-    "q2_min_cost_supplier",
-    "q11_important_parts",
-    "q16_supplier_counts",
-    "q20_promotion_suppliers",
-    # ---- r17 window, minus the shape and IVF/PQ gates moved out ----
-    "hilbert_orders_layout",
-    "zorder_orders_layout",
-    "hilbert3d_orders_layout",
-    "url_dedup_docs",
-    "url_domain_stats_docs",
-    "token_entropy_docs",
-    "embedding_kmeans_clusters",
-    "embedding_kmeans_two_level",
-    "semantic_dedup_auto",
-    "semantic_dedup_embeddings",
-    "semantic_dedup_two_level",
-    "text_cluster_topics",
-    "dedup_embedding_neardup",
-    "pack_ffd_docs",
-    "multimodal_decode",
-    "multimodal_frames",
-    "bloom_filter_orders",
-    "streaming_bloom_orders",
-    "qdigest_quantiles_prices",
-    "streaming_qdigest_prices",
-    "hist_quantiles_prices",
-    "streaming_hist_prices",
-    "pagerank_event_hotspots",
-    "grouped_rank_prices",
-    "bpe_train_docs",
-    "bpe_train_batched_docs",
-    "bpe_encode_docs",
-    "bpe_heldout_encode_docs",
-    "bpe_fertility_langs",
-    "classifier_auc_by_source_docs",
-    "classifier_ks_docs",
-    "classifier_auc_docs",
-    "classifier_pr_docs",
-    # ---- ==== window boundary (50) ====
-    # ---- r18 window ----
+    # ---- the 7 shape gates (their views are one scan of their base now) ----
+    "shape_vectorize",
+    "shape_vectorize_mat",
+    "shape_mask_filter",
+    "shape_gather",
+    "shape_transpose",
+    "shape_slice",
+    "shape_concat_mapfield",
+    # ---- r18 window (stalest) ----
     "lm_quality_docs",
     "bigram_lm_docs",
     "bigram_lm_heldout_docs",
@@ -130,6 +83,7 @@ _PRIORITY: Tuple[str, ...] = (
     "grouping_sets_revenue",
     "join_variants_nulls",
     "json_extract_props",
+    # ---- ==== window boundary (50) ====
     "merge_upsert_customers",
     "ntile_price_quartiles",
     "pii_scrub_docs",
@@ -137,14 +91,7 @@ _PRIORITY: Tuple[str, ...] = (
     "profile_lineitem",
     "q1_pricing_summary",
     "q3_shipping_priority",
-    # ---- r19 window, minus embedding_ann_srp ----
-    "shape_vectorize",
-    "shape_vectorize_mat",
-    "shape_mask_filter",
-    "shape_gather",
-    "shape_transpose",
-    "shape_slice",
-    "shape_concat_mapfield",
+    # ---- r19 window, minus the shape gates ----
     "q5_local_supplier_volume",
     "q6_forecast_revenue",
     "q8_market_share",
@@ -187,7 +134,7 @@ _PRIORITY: Tuple[str, ...] = (
     "kcore_user_states",
     "lang_id_docs",
     "classifier_train_docs",
-    # ---- rest of the r20 window (freshest: verified in r20) ----
+    # ---- rest of the r20 window ----
     "embedding_knn_join",
     "embedding_knn_join_kmeans",
     "embedding_ann_pq",
@@ -234,6 +181,57 @@ _PRIORITY: Tuple[str, ...] = (
     "streaming_tumbling_hourly",
     "streaming_session_windows",
     "streaming_dedup_events",
+    # ---- r21 window (freshest: verified in r21) ----
+    "embedding_ann_srp",
+    "embedding_ann_ivf",
+    "embedding_ann_ivf_kmeans",
+    "ann_recall_ivf_docs",
+    "streaming_user_totals_stateful",
+    "streaming_sliding_hourly",
+    "streaming_decontam_docs",
+    "domain_mixture_sample",
+    "pipeline_pretrain_corpus",
+    "tokenize_docs",
+    "token_rarity_docs",
+    "median_quantity_by_flag",
+    "approx_sketches",
+    "q2_min_cost_supplier",
+    "q11_important_parts",
+    "q16_supplier_counts",
+    "q20_promotion_suppliers",
+    "hilbert_orders_layout",
+    "zorder_orders_layout",
+    "hilbert3d_orders_layout",
+    "url_dedup_docs",
+    "url_domain_stats_docs",
+    "token_entropy_docs",
+    "embedding_kmeans_clusters",
+    "embedding_kmeans_two_level",
+    "semantic_dedup_auto",
+    "semantic_dedup_embeddings",
+    "semantic_dedup_two_level",
+    "text_cluster_topics",
+    "dedup_embedding_neardup",
+    "pack_ffd_docs",
+    "multimodal_decode",
+    "multimodal_frames",
+    "bloom_filter_orders",
+    "streaming_bloom_orders",
+    "qdigest_quantiles_prices",
+    "streaming_qdigest_prices",
+    "hist_quantiles_prices",
+    "streaming_hist_prices",
+    "pagerank_event_hotspots",
+    "grouped_rank_prices",
+    "bpe_train_docs",
+    "bpe_train_batched_docs",
+    "bpe_encode_docs",
+    "bpe_heldout_encode_docs",
+    "bpe_fertility_langs",
+    "classifier_auc_by_source_docs",
+    "classifier_ks_docs",
+    "classifier_auc_docs",
+    "classifier_pr_docs",
 )
 
 

@@ -276,7 +276,11 @@ def _chain_op(data, v):
     apply to an ``v.shape`` batch.  numpy's IndexError must come back as
     IndexError, its ValueError as ShapeError."""
     op = data.draw(
-        st.sampled_from(["index", "einops", "reshape", "broadcast", "stack", "concat"]), label="op"
+        st.sampled_from(
+            ["index", "einops", "reshape", "broadcast", "stack", "concat",
+             "mask", "gather", "stack_same", "concat_same"]
+        ),
+        label="op",
     )
     if op == "index":
         idx = data.draw(index_tuple(v.ndim), label="idx")
@@ -304,6 +308,37 @@ def _chain_op(data, v):
             lambda t: das.concat([t, t[head].map_field(lambda c: c + 1000)], axis=axis),
             lambda a: np.concatenate([a, a[head] + 1000], axis=axis),
         )
+    if op == "mask" and v.ndim:
+        k = data.draw(st.integers(1, v.ndim), label="mask_rank")
+        n = int(np.prod(v.shape[:k]))
+        mask = np.array(data.draw(st.lists(st.booleans(), min_size=n, max_size=n), label="mask"), bool)
+        mask = mask.reshape(v.shape[:k])
+        return lambda t: t[mask], lambda a: a[mask]
+    if op == "gather" and v.ndim and v.shape[0]:
+        d0 = v.shape[0]
+        idx = np.array(data.draw(st.lists(st.integers(-d0, d0 - 1), max_size=6), label="gather"), np.int64)
+        if len(idx) % 2 == 0 and len(idx) and data.draw(st.booleans(), label="2d?"):
+            idx = idx.reshape(2, -1)
+        return lambda t: t[idx], lambda a: a[idx]
+    if op == "stack_same" and v.ndim:
+        # two views of one base: a head and a tail of the same length
+        axis = data.draw(st.integers(0, v.ndim), label="axis")
+        k = data.draw(st.integers(0, v.shape[0]), label="k")
+        head, tail = slice(0, k), slice(v.shape[0] - k, None)
+        return (
+            lambda t: das.stack([t[head], t[tail]], axis=axis),
+            lambda a: np.stack([a[head], a[tail]], axis=axis),
+        )
+    if op == "concat_same" and v.ndim:
+        # the two halves of one base, swapped: concat([t[k:], t[:k]])
+        axis = data.draw(st.integers(0, v.ndim - 1), label="axis")
+        k = data.draw(st.integers(0, v.shape[axis]), label="k")
+        lo = (slice(None),) * axis + (slice(0, k),)
+        hi = (slice(None),) * axis + (slice(k, None),)
+        return (
+            lambda t: das.concat([t[hi], t[lo]], axis=axis),
+            lambda a: np.concatenate([a[hi], a[lo]], axis=axis),
+        )
     return None
 
 
@@ -311,9 +346,11 @@ def _chain_op(data, v):
 @given(st.data())
 def test_fuzz_view_chains(spark, data):
     """Random 2-4 op chains — basic index, einops split/permute/merge,
-    tuple reshape (contiguous or not), broadcast_to, and stack/concat on
-    an axis > 0 — each step compared with numpy, so views of views and
-    both materializer forms are checked together."""
+    tuple reshape (contiguous or not), broadcast_to, boolean masks,
+    integer gathers, stack/concat of two bases on an axis > 0 and of two
+    views of one base on any axis — each step compared with numpy, so
+    the composed maps (pieces, index table, strides) are checked in
+    every combination the materializer builds."""
     from dataclass_array_spark.core.schema import ShapeError
 
     t, v = cached(data.draw(SHAPES, label="shape"), spark)
@@ -337,3 +374,50 @@ def test_fuzz_view_chains(spark, data):
         t, v = table_fn(t), exp
         assert t.shape == v.shape
         assert_np_equal(t, {"v": v})
+
+
+def _positions(offset, shape, strides):
+    """Every source position a strided map reaches, in C-order."""
+    idx = np.indices(shape).reshape(len(shape), -1)
+    return offset + (np.array(strides, dtype=np.int64)[:, None] * idx).sum(0)
+
+
+def _random_map(rng, limit):
+    """A non-overlapping strided map (dims in a random stride order, with
+    gaps) reaching positions below ``limit``, or None."""
+    from dataclass_array_spark.core.table import _view_strides
+
+    shape = [int(rng.integers(1, 5)) for _ in range(rng.integers(1, 4))]
+    strides, acc = [0] * len(shape), int(rng.integers(1, 3))
+    for k in rng.permutation(len(shape)):
+        strides[k], acc = acc, acc * (shape[k] + int(rng.integers(0, 2)))
+    offset = int(rng.integers(0, 4))
+    if offset + sum((d - 1) * s for d, s in zip(shape, strides)) >= limit:
+        return None
+    return offset, tuple(shape), _view_strides(shape, strides)
+
+
+def test_pieces_of_matches_index_arithmetic():
+    """The driver-side cut of strides over concatenated pieces into new
+    pieces (no Spark): wherever ``_pieces_of`` returns maps, their
+    concatenated positions are exactly the composed map's, on 4000
+    random piece lists and views (it may decline: the view then keeps
+    its strides over the pieces)."""
+    from dataclass_array_spark.core.table import _pieces_of
+
+    rng = np.random.default_rng(0)
+    cut = 0
+    for _ in range(4000):
+        pieces = [p for p in (_random_map(rng, 60) for _ in range(rng.integers(1, 4))) if p]
+        if not pieces:
+            continue
+        src = np.concatenate([_positions(*p) for p in pieces])
+        view = _random_map(rng, len(src))
+        if view is None:
+            continue
+        got = _pieces_of(*view, pieces)
+        if got is not None:
+            cut += 1
+            pos = np.concatenate([_positions(*p) for p in got]) if got else np.zeros(0, np.int64)
+            assert np.array_equal(pos, src[_positions(*view)]), (pieces, view, got)
+    assert cut > 1000

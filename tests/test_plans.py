@@ -936,9 +936,36 @@ def test_view_chain_is_one_filter_and_one_project(spark):
 
 
 def test_view_chain_to_broadcast_is_one_join(spark):
-    """A chain that ends in broadcast_to joins ``range(size)`` to the
-    source once; the slices before it add no join of their own."""
+    """A chain that ends in broadcast_to repeats each kept source row with
+    one ``posexplode`` per broadcast dim (two Generates here: a new
+    leading dim and a size-1 dim), and joins nothing (it was one
+    ``range(size) ⋈ base`` join; the name is kept); the slices before it
+    add no node of their own."""
     nodes, p = _view_chain_plan(
         spark, lambda t: t[1:, ::2].reshape("a b -> b a")[1:, :1].broadcast_to((2, 2, 3))
     )
-    assert len([n for n in nodes if "Join" in n]) == 1, p
+    assert nodes.count("Generate") == 2, p
+    assert not [n for n in nodes if "Join" in n or n == "Exchange"], p
+
+
+def test_benchmark_shape_chain_is_one_scan(spark):
+    """The benchmark's chain shape — reshape, einops, two slices, concat,
+    stack, mask, gather, slice, broadcast_to — is one view of its base:
+    one source scan, no Union, at most one BroadcastExchange (the
+    mask∘gather index table) and no SortMergeJoin."""
+    import numpy as np
+
+    import dataclass_array_spark as das
+
+    def chain(t):
+        e = t.reshape("a b -> b a")
+        c = das.concat([e[::2, 1:3], e[1::2, 1:3]])
+        f = das.stack([c[:3], c[3:]]).reshape((6, 2))
+        g = f[np.array([True, False, True, True, False, True])][[3, 0, 0, 2]][:, 1:2]
+        return g.broadcast_to((4, 3))
+
+    nodes, p = _view_chain_plan(spark, chain)
+    assert nodes.count("Range") == 1, p
+    assert nodes.count("Union") == 0, p
+    assert nodes.count("BroadcastExchange") <= 1, p
+    assert nodes.count("SortMergeJoin") == 0, p

@@ -104,6 +104,48 @@ def test_shape_ops_are_views_of_one_base(spark):
     assert chain.df is chain.df
 
 
+def test_view_maps_hold_no_per_element_state(spark):
+    """concat/stack/slice/broadcast_to chains over a 10**9-row base build
+    their frames in under 1 MB of driver memory: the maps are a few
+    integers per piece, never an index per element.  The repeats of a
+    broadcast are no literal in the optimized plan either, even for one
+    row broadcast to 10**8 (a constant ``sequence`` there is folded into
+    a 10**8-entry array on the driver).  A mask or gather table has one
+    row per picked entry, not per element under it."""
+    import tracemalloc
+
+    from pyspark.sql import functions as F
+
+    class V(das.DcaTable):
+        v: f32
+
+    n = 10**9
+    t = V.from_df(spark.range(n).select(F.col("id").alias("__rowid"), F.col("id").cast("float").alias("v")),
+                  shape=(n,))
+    tracemalloc.start()
+    try:
+        e = t.reshape((1000, 10**6)).reshape("a b -> b a")
+        chains = [
+            das.concat([t[: 10**8], t[5 * 10**8:], t[3:9]]),
+            das.stack([e[::2, 10:], e[1::2, 10:]]).reshape((-1, 990))[7:].broadcast_to((3, 10**6 - 7, 990)),
+            das.concat([e[:, :500], e[:, 500:]], axis=1)[::3],
+            t.reshape((1000, 10**6))[::7, 10:].flatten(),
+            t[:1].broadcast_to((10**8,)),
+        ]
+        plans = [c.df._jdf.queryExecution().optimizedPlan().toString() for c in chains]
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20, peak
+    assert not [p for p in plans if "UnsafeArrayData" in p or len(p) > 1 << 14], plans
+    assert "array_repeat(" in plans[-1], plans[-1]
+    rows = t.reshape((10**6, 1000))
+    g = rows[np.array([5, 0, 5])]
+    assert g._outer[0].shape == (3,) and g.shape == (3, 1000)
+    m = rows.reshape((1000, 10**6))[np.arange(1000) % 4 == 0][np.array([1, 2])]
+    assert m._outer[0].shape == (2,) and m.shape == (2, 10**6)
+
+
 def test_inner_shape_fields(spark):
     r = np.arange(18, dtype=np.float32).reshape(2, 3, 3)
     t = np.arange(4, dtype=np.int32).reshape(2, 2)

@@ -2,8 +2,10 @@
 """Capture .explain("formatted") for named queries into plans/<round>/
 and print one line per query: plan size, Exchange count, the count of
 each join strategy (so a before/after pair compares join shapes from
-the summary alone), and the plan properties that matter at scale
-(parquet filter pushdown, broadcast joins, WindowGroupLimit, AQE).
+the summary alone), the Union and Generate counts (how many frames a
+plan concatenates and how many explodes it runs), and the plan
+properties that matter at scale (parquet filter pushdown, broadcast
+joins, WindowGroupLimit, AQE).
 
 Usage: python tools/capture_plans.py <round> before|after q1 q2 ...
   e.g. python tools/capture_plans.py r17 before q1 q18
@@ -70,7 +72,7 @@ def main() -> None:
             p = f"ERROR: {type(e).__name__}: {e}"
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(p)
-        joins = "".join(f"{j} x{node_count(p, j)}, " for j in JOINS)
+        joins = "".join(f"{j} x{node_count(p, j)}, " for j in JOINS + ("Union", "Generate"))
         print(
             f"{name}: {len(p)} bytes, Exchange x{node_count(p, 'Exchange')}, "
             f"{joins}{', '.join(properties(p))}",
