@@ -35,6 +35,21 @@ wall-budget kill during the sf1 phase still leaves a parseable record
 (round 14's driver bench died at rc=124 with parsed:null because the
 only parseable line printed after everything).  A clean run prints the
 final combined headline (with sf1_* fields) as the true last line.
+
+SCHEMA CATALOG (round 23): every query reads its tables through
+``session.read_parquet``, whose per-session catalog caches METADATA
+ONLY — one Parquet schema (a ``StructType``) per local path, never a
+DataFrame, data or a result.  So a repeated pass still scans, shuffles
+and computes everything; it skips only the Parquet footer-inference
+job that defining each query paid per table read.  An entry is used
+when the path's stamp — ``(st_ino, st_mtime_ns, st_size)`` of the
+file, or of each file under a Spark-written directory — and the values
+of the inference confs (``spark.sql.legacy.parquet.nanosAsLong``,
+``parquet.binaryAsString``, ``parquet.int96AsTimestamp``,
+``parquet.inferTimestampNTZ.enabled``, ``parquet.mergeSchema``,
+``sources.partitionColumnTypeInference.enabled``) both match the
+entry's; otherwise the read infers and replaces it.  The first pass
+over a table therefore still pays the inference job.
 """
 
 from __future__ import annotations

@@ -68,6 +68,7 @@ from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 from dataclass_array_spark.core import schema as dsch
 from dataclass_array_spark.core.schema import ArraySpec, ShapeError, parse_shape
+from dataclass_array_spark.session import read_parquet as _read_parquet
 
 ROWID = "__rowid"
 
@@ -595,8 +596,13 @@ class DcaTable(metaclass=_DcaMeta):
     @classmethod
     def read_parquet(cls, spark: SparkSession, path: str, **statics) -> "DcaTable":
         """Columnar scan source; schema enforced by cast-select so Catalyst
-        still prunes columns and pushes filters into the parquet reader."""
-        return cls.from_df(spark.read.parquet(path), **statics)
+        still prunes columns and pushes filters into the parquet reader.
+        The scan comes from :func:`session.read_parquet`, so a path this
+        session read before, unchanged, reads with the schema recorded
+        then.  Scale note: a path on another filesystem (``hdfs:``,
+        ``s3a:`` ...) infers its schema from the Parquet footers on every
+        call."""
+        return cls.from_df(_read_parquet(spark, path), **statics)
 
     # ---------------- coercion helpers ----------------
 
@@ -1144,10 +1150,10 @@ class DcaTable(metaclass=_DcaMeta):
         meta = json.loads(
             _hadoop_read_text(spark, f"{path.rstrip('/')}/_dca_meta.json")
         )
-        reader = spark.read
         if "schema" in meta:
-            reader = reader.schema(T.StructType.fromJson(json.loads(meta["schema"])))
-        return cls.tree_unflatten(reader.parquet(path), meta)
+            schema = T.StructType.fromJson(json.loads(meta["schema"]))
+            return cls.tree_unflatten(spark.read.schema(schema).parquet(path), meta)
+        return cls.tree_unflatten(_read_parquet(spark, path), meta)
 
     def cache(self) -> "DcaTable":
         """Cache the view's frame and rebase on it: later views of this

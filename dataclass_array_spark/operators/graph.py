@@ -185,6 +185,13 @@ def pagerank(
     lineage re-derived ``nodes``/``wn`` — and with them the upstream
     edge builder — ~2·iters+1 times).  Pure materialization pinning:
     same addends, same fold order, bit-identical ranks.
+
+    Lifetime hazard: the returned frame reads those pins, and a pin's
+    lineage is truncated.  Run its action before any
+    :func:`~dataclass_array_spark.core.table.release_pins` call; a
+    release in between makes the action fail with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (see ``release_pins``).  Scoped
+    pin lifetimes are ROADMAP item 8.
     """
     from dataclass_array_spark.core.table import pin_materialization
 

@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for both local testing and cluster scale.
+"""SparkSession factory tuned for both local testing and cluster scale,
+and the package's one Parquet table reader.
 
 Local mode is a single JVM with N threads; on a real cluster the same
 settings hold except memory/partition sizing comes from the cluster manager.
@@ -8,8 +9,11 @@ Every knob here is a public Apache Spark config.
 from __future__ import annotations
 
 import os
+import stat
+import weakref
+from urllib.parse import urlparse
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Shuffle partitions: ~cores locally. On a 1000-executor cluster this should
 # be executors*cores*2-3 (set via spark-submit); AQE coalesces the excess at
@@ -70,3 +74,69 @@ def get_spark(app_name: str = "dataclass_array_spark", cpus: str | None = None) 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# The confs under which the same Parquet files infer a different schema
+# (``events.ts`` is TIMESTAMP(NANOS) in some testdata drops: a long
+# under nanosAsLong, an error without it).
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# session -> {local path: (stamp, inference conf values, StructType)}
+_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+
+
+def _stamp(path: str):
+    """``(st_ino, st_mtime_ns, st_size)`` of a file; of a directory, the
+    stamps of everything under it by name.  Raises OSError."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return st.st_ino, st.st_mtime_ns, st.st_size
+    with os.scandir(path) as it:
+        return tuple(sorted((e.name, _stamp(e.path)) for e in it))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet scan of ``path`` (a file or a Spark-written directory),
+    read with the schema this session last inferred for it when nothing
+    changed since.
+
+    A footer-inference read runs one Spark job; a read with a given
+    schema runs none.  The session's catalog keeps one entry per local
+    path: the schema, the values of ``_INFER_CONFS`` it was inferred
+    under, and the path's stamp, taken before the inference read.  A
+    read whose stamp and confs match reads with the recorded schema;
+    any other read infers and replaces the entry.  The catalog holds
+    ``StructType``s only, never frames: each call returns a new scan
+    with its own attribute ids, so two reads self-join.
+
+    Scale notes: the stamp lists and stats every file under a directory
+    on the driver, the listing the scan itself makes.  Paths on another
+    filesystem (``hdfs:``, ``s3a:`` ...), globs and relative paths are
+    not stamped and infer on every read, as a plain
+    ``spark.read.parquet`` does: one footer job per read, whose listing
+    and footer reads grow with the table's file count."""
+    url = urlparse(path)
+    local = url.path if url.scheme == "file" else path
+    stamp = None
+    if url.scheme in ("", "file") and os.path.isabs(local):
+        try:
+            stamp = _stamp(local)
+        except OSError:  # missing: the read raises PATH_NOT_FOUND
+            pass
+    if stamp is None:
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k) for k in _INFER_CONFS)
+    catalog = _SCHEMAS.setdefault(spark, {})
+    entry = catalog.get(local)
+    if entry is not None and entry[:2] == (stamp, confs):
+        return spark.read.schema(entry[2]).parquet(path)
+    df = spark.read.parquet(path)
+    catalog[local] = (stamp, confs, df.schema)
+    return df

@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from dataclass_array_spark.session import read_parquet
+
 
 def _parquet_stream(reader, path: str) -> DataFrame:
     """Point a streaming reader at a parquet source that may be either a
@@ -62,16 +64,21 @@ def events_stream(
     The file source requires an explicit schema, and the physical type
     of ``ts`` varies by testdata drop (TIMESTAMP(NANOS)→long under the
     legacy conf, or TIMESTAMP(MICROS)→timestamp_ntz), so the schema is
-    sniffed from the parquet footer via a batch read — a driver-only
-    metadata operation, no data scan.  If the path is empty/missing at
-    definition time (stream declared before data arrives) the canonical
-    MICROS schema is assumed; note the sniffed schema is frozen at
-    definition time either way — files appearing later must match it."""
+    taken from a batch read through :func:`session.read_parquet`: the
+    schema this session recorded for the unchanged path, or one
+    footer-inference job (no data scan) when the path is new or
+    changed.  If the path is empty/missing at definition time (stream
+    declared before data arrives) the canonical MICROS schema is
+    assumed; note the schema is frozen at definition time either way —
+    files appearing later must match it.
+
+    Scale note: a path on another filesystem (``hdfs:``, ``s3a:`` ...)
+    is not stamped, so every definition runs the footer-inference job."""
     from dataclass_array_spark.workload.base import normalize_events_ts
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
-        schema = spark.read.parquet(path).schema
+        schema = read_parquet(spark, path).schema
     except AnalysisException as e:
         # Only "no files yet" may fall back to the canonical schema; any
         # other sniff failure (corrupt footer, permission error) must
@@ -374,7 +381,7 @@ def decontaminate_stream(
         .start()
     )
     q.awaitTermination()
-    return docs.sparkSession.read.parquet(output_dir)
+    return read_parquet(docs.sparkSession, output_dir)
 
 
 def incremental_dedup_stream(
@@ -419,7 +426,7 @@ def incremental_dedup_stream(
         .start()
     )
     q.awaitTermination()
-    return docs.sparkSession.read.parquet(output_dir)
+    return read_parquet(docs.sparkSession, output_dir)
 
 
 def countmin_stream(
@@ -459,7 +466,7 @@ def countmin_stream(
     )
     q.awaitTermination()
     return (
-        items.sparkSession.read.parquet(output_dir)
+        read_parquet(items.sparkSession, output_dir)
         .groupBy("j", "bucket")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
@@ -497,7 +504,7 @@ def hll_stream(
     )
     q.awaitTermination()
     return (
-        items.sparkSession.read.parquet(output_dir)
+        read_parquet(items.sparkSession, output_dir)
         .groupBy(*group_cols, "__bkt")
         .agg(F.max("__M").alias("__M"))
     )
@@ -532,7 +539,7 @@ def bloom_stream(
         .start()
     )
     q.awaitTermination()
-    return keys.sparkSession.read.parquet(output_dir).distinct()
+    return read_parquet(keys.sparkSession, output_dir).distinct()
 
 
 def hist_stream(
@@ -571,7 +578,7 @@ def hist_stream(
     )
     q.awaitTermination()
     return (
-        items.sparkSession.read.parquet(output_dir)
+        read_parquet(items.sparkSession, output_dir)
         .groupBy(*group_cols, "bucket")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
@@ -677,7 +684,7 @@ def ngram_counts_stream(
     )
     q.awaitTermination()
     return (
-        docs.sparkSession.read.parquet(output_dir)
+        read_parquet(docs.sparkSession, output_dir)
         .groupBy(*_ngram_keys(n))
         .agg(F.sum("c").cast("long").alias("c"))
     )

@@ -20,6 +20,8 @@ from typing import Dict, Iterable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataclass_array_spark.session import read_parquet
+
 TABLES = (
     "region",
     "nation",
@@ -64,20 +66,27 @@ def normalize_events_ts(e: DataFrame) -> DataFrame:
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: Iterable[str] = TABLES) -> Dict[str, DataFrame]:
-    """Parquet scans, one per table.  Filters/projections stay pushable —
-    no caching or materialization here, so Catalyst prunes at the source.
+    """Parquet scans, one per table, through :func:`session.read_parquet`:
+    a table unchanged since this session last read it reads with the
+    schema recorded then, and runs no footer-inference job.
+    Filters/projections stay pushable — no caching or materialization
+    here, so Catalyst prunes at the source.
 
     ``events.ts`` physical type varies by testdata drop (see
     :func:`normalize_events_ts`); the legacy nanos conf is set so the
     NANOS form reads as long instead of erroring, and the normalizer
-    branches on whatever type actually arrived."""
+    branches on whatever type actually arrived.
+
+    Scale notes: an ``sf_dir`` on another filesystem (``hdfs:``,
+    ``s3a:`` ...) is not stamped, and infers every table's schema from
+    its Parquet footers on every call."""
     out: Dict[str, DataFrame] = {}
     for n in names:
         if n == "events":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            out[n] = normalize_events_ts(spark.read.parquet(f"{sf_dir}/{n}.parquet"))
+            out[n] = normalize_events_ts(read_parquet(spark, f"{sf_dir}/{n}.parquet"))
         else:
-            out[n] = spark.read.parquet(f"{sf_dir}/{n}.parquet")
+            out[n] = read_parquet(spark, f"{sf_dir}/{n}.parquet")
     return out
 
 
